@@ -33,7 +33,6 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     // SQL users get the native functions without touching Scala helpers
     graft.functions.VectorExpressions.register(spark)
-    graft.functions.SimHashExpression.register(spark)
     graft.functions.MinHashExpression.register(spark)
     graft.functions.PairMergeExpression.register(spark)
     graft.functions.BpeEncodeExpression.register(spark)

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *     of 1..n (min/max/count/countDistinct all checked).
   *   - Chunked bitmap distinct: a 2·10⁸ key domain (past the dense
   *     gate) validated against exact countDistinct per group.
-  *   - SimHash band widening: 4M docs — past the 2¹⁶·32 row threshold,
+  *   - SimHash band widening (md5 SimHash): 4M docs — past the 2¹⁶·32 row threshold,
   *     so the band plan must WIDEN (bits > 16) to keep the bucket join
   *     linear; 1000 planted token-permutation twins (identical
   *     signature) must all surface through the widened buckets.

@@ -13,8 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * CROSS-ENGINE family: hash j of shingle s is md5Hex(j + "|" + s), and
   * the minimum is plain byte-wise order on the lowercase hex, so any
   * ANSI engine with md5() (e.g. the DuckDB oracle) reproduces the exact
-  * minima. The hot-path family (MinHashSig, xxhash64-seeded) is faster
-  * but engine-private.
+  * minima. The xxhash64-seeded MinHashSig is faster but engine-private;
+  * it serves only incremental dedup, which has no oracle.
   *
   * One k×L loop per row inside whole-stage codegen; the equivalent
   * built-in form (k × array_min(transform(md5(concat(...))))) evaluates

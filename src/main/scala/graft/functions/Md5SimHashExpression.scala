@@ -16,13 +16,12 @@ import org.apache.spark.sql.types._
   * 1)) - 1) >> (b%4) & 1` in ANSI SQL — so any engine with md5()
   * (e.g. the DuckDB oracle) reproduces the exact per-bit ±1 vote sums
   * and therefore the exact signature. Each token OCCURRENCE votes
-  * (multiset semantics, same as the xxhash64 family); a zero vote sum
-  * sets the bit (>= 0 → 1).
+  * (multiset semantics); a zero vote sum sets the bit (>= 0 → 1).
   *
-  * One tokens×64 loop per row inside whole-stage codegen; the
-  * hot-path family (SimHashExpression, xxhash64-seeded) is faster but
-  * engine-private — reference: near-dup detection of
-  * etl_pipeline_script.py:60-75's exact-dup stage generalized.
+  * One tokens×64 loop per row inside whole-stage codegen; the only
+  * SimHash family (measured no slower than an xxhash64-seeded one) —
+  * reference: near-dup detection of etl_pipeline_script.py:60-75's
+  * exact-dup stage generalized.
   */
 object Md5SimHashImpl {
   private val digest = new ThreadLocal[java.security.MessageDigest] {

@@ -12,6 +12,14 @@ import org.apache.spark.sql.functions._
   * (band, band-hash) bucket, so candidate pairs are generated inside
   * buckets — all-pairs comparison never happens, which is what keeps this
   * linear-ish at 100 TB.
+  *
+  * Hash families: each operator has exactly one, and no conf picks it.
+  * Wherever an oracle replays the hash (q29–q31, q51, q218 here, and
+  * q28's fingerprint in TextOps) it is md5, which DuckDB computes
+  * identically. xxhash64 MinHash ([[signatureIndex]]) is used only by
+  * [[incrementalDedup]] and its self-join form [[minhashCandidates]]:
+  * that operator has no oracle, and its signatures are 2.3–3.3×
+  * cheaper than md5's.
   */
 object DedupOps {
 
@@ -67,6 +75,25 @@ object DedupOps {
     graft.functions.MinHashExpression.minhashSig(s,
       transform(shingleCol, x => xxhash64(x)), NumHashes)
 
+  /** LSH band keys of the `sig` column: band b is its RowsPerBand
+    * minima, comma-joined (both families band the same way).
+    */
+  private def bandKeys: Seq[Column] = (0 until Bands).map { b =>
+    concat_ws(",", (0 until RowsPerBand).map(r =>
+      element_at(col("sig"), b * RowsPerBand + r + 1)): _*)
+  }
+
+  /** xxhash64 band hashes of the `sig` column, one long per band. */
+  private def bandHashes: Column = array(bandKeys.map(xxhash64(_)): _*)
+
+  /** Jaccard estimate of an xxhash64 signature pair (`sig_a`, `sig_b`):
+    * the share of agreeing minima, rounded to 3 places.
+    */
+  private def estJaccard(s: SparkSession): Column =
+    round(graft.functions.MinHashExpression
+      .sigAgreement(s, col("sig_a"), col("sig_b"))
+      .cast("double") / NumHashes, 3)
+
   /** A corpus with planted near-duplicates: every document plus a copy
     * (doc_id + 1,000,000) with its first token dropped. Gives the near-dup
     * detectors a known ground truth (and a non-empty result) on data whose
@@ -90,9 +117,11 @@ object DedupOps {
     docs.unionByName(perturbed)
   }
 
-  /** 29. MinHash + LSH banded near-dup candidates: signature → band
-    * hashes → explode (band_id, band_hash) → self-join on the bucket →
-    * estimate Jaccard from signature agreement → threshold.
+  /** xxhash64 MinHash + LSH near-dup candidates within one corpus:
+    * signature → band hashes → explode (band_id, band_hash) → self-join
+    * on the bucket → estimate Jaccard from signature agreement →
+    * threshold. The self-join form of [[incrementalDedupWithIndex]]'s
+    * banding (same signatures, band hashes and estimate).
     */
   def minhashCandidates(docs: DataFrame, threshold: Double): DataFrame = {
     // tokens materialized as a bound column BEFORE shingling: the slice
@@ -111,12 +140,6 @@ object DedupOps {
       .select(col("doc_id"),
         signature(docs.sparkSession, col("sh")).as("sig"))
       .localCheckpoint(false)
-
-    val bandHashes = array((0 until Bands).map { b =>
-      xxhash64(concat_ws(",",
-        (0 until RowsPerBand).map(r =>
-          element_at(col("sig"), b * RowsPerBand + r + 1)): _*))
-    }: _*)
 
     // Candidate generation carries IDS ONLY (doc_id + one band hash)
     // through the bucket self-join and the pair dedup — the 32-long
@@ -137,33 +160,29 @@ object DedupOps {
       .select("doc_a", "doc_b")
       .dropDuplicates("doc_a", "doc_b")
 
-    val est = graft.functions.MinHashExpression
-      .sigAgreement(docs.sparkSession, col("sig_a"), col("sig_b"))
-      .cast("double") / NumHashes
-
     pairs
       .join(sig.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")),
         "doc_a")
       .join(sig.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")),
         "doc_b")
-      .withColumn("est_jaccard", round(est, 3))
+      .withColumn("est_jaccard", estJaccard(docs.sparkSession))
       .filter(col("est_jaccard") >= threshold)
       .select("doc_a", "doc_b", "est_jaccard")
   }
 
-  /** q29's md5-MinHash twin (r13, closing VERDICT r12 #4): the same
-    * 32-hash / 8-band LSH shape as [[minhashCandidates]], with the
-    * engine-identical md5 hash family (min over md5 hex strings — the
-    * q31/q218 precedent) in place of xxhash64, which makes the WHOLE
-    * pipeline (band keys, candidate pairs, signature-agreement
-    * estimate) replayable in ANSI SQL and flips q29 from rows-only to
-    * FULL oracle. Band keys are the comma-joined minima themselves
-    * (strings — no engine-private band hash), the 0.5 threshold is the
-    * integer compare agree·2 ≥ 32 (no float boundary), and the
-    * agreement count runs only on the candidate-bounded pair table
-    * (the zip_with HOF is interpreted — fine at pair grain, never
-    * corpus grain). est_jaccard = ROUND(agree/32, 3) is exact-dyadic
-    * before rounding, so both engines round the same true value.
+  /** q29's MinHash + LSH: the same 32-hash / 8-band LSH shape as
+    * [[minhashCandidates]], with the engine-identical md5 hash family
+    * (min over md5 hex strings — the q31/q218 precedent) in place of
+    * xxhash64, which makes the WHOLE pipeline (band keys, candidate
+    * pairs, signature-agreement estimate) replayable in ANSI SQL and
+    * checkable against the full oracle. Band keys are the comma-joined
+    * minima themselves (strings — no engine-private band hash), the
+    * 0.5 threshold is the integer compare agree·2 ≥ 32 (no float
+    * boundary), and the agreement count runs only on the
+    * candidate-bounded pair table (the zip_with HOF is interpreted —
+    * fine at pair grain, never corpus grain). est_jaccard =
+    * ROUND(agree/32, 3) is exact-dyadic before rounding, so both
+    * engines round the same true value.
     */
   def minhashCandidatesMd5(docs: DataFrame, minAgree: Int): DataFrame = {
     val s = docs.sparkSession
@@ -173,12 +192,8 @@ object DedupOps {
         graft.functions.Md5MinHashExpression
           .md5MinHash(s, col("sh"), NumHashes).as("sig"))
       .localCheckpoint(false)
-    val bandKeys = array((0 until Bands).map { b =>
-      concat_ws(",", (0 until RowsPerBand).map(r =>
-        element_at(col("sig"), b * RowsPerBand + r + 1)): _*)
-    }: _*)
     val banded = sig.select(col("doc_id"),
-      posexplode(bandKeys).as(Seq("band_id", "band_key")))
+      posexplode(array(bandKeys: _*)).as(Seq("band_id", "band_key")))
     val a = banded.select(col("doc_id").as("doc_a"), col("band_id"),
       col("band_key"))
     val b = banded.select(col("doc_id").as("doc_b"), col("band_id"),
@@ -202,39 +217,24 @@ object DedupOps {
           .as("est_jaccard"))
   }
 
-  /** q29 default family is the oracle-checkable md5-MinHash; the
-    * xxhash64 signatures ([[minhashCandidates]]) stay as the
-    * documented fast path behind `spark.graft.minhash.family=xxhash64`
-    * (the q76 localTrainMaxWords conf-gate pattern — same LSH shape,
-    * ~2.5× less per-shingle hash cost, engine-private values).
+  /** 29. MinHash + LSH near-dup candidates over the planted-dup
+    * corpus, in the md5 family the oracle replays.
     */
   def q29MinhashLsh(s: SparkSession, d: String): DataFrame =
-    if (s.conf.getOption("spark.graft.minhash.family")
-        .contains("xxhash64"))
-      minhashCandidates(corpusWithPlantedDups(s, d), threshold = 0.5)
-    else minhashCandidatesMd5(corpusWithPlantedDups(s, d), minAgree = 16)
+    minhashCandidatesMd5(corpusWithPlantedDups(s, d), minAgree = 16)
 
-  /** 30. SimHash: 64-bit signature from token hashes; bit i is the sign
-    * of the ±1 vote sum at position i. The vote loop is the native
-    * codegen'd SimHash64 expression — zero shuffle, one tight loop/row.
+  /** 64-bit md5 SimHash of the `text` column
+    * ([[graft.functions.Md5SimHashExpression]]): bit b is the sign of
+    * the ±1 vote sum over the tokens' md5 bits at position b.
     */
-  def simhashCol(s: SparkSession, textCol: Column): Column = {
-    val hashes = transform(tokens(lower(trim(textCol))), t => xxhash64(t))
-    graft.functions.SimHashExpression.simhash(s, hashes)
-  }
+  private def simhash(s: SparkSession): Column =
+    graft.functions.Md5SimHashExpression.md5SimHash(s, tokens(normText))
 
-  /** q30 default family is the oracle-checkable md5-SimHash signature
-    * (r13 — the oracle rebuilds the signed long as
-    * Σ_{b<63} s_b·2^b − s63·2^63, all BIGINT); xxhash64 behind
-    * `spark.graft.simhash.family=xxhash64` (shared with q51).
+  /** 30. SimHash per document. The oracle rebuilds the signed long as
+    * Σ_{b<63} s_b·2^b − s63·2^63, all BIGINT.
     */
   def q30Simhash(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).select(col("doc_id"),
-      if (s.conf.getOption("spark.graft.simhash.family")
-          .contains("xxhash64"))
-        simhashCol(s, col("text")).as("simhash")
-      else graft.functions.Md5SimHashExpression
-        .md5SimHash(s, tokens(normText)).as("simhash"))
+    Tables.documents(s, d).select(col("doc_id"), simhash(s).as("simhash"))
 
   /** Band plan for a 64-bit simhash at corpus size `nRows`: disjoint
     * bands sized so the band keyspace 2^bits stays ≥ nRows/32 — i.e.
@@ -262,14 +262,18 @@ object DedupOps {
     (bands, 64 / bands)
   }
 
-  /** 51. SimHash near-dup pairs at scale: split the 64-bit signature
-    * into disjoint bands (width sized from the corpus row count — see
-    * [[simhashBandPlan]]) — by pigeonhole, any pair within Hamming
-    * distance bands-1 shares at least one exact band, so candidates come
-    * from band-keyed bucket joins (never all-pairs); then the exact
-    * `bit_count(a XOR b)` filter keeps pairs ≤ `maxHamming`. Note
-    * maxHamming above bands-1 is candidates-only recall (partial), per
-    * the band-plan scaladoc.
+  /** 51. SimHash near-dup pairs at scale: split the 64-bit md5
+    * signature into disjoint bands (width sized from the corpus row
+    * count — see [[simhashBandPlan]]) — by pigeonhole, any pair within
+    * Hamming distance bands-1 shares at least one exact band, so
+    * candidates come from band-keyed bucket joins (never all-pairs);
+    * then the exact `bit_count(a XOR b)` filter keeps pairs ≤
+    * `maxHamming`. Note maxHamming above bands-1 is candidates-only
+    * recall (partial), per the band-plan scaladoc. The oracle replays
+    * the md5 bits ([[graft.functions.Md5SimHashExpression]] — bit b of
+    * token t is bit b%4 of hex char b/4 of md5(t)) and regenerates the
+    * same band plan from `count(*)` with a CASE over the rule's three
+    * regimes ((4,16) ≤ 2²¹ rows, (3,21) ≤ 2²⁶, else (2,32)).
     *
     * @param nRows corpus row count (from catalog/footer stats — sizes
     *   the bands without scanning).
@@ -277,22 +281,12 @@ object DedupOps {
   def simhashNearDup(s: SparkSession, docs: DataFrame, maxHamming: Int,
       nRows: Long): DataFrame = {
     val (bands, bits) = simhashBandPlan(nRows)
-    val sigs = docs.select(col("doc_id"),
-      simhashCol(s, col("text")).as("simhash"))
-    bandedHammingPairs(sigs, bands, bits, maxHamming)
-  }
-
-  /** Shared banded bucket join over a (doc_id, simhash) table: explode
-    * to `bands` disjoint `bits`-wide band values, self-join on
-    * (band, value), dedup pairs, exact `bit_count` Hamming filter.
-    */
-  private def bandedHammingPairs(sigs: DataFrame, bands: Int, bits: Int,
-      maxHamming: Int): DataFrame = {
     val mask = if (bits == 64) -1L else (1L << bits) - 1L
-    val banded = sigs.select(col("doc_id"), col("simhash"),
-      posexplode(array((0 until bands).map(b =>
-        shiftrightunsigned(col("simhash"), b * bits).bitwiseAND(mask)): _*))
-        .as(Seq("band_id", "band_val")))
+    val bandVals = (0 until bands).map(b =>
+      shiftrightunsigned(col("simhash"), b * bits).bitwiseAND(mask))
+    val banded = docs.select(col("doc_id"), simhash(s).as("simhash"))
+      .select(col("doc_id"), col("simhash"),
+        posexplode(array(bandVals: _*)).as(Seq("band_id", "band_val")))
     val a = banded.select(col("doc_id").as("doc_a"),
       col("simhash").as("sh_a"), col("band_id"), col("band_val"))
     val b = banded.select(col("doc_id").as("doc_b"),
@@ -308,41 +302,14 @@ object DedupOps {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** q51's md5-SimHash twin (r13, closing VERDICT r12 #4): the same
-    * banded near-dup shape with the engine-identical md5 bit family
-    * ([[graft.functions.Md5SimHashExpression]] — bit b of token t is
-    * bit b%4 of hex char b/4 of md5(t), replayable in ANSI SQL), which
-    * flips q51 from rows-only to FULL oracle. r14 (VERDICT r13 #5):
-    * the band plan is no longer pinned at 4×16 — it derives from the
-    * corpus row count via the SAME [[simhashBandPlan]] integer rule as
-    * the xxhash64 path, and the oracle regenerates the identical plan
-    * from `count(*)` with a CASE over the rule's three regimes
-    * ((4,16) ≤ 2²¹ rows, (3,21) ≤ 2²⁶, else (2,32)) — so the
-    * full-oracle family survives corpus growth instead of handing
-    * >2M-doc corpora to the rows-only path.
-    */
-  def simhashNearDupMd5(s: SparkSession, docs: DataFrame,
-      maxHamming: Int, nRows: Long): DataFrame = {
-    val (bands, bits) = simhashBandPlan(nRows)
-    val sigs = docs.select(col("doc_id"),
-      graft.functions.Md5SimHashExpression
-        .md5SimHash(s, tokens(normText)).as("simhash"))
-    bandedHammingPairs(sigs, bands, bits, maxHamming)
-  }
-
-  /** q51 default family is the oracle-checkable md5-SimHash (band plan
-    * footer-sized, never scanned); the xxhash64 signatures stay as the
-    * fast path behind `spark.graft.simhash.family=xxhash64`.
+  /** q51 over the planted-dup corpus; the band plan is footer-sized,
+    * never scanned.
     */
   def q51SimhashNearDup(s: SparkSession, d: String): DataFrame = {
     val nRows = 2 * graft.sources.TableStatistics
       .tableRowCount(s, d, "documents")
-    if (s.conf.getOption("spark.graft.simhash.family")
-        .contains("xxhash64"))
-      simhashNearDup(s, corpusWithPlantedDups(s, d), maxHamming = 12,
-        nRows = nRows)
-    else simhashNearDupMd5(s, corpusWithPlantedDups(s, d),
-      maxHamming = 12, nRows = nRows)
+    simhashNearDup(s, corpusWithPlantedDups(s, d), maxHamming = 12,
+      nRows = nRows)
   }
 
   // ---- Exact-Jaccard verify over LSH candidates (q31) -------------------
@@ -360,12 +327,11 @@ object DedupOps {
     * all-pairs join (e.g. on `source`) grows quadratically with block
     * population and dies at 100×.
     *
-    * The hot-path family (minhashCandidates above) keeps the codegen'd
-    * xxhash64 signatures; this md5 family is the cross-engine-checkable
-    * verify stage layered on the same LSH shape. Returns the pair-level
-    * EXACT integers (doc_a, doc_b, inter, na, nb) so every consumer
-    * (q31's rounded jaccard, q218's integer-mills rollup) derives its
-    * own emission without re-verifying.
+    * The verify stage is layered on the same LSH shape as q29.
+    * Returns the pair-level EXACT integers (doc_a, doc_b, inter, na,
+    * nb) so every consumer (q31's rounded jaccard, q218's
+    * integer-mills rollup) derives its own emission without
+    * re-verifying.
     */
   def ngramVerifiedPairs(docs: DataFrame): DataFrame = {
     // toks (for the exact verify) and shingles (for the candidate
@@ -705,15 +671,8 @@ object DedupOps {
     */
   def incrementalDedupWithIndex(s: SparkSession, existingSig: DataFrame,
       incoming: DataFrame, threshold: Double = 0.5): DataFrame = {
-    def bandsOf(sig: DataFrame) = {
-      val bandHashes = array((0 until Bands).map { b =>
-        xxhash64(concat_ws(",",
-          (0 until RowsPerBand).map(r =>
-            element_at(col("sig"), b * RowsPerBand + r + 1)): _*))
-      }: _*)
-      sig.select(col("doc_id"),
-        posexplode(bandHashes).as(Seq("band_id", "band_hash")))
-    }
+    def bandsOf(sig: DataFrame) = sig.select(col("doc_id"),
+      posexplode(bandHashes).as(Seq("band_id", "band_hash")))
     val exSig = existingSig
     val inSig = signatureIndex(s, incoming).localCheckpoint(false)
     val left = bandsOf(inSig).select(col("doc_id").as("doc_b"),
@@ -728,15 +687,12 @@ object DedupOps {
       .select("doc_a", "doc_b", "ex")
       .dropDuplicates("doc_a", "doc_b", "ex")
     val allSig = exSig.unionByName(inSig)
-    val est = graft.functions.MinHashExpression
-      .sigAgreement(s, col("sig_a"), col("sig_b"))
-      .cast("double") / NumHashes
     val rejected = pairs
       .join(allSig.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")),
         "doc_a")
       .join(inSig.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")),
         "doc_b")
-      .filter(round(est, 3) >= threshold)
+      .filter(estJaccard(s) >= threshold)
       .select(col("doc_b").as("doc_id")).distinct()
     incoming.join(rejected, Seq("doc_id"), "left_anti")
   }

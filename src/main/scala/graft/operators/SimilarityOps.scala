@@ -1050,7 +1050,7 @@ object SimilarityOps {
     * EXACT all-pairs while the parquet-footer row count stays within
     * `spark.graft.ann.exactMaxRows` (default 100k — the corpus-rides-
     * a-broadcast ceiling), the IVF cell-pruned stage beyond it
-    * (`spark.graft.ann.ivfCells`/`ivfProbes` dials, default 16/10).
+    * (16 cells, 10 probed).
     * The footer stat means NO count() job in the plan path, and at
     * every tested SF (≤20k embeddings) the plan stays exact — the
     * gate-scale oracles are unchanged while a 100 TB corpus picks the
@@ -1063,13 +1063,8 @@ object SimilarityOps {
     val maxExact = s.conf.getOption("spark.graft.ann.exactMaxRows")
       .map(_.toLong).getOrElse(100000L)
     if (nRows <= maxExact) knnPurityScored(s, d)
-    else {
-      val nCells = s.conf.getOption("spark.graft.ann.ivfCells")
-        .map(_.toInt).getOrElse(16)
-      val nProbe = s.conf.getOption("spark.graft.ann.ivfProbes")
-        .map(_.toInt).getOrElse(10)
-      ivfCandidateScores(s, Tables.embeddings(s, d), nCells, nProbe)
-    }
+    else ivfCandidateScores(s, Tables.embeddings(s, d), nCells = 16,
+      nProbe = 10)
   }
 
   /** q194: EXACT distributed k-means (Lloyd 1982) over the embedding

@@ -110,44 +110,26 @@ object TextOps {
     Tables.documents(s, d)
       .select(col("doc_id"), langIdCol(col("text")).as("predicted_lang"))
 
-  /** 28. Document fingerprint: rolling hash over tokens — each step
-    * chains the accumulator with the next token hash (order-sensitive,
-    * unlike the minhash set signature; overflow-free under ANSI mode,
-    * unlike a polynomial multiply-add). Pure fold — no shuffle. The
-    * xxhash64 FAST path (`spark.graft.fingerprint.family=xxhash64`) —
-    * Spark-only, rows-only checkable.
-    */
-  def fingerprintCol(textCol: Column): Column =
-    aggregate(
-      transform(split(lower(trim(textCol)), "\\s+"), t => xxhash64(t)),
-      lit(0L), (acc, h) => xxhash64(acc, h))
-
-  /** 28 (default family, r14): md5-derived POSITION-TAGGED fingerprint
-    * — the Md5MinHash engine-identical-hash precedent applied to the
-    * ordered token stream. Token t at 1-based position i contributes
+  /** 28. Document fingerprint: md5-derived POSITION-TAGGED hash of the
+    * ordered token stream (the Md5MinHash engine-identical-hash
+    * precedent). Token t at 1-based position i contributes
     * h = first 13 md5 hex digits of `t:i` as a 52-bit int;
     * fingerprint = Σh mod 10¹⁸, folded with per-step mod (bounded:
     * acc < 10¹⁸ + 2⁵², no ANSI overflow) so the fold equals the plain
     * SUM-then-mod the DuckDB oracle computes. Order-sensitive (the
-    * position tag is inside the hash), shuffle-free, and — unlike the
-    * xxhash64 chain — replayable in ANSI SQL, which flips q28 to a
-    * full oracle (the r13 verdict's gate endgame).
+    * position tag is inside the hash), shuffle-free, and replayable in
+    * ANSI SQL, so q28 is checked against the full oracle.
     */
-  def md5FingerprintCol(textCol: Column): Column =
+  def fingerprintCol(textCol: Column): Column =
     aggregate(
       transform(split(lower(trim(textCol)), "\\s+"),
         (t, i) => conv(substring(md5(concat(t, lit(":"),
           (i + 1).cast("string"))), 1, 13), 16, 10).cast("long")),
       lit(0L), (acc, h) => (acc + h) % lit(1000000000000000000L))
 
-  def q28Fingerprint(s: SparkSession, d: String): DataFrame = {
-    val fam = s.conf.getOption("spark.graft.fingerprint.family")
-      .getOrElse("md5")
-    val fp = if (fam == "xxhash64") fingerprintCol(col("text"))
-      else md5FingerprintCol(col("text"))
+  def q28Fingerprint(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d).filter(col("text").isNotNull)
-      .select(col("doc_id"), fp.as("fingerprint"))
-  }
+      .select(col("doc_id"), fingerprintCol(col("text")).as("fingerprint"))
 
   /** 50. Deterministic per-group sampling: k docs per lang by hash
     * order (uniform, reproducible, mergeable — the distributed way to
