@@ -1035,8 +1035,8 @@ object RelationalOps {
   /** Incremental SCD2 maintenance: apply an APPEND-ONLY CDC batch to an
     * existing [[scd2WithTie]] history without recomputing untouched
     * keys — the lakehouse type-2 MERGE. Keys absent from the delta pass
-    * through by anti-join (at a real deployment the unchanged files are
-    * not even rewritten — ParquetUpsertSink's MERGE path); for touched
+    * through by anti-join without a shuffle (the split ParquetUpsertSink's
+    * MERGE uses; the untouched rows are still rewritten); for touched
     * keys the existing runs re-enter the collapse as run-START events
     * ((valid_from, first_tie) = the original first row's order key —
     * consecutive runs alternate values so they never re-collapse among

@@ -1,8 +1,23 @@
 package graft
 
 import graft.sources.ParquetUpsertSink
+import graft.sources.ParquetUpsertSink.SinkStats
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.{CollectMetricsExec, QueryExecution,
+  SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec, ResultQueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.collection.mutable
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 
 class SinkSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -76,6 +91,246 @@ class SinkSpec extends AnyFunSuite with SparkTestBase {
     val got = ParquetUpsertSink.read(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got == Map(1L -> "current", 2L -> "newer", 3L -> "new"))
+  }
+
+  private def rows(dir: String): Seq[Row] =
+    ParquetUpsertSink.read(spark, dir).collect().toSeq.sortBy(_.toString)
+
+  /** SQL executions and jobs that `body` starts, counted after the
+    * listener bus drains.
+    */
+  private def recording[T](body: => T): (T, Seq[QueryExecution], Int) = {
+    val execs = mutable.ArrayBuffer.empty[QueryExecution]
+    var jobs = 0
+    val ql = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        execs.synchronized(execs += qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        execs.synchronized(execs += qe)
+    }
+    val jl = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        synchronized(jobs += 1)
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(ql)
+    spark.sparkContext.addSparkListener(jl)
+    try {
+      val out = body
+      ListenerBusDrain(spark.sparkContext)
+      (out, execs.synchronized(execs.toList), jl.synchronized(jobs))
+    } finally {
+      spark.listenerManager.unregister(ql)
+      spark.sparkContext.removeSparkListener(jl)
+    }
+  }
+
+  /** (observation, in the result stage?) for every observed node of a
+    * finished plan: map stages and broadcast builds are not.
+    */
+  private def observedNodes(p: SparkPlan, result: Boolean = true)
+      : Seq[(String, Boolean)] = p match {
+    case a: AdaptiveSparkPlanExec => observedNodes(a.executedPlan, result)
+    case r: ResultQueryStageExec => observedNodes(r.plan, result)
+    case s: QueryStageExec => observedNodes(s.plan, result = false)
+    case e: Exchange => e.children.flatMap(observedNodes(_, result = false))
+    case c: CollectMetricsExec =>
+      (c.name, result) +: observedNodes(c.child, result)
+    case o => o.children.flatMap(observedNodes(_, result))
+  }
+
+  /** Fails instead of hanging when a mutation blocks. */
+  private def within[T](body: => T): T =
+    Await.result(Future(body), 2.minutes)
+
+  private def withConf[T](k: String, v: String)(body: => T): T = {
+    val old = spark.conf.getOption(k)
+    spark.conf.set(k, v)
+    try body finally old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  test("upsert: a NULL key is one key, matched null-safely") {
+    val dir = tmpTable()
+    val v1 = Seq((Some(1L), "a", 1L), (None, "null_old", 1L))
+      .toDF("id", "val", "ver")
+    assert(ParquetUpsertSink.upsert(spark, dir, v1, Seq("id"), "ver") ==
+      SinkStats(2, 0, 0))
+    val v2 = Seq((Option.empty[Long], "null_new", 2L), (Some(2L), "b", 1L))
+      .toDF("id", "val", "ver")
+    assert(ParquetUpsertSink.upsert(spark, dir, v2, Seq("id"), "ver") ==
+      SinkStats(1, 1, 0))
+    assert(rows(dir) == Seq(Row(1L, "a", 1L), Row(2L, "b", 1L),
+      Row(null, "null_new", 2L)).sortBy(_.toString))
+  }
+
+  test("upsert: a two-column key matches on both columns") {
+    val dir = tmpTable()
+    ParquetUpsertSink.upsert(spark, dir,
+      Seq((1L, "x", "a", 1L), (1L, "y", "b", 1L), (2L, "x", "c", 1L))
+        .toDF("k1", "k2", "val", "ver"), Seq("k1", "k2"), "ver")
+    val st = ParquetUpsertSink.upsert(spark, dir,
+      Seq((1L, "y", "b2", 2L), (2L, "y", "d", 1L))
+        .toDF("k1", "k2", "val", "ver"), Seq("k1", "k2"), "ver")
+    assert(st == SinkStats(1, 1, 0))
+    assert(rows(dir) == Seq(Row(1L, "x", "a", 1L), Row(1L, "y", "b2", 2L),
+      Row(2L, "x", "c", 1L), Row(2L, "y", "d", 1L)).sortBy(_.toString))
+  }
+
+  test("upsert leaves untouched duplicate-key rows exactly as they are") {
+    val dir = tmpTable()
+    // a new table takes insertNewOnly's rows as they come, duplicates too
+    ParquetUpsertSink.insertNewOnly(spark, dir,
+      Seq((1L, "a", 1L), (1L, "a_twin", 1L), (2L, "b", 1L))
+        .toDF("id", "val", "ver"), Seq("id"))
+    val st = ParquetUpsertSink.upsert(spark, dir,
+      Seq((2L, "b2", 2L), (3L, "c", 1L)).toDF("id", "val", "ver"),
+      Seq("id"), "ver")
+    assert(st == SinkStats(1, 1, 0))
+    assert(rows(dir) == Seq(Row(1L, "a", 1L), Row(1L, "a_twin", 1L),
+      Row(2L, "b2", 2L), Row(3L, "c", 1L)).sortBy(_.toString))
+  }
+
+  test("empty batches return exact zeros and leave the table readable") {
+    val dir = tmpTable()
+    val base = Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("id", "val", "ver")
+    ParquetUpsertSink.upsert(spark, dir, base, Seq("id"), "ver")
+    val before = rows(dir)
+    val noRows = base.filter(lit(false))
+    within {
+      assert(ParquetUpsertSink.upsert(spark, dir, noRows, Seq("id"), "ver")
+        == SinkStats(0, 0, 0))
+      assert(ParquetUpsertSink.insertNewOnly(spark, dir, base, Seq("id"))
+        == SinkStats(0, 0, 0))
+      assert(ParquetUpsertSink.purge(spark, dir,
+        Seq.empty[Long].toDF("id"), "id") == SinkStats(0, 0, 0))
+    }
+    assert(rows(dir) == before)
+    within {
+      assert(ParquetUpsertSink.purge(spark, dir, Seq(1L, 2L, 2L).toDF("id"),
+        "id") == SinkStats(0, 0, 2))
+    }
+    val emptied = ParquetUpsertSink.read(spark, dir)
+    assert(emptied.columns.toSet == Set("id", "val", "ver"))
+    assert(emptied.collect().isEmpty)
+    within {
+      assert(ParquetUpsertSink.upsert(spark, dir, base, Seq("id"), "ver") ==
+        SinkStats(2, 0, 0))
+    }
+    assert(rows(dir) == before)
+  }
+
+  test("a write that fails inside a task leaves the table unchanged and " +
+      "no temp dir behind") {
+    val dir = tmpTable()
+    ParquetUpsertSink.upsert(spark, dir,
+      Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("id", "val", "ver"),
+      Seq("id"), "ver")
+    val before = rows(dir)
+    val poisoned = spark.range(3).select(col("id"), lit("x").as("val"),
+      when(col("id") === 0L, raise_error(lit("poisoned batch")))
+        .otherwise(lit(5L)).as("ver"))
+    // key 0 is new, so both mutations evaluate its poisoned row: upsert in
+    // the window's map stage, insertNewOnly in the write stage itself,
+    // after the write has created its output dir
+    val mutations: Seq[() => SinkStats] = Seq(
+      () => ParquetUpsertSink.upsert(spark, dir, poisoned, Seq("id"), "ver"),
+      () => ParquetUpsertSink.insertNewOnly(spark, dir, poisoned, Seq("id")))
+    for (mutate <- mutations) {
+      intercept[Exception](mutate())
+      assert(rows(dir) == before)
+      assert(new java.io.File(dir).list().toSeq == Seq("data"))
+    }
+  }
+
+  test("a failed commit rename restores the old snapshot") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.failcommit.impl", classOf[FailingCommitFs].getName)
+    conf.setBoolean("fs.failcommit.impl.disable.cache", true)
+    val local = tmpTable()
+    val dir = s"failcommit://$local"
+    ParquetUpsertSink.upsert(spark, dir,
+      Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("id", "val", "ver"),
+      Seq("id"), "ver")
+    val before = rows(dir)
+    FailingCommitFs.failing = true
+    try {
+      val e = intercept[java.io.IOException] {
+        ParquetUpsertSink.upsert(spark, dir,
+          Seq((2L, "b2", 2L)).toDF("id", "val", "ver"), Seq("id"), "ver")
+      }
+      assert(e.getMessage.contains("cannot commit"))
+    } finally FailingCommitFs.failing = false
+    assert(rows(dir) == before)
+    assert(new java.io.File(local).list().toSeq == Seq("data"))
+  }
+
+  test("sort-merge plan (no broadcast) gives the same stats and table; " +
+      "every observed node sits in the write's result stage") {
+    def script(dir: String): Seq[SinkStats] = Seq(
+      ParquetUpsertSink.insertNewOnly(spark, dir,
+        (1L to 20L).map(i => (i, s"v$i", 1L)).toDF("id", "val", "ver"),
+        Seq("id")),
+      ParquetUpsertSink.upsert(spark, dir,
+        Seq((3L, "newer", 2L), (4L, "stale", 0L), (4L, "tie", 1L),
+          (30L, "new", 1L)).toDF("id", "val", "ver"), Seq("id"), "ver"),
+      ParquetUpsertSink.insertNewOnly(spark, dir,
+        Seq((5L, "dup", 1L), (31L, "n31", 1L), (32L, "n32", 1L))
+          .toDF("id", "val", "ver"), Seq("id")),
+      ParquetUpsertSink.purge(spark, dir, Seq(1L, 2L, 2L, 99L).toDF("id"),
+        "id"))
+    val broadcastDir = tmpTable()
+    val (expected, bExecs, _) = recording(script(broadcastDir))
+    assert(expected == Seq(SinkStats(20, 0, 0), SinkStats(1, 2, 0),
+      SinkStats(2, 0, 0), SinkStats(0, 0, 2)))
+    val smjDir = tmpTable()
+    val (got, smjExecs, _) =
+      withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+        recording(script(smjDir))
+      }
+    assert(got == expected)
+    assert(smjExecs.exists(_.executedPlan.toString.contains("SortMergeJoin")))
+    assert(rows(smjDir) == rows(broadcastDir))
+    for (qe <- bExecs ++ smjExecs) {
+      val nodes = observedNodes(qe.executedPlan)
+      assert(nodes.nonEmpty && nodes.forall(_._2), qe.executedPlan.toString)
+    }
+  }
+
+  test("each mutation on an existing table is one SQL execution; read " +
+      "starts no job") {
+    val dir = tmpTable()
+    val kv = (1L to 10L).map(i => (i, s"v$i", 1L)).toDF("id", "val", "ver")
+    ParquetUpsertSink.upsert(spark, dir, kv, Seq("id"), "ver")
+    def execs(body: => SinkStats): Int = recording(body)._2.size
+    assert(execs(ParquetUpsertSink.upsert(spark, dir,
+      Seq((1L, "u", 2L), (11L, "n", 1L)).toDF("id", "val", "ver"),
+      Seq("id"), "ver")) == 1)
+    assert(execs(ParquetUpsertSink.insertNewOnly(spark, dir,
+      Seq((2L, "x", 1L), (12L, "n", 1L)).toDF("id", "val", "ver"),
+      Seq("id"))) == 1)
+    assert(execs(ParquetUpsertSink.purge(spark, dir,
+      Seq(3L).toDF("id"), "id")) == 1)
+    val (read, readExecs, readJobs) =
+      recording(ParquetUpsertSink.read(spark, dir))
+    assert(readExecs.isEmpty && readJobs == 0)
+    // the footer schema is the one inference would find
+    assert(read.schema == spark.read.parquet(s"$dir/data").schema)
+  }
+
+  test("read: a data file without Spark's schema footer key is an error " +
+      "naming the file") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = tmpTable()
+    val file = new org.apache.hadoop.fs.Path(s"$dir/data/part-0.parquet")
+    val schema = MessageTypeParser.parseMessageType(
+      "message t { required int64 id; }")
+    val w = ExampleParquetWriter.builder(file).withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup().append("id", 1L))
+    finally w.close()
+    val e = intercept[java.io.IOException](ParquetUpsertSink.read(spark, dir))
+    assert(e.getMessage.contains("part-0.parquet"))
   }
 
   test("blocklist feedback: failed keys purge from the table and append " +
@@ -186,4 +441,19 @@ class SinkSpec extends AnyFunSuite with SparkTestBase {
       assert(manifest.contains(s""""$name": {"rows": $n"""))
     }
   }
+}
+
+/** Local file system whose snapshot-commit rename (`tmp-*` → `data`)
+  * fails while `failing` is set; every other rename goes through.
+  */
+class FailingCommitFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("failcommit:///")
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean =
+    if (FailingCommitFs.failing && src.getName.startsWith("tmp-")) false
+    else super.rename(src, dst)
+}
+
+object FailingCommitFs {
+  @volatile var failing = false
 }
