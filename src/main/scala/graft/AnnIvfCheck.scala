@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** Large-corpus ANN branch certification (r13, closing VERDICT r12 #5):
   * executes q186/q187's IVF candidate path END TO END through the real
-  * `queries` entries (conf `spark.graft.ann.exactMaxRows=0` forces the
-  * footer-count gate past the exact all-pairs branch — the same switch
-  * a >100k-row corpus trips naturally) and measures it against the
-  * exact path on the SAME world:
+  * `queries` entries (the `scale` gate mode forces the footer-count
+  * gate past the exact all-pairs branch — the same switch a >100k-row
+  * corpus trips naturally) and measures it against the exact path on
+  * the SAME world:
   *
   *   - q187 neighbor recall@5 of the IVF candidate stage vs the exact
   *     brute-force stage (the suite's ≥0.8 gate, here asserted ≥0.8
@@ -31,8 +31,7 @@ object AnnIvfCheck {
         order = Seq(("cos_sim", true), ("nid", false)), k = 5)
         .select(col("qid"), col("nid"))
 
-    // exact branch (default conf; every tested SF sits under the gate)
-    spark.conf.unset("spark.graft.ann.exactMaxRows")
+    // exact branch: the all-pairs stage itself, whatever the gate mode
     val exactScored = operators.SimilarityOps.knnPurityScored(spark, d)
       .localCheckpoint(false)
     val e5 = top5(exactScored).localCheckpoint(false)
@@ -41,14 +40,15 @@ object AnnIvfCheck {
       .localCheckpoint(false)
 
     // IVF branch through the REAL queries entries
-    spark.conf.set("spark.graft.ann.exactMaxRows", "0")
     val t0 = System.nanoTime()
-    val ivfScored = operators.SimilarityOps
-      .annCandidateScores(spark, d).localCheckpoint(false)
-    val i5 = top5(ivfScored).localCheckpoint(false)
-    val q186 = SparkEntry.queries("q186_mutual_nn")(spark, d)
-      .localCheckpoint(false)
-    val q187rows = SparkEntry.queries("q187_knn_purity")(spark, d).count()
+    val (i5, q186, q187rows) = Gates.withMode(spark, Gates.Scale) {
+      val ivfScored = operators.SimilarityOps
+        .annCandidateScores(spark, d).localCheckpoint(false)
+      (top5(ivfScored).localCheckpoint(false),
+        SparkEntry.queries("q186_mutual_nn")(spark, d)
+          .localCheckpoint(false),
+        SparkEntry.queries("q187_knn_purity")(spark, d).count())
+    }
     val tIvf = (System.nanoTime() - t0) / 1e9
 
     val eCnt = e5.count()

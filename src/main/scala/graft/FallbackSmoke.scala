@@ -3,33 +3,15 @@ package graft
 /** Timed smoke of the RELATIONAL fallbacks (r15, VERDICT r14 #7): the
   * driver kernels cover every benchable scale, so the >gate 100 TB
   * shapes were correctness-tested (conf-gated differentials) but never
-  * TIMED — a fallback perf regression could hide. This main forces
-  * every driver gate OFF, times each gated family's query with the
+  * TIMED — a fallback perf regression could hide. This main runs under
+  * the `relational` gate mode (every driver gate off) unless the JVM
+  * already sets [[Gates.Key]], times each gated family's query with the
   * noop sink (warm-up + min-of-2, the Bench protocol), and writes a
   * durable per-SF artifact (`FALLBACK_SMOKE_<sf>.json`).
   *
   * Usage: SPARK_GRAFT_SF_DIR=... runMain graft.FallbackSmoke
   */
 object FallbackSmoke {
-  // every conf consulted by a driver-kernel or basket-collect gate
-  private val Gates = Seq(
-    "spark.graft.copurchase.driverMaxRows",
-    "spark.graft.pagerank.driverMaxEdges",
-    "spark.graft.ppr.driverMaxEdges",
-    "spark.graft.kcore.driverMaxEdges",
-    "spark.graft.bfs.driverMaxEdges",
-    "spark.graft.sssp.driverMaxEdges",
-    "spark.graft.lpa.driverMaxEdges",
-    "spark.graft.hits.driverMaxEdges",
-    "spark.graft.scan.driverMaxEdges",
-    "spark.graft.triangles.driverMaxEdges",
-    "spark.graft.copurchase.driverMaxEdges",
-    "spark.graft.cc.driverMaxNodes",
-    "spark.graft.ktruss.driverPeelMaxEdges",
-    "spark.graft.als.driverMaxCells",
-    "spark.graft.theilsen.driverMaxPoints",
-    "spark.graft.outliers.driverMaxHist")
-
   // one representative query per gated family
   private val Queries = Seq(
     "q105_pagerank", "q116_ppr", "q109_kcore", "q110_bfs_hops",
@@ -43,7 +25,8 @@ object FallbackSmoke {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
     val spark = GraftSession.get()
-    Gates.foreach(spark.conf.set(_, "0"))
+    if (spark.conf.getOption(Gates.Key).isEmpty)
+      spark.conf.set(Gates.Key, Gates.Relational.name)
     def once(name: String): Double = {
       val t0 = System.nanoTime
       SparkEntry.queries(name)(spark, sfDir)

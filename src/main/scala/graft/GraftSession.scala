@@ -37,6 +37,7 @@ object GraftSession {
     graft.functions.PairMergeExpression.register(spark)
     graft.functions.BpeEncodeExpression.register(spark)
     graft.functions.CountInSorted.register(spark)
+    Gates.mode(spark) // a bad gate mode fails here, before any query
     spark
   }
 }

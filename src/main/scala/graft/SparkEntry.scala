@@ -7181,13 +7181,14 @@ object SparkEntry {
     // reciprocity self-join; each mutual pair emitted once (id_a<id_b)
     // q186/q187 ORACLE CEILING (r12 advice): these replay the EXACT
     // all-pairs branch, which annCandidateScores selects only while the
-    // embeddings footer count ≤ spark.graft.ann.exactMaxRows (100k —
-    // every tested SF qualifies; the ScaleUp sf1 world is 8k). Beyond
-    // that the Spark side switches to the IVF candidate stage BY DESIGN
-    // and these oracles no longer apply — `graft.AnnIvfCheck` is the
-    // certification for that branch (conf-forced IVF vs exact on the
-    // same world; r13 at sf1: recall@5 0.886, mutual-pair recall 0.84,
-    // rounded-cos disagreements 0).
+    // embeddings footer count ≤ Gates.AnnExactRows (100k — every
+    // tested SF qualifies; the ScaleUp sf1 world is 8k) and the gate
+    // mode is not `scale`. Beyond that the Spark side switches to the
+    // IVF candidate stage BY DESIGN and these oracles no longer apply —
+    // `graft.AnnIvfCheck` is the certification for that branch
+    // (`scale`-forced IVF vs exact on the same world; r13 at sf1:
+    // recall@5 0.886, mutual-pair recall 0.84, rounded-cos
+    // disagreements 0).
     "q186_mutual_nn" ->
       """WITH pairs AS (
            SELECT a.vec_id AS qid, b.vec_id AS nid,

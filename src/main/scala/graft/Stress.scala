@@ -216,7 +216,8 @@ object Stress {
       ccEdges.select(col("dst").as("src"), col("src").as("dst")))
     // both kernels must label the path exactly: the r14 one-job driver
     // forest path (the default below its node gate) AND the relational
-    // SV hook+compress kernel (the >gate scale path, forced via conf)
+    // SV hook+compress kernel (the >gate scale path, forced by the
+    // `relational` gate mode)
     def ccCheck(): (Boolean, String) = {
       val lbl = graft.operators.GraphOps.minLabelComponents(ccSym)
       val a = lbl.agg(count(lit(1)), min(col("component")),
@@ -225,11 +226,8 @@ object Stress {
         s"[${a.getLong(0)},${a.getLong(1)},${a.getLong(2)}]")
     }
     val ((ccOk, ccDiag), tCc) = timed(ccCheck())
-    val ((ccOkRel, _), tCcRel) = timed {
-      spark.conf.set("spark.graft.cc.driverMaxNodes", "0")
-      try ccCheck()
-      finally spark.conf.unset("spark.graft.cc.driverMaxNodes")
-    }
+    val ((ccOkRel, _), tCcRel) =
+      timed(Gates.withMode(spark, Gates.Relational)(ccCheck()))
 
     def f(d: Double): String = BigDecimal(d)
       .setScale(1, BigDecimal.RoundingMode.HALF_UP).toString

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Gates, Tables}
 import graft.functions.{BpeEncodeExpression, PairMergeExpression}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * (map-side combined). The merge loop then runs on the DISTINCT-WORD
   * table — VOCAB-scale (millions of rows), not corpus-scale — and
   * vocab-scale is the point: when the distinct-word table fits the
-  * driver (`spark.graft.bpe.localTrainMaxWords`, default 4M rows —
+  * driver ([[Gates.BpeLocalWords]], 4M rows —
   * true for every real-language corpus at ANY corpus size), training
   * finishes LOCALLY with an exact incremental-pair-count trainer
   * (the Sennrich reference shape: only words containing the merged
@@ -37,10 +37,9 @@ object BpeTrain {
     */
   def train(s: SparkSession, words: DataFrame, rounds: Int)
       : Seq[(Int, String, String, Long)] = {
-    val maxLocal = s.conf.getOption("spark.graft.bpe.localTrainMaxWords")
-      .map(_.toLong).getOrElse(4000000L)
+    val maxLocal = Gates.driver(s, Gates.BpeLocalWords)
     val w = words.select(col("word"), col("cnt")).localCheckpoint(false)
-    if (w.count() <= maxLocal)
+    if (maxLocal > 0 && w.count() <= maxLocal)
       trainLocal(w.collect().map(r =>
         (r.getString(0), r.getLong(1))).toSeq, rounds)
     else trainDistributed(s, w, rounds)

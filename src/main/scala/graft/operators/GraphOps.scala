@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Gates, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,9 +21,9 @@ object GraphOps {
   /** Broadcast-vs-bucketed gate for the iterative loops: node-scale
     * tables (rank vectors, label tables, BFS frontiers/visited sets)
     * ride broadcast joins against the edge table while they fit; past
-    * `spark.graft.graph.maxBroadcastNodes` rows (default 5e7 ≈ a few
-    * hundred MB of (long, long) — the executor-memory broadcast
-    * ceiling) the loop swaps to the bucketed-join shape: the edge
+    * [[Gates.BroadcastNodes]] rows (5e7 ≈ a few hundred MB of
+    * (long, long) — the executor-memory broadcast ceiling; 0 under the
+    * `scale` gate mode) the loop swaps to the bucketed-join shape: the edge
     * table persists src-BUCKETED once ([[graft.sources.TableLayout
     * .writeBucketed]] — the bucketed scan reports HashPartitioning,
     * which survives AQE, where a checkpoint-captured partitioning does
@@ -35,8 +35,7 @@ object GraphOps {
     * pins each shape.
     */
   private[graft] def maxBroadcastNodes(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("spark.graft.graph.maxBroadcastNodes")
-      .map(_.toLong).getOrElse(50000000L)
+    Gates.memory(df.sparkSession, Gates.BroadcastNodes)
 
   /** The node-scale side of an edges⋈nodes join under the gate. */
   private[graft] def nodeSide(nodeTable: DataFrame, bc: Boolean): DataFrame =
@@ -47,14 +46,31 @@ object GraphOps {
     * returned frame stays valid), then drop the table.
     */
   private def withBucketedEdges(edges: DataFrame)
-      (body: DataFrame => DataFrame): DataFrame = {
+      (body: DataFrame => DataFrame): DataFrame =
+    withLazyBucketedEdges(edges)(bucketed => body(bucketed()))
+
+  /** [[withBucketedEdges]] for loops that gate per round: the table is
+    * written the first time `body` calls `bucketed`; if it never does,
+    * the result stays lazy and nothing is written or dropped.
+    */
+  private def withLazyBucketedEdges(edges: DataFrame)
+      (body: (() => DataFrame) => DataFrame): DataFrame = {
     val spark = edges.sparkSession
-    val table = "graft_graph_edges_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val buckets = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    graft.sources.TableLayout.writeBucketed(edges, "src", buckets, table)
-    try body(spark.table(table)).localCheckpoint()
-    finally spark.sql(s"DROP TABLE IF EXISTS $table")
+    var table: Option[String] = None
+    def bucketed(): DataFrame = {
+      if (table.isEmpty) {
+        val t = "graft_graph_edges_" +
+          java.util.UUID.randomUUID.toString.replace("-", "")
+        graft.sources.TableLayout.writeBucketed(edges, "src",
+          spark.conf.get("spark.sql.shuffle.partitions").toInt, t)
+        table = Some(t)
+      }
+      spark.table(table.get)
+    }
+    try {
+      val out = body(() => bucketed())
+      if (table.isEmpty) out else out.localCheckpoint() // eager: drops below
+    } finally table.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   /** 15-iteration damped PageRank over a SYMMETRIC edge list
@@ -85,13 +101,10 @@ object GraphOps {
     // job instead of one job per round. Long node ids only (q139's
     // word graph ranks strings and stays on the bc-mode rounds).
     val slim = edges.select(col("src"), col("dst"))
-    val maxDrv = driverMaxEdges(edges, "pagerank")
-    if (allLongIds(slim) && maxDrv > 0) {
-      val nE = edges.count()
-      if (nE <= maxDrv)
-        return pageRankDriver(edges.sparkSession,
-          new CollectedEdges(slim, nE.toInt, weighted = false),
-          iters, total)
+    driverEdgeCount(edges, slim) match {
+      case Some(nE) => return pageRankDriver(edges.sparkSession,
+        new CollectedEdges(slim, nE, weighted = false), iters, total)
+      case None =>
     }
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
       .localCheckpoint(false)
@@ -210,25 +223,26 @@ object GraphOps {
     def unpersist(): Unit = { rdd.unpersist(false); () }
   }
 
-  /** Per-operator conf gate for the in-memory driver kernels (the
-    * q214/q126/q61 precedent, extended r14 to the whole iterative
-    * family): below `spark.graft.<op>.driverMaxEdges` collected edges
-    * (default 8M ≈ 128 MB of driver ints — the same class as the
-    * node-scale broadcasts the bc-mode rounds already collect), the
-    * whole round loop runs on primitive arrays in ONE collect job,
-    * killing the per-round job floor that dominates every iterative
-    * graph query at local scale. 0 disables (the suite's equivalence
-    * tests force the relational path this way). Past the gate the
-    * relational loops below are THE path — they are the 100 TB shape.
+  /** Edge gate for the in-memory driver kernels (the q214/q126/q61
+    * precedent, extended r14 to the whole iterative family): below
+    * [[Gates.DriverEdges]] collected edges the whole round loop runs on
+    * primitive arrays in ONE collect job, killing the per-round job
+    * floor. Past it, and under the `relational`/`scale` gate modes, the
+    * relational loops below are THE path — the 100 TB shape.
     */
-  private def driverMaxEdges(df: DataFrame, op: String): Long =
-    driverMaxEdgesConf(df.sparkSession, op)
+  private def driverMaxEdges(s: SparkSession): Long =
+    Gates.driver(s, Gates.DriverEdges)
 
-  private def driverMaxEdgesConf(s: SparkSession, op: String): Long =
-    math.min(s.conf
-        .getOption(s"spark.graft.$op.driverMaxEdges")
-        .map(_.toLong).getOrElse(8000000L),
-      Int.MaxValue - 8L) // primitive-array kernels index edges by Int
+  /** `edges`' row count when the driver edge gate passes: every frame in
+    * `ids` has long ids and the count is within [[driverMaxEdges]]. No
+    * count job runs while the gate is closed.
+    */
+  private def driverEdgeCount(edges: DataFrame, ids: DataFrame*)
+      : Option[Int] = {
+    val max = driverMaxEdges(edges.sparkSession)
+    if (max <= 0 || !ids.forall(allLongIds)) None
+    else Some(edges.count()).filter(_ <= max).map(_.toInt)
+  }
 
   /** The co-purchase fast path shared by the driver-kernel entries
     * (r15): collect baskets with no distributed pair build at all
@@ -237,12 +251,10 @@ object GraphOps {
     * would have seen. None ⇒ caller runs the unchanged relational
     * build + gate.
     */
-  private def coPurchaseCollected(s: SparkSession, d: String,
-      op: String): Option[CollectedEdges] = {
-    val maxE = driverMaxEdgesConf(s, op)
-    collectBasketPairs(s, d, maxE / 2)
+  private def coPurchaseCollected(s: SparkSession, d: String)
+      : Option[CollectedEdges] =
+    collectBasketPairs(s, d, driverMaxEdges(s) / 2)
       .map(bp => CollectedEdges.fromSym(bp.ids, bp.us, bp.vs))
-  }
 
   /** The PRUNED (shared-orders ≥ minCount) symmetric co-purchase edge
     * table as a LocalRelation built from the driver-collected baskets
@@ -255,7 +267,7 @@ object GraphOps {
     */
   private def prunedCoPurchaseEdgeDf(s: SparkSession, d: String,
       minCount: Int): Option[DataFrame] =
-    collectBasketPairs(s, d, driverMaxEdgesConf(s, "copurchase"))
+    collectBasketPairs(s, d, driverMaxEdges(s))
       .map { bp0 =>
         val bp = bp0.pruned(minCount)
         val n = bp.us.length
@@ -519,13 +531,13 @@ object GraphOps {
     * relational collect_set + u<v DISTINCT). Returns None past any
     * gate, and the caller falls back to the UNCHANGED relational build
     * (the 100 TB path):
-    *   - parquet-footer row count > spark.graft.copurchase.driverMaxRows
-    *     (default 16M rows ≈ 256 MB packed — checked BEFORE any job);
+    *   - parquet-footer row count > [[Gates.CopurchaseRows]]
+    *     (16M rows ≈ 256 MB packed — checked BEFORE any job);
     *   - a key outside [0, 2^32) (packing would alias — checked during
     *     the collect, per partition);
-    *   - undirected pair count > maxPairs (the caller's per-op
-    *     driverMaxEdges budget — exact, computed from basket sizes
-    *     before the pair array is allocated).
+    *   - undirected pair count > maxPairs (the caller's driver edge
+    *     budget — exact, computed from basket sizes before the pair
+    *     array is allocated).
     */
   /** `withMultiplicity = true` skips the within-order (ok,pk) dedup:
     * a pair shared by rows with multiplicities m_x, m_y contributes
@@ -536,9 +548,7 @@ object GraphOps {
   private def collectBasketPairs(s: SparkSession, d: String,
       maxPairs: Long, withMultiplicity: Boolean = false)
       : Option[BasketPairs] = {
-    val maxRows = s.conf
-      .getOption("spark.graft.copurchase.driverMaxRows")
-      .map(_.toLong).getOrElse(16000000L)
+    val maxRows = Gates.driver(s, Gates.CopurchaseRows)
     if (maxPairs <= 0 || maxRows <= 0) return None
     val nRows = graft.sources.TableStatistics
       .tableRowCount(s, d, "lineitem")
@@ -1054,7 +1064,7 @@ object GraphOps {
     // build, no adjacency shuffle); counts are orientation-invariant,
     // so the basket-deduped graph gives the identical node totals —
     // the GraphSpec differential pins driver ≡ relational
-    collectBasketPairs(s, d, driverMaxEdgesConf(s, "triangles") / 2)
+    collectBasketPairs(s, d, driverMaxEdges(s) / 2)
       .map { bp =>
         val (tri, _) = driverTriangles(bp.us, bp.vs, bp.ids.length)
         val keep = (0 until bp.ids.length).filter(tri(_) > 0)
@@ -1091,12 +1101,10 @@ object GraphOps {
     // relational loop pays count + two semi-joins + checkpoint PER
     // ROUND of a cascade that settles in milliseconds in memory.
     val slim = cur.select(col("src"), col("dst"))
-    val maxDrv = driverMaxEdges(cur, "kcore")
-    if (allLongIds(slim) && maxDrv > 0) {
-      val nE = cur.count()
-      if (nE <= maxDrv)
-        return kCoreDriver(cur.sparkSession,
-          new CollectedEdges(slim, nE.toInt, weighted = false), k, peels)
+    driverEdgeCount(cur, slim) match {
+      case Some(nE) => return kCoreDriver(cur.sparkSession,
+        new CollectedEdges(slim, nE, weighted = false), k, peels)
+      case None =>
     }
     var prevNodes = -1L
     var round = 0
@@ -1128,7 +1136,7 @@ object GraphOps {
     */
   def q109KCore(s: SparkSession, d: String): DataFrame =
     // r15: basket fast path — no distributed pair build below the gate
-    coPurchaseCollected(s, d, "kcore")
+    coPurchaseCollected(s, d)
       .map(g => kCoreDriver(s, g, k = 80, peels = 15))
       .getOrElse(kCore(coPurchaseEdges(s, d), k = 80, peels = 15))
       .select(col("node").as("partkey"), col("core_deg"))
@@ -1159,15 +1167,13 @@ object GraphOps {
     // one in-memory CSR walk (the q214/q126 rule) — the relational
     // loop pays two joins + distinct + count + checkpoint per hop.
     val slim = edges.select(col("src"), col("dst"))
-    val maxDrv = driverMaxEdges(edges, "bfs")
     val seedTab = seeds.select(col("node")).distinct()
-    if (allLongIds(slim) && allLongIds(seedTab) && maxDrv > 0) {
-      val nE = edges.count()
-      if (nE <= maxDrv) {
-        val g = new CollectedEdges(slim, nE.toInt, weighted = false)
+    driverEdgeCount(edges, slim, seedTab) match {
+      case Some(nE) =>
+        val g = new CollectedEdges(slim, nE, weighted = false)
         val seedIx = seedTab.collect().map(r => g.idOf(r.getLong(0)))
         return bfsDriver(spark, g, seedIx, maxHops)
-      }
+      case None =>
     }
     val maxB = maxBroadcastNodes(symEdges)
     // the frontier starts seed-sized and the visited set grows toward
@@ -1176,41 +1182,26 @@ object GraphOps {
     // zero extra jobs: the src-bucketed edge table materializes lazily
     // the first round a frontier outgrows the broadcast, and drops
     // after the final eager materialization
-    var bucketTable: Option[String] = None
-    def srcEdges(): DataFrame = {
-      if (bucketTable.isEmpty) {
-        val t = "graft_graph_edges_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
-        graft.sources.TableLayout.writeBucketed(edges, "src",
-          spark.conf.get("spark.sql.shuffle.partitions").toInt, t)
-        bucketTable = Some(t)
+    withLazyBucketedEdges(edges) { srcEdges =>
+      var visited = seeds.select(col("node")).distinct()
+        .withColumn("hops", lit(0L)).localCheckpoint(false)
+      var frontier = visited.select(col("node").as("_f"))
+      var h = 0L
+      var frontierN = frontier.count()
+      var visitedN = frontierN
+      while (h < maxHops && frontierN > 0) {
+        h += 1
+        val fBc = frontierN <= maxB
+        frontier = bfsRound(if (fBc) edges else srcEdges(), frontier,
+            visited, fBc, visitedN <= maxB)
+          .localCheckpoint(false)
+        frontierN = frontier.count()
+        visitedN += frontierN
+        visited = visited.unionByName(
+            frontier.select(col("_f").as("node"), lit(h).as("hops")))
+          .localCheckpoint(false)
       }
-      spark.table(bucketTable.get)
-    }
-    var visited = seeds.select(col("node")).distinct()
-      .withColumn("hops", lit(0L)).localCheckpoint(false)
-    var frontier = visited.select(col("node").as("_f"))
-    var h = 0L
-    var frontierN = frontier.count()
-    var visitedN = frontierN
-    while (h < maxHops && frontierN > 0) {
-      h += 1
-      val fBc = frontierN <= maxB
-      frontier = bfsRound(if (fBc) edges else srcEdges(), frontier,
-          visited, fBc, visitedN <= maxB)
-        .localCheckpoint(false)
-      frontierN = frontier.count()
-      visitedN += frontierN
-      visited = visited.unionByName(
-          frontier.select(col("_f").as("node"), lit(h).as("hops")))
-        .localCheckpoint(false)
-    }
-    bucketTable match {
-      case None => visited
-      case Some(t) =>
-        val out = visited.localCheckpoint() // eager: safe to drop below
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        out
+      visited
     }
   }
 
@@ -1238,7 +1229,7 @@ object GraphOps {
   def q110BfsHops(s: SparkSession, d: String): DataFrame = {
     // r15: basket fast path — seeds replicated in memory (top-3 by
     // symmetric degree, id-ascending ties — [[hubSeedIx]])
-    coPurchaseCollected(s, d, "bfs") match {
+    coPurchaseCollected(s, d) match {
       case Some(g) =>
         bfsDriver(s, g, hubSeedIx(g, 3), maxHops = 8)
           .select(col("node").as("partkey"), col("hops"))
@@ -1258,7 +1249,7 @@ object GraphOps {
     */
   def q105PageRank(s: SparkSession, d: String): DataFrame =
     // r15: basket fast path — no distributed pair build below the gate
-    coPurchaseCollected(s, d, "pagerank")
+    coPurchaseCollected(s, d)
       .map(g => pageRankDriver(s, g, 15, 1000000000000L))
       .getOrElse(pageRank(coPurchaseEdges(s, d), 15))
       .select(col("node").as("partkey"), col("r").as("rank_ppt"))
@@ -1297,15 +1288,12 @@ object GraphOps {
     // order-free integer adds, the teleport union applied after the
     // contribution pass exactly as the HashMap spelling does)
     val slim = edges.select(col("src"), col("dst"))
-    val maxDrv = driverMaxEdges(edges, "ppr")
-    if (allLongIds(slim) &&
-        allLongIds(seedTab.select(col("node"))) && maxDrv > 0) {
-      val nE = edges.count()
-      if (nE <= maxDrv) {
-        val g = new CollectedEdges(slim, nE.toInt, weighted = false)
+    driverEdgeCount(edges, slim, seedTab.select(col("node"))) match {
+      case Some(nE) =>
+        val g = new CollectedEdges(slim, nE, weighted = false)
         val seedIx = seedTab.collect().map(r => g.idOf(r.getLong(0)))
         return pprDriver(edges.sparkSession, g, seedIx, iters, total)
-      }
+      case None =>
     }
     val seedBase = seedTab.select(col("node"), lit(sb).as("v"))
     // the rank vector grows toward the reached-set scale, bounded by
@@ -1363,7 +1351,7 @@ object GraphOps {
     */
   def q116Ppr(s: SparkSession, d: String): DataFrame = {
     // r15: basket fast path (seeds via [[hubSeedIx]], the q110 rule)
-    coPurchaseCollected(s, d, "ppr") match {
+    coPurchaseCollected(s, d) match {
       case Some(g) =>
         pprDriver(s, g, hubSeedIx(g, 3), iters = 10,
             total = 1000000000000L)
@@ -1471,14 +1459,10 @@ object GraphOps {
     // PREVIOUS round's labels for every node at once) is a pure
     // function of the graph, spelled identically here and in
     // [[lpRound]]'s count+TopK form.
-    val maxDriver = symEdges.sparkSession.conf
-      .getOption("spark.graft.lpa.driverMaxEdges")
-      .map(_.toLong).getOrElse(8000000L)
-    val longIds = edges0.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    val nE = edges0.count()
-    if (longIds && nE <= maxDriver)
-      return driverLpa(edges0, rounds, nE.toInt)
+    driverEdgeCount(edges0, edges0) match {
+      case Some(nE) => return driverLpa(edges0, rounds, nE)
+      case None =>
+    }
     val labels0 = edges0.select(col("src").as("node")).distinct()
       .withColumn("lbl", col("node")).localCheckpoint(false)
     // gate on the node count; fallback mode persists the edge table
@@ -1719,8 +1703,7 @@ object GraphOps {
     // the path: the output is the component-min labeling, a pure
     // function of the graph.
     val spark0 = symEdges.sparkSession
-    val gate = spark0.conf.getOption("spark.graft.cc.driverMaxNodes")
-      .map(_.toLong).getOrElse(8000000L)
+    val gate = Gates.driver(spark0, Gates.CcNodes)
     val longIds = edges.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
     if (longIds && gate > 0) {
@@ -2150,56 +2133,39 @@ object GraphOps {
     // in-memory synchronized Bellman–Ford rounds (the q214/q126 rule;
     // addExact fails loud exactly like the relational ANSI add).
     val slim = edges.select(col("src"), col("dst"), col("w"))
-    val maxDrv = driverMaxEdges(edges, "sssp")
     val seedTab = seeds.select(col("node")).distinct()
-    if (allLongIds(slim) && allLongIds(seedTab) && maxDrv > 0) {
-      val nE = edges.count()
-      if (nE <= maxDrv) {
-        val g = new CollectedEdges(slim, nE.toInt, weighted = true)
+    driverEdgeCount(edges, slim, seedTab) match {
+      case Some(nE) =>
+        val g = new CollectedEdges(slim, nE, weighted = true)
         val seedIx = seedTab.collect().map(r => g.idOf(r.getLong(0)))
         return ssspDriver(spark, g, seedIx, maxRounds)
-      }
+      case None =>
     }
     val maxB = maxBroadcastNodes(wEdges)
-    var bucketTable: Option[String] = None
-    def srcEdges(): DataFrame = {
-      if (bucketTable.isEmpty) {
-        val t = "graft_graph_edges_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
-        graft.sources.TableLayout.writeBucketed(edges, "src",
-          spark.conf.get("spark.sql.shuffle.partitions").toInt, t)
-        bucketTable = Some(t)
+    withLazyBucketedEdges(edges) { srcEdges =>
+      var dist = seeds.select(col("node")).distinct()
+        .withColumn("dist", lit(0L)).localCheckpoint(false)
+      var frontier = dist
+      var r = 0
+      var frontierN = frontier.count()
+      var distN = frontierN
+      while (r < maxRounds && frontierN > 0) {
+        r += 1
+        val fBc = frontierN <= maxB
+        val improved = ssspRound(if (fBc) edges else srcEdges(), frontier,
+            dist, fBc, distN <= maxB)
+          .localCheckpoint(false)
+        frontierN = improved.count()
+        dist = dist
+          .join(improved.select(col("node").as("_n"), col("dist").as("_nd")),
+            col("node") === col("_n"), "full_outer")
+          .select(coalesce(col("node"), col("_n")).as("node"),
+            coalesce(col("_nd"), col("dist")).as("dist"))
+          .localCheckpoint(false)
+        distN = dist.count()
+        frontier = improved
       }
-      spark.table(bucketTable.get)
-    }
-    var dist = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint(false)
-    var frontier = dist
-    var r = 0
-    var frontierN = frontier.count()
-    var distN = frontierN
-    while (r < maxRounds && frontierN > 0) {
-      r += 1
-      val fBc = frontierN <= maxB
-      val improved = ssspRound(if (fBc) edges else srcEdges(), frontier,
-          dist, fBc, distN <= maxB)
-        .localCheckpoint(false)
-      frontierN = improved.count()
-      dist = dist
-        .join(improved.select(col("node").as("_n"), col("dist").as("_nd")),
-          col("node") === col("_n"), "full_outer")
-        .select(coalesce(col("node"), col("_n")).as("node"),
-          coalesce(col("_nd"), col("dist")).as("dist"))
-        .localCheckpoint(false)
-      distN = dist.count()
-      frontier = improved
-    }
-    bucketTable match {
-      case None => dist
-      case Some(t) =>
-        val out = dist.localCheckpoint() // eager: safe to drop below
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        out
+      dist
     }
   }
 
@@ -2235,7 +2201,7 @@ object GraphOps {
     // collected counts; seeds replicate the top-3-by-degree rule in
     // memory ([[hubSeedIx]]). The relational self-join build + gate
     // below stays the unchanged 100 TB path.
-    collectBasketPairs(s, d, driverMaxEdgesConf(s, "sssp") / 2,
+    collectBasketPairs(s, d, driverMaxEdges(s) / 2,
         withMultiplicity = true) match {
       case Some(bp) =>
         val w = new Array[Long](bp.counts.length)
@@ -2315,9 +2281,7 @@ object GraphOps {
     // addExact) and the ppt normalization is the same floor division
     // on non-negatives — the HUGEINT oracle replays unchanged. The
     // relational two-hop loop below stays as the >gate scale path.
-    val maxDriver = s.conf
-      .getOption("spark.graft.hits.driverMaxEdges")
-      .map(_.toLong).getOrElse(8000000L)
+    val maxDriver = driverMaxEdges(s)
     val nE = e.count()
     require(nE > 0, "q214Hits needs a non-empty purchase graph")
     val longIds = e.schema.fields.forall(
@@ -2475,8 +2439,7 @@ object GraphOps {
     // r15: driver triangle kernel below the gate (the q107 rationale);
     // degree = the deduped distinct-neighbor count, exactly the
     // relational kernel's size(nbrs)
-    val base = collectBasketPairs(s, d,
-        driverMaxEdgesConf(s, "triangles") / 2)
+    val base = collectBasketPairs(s, d, driverMaxEdges(s) / 2)
       .map { bp =>
         val nN = bp.ids.length
         val (tri, deg) = driverTriangles(bp.us, bp.vs, nN)
@@ -2558,23 +2521,21 @@ object GraphOps {
     // edges — ~20 s total where the in-memory peel is milliseconds).
     // The truss fixpoint is unique whatever the peel order, so both
     // paths are bit-identical; the distributed loop below remains the
-    // >gate scale path (conf spark.graft.ktruss.driverPeelMaxEdges,
-    // default 8M UNDIRECTED edges ≈ 128 MB of driver ints). r14: the
-    // driver path collects the RAW symmetric rows and dedups while
-    // interning (sort+unique on dense-index pairs) — the relational
+    // >gate scale path ([[Gates.KtrussPeelEdges]], 8M UNDIRECTED edges
+    // ≈ 128 MB of driver ints). r14: the driver path collects the RAW
+    // symmetric rows and dedups while interning (sort+unique on
+    // dense-index pairs) — the relational
     // least/greatest + DISTINCT shuffle bought nothing the in-memory
     // dedup doesn't do for free; gate on raw rows ≤ 2·maxDriver
     // (= maxDriver undirected edges on deduped-symmetric input,
     // conservative when duplicates exist).
     val spark = symEdges.sparkSession
-    val maxDriver = spark.conf
-      .getOption("spark.graft.ktruss.driverPeelMaxEdges")
-      .map(_.toLong).getOrElse(8000000L)
+    val maxDriver = Gates.driver(spark, Gates.KtrussPeelEdges)
     val slim = symEdges.select(col("src"), col("dst"))
     if (allLongIds(slim) && maxDriver > 0) {
       val sym = slim.localCheckpoint(false)
       val nRaw = sym.count()
-      if (nRaw <= 2L * math.min(maxDriver, (Int.MaxValue - 8L) / 2)) {
+      if (nRaw <= 2L * maxDriver) {
         val g = new CollectedEdges(sym, nRaw.toInt, weighted = false)
         // normalize each pair to dense-index (lo, hi), drop self-loops,
         // sort + unique — dense pairs biject to id pairs, so this is
@@ -2987,9 +2948,7 @@ object GraphOps {
     */
   def q240KTruss(s: SparkSession, d: String): DataFrame = {
     val k = 6
-    val maxDriver = s.conf
-      .getOption("spark.graft.ktruss.driverPeelMaxEdges")
-      .map(_.toLong).getOrElse(8000000L)
+    val maxDriver = Gates.driver(s, Gates.KtrussPeelEdges)
     // r15: shared no-shuffle basket collect (the raw-pair budget is
     // Σ s·(s−1)/2 ≤ maxDriver — the old 2·maxDriver raw-row gate)
     collectBasketPairs(s, d, maxDriver) match {
@@ -3249,13 +3208,11 @@ object GraphOps {
     // by construction. Bit-identical: every step is exact integer and
     // deterministic (min-label components, min border cluster); the
     // conf-gated suite differential pins driver ≡ relational.
-    val maxDrv = driverMaxEdges(e, "scan")
-    if (allLongIds(e.select(col("src"), col("dst"))) && maxDrv > 0) {
-      val nE = e.count()
-      if (nE <= maxDrv)
-        return scanDriver(e.sparkSession,
-          new CollectedEdges(e.select(col("src"), col("dst")), nE.toInt,
-            weighted = false))
+    val slim = e.select(col("src"), col("dst"))
+    driverEdgeCount(e, slim) match {
+      case Some(nE) => return scanDriver(e.sparkSession,
+        new CollectedEdges(slim, nE, weighted = false))
+      case None =>
     }
     val und = e.filter(col("src") < col("dst"))
       .select(col("src").as("u"), col("dst").as("v"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Gates, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -879,8 +879,7 @@ object RelationalOps {
     // IEEE double tree: vLo + (pos − ⌊pos⌋)·(vHi − vLo)). Null values
     // would change rank accounting — any null routes to the relational
     // path rather than replicating null-first ordering driver-side.
-    val maxHist = s.conf.getOption("spark.graft.outliers.driverMaxHist")
-      .map(_.toLong).getOrElse(1000000L)
+    val maxHist = Gates.driver(s, Gates.OutlierHistRows)
     val medMad: Option[DataFrame] = if (maxHist <= 0) None else {
       val hist = ev.groupBy(col("event_type"), col("value"))
         .agg(count(lit(1)).as("_c"))
@@ -1802,11 +1801,10 @@ object RelationalOps {
     * externally checkable, unlike any sketch.
     */
   /** Key domains the single dense bitmap covers; larger domains chunk.
-    * Conf-overridable so tests can force the chunked path.
+    * 0 under the `scale` gate mode, which forces the chunked path.
     */
   private def denseBitmapMax(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.bitmap.denseMaxDomain")
-      .map(_.toLong).getOrElse(1L << 26)
+    Gates.memory(s, Gates.BitmapDenseDomain)
 
   /** Exact distinct keys + row count per group. Domains ≤
     * [[denseBitmapMax]] ride ONE dense bitmap per group; above that —

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Gates, Tables}
 import graft.functions.VectorExpressions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -962,7 +962,7 @@ object SimilarityOps {
       // r14 (guide §2.6-class idle-capacity fix): the streaming side of
       // the broadcast nested-loop is ONE parquet file → ≤4 scan tasks
       // carrying the whole n² pair scoring (q187 ran 5.8 s on 4 tasks).
-      // Spread the gate-bounded probe side (≤ exactMaxRows ≈ 100k slim
+      // Spread the gate-bounded probe side (≤ Gates.AnnExactRows ≈ 100k slim
       // rows — a trivial round-robin) across the session's parallelism;
       // per-pair values and everything downstream are unchanged.
       .repartition(s.sparkContext.defaultParallelism)
@@ -1046,11 +1046,11 @@ object SimilarityOps {
   }
 
   /** Scale-automatic candidate stage for q186/q187 (the q76
-    * `localTrainMaxWords` gating pattern, closing VERDICT r11 #3):
+    * `Gates.BpeLocalWords` gating pattern, closing VERDICT r11 #3):
     * EXACT all-pairs while the parquet-footer row count stays within
-    * `spark.graft.ann.exactMaxRows` (default 100k — the corpus-rides-
-    * a-broadcast ceiling), the IVF cell-pruned stage beyond it
-    * (16 cells, 10 probed).
+    * [[Gates.AnnExactRows]] (100k — the corpus-rides-a-broadcast
+    * ceiling; 0 under the `scale` gate mode), the IVF cell-pruned stage
+    * beyond it (16 cells, 10 probed).
     * The footer stat means NO count() job in the plan path, and at
     * every tested SF (≤20k embeddings) the plan stays exact — the
     * gate-scale oracles are unchanged while a 100 TB corpus picks the
@@ -1060,8 +1060,7 @@ object SimilarityOps {
       : DataFrame = {
     val nRows = graft.sources.TableStatistics
       .tableRowCount(s, d, "embeddings")
-    val maxExact = s.conf.getOption("spark.graft.ann.exactMaxRows")
-      .map(_.toLong).getOrElse(100000L)
+    val maxExact = Gates.memory(s, Gates.AnnExactRows)
     if (nRows <= maxExact) knnPurityScored(s, d)
     else ivfCandidateScores(s, Tables.embeddings(s, d), nCells = 16,
       nProbe = 10)
@@ -1597,8 +1596,8 @@ object SimilarityOps {
     * hash join of three packed collects (orders keys, lineitem rows
     // with the EXACT Spark-evaluated e4 price, part→brand dim) — no
     * distributed join/groupBy/checkpoint ever runs below the gates
-    * (footer lineitem rows ≤ copurchase.driverMaxRows; aggregated
-    * cells ≤ als.driverMaxCells; ≤255 brands and sub-2⁵⁵ custkeys for
+    * (footer lineitem rows ≤ [[Gates.CopurchaseRows]]; aggregated
+    * cells ≤ [[Gates.AlsCells]]; ≤255 brands and sub-2⁵⁵ custkeys for
     * the packed cell key — anything else falls back). The per-cell
     * rating replays the relational spelling exactly: exact long sum of
     * the Spark-cast e4 prices (addExact ≡ the ANSI sum), then
@@ -1606,11 +1605,8 @@ object SimilarityOps {
     */
   private def alsCellsDriver(s: SparkSession, d: String)
       : Option[(Array[Int], Array[Long], Array[Long], Array[String])] = {
-    val maxRows = s.conf
-      .getOption("spark.graft.copurchase.driverMaxRows")
-      .map(_.toLong).getOrElse(16000000L)
-    val maxCells = s.conf.getOption("spark.graft.als.driverMaxCells")
-      .map(_.toLong).getOrElse(8000000L)
+    val maxRows = Gates.driver(s, Gates.CopurchaseRows)
+    val maxCells = Gates.driver(s, Gates.AlsCells)
     if (maxRows <= 0 || maxCells <= 0) return None
     if (graft.sources.TableStatistics.tableRowCount(s, d, "lineitem")
         > maxRows) return None
@@ -1767,10 +1763,8 @@ object SimilarityOps {
     // the driver and a flat in-memory sum are the same integers),
     // killing the 16 half-round jobs + 16 broadcasts. The rdd
     // half-round path below stays as the >gate scale shape.
-    val maxCells = s.conf.getOption("spark.graft.als.driverMaxCells")
-      .map(_.toLong).getOrElse(8000000L)
-    val nCells = cells.count()
-    if (nCells <= maxCells) {
+    val maxCells = Gates.driver(s, Gates.AlsCells)
+    if (maxCells > 0 && cells.count() <= maxCells) {
       val rows = cells.collect()
       val nC = rows.length
       val brandIdx = new java.util.HashMap[String, Integer]()

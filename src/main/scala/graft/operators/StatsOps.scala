@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Gates, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -949,7 +949,7 @@ object StatsOps {
       .localCheckpoint(false)
     // r14 (the q240/q266 driver-state rule): the series is CALENDAR-
     // bounded (one row per day at any corpus scale), so below
-    // spark.graft.theilsen.driverMaxPoints the whole pair build + both
+    // [[Gates.TheilSenPoints]] the whole pair build + both
     // nearest-rank medians run on primitive arrays — the relational
     // spelling paid ~23 jobs of DistributedRank machinery for a
     // ~3M-long sort that takes milliseconds in memory. Bit-identical:
@@ -958,17 +958,10 @@ object StatsOps {
     // is engine-independent, residuals in BigInteger ≡ DECIMAL(38,0).
     // The long-bound precheck routes any series whose slope numerator
     // could overflow a long back to the decimal relational path.
-    val maxPts = series.sparkSession.conf
-      .getOption("spark.graft.theilsen.driverMaxPoints")
-      .map(_.toLong).getOrElse(5000L)
+    val maxPts = Gates.driver(series.sparkSession, Gates.TheilSenPoints)
     if (maxPts > 0) {
       val nRows = s.count()
-      // r15 (ADVICE low): the slopes array is ~n²/2 entries — a raised
-      // driverMaxPoints past ~65k points would overflow its Int length
-      // (NegativeArraySizeException); bound the PAIR count here so
-      // oversized series route to the relational path instead
-      if (nRows <= maxPts && nRows <= Int.MaxValue / 4 &&
-          nRows * (nRows - 1) / 2 <= Int.MaxValue - 8L) {
+      if (nRows <= maxPts) {
         // bound check BEFORE the long collect (an out-of-long decimal
         // would throw in the ANSI cast): values must fit longs and the
         // slope numerator 2·Δv·1e6 + Δt must fit a long
@@ -1045,13 +1038,12 @@ object StatsOps {
     if (nPairs == 0)
       return spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-    // r15 (ADVICE low): a raised driverMaxPoints past ~65k points makes
-    // nPairs (~n²/2) overflow Int — fail loud instead of a silent
-    // NegativeArraySizeException; the caller's gate should route such
-    // series to the relational path
+    // the slopes array is ~n²/2 entries: a Gates.TheilSenPoints past
+    // ~65k points would overflow its Int length — fail loud instead of
+    // a silent NegativeArraySizeException
     require(nPairs <= Int.MaxValue - 8L,
       s"theilSenDriver: $nPairs pair slopes exceed the in-memory bound" +
-        " — lower spark.graft.theilsen.driverMaxPoints")
+        " — lower Gates.TheilSenPoints")
     val slopes = new Array[Long](nPairs.toInt)
     var o = 0
     i = 0

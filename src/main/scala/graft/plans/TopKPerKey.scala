@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.Gates
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -162,8 +163,7 @@ case class TopKPerKeyExec(keyExprs: Seq[Expression], order: Seq[SortOrder],
     // requirement; the final (post-shuffle) phase reduces every key
     // exactly.
     val maxKeys = math.max(1L,
-      conf.getConfString("spark.graft.topk.maxMapKeys",
-        ((1L << 22) / math.max(1, kk)).toString).toLong)
+      Gates.mode(conf).memory(Gates.TopKMapRows) / math.max(1, kk))
     child.execute().mapPartitions({ it =>
       val keyProj = UnsafeProjection.create(keyEs, childOutput)
       val rowOrd = GenerateOrdering.generate(orderEs, childOutput)

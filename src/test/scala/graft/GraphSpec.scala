@@ -7,6 +7,15 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraphSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
+  /** `body`'s result and the number of bucketed edge tables
+    * (`graft_graph_edges_*`) it created.
+    */
+  private def bucketedWrites[T](body: => T): (T, Int) = {
+    val (out, execs, _) = recording(body)
+    (out, execs.count(qe => qe.logical.nodeName.startsWith("Create") &&
+      qe.logical.toString.contains("graft_graph_edges_")))
+  }
+
   /** Local reference PageRank with the operator's exact integer math. */
   private def localPageRank(edges: Seq[(Long, Long)], iters: Int)
       : Map[Long, Long] = {
@@ -269,11 +278,10 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
         : (Map[Long, Long], Map[Long, Long]) = {
       val drv = GraphOps.minLabelComponents(edges).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      spark.conf.set("spark.graft.cc.driverMaxNodes", "0")
-      val rel =
-        try GraphOps.minLabelComponents(edges).collect()
+      val rel = Gates.withMode(spark, Gates.Relational) {
+        GraphOps.minLabelComponents(edges).collect()
           .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        finally spark.conf.unset("spark.graft.cc.driverMaxNodes")
+      }
       (drv, rel)
     }
     // shuffled 800-node path (high diameter), repartitioned so the
@@ -461,12 +469,12 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
       GraphOps.bfsHops(edges, seeds, maxHops = 4)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     val bcMode = all()
-    spark.conf.set("spark.graft.graph.maxBroadcastNodes", "1")
-    try {
-      val fallback = all()
-      assert(fallback == bcMode)
-      assert(bcMode._1.nonEmpty && bcMode._3.nonEmpty && bcMode._4.size > 1)
-    } finally spark.conf.unset("spark.graft.graph.maxBroadcastNodes")
+    val (fallback, writes) =
+      bucketedWrites(Gates.withMode(spark, Gates.Scale)(all()))
+    assert(fallback == bcMode)
+    assert(bcMode._1.nonEmpty && bcMode._3.nonEmpty && bcMode._4.size > 1)
+    // each of the four loops ran on its own src-bucketed edge table
+    assert(writes == 4, s"$writes bucketed edge tables written")
   }
 
   test("weightedSssp: a cheap 3-hop detour beats the direct edge " +
@@ -485,9 +493,10 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     // <= 2 hops: node 4 still pinned to the direct edge's 10? No —
     // 1→2→3 costs 4, and 4 is reachable in 2 hops only via 1→4 (10)
     assert(run(2) == Map(1L -> 0L, 2L -> 2L, 3L -> 4L, 4L -> 10L))
-    spark.conf.set("spark.graft.graph.maxBroadcastNodes", "1")
-    try assert(run(8) == Map(1L -> 0L, 2L -> 2L, 3L -> 4L, 4L -> 6L))
-    finally spark.conf.unset("spark.graft.graph.maxBroadcastNodes")
+    val (bucketed, writes) =
+      bucketedWrites(Gates.withMode(spark, Gates.Scale)(run(8)))
+    assert(bucketed == Map(1L -> 0L, 2L -> 2L, 3L -> 4L, 4L -> 6L))
+    assert(writes == 1, s"$writes bucketed edge tables written")
   }
 
   test("q193 SSSP equals a local Bellman-Ford replay (8 rounds) over " +
@@ -561,16 +570,11 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
           r.get(i).asInstanceOf[Number].longValue).toList)).toMap
     val hitsDrv = rows3(GraphOps.q214Hits(spark, Sf))
     val lpaDrv = rows3(GraphOps.q126LabelProp(spark, Sf))
-    spark.conf.set("spark.graft.hits.driverMaxEdges", "0")
-    spark.conf.set("spark.graft.lpa.driverMaxEdges", "0")
-    try {
+    Gates.withMode(spark, Gates.Relational) {
       val hitsRel = rows3(GraphOps.q214Hits(spark, Sf))
       val lpaRel = rows3(GraphOps.q126LabelProp(spark, Sf))
       assert(hitsDrv == hitsRel && hitsDrv.nonEmpty)
       assert(lpaDrv == lpaRel && lpaDrv.nonEmpty)
-    } finally {
-      spark.conf.unset("spark.graft.hits.driverMaxEdges")
-      spark.conf.unset("spark.graft.lpa.driverMaxEdges")
     }
   }
 
@@ -578,8 +582,6 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
       "relational loops agree exactly") {
     def rows2(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val confs = Seq("pagerank", "ppr", "kcore", "bfs", "sssp")
-      .map(op => s"spark.graft.$op.driverMaxEdges")
     // q109's k=80 core is empty at sf0.001 — run the k-core kernel at
     // k=10 here so the equivalence check is non-trivial
     def all() = Seq(
@@ -590,15 +592,12 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
       rows2(GraphOps.q110BfsHops(spark, Sf)),
       rows2(GraphOps.q193Sssp(spark, Sf)))
     val drv = all()
-    confs.foreach(c => spark.conf.set(c, "0"))
-    try {
-      val rel = all()
-      drv.zip(rel).zipWithIndex.foreach { case ((d, rl), i) =>
-        assert(d == rl && d.nonEmpty, s"driver≠relational for kernel #$i:" +
-          s" extra=${(d.toSet -- rl.toSet).take(3)}" +
-          s" missing=${(rl.toSet -- d.toSet).take(3)}")
-      }
-    } finally confs.foreach(spark.conf.unset)
+    val rel = Gates.withMode(spark, Gates.Relational)(all())
+    drv.zip(rel).zipWithIndex.foreach { case ((d, rl), i) =>
+      assert(d == rl && d.nonEmpty, s"driver≠relational for kernel #$i:" +
+        s" extra=${(d.toSet -- rl.toSet).take(3)}" +
+        s" missing=${(rl.toSet -- d.toSet).take(3)}")
+    }
   }
 
   test("r14 SCAN driver kernel and the relational spelling agree " +
@@ -607,13 +606,11 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2),
         r.getString(3), if (r.isNullAt(4)) -1L else r.getLong(4)))).toMap
     val drv = rows(GraphOps.q265Scan(spark, Sf))
-    spark.conf.set("spark.graft.scan.driverMaxEdges", "0")
-    try {
-      val rel = rows(GraphOps.q265Scan(spark, Sf))
-      assert(drv == rel && drv.nonEmpty,
-        s"extra=${(drv.toSet -- rel.toSet).take(3)} " +
-          s"missing=${(rel.toSet -- drv.toSet).take(3)}")
-    } finally spark.conf.unset("spark.graft.scan.driverMaxEdges")
+    val rel = Gates.withMode(spark, Gates.Relational)(
+      rows(GraphOps.q265Scan(spark, Sf)))
+    assert(drv == rel && drv.nonEmpty,
+      s"extra=${(drv.toSet -- rel.toSet).take(3)} " +
+        s"missing=${(rel.toSet -- drv.toSet).take(3)}")
   }
 
   test("q223 local clustering coefficient equals an adjacency-set " +
@@ -705,22 +702,16 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     assert(gotS.keySet == clique.toSet)
     assert(gotS.values.forall(_ == 4L))
     // driver-peel ≡ relational-loop differential (r13): force the
-    // >gate distributed path via the conf and compare bit for bit on
-    // the real graph — the fixpoint is unique, so both paths must
+    // >gate distributed path via the gate mode and compare bit for bit
+    // on the real graph — the fixpoint is unique, so both paths must
     // agree on edges AND final supports
-    spark.conf.set("spark.graft.ktruss.driverPeelMaxEdges", "0")
-    try {
-      val rel = GraphOps.kTruss(raw, k = 6).collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-      val drv = {
-        spark.conf.unset("spark.graft.ktruss.driverPeelMaxEdges")
-        GraphOps.kTruss(raw, k = 6).collect()
-          .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-      }
-      assert(rel == drv,
-        s"relational≠driver: extra=${(rel.toSet -- drv.toSet).take(5)} " +
-          s"missing=${(drv.toSet -- rel.toSet).take(5)}")
-    } finally spark.conf.unset("spark.graft.ktruss.driverPeelMaxEdges")
+    def truss() = GraphOps.kTruss(raw, k = 6).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val rel = Gates.withMode(spark, Gates.Relational)(truss())
+    val drv = truss()
+    assert(rel == drv,
+      s"relational≠driver: extra=${(rel.toSet -- drv.toSet).take(5)} " +
+        s"missing=${(drv.toSet -- rel.toSet).take(5)}")
   }
 
   /** Local naive SCAN over an undirected (a<b) pair list — the shared
@@ -870,11 +861,9 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
         .map(_.toSeq.mkString("|")).toSet
     qs.foreach { name =>
       val fast = rset(name)
-      // force every basket collect off → the unchanged relational
-      // builds (whose own driver gates still apply, as before r15)
-      spark.conf.set("spark.graft.copurchase.driverMaxRows", "0")
-      val rel = try rset(name)
-        finally spark.conf.unset("spark.graft.copurchase.driverMaxRows")
+      // every basket collect and driver kernel off → the unchanged
+      // relational builds and loops
+      val rel = Gates.withMode(spark, Gates.Relational)(rset(name))
       assert(fast == rel, s"$name: fast≠relational " +
         s"extra=${(fast -- rel).take(3)} missing=${(rel -- fast).take(3)}")
       // the 80-core is legitimately empty at sf0.001
@@ -888,14 +877,12 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     // deduped in memory
     val drv = GraphOps.q240KTruss(spark, Sf).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    // forced relational path (gate = 0): the unchanged distributed peel
-    spark.conf.set("spark.graft.ktruss.driverPeelMaxEdges", "0")
-    try {
-      val rel = GraphOps.q240KTruss(spark, Sf).collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-      assert(drv == rel,
-        s"driver≠relational: extra=${(drv.toSet -- rel.toSet).take(5)} " +
-          s"missing=${(rel.toSet -- drv.toSet).take(5)}")
-    } finally spark.conf.unset("spark.graft.ktruss.driverPeelMaxEdges")
+    // forced relational path: the unchanged distributed peel
+    val rel = Gates.withMode(spark, Gates.Relational)(
+      GraphOps.q240KTruss(spark, Sf).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap)
+    assert(drv == rel,
+      s"driver≠relational: extra=${(drv.toSet -- rel.toSet).take(5)} " +
+        s"missing=${(rel.toSet -- drv.toSet).take(5)}")
   }
 }

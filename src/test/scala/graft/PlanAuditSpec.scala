@@ -205,13 +205,12 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
   test("q83 outliers: medians range-partitioned, caps broadcast back " +
       "(relational path); driver path broadcasts the med/mad table") {
     // >gate (the 100 TB shape): range-partitioned rank medians
-    spark.conf.set("spark.graft.outliers.driverMaxHist", "0")
-    try {
+    Gates.withMode(spark, Gates.Relational) {
       val p = plan(RelationalOps.q83Outliers(spark, Sf))
       assert(p.contains("Scan ExistingRDD"), p.take(2500)) // checkpointed range slices
       assert(p.contains("BroadcastHashJoin"), p.take(2500))
       assert(!p.contains("CartesianProduct"), p.take(2500))
-    } finally spark.conf.unset("spark.graft.outliers.driverMaxHist")
+    }
     // ≤gate: one histogram aggregate feeds a driver walk; the fact
     // scan joins the broadcast (type, med, mad) LocalRelation
     val pd = plan(RelationalOps.q83Outliers(spark, Sf))
@@ -800,15 +799,14 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     assert(pExact.contains("BroadcastNestedLoopJoin"), pExact.take(2500))
     // force the scale path: the candidate stage must become the
     // co-partitioned cell equi-join — NO nested loop, NO cartesian
-    spark.conf.set("spark.graft.ann.exactMaxRows", "1")
-    try {
+    Gates.withMode(spark, Gates.Scale) {
       val pIvf = plan(SimilarityOps.annCandidateScores(spark, Sf))
       assert(!pIvf.contains("BroadcastNestedLoopJoin") &&
         !pIvf.contains("CartesianProduct"), pIvf.take(2500))
       assert(pIvf.contains("cell"), pIvf.take(2500))
       // both consumers run on the swapped stage unchanged
       assert(SimilarityOps.q187KnnPurity(spark, Sf).count() > 0)
-    } finally spark.conf.unset("spark.graft.ann.exactMaxRows")
+    }
   }
 
   test("q188 seasonal decomposition: the unpartitioned 7-day window " +

@@ -378,11 +378,9 @@ class RelationalOpsSpec extends AnyFunSuite with SparkTestBase {
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3), r.getDouble(4))).toSet
     val drv = rows(RelationalOps.q83Outliers(spark, Sf))
-    spark.conf.set("spark.graft.outliers.driverMaxHist", "0")
-    try {
-      val rel = rows(RelationalOps.q83Outliers(spark, Sf))
-      assert(drv == rel && drv.nonEmpty)
-    } finally spark.conf.unset("spark.graft.outliers.driverMaxHist")
+    val rel = Gates.withMode(spark, Gates.Relational)(
+      rows(RelationalOps.q83Outliers(spark, Sf)))
+    assert(drv == rel && drv.nonEmpty)
   }
 
   test("scd2: runs collapse to intervals; re-appearing value opens a " +
@@ -1241,11 +1239,10 @@ class RelationalOpsSpec extends AnyFunSuite with SparkTestBase {
       .map(r => (r.getString(0), r.getString(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
     val (dense161, dense169) = (run161(), run169())
-    spark.conf.set("spark.graft.bitmap.denseMaxDomain", "1024")
-    try {
+    Gates.withMode(spark, Gates.Scale) {
       assert(run161() == dense161 && dense161.nonEmpty)
       assert(run169() == dense169 && dense169.nonEmpty)
-    } finally spark.conf.unset("spark.graft.bitmap.denseMaxDomain")
+    }
     // domain far past the dense cap: the old code path threw at plan
     // build; the chunked path counts exactly, including a pair with
     // NO shared chunk (the zero-overlap skeleton row)

@@ -795,21 +795,12 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     exp.foreach { case (k, x) => assert(got(k) == x, s"brand $k") }
     assert(got.values.forall(_._2 > 0))
     // r15 gate differential: the driver-join fast path (default, what
-    // `got` ran) ≡ the collected-cells path (copurchase.driverMaxRows=0)
-    // ≡ the rdd half-round scale path (als.driverMaxCells=0 too)
-    def rerun(): Map[String, (Long, Long, Long)] =
+    // `got` ran) ≡ the relational cells + rdd half-round scale path
+    val rel = Gates.withMode(spark, Gates.Relational)(
       SimilarityOps.q266AlsRank1(spark, Sf).collect()
         .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2),
-          r.getLong(3)))).toMap
-    spark.conf.set("spark.graft.copurchase.driverMaxRows", "0")
-    try {
-      assert(rerun() == got, "collected-cells path diverged")
-      spark.conf.set("spark.graft.als.driverMaxCells", "0")
-      assert(rerun() == got, "rdd half-round path diverged")
-    } finally {
-      spark.conf.unset("spark.graft.copurchase.driverMaxRows")
-      spark.conf.unset("spark.graft.als.driverMaxCells")
-    }
+          r.getLong(3)))).toMap)
+    assert(rel == got, "relational cells + rdd half-round path diverged")
   }
 
   test("q275 single linkage: equals a local profile+Kruskal replay; " +

@@ -2,19 +2,14 @@ package graft
 
 import graft.sources.ParquetUpsertSink
 import graft.sources.ParquetUpsertSink.SinkStats
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.{CollectMetricsExec, QueryExecution,
-  SparkPlan}
+import org.apache.spark.sql.execution.{CollectMetricsExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   QueryStageExec, ResultQueryStageExec}
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import scala.collection.mutable
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
@@ -95,35 +90,6 @@ class SinkSpec extends AnyFunSuite with SparkTestBase {
 
   private def rows(dir: String): Seq[Row] =
     ParquetUpsertSink.read(spark, dir).collect().toSeq.sortBy(_.toString)
-
-  /** SQL executions and jobs that `body` starts, counted after the
-    * listener bus drains.
-    */
-  private def recording[T](body: => T): (T, Seq[QueryExecution], Int) = {
-    val execs = mutable.ArrayBuffer.empty[QueryExecution]
-    var jobs = 0
-    val ql = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        execs.synchronized(execs += qe)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
-        execs.synchronized(execs += qe)
-    }
-    val jl = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        synchronized(jobs += 1)
-    }
-    ListenerBusDrain(spark.sparkContext)
-    spark.listenerManager.register(ql)
-    spark.sparkContext.addSparkListener(jl)
-    try {
-      val out = body
-      ListenerBusDrain(spark.sparkContext)
-      (out, execs.synchronized(execs.toList), jl.synchronized(jobs))
-    } finally {
-      spark.listenerManager.unregister(ql)
-      spark.sparkContext.removeSparkListener(jl)
-    }
-  }
 
   /** (observation, in the result stage?) for every observed node of a
     * finished plan: map stages and broadcast builds are not.

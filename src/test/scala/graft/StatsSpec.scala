@@ -684,11 +684,9 @@ class StatsSpec extends AnyFunSuite with SparkTestBase {
       val r = df.collect()(0); (r.getLong(0), r.getLong(1), r.getLong(2))
     }
     val drv = row3(StatsOps.q153TheilSen(spark, Sf))
-    spark.conf.set("spark.graft.theilsen.driverMaxPoints", "0")
-    try {
-      val rel = row3(StatsOps.q153TheilSen(spark, Sf))
-      assert(drv == rel, s"driver $drv vs relational $rel")
-    } finally spark.conf.unset("spark.graft.theilsen.driverMaxPoints")
+    val rel = Gates.withMode(spark, Gates.Relational)(
+      row3(StatsOps.q153TheilSen(spark, Sf)))
+    assert(drv == rel, s"driver $drv vs relational $rel")
   }
 
   test("wilsonLcb: a 2-of-2 group cannot outrank 180-of-200; values " +

@@ -191,9 +191,7 @@ class TopKSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("perKeyDistinct map-side state bound: exact under key overflow") {
-    val key = "spark.graft.topk.maxMapKeys"
-    spark.conf.set(key, "2")
-    try {
+    Gates.withMode(spark, Gates.Scale) {
       val rnd = new scala.util.Random(13)
       val rows = (0 until 2000).map(i =>
         (rnd.nextInt(100).toLong, i.toLong, rnd.nextInt(8).toDouble))
@@ -206,13 +204,11 @@ class TopKSpec extends AnyFunSuite with SparkTestBase {
         .filter(col("rk") <= 2)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == expected)
-    } finally spark.conf.unset(key)
+    }
   }
 
   test("withTies map-side state bound: exact under key overflow") {
-    val key = "spark.graft.topk.maxMapKeys"
-    spark.conf.set(key, "2")
-    try {
+    Gates.withMode(spark, Gates.Scale) {
       val rnd = new scala.util.Random(11)
       val rows = (0 until 2000).map(i =>
         (rnd.nextInt(100).toLong, i.toLong, rnd.nextInt(8).toDouble))
@@ -229,15 +225,13 @@ class TopKSpec extends AnyFunSuite with SparkTestBase {
       // v has only 8 distinct values over ~20 rows/key: ties beyond k
       // are guaranteed, so the ties contract is actually exercised
       assert(expected.size > 200)
-    } finally spark.conf.unset(key)
+    }
   }
 
   test("map-side state bound: results stay exact when keys overflow it") {
-    // force the partial phase to pass rows through after 2 tracked keys;
+    // force the partial phase to pass rows through after 1 tracked key;
     // the final phase must still produce the exact top-k per key
-    val key = "spark.graft.topk.maxMapKeys"
-    spark.conf.set(key, "2")
-    try {
+    Gates.withMode(spark, Gates.Scale) {
       val rnd = new scala.util.Random(7)
       val rows = (0 until 2000).map(i =>
         (rnd.nextInt(200).toLong, i.toLong, rnd.nextInt(50).toDouble))
@@ -250,7 +244,7 @@ class TopKSpec extends AnyFunSuite with SparkTestBase {
         .filter(col("rn") <= 3)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == expected)
-    } finally spark.conf.unset(key)
+    }
   }
 
   test("physical plan is the two-phase heap operator, not sort+window") {
