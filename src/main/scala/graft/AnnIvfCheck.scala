@@ -39,14 +39,15 @@ object AnnIvfCheck {
       .mutualNnFrom(exactScored.select("qid", "nid", "cos_sim"))
       .localCheckpoint(false)
 
-    // IVF branch through the REAL queries entries
+    // IVF branch through the REAL queries entries; eager checkpoints,
+    // so every stage (TopK map side included) runs, and is timed,
+    // under `scale`
     val t0 = System.nanoTime()
     val (i5, q186, q187rows) = Gates.withMode(spark, Gates.Scale) {
       val ivfScored = operators.SimilarityOps
-        .annCandidateScores(spark, d).localCheckpoint(false)
-      (top5(ivfScored).localCheckpoint(false),
-        SparkEntry.queries("q186_mutual_nn")(spark, d)
-          .localCheckpoint(false),
+        .annCandidateScores(spark, d).localCheckpoint()
+      (top5(ivfScored).localCheckpoint(),
+        SparkEntry.queries("q186_mutual_nn")(spark, d).localCheckpoint(),
         SparkEntry.queries("q187_knn_purity")(spark, d).count())
     }
     val tIvf = (System.nanoTime() - t0) / 1e9

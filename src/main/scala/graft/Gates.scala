@@ -21,8 +21,9 @@ object Gates {
   val Key = "spark.graft.gates"
 
   /** A path set. `driver`/`memory` give the limit a site compares with:
-    * the constant while that gate class is open, else 0, which no site
-    * passes (each needs a positive limit).
+    * the constant while that gate class is open, else 0. Driver sites
+    * need a positive limit, so none passes; memory sites compare
+    * `stat <= 0`, so any non-empty input goes past its bound.
     */
   sealed abstract class Mode(val name: String, driverOpen: Boolean,
       memoryOpen: Boolean) {

@@ -370,9 +370,16 @@ object GraphOps {
     (nodeTri, deg)
   }
 
+  /** The 3 hub seeds (symmetric degree desc, id asc) of a relational
+    * edge table, as a `node` column — the q110/q116/q193 seed rule.
+    */
+  private[graft] def hubSeeds(edges: DataFrame): DataFrame =
+    edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
+      .orderBy(col("d").desc, col("src")).limit(3)
+      .select(col("src").as("node"))
+
   /** Top-k hub seeds by (symmetric-degree desc, id asc) over a
-    * collected graph — the in-memory replica of
-    * `edges.groupBy(src).count.orderBy(d desc, src).limit(k)`.
+    * collected graph — the in-memory replica of [[hubSeeds]].
     */
   private def hubSeedIx(g: CollectedEdges, k: Int): Array[Int] = {
     val deg = new Array[Long](g.nN)
@@ -385,47 +392,60 @@ object GraphOps {
     df.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
 
-  /** Collected slim long-id edge list for the driver kernels: dense
-    * node index + parallel primitive edge arrays. Filled by ONE
-    * parallel job of per-partition packed long arrays (the
-    * driverForestComponents shape — toLocalIterator would run one
-    * SERIAL job per partition, which cost more than the round loop it
-    * replaced when first measured). `weighted` additionally captures a
-    * long weight column at row position 2. Seeds may be interned AFTER
-    * the fill (a seed without edges still indexes); size per-node
-    * arrays by [[nN]] only after all interning is done.
-    */
-  private final class CollectedEdges private (nE: Int, weighted: Boolean) {
-    private val nodeIdx = new java.util.HashMap[java.lang.Long, Integer]()
-    private var ids0 = new Array[Long](1024)
-    val ss = new Array[Int](nE); val ds = new Array[Int](nE)
-    val ws: Array[Long] = if (weighted) new Array[Long](nE) else null
-    def idOf(x: Long): Int = {
-      val got = nodeIdx.get(x)
+  /** Dense 0-based indexes for long ids, in first-seen order. */
+  private[operators] final class LongIds {
+    private val idx = new java.util.HashMap[java.lang.Long, Integer]()
+    private var ids = new Array[Long](1024)
+    def apply(x: Long): Int = {
+      val got = idx.get(x)
       if (got != null) got.intValue
       else {
-        val ix = nodeIdx.size
-        if (ix == ids0.length) ids0 = java.util.Arrays.copyOf(ids0, ix * 2)
-        ids0(ix) = x; nodeIdx.put(x, ix); ix
+        val ix = idx.size
+        if (ix == ids.length) ids = java.util.Arrays.copyOf(ids, ix * 2)
+        ids(ix) = x; idx.put(x, ix); ix
       }
     }
+    def size: Int = idx.size
+    def id(ix: Int): Long = ids(ix)
+    def toArray: Array[Long] = java.util.Arrays.copyOf(ids, size)
+  }
+
+  /** `df`'s first `width` long columns, one packed array per partition,
+    * collected by ONE parallel job (toLocalIterator would run one
+    * SERIAL job per partition, which cost more than the round loop it
+    * replaced when first measured).
+    */
+  private[operators] def packedLongs(df: DataFrame, width: Int)
+      : Array[Array[Long]] =
+    df.rdd.mapPartitions { it =>
+      var buf = new Array[Long](width * 1024)
+      var o = 0
+      it.foreach { row =>
+        if (o == buf.length) buf = java.util.Arrays.copyOf(buf, o * 2)
+        var c = 0
+        while (c < width) { buf(o + c) = row.getLong(c); c += 1 }
+        o += width
+      }
+      Iterator.single(java.util.Arrays.copyOf(buf, o))
+    }.collect()
+
+  /** Collected slim long-id edge list for the driver kernels: dense
+    * node index + parallel primitive edge arrays, filled by
+    * [[packedLongs]]. `weighted` additionally captures a long weight
+    * column at row position 2. Seeds may be interned AFTER the fill (a
+    * seed without edges still indexes); size per-node arrays by [[nN]]
+    * only after all interning is done.
+    */
+  private final class CollectedEdges private (nE: Int, weighted: Boolean) {
+    private val nodes = new LongIds
+    val ss = new Array[Int](nE); val ds = new Array[Int](nE)
+    val ws: Array[Long] = if (weighted) new Array[Long](nE) else null
+    def idOf(x: Long): Int = nodes(x)
     def this(edges: DataFrame, nE: Int, weighted: Boolean) = {
       this(nE, weighted)
       val width = if (weighted) 3 else 2
-      val packed: Array[Array[Long]] = edges.rdd.mapPartitions { it =>
-        var buf = new Array[Long](width * 1024)
-        var o = 0
-        it.foreach { row =>
-          if (o == buf.length)
-            buf = java.util.Arrays.copyOf(buf, o * 2)
-          buf(o) = row.getLong(0); buf(o + 1) = row.getLong(1)
-          if (width == 3) buf(o + 2) = row.getLong(2)
-          o += width
-        }
-        Iterator.single(java.util.Arrays.copyOf(buf, o))
-      }.collect()
       var i = 0
-      packed.foreach { part =>
+      packedLongs(edges, width).foreach { part =>
         var p = 0
         while (p < part.length) {
           ss(i) = idOf(part(p)); ds(i) = idOf(part(p + 1))
@@ -435,8 +455,8 @@ object GraphOps {
       }
       require(i == nE, s"CollectedEdges: edge count drifted ($i vs $nE)")
     }
-    def nN: Int = nodeIdx.size
-    def id(ix: Int): Long = ids0(ix)
+    def nN: Int = nodes.size
+    def id(ix: Int): Long = nodes.id(ix)
     /** CSR by src: (off, adj). */
     def csrBySrc(): (Array[Int], Array[Int]) = {
       val n = nN
@@ -609,17 +629,7 @@ object GraphOps {
     }
     if (nPairs > math.min(maxPairs, (Int.MaxValue - 8L))) return None
     // intern parts, emit dense (lo, hi) pairs per basket
-    val nodeIdx = new java.util.HashMap[java.lang.Long, Integer]()
-    var ids0 = new Array[Long](1024)
-    def idOf(x: Long): Int = {
-      val got = nodeIdx.get(x)
-      if (got != null) got.intValue
-      else {
-        val ix = nodeIdx.size
-        if (ix == ids0.length) ids0 = java.util.Arrays.copyOf(ids0, ix * 2)
-        ids0(ix) = x; nodeIdx.put(x, ix); ix
-      }
-    }
+    val idOf = new LongIds
     val pairs = new Array[Long](nPairs.toInt)
     var o = 0
     i = 0
@@ -655,8 +665,7 @@ object GraphOps {
       if (i == 0 || pairs(i) != pairs(i - 1)) nUnd += 1
       i += 1
     }
-    val nN = nodeIdx.size
-    val ids = java.util.Arrays.copyOf(ids0, nN)
+    val ids = idOf.toArray
     val us = new Array[Int](nUnd); val vs = new Array[Int](nUnd)
     val counts = new Array[Int](nUnd)
     var w = -1
@@ -1235,9 +1244,7 @@ object GraphOps {
           .select(col("node").as("partkey"), col("hops"))
       case None =>
         val edges = coPurchaseEdges(s, d).localCheckpoint(false)
-        val seeds = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-          .orderBy(col("d").desc, col("src")).limit(3)
-          .select(col("src").as("node"))
+        val seeds = hubSeeds(edges)
         bfsHops(edges, seeds, maxHops = 8)
           .select(col("node").as("partkey"), col("hops"))
     }
@@ -1358,9 +1365,7 @@ object GraphOps {
           .select(col("node").as("partkey"), col("r").as("ppr_ppt"))
       case None =>
         val edges = coPurchaseEdges(s, d).localCheckpoint(false)
-        val seeds = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-          .orderBy(col("d").desc, col("src")).limit(3)
-          .select(col("src").as("node"))
+        val seeds = hubSeeds(edges)
         personalizedPageRank(edges, seeds, iters = 10)
           .select(col("node").as("partkey"), col("r").as("ppr_ppt"))
     }
@@ -1486,44 +1491,13 @@ object GraphOps {
   private def driverLpa(edges: DataFrame, rounds: Int,
       n: Int): DataFrame = {
     val spark = edges.sparkSession
-    val nodeIdx = new java.util.HashMap[java.lang.Long, Integer]()
-    var ids = new Array[Long](1024)
-    val ss = new Array[Int](n); val ds = new Array[Int](n)
-    def idOf(x: Long): Int = {
-      val got = nodeIdx.get(x)
-      if (got != null) got.intValue
-      else {
-        val ix = nodeIdx.size
-        if (ix == ids.length) ids = java.util.Arrays.copyOf(ids, ix * 2)
-        ids(ix) = x; nodeIdx.put(x, ix); ix
-      }
-    }
-    var i = 0
-    // packed-collect fill (r14) — toLocalIterator ran one serial job
-    // per partition; see [[CollectedEdges]]
-    val packedParts: Array[Array[Long]] = edges.rdd.mapPartitions { it =>
-      var buf = new Array[Long](2048)
-      var o = 0
-      it.foreach { row =>
-        if (o == buf.length) buf = java.util.Arrays.copyOf(buf, o * 2)
-        buf(o) = row.getLong(0); buf(o + 1) = row.getLong(1)
-        o += 2
-      }
-      Iterator.single(java.util.Arrays.copyOf(buf, o))
-    }.collect()
-    packedParts.foreach { part =>
-      var p = 0
-      while (p < part.length) {
-        ss(i) = idOf(part(p)); ds(i) = idOf(part(p + 1))
-        p += 2; i += 1
-      }
-    }
-    require(i == n, s"driverLpa: edge count drifted ($i vs $n)")
-    val nN = nodeIdx.size
+    val g = new CollectedEdges(edges, n, weighted = false)
+    val ss = g.ss; val ds = g.ds
+    val nN = g.nN
     // CSR by dst: each node's slice lists its neighbors (the srcs
     // whose labels it counts — mirrors lpRound's groupBy(dst, lbl))
     val off = new Array[Int](nN + 1)
-    i = 0
+    var i = 0
     while (i < n) { off(ds(i) + 1) += 1; i += 1 }
     i = 0
     while (i < nN) { off(i + 1) += off(i); i += 1 }
@@ -1533,7 +1507,7 @@ object GraphOps {
     while (i < n) { nbr(pos(ds(i))) = ss(i); pos(ds(i)) += 1; i += 1 }
     var lbl = new Array[Long](nN)
     i = 0
-    while (i < nN) { lbl(i) = ids(i); i += 1 }
+    while (i < nN) { lbl(i) = g.id(i); i += 1 }
     val scratch = new Array[Long](
       (0 until nN).map(v => off(v + 1) - off(v)).foldLeft(0)(math.max))
     for (_ <- 0 until rounds) {
@@ -1567,7 +1541,7 @@ object GraphOps {
     val rows = new java.util.AbstractList[org.apache.spark.sql.Row] {
       override def size(): Int = nN
       override def get(ix: Int): org.apache.spark.sql.Row =
-        org.apache.spark.sql.Row(ids(ix), lblF(ix))
+        org.apache.spark.sql.Row(g.id(ix), lblF(ix))
     }
     spark.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("node",
@@ -2214,6 +2188,18 @@ object GraphOps {
           .select(col("node").as("partkey"), col("dist").as("cost"))
       case None =>
     }
+    val edges = coPurchaseWeightedEdges(s, d)
+    val seeds = hubSeeds(edges)
+    weightedSssp(edges, seeds, maxRounds = 8)
+      .select(col("node").as("partkey"), col("dist").as("cost"))
+  }
+
+  /** q193's symmetric weighted co-purchase edges, built relationally:
+    * w = ceil(1000 / row pairs sharing an order) per part pair (the
+    * `a.pk < b.pk` self-join, no distinct), checkpointed.
+    */
+  private[graft] def coPurchaseWeightedEdges(s: SparkSession, d: String)
+      : DataFrame = {
     val li = Tables.lineitem(s, d)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
     val pairs = li.as("a").join(li.as("b"),
@@ -2222,16 +2208,10 @@ object GraphOps {
       .agg(count(lit(1)).as("_c"))
       .select(col("s1"), col("s2"),
         expr("(1000 + _c - 1) DIV _c").as("w"))
-    val edges = pairs.select(col("s1").as("src"), col("s2").as("dst"),
-        col("w"))
+    pairs.select(col("s1").as("src"), col("s2").as("dst"), col("w"))
       .unionByName(pairs.select(col("s2").as("src"), col("s1").as("dst"),
         col("w")))
       .localCheckpoint(false)
-    val seeds = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-      .orderBy(col("d").desc, col("src")).limit(3)
-      .select(col("src").as("node"))
-    weightedSssp(edges, seeds, maxRounds = 8)
-      .select(col("node").as("partkey"), col("dist").as("cost"))
   }
 
   /** q214: HITS authority scores (Kleinberg 1999) on the BIPARTITE
@@ -2317,47 +2297,16 @@ object GraphOps {
 
   /** In-memory 4-round HITS over a collected (customer, part) edge
     * list — the below-gate path of [[q214Hits]]; see the dispatch
-    * comment there for the exactness argument. Streaming fill via
-    * toLocalIterator (the r13 driverPeel advice applied from the
-    * start), araw sums via addExact so a bound breach fails loud
-    * instead of wrapping.
+    * comment there for the exactness argument. One packed-collect
+    * fill ([[packedLongs]]), araw sums via addExact so a bound breach
+    * fails loud instead of wrapping.
     */
   private def q214HitsDriver(spark: SparkSession, e: DataFrame,
       n: Int): DataFrame = {
-    val custIdx = new java.util.HashMap[java.lang.Long, Integer]()
-    val partIdx = new java.util.HashMap[java.lang.Long, Integer]()
-    var partIds = new Array[Long](1024)
+    val cOf = new LongIds; val pOf = new LongIds
     val cs = new Array[Int](n); val ps = new Array[Int](n)
-    def cOf(x: Long): Int = {
-      val got = custIdx.get(x)
-      if (got != null) got.intValue
-      else { val ix = custIdx.size; custIdx.put(x, ix); ix }
-    }
-    def pOf(x: Long): Int = {
-      val got = partIdx.get(x)
-      if (got != null) got.intValue
-      else {
-        val ix = partIdx.size
-        if (ix == partIds.length)
-          partIds = java.util.Arrays.copyOf(partIds, ix * 2)
-        partIds(ix) = x; partIdx.put(x, ix); ix
-      }
-    }
     var i = 0
-    // packed-collect fill (r14) — toLocalIterator ran one serial job
-    // per partition; see [[CollectedEdges]]
-    val packedParts: Array[Array[Long]] = e.select(col("c"), col("p"))
-      .rdd.mapPartitions { it =>
-        var buf = new Array[Long](2048)
-        var o = 0
-        it.foreach { row =>
-          if (o == buf.length) buf = java.util.Arrays.copyOf(buf, o * 2)
-          buf(o) = row.getLong(0); buf(o + 1) = row.getLong(1)
-          o += 2
-        }
-        Iterator.single(java.util.Arrays.copyOf(buf, o))
-      }.collect()
-    packedParts.foreach { part =>
+    packedLongs(e.select(col("c"), col("p")), 2).foreach { part =>
       var p = 0
       while (p < part.length) {
         cs(i) = cOf(part(p)); ps(i) = pOf(part(p + 1))
@@ -2365,8 +2314,7 @@ object GraphOps {
       }
     }
     require(i == n, s"q214HitsDriver: edge count drifted ($i vs $n)")
-    hitsRoundsOut(spark, cs, ps,
-      java.util.Arrays.copyOf(partIds, partIdx.size), custIdx.size)
+    hitsRoundsOut(spark, cs, ps, pOf.toArray, cOf.size)
   }
 
   /** The 4 in-memory HITS rounds + output assembly over dense

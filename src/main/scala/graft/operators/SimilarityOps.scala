@@ -1613,55 +1613,28 @@ object SimilarityOps {
     // part → (brandIx, brandIds): interned in collect order (order
     // only affects internal indexing — every output is keyed by the
     // brand STRING)
-    val brandIdx = new java.util.HashMap[String, Integer]()
-    var brandIds = new Array[String](64)
+    val partBrand = Tables.part(s, d)
+      .select(col("p_partkey"), col("p_brand")).collect()
+    val brandIds = partBrand.map(_.getString(1)).distinct
+    val brandIdx = brandIds.zipWithIndex.toMap
     val pkToB = new java.util.HashMap[java.lang.Long, Integer]()
-    Tables.part(s, d).select(col("p_partkey"), col("p_brand"))
-      .collect().foreach { r =>
-        val b = r.getString(1)
-        var ix = brandIdx.get(b)
-        if (ix == null) {
-          ix = brandIdx.size
-          if (brandIdx.size == brandIds.length)
-            brandIds = java.util.Arrays.copyOf(brandIds, brandIds.length * 2)
-          brandIds(brandIdx.size) = b; brandIdx.put(b, ix)
-        }
-        pkToB.put(r.getLong(0), ix)
-      }
-    val nB = brandIdx.size
-    if (nB > 255) return None // packed (cust<<8 | brandIx) cell key
+    partBrand.foreach(r => pkToB.put(r.getLong(0), brandIdx(r.getString(1))))
+    if (brandIds.length > 255) return None // packed (cust<<8 | brandIx)
     // orders → ok → cust
     val okToCust = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-    Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-      .rdd.mapPartitions { it =>
-        var buf = new Array[Long](2048); var o = 0
-        it.foreach { r =>
-          if (o + 2 > buf.length)
-            buf = java.util.Arrays.copyOf(buf, buf.length * 2)
-          buf(o) = r.getLong(0); buf(o + 1) = r.getLong(1); o += 2
-        }
-        Iterator.single(java.util.Arrays.copyOf(buf, o))
-      }.collect().foreach { part =>
+    GraphOps.packedLongs(Tables.orders(s, d)
+        .select(col("o_orderkey"), col("o_custkey")), 2)
+      .foreach { part =>
         var p = 0
         while (p < part.length) {
           okToCust.put(part(p), part(p + 1)); p += 2
         }
       }
     // lineitem with the EXACT relational e4 projection, packed
-    val liPacked = Tables.lineitem(s, d)
+    val liPacked = GraphOps.packedLongs(Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_partkey"),
         expr("""CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * 10000
-                AS BIGINT)""").as("_e4"))
-      .rdd.mapPartitions { it =>
-        var buf = new Array[Long](3072); var o = 0
-        it.foreach { r =>
-          if (o + 3 > buf.length)
-            buf = java.util.Arrays.copyOf(buf, buf.length * 2)
-          buf(o) = r.getLong(0); buf(o + 1) = r.getLong(1)
-          buf(o + 2) = r.getLong(2); o += 3
-        }
-        Iterator.single(java.util.Arrays.copyOf(buf, o))
-      }.collect()
+                AS BIGINT)""").as("_e4")), 3)
     // driver hash join + (cust, brand) aggregation
     val acc = new java.util.HashMap[java.lang.Long, java.lang.Long]()
     var custOverflow = false
@@ -1701,39 +1674,14 @@ object SimilarityOps {
       rs(i) = (2L * e.getValue.longValue + 100L) / 200L
       i += 1
     }
-    Some((bs, cs, rs, java.util.Arrays.copyOf(brandIds, nB)))
+    Some((bs, cs, rs, brandIds))
   }
 
-  def q266AlsRank1(s: SparkSession, d: String): DataFrame = {
-    // r15: driver-join fast path (see [[alsCellsDriver]]) — the
-    // distributed orders⋈lineitem⋈part + groupBy + checkpoint +
-    // collect tower disappears below the gates; the SAME factored
-    // [[alsRank1Loop]] runs either way, and the gate differential in
-    // SimilaritySpec pins fast ≡ relational on the real data
-    locally {
-      import s.implicits._
-      val E12 = BigInt(1000000000000L)
-      val Cap = BigInt(1000000000000000L)
-      alsCellsDriver(s, d) match {
-        case Some((bs, cs, rs, brandIds)) =>
-          val nB = brandIds.length
-          val vArr = alsRank1Loop(bs, cs, rs, nB, E12, Cap)
-          // n_raters = cells per brand, straight from the cell arrays
-          val nR = new Array[Long](nB)
-          bs.foreach(b => nR(b) += 1)
-          val vDf = (0 until nB)
-            .map(ix => (brandIds(ix), nR(ix), vArr(ix)))
-            .toDF("brand", "n_raters", "v_e6")
-          return vDf
-            .withColumn("brand_rank", expr(
-              """CAST(row_number() OVER (ORDER BY v_e6 DESC, brand)
-                 AS BIGINT)"""))
-            .select(col("brand"), col("n_raters"), col("v_e6"),
-              col("brand_rank"))
-        case None =>
-      }
-    }
-    val cells = Tables.orders(s, d)
+  /** q266's (cust, brand, r) rating cells, built relationally
+    * (orders ⋈ lineitem ⋈ part, one groupBy) and checkpointed.
+    */
+  private[graft] def alsCells(s: SparkSession, d: String): DataFrame =
+    Tables.orders(s, d)
       .join(Tables.lineitem(s, d),
         col("o_orderkey") === col("l_orderkey"))
       .join(Tables.part(s, d).select(col("p_partkey"), col("p_brand")),
@@ -1743,6 +1691,64 @@ object SimilarityOps {
                      AS DECIMAL(18,4)) * 10000 AS BIGINT)) + 100)
                    DIV (2 * 100) AS BIGINT)""").as("r"))
       .localCheckpoint(false)
+
+  /** q266 over collected `cells`: brands interned in collect order,
+    * then [[alsRank1Out]]. The caller checks the cell gate.
+    */
+  private[graft] def alsRank1Collected(s: SparkSession, cells: DataFrame)
+      : DataFrame = {
+    val rows = cells.collect()
+    val brandIds = rows.map(_.getString(1)).distinct
+    val brandIdx = brandIds.zipWithIndex.toMap
+    alsRank1Out(s, rows.map(r => brandIdx(r.getString(1))),
+      rows.map(_.getLong(0)), rows.map(_.getLong(2)), brandIds)
+  }
+
+  /** q266 over dense cell arrays (brand index, customer, rating): all 8
+    * alternations of [[alsRank1Loop]] in memory, n_raters = cells per
+    * brand.
+    */
+  private def alsRank1Out(s: SparkSession, bs: Array[Int], cs: Array[Long],
+      rs: Array[Long], brandIds: Array[String]): DataFrame = {
+    import s.implicits._
+    val nB = brandIds.length
+    val vArr = alsRank1Loop(bs, cs, rs, nB,
+      BigInt(1000000000000L), BigInt(1000000000000000L))
+    val nR = new Array[Long](nB)
+    bs.foreach(b => nR(b) += 1)
+    alsRanked((0 until nB).map(ix => (brandIds(ix), nR(ix), vArr(ix)))
+      .toDF("brand", "n_raters", "v_e6"))
+  }
+
+  /** (brand, n_raters, v_e6) → q266's output, ranked by factor. */
+  private def alsRanked(f: DataFrame): DataFrame =
+    f.withColumn("brand_rank", expr(
+        """CAST(row_number() OVER (ORDER BY v_e6 DESC, brand)
+           AS BIGINT)"""))
+      .select(col("brand"), col("n_raters"), col("v_e6"),
+        col("brand_rank"))
+
+  def q266AlsRank1(s: SparkSession, d: String): DataFrame = {
+    // r15: driver-join fast path (see [[alsCellsDriver]]) — the
+    // distributed orders⋈lineitem⋈part + groupBy + checkpoint +
+    // collect tower disappears below the gates; the SAME factored
+    // [[alsRank1Loop]] runs either way, and the gate differential in
+    // SimilaritySpec pins fast ≡ relational on the real data
+    alsCellsDriver(s, d) match {
+      case Some((bs, cs, rs, brandIds)) =>
+        return alsRank1Out(s, bs, cs, rs, brandIds)
+      case None =>
+    }
+    val cells = alsCells(s, d)
+    // r14: the cell table is (customer × brand)-bounded — below the
+    // driver gate ALL 8 alternations run over ONE collected cell array
+    // (BigInt sums are order-free, so per-partition partials merged on
+    // the driver and a flat in-memory sum are the same integers),
+    // killing the 16 half-round jobs + 16 broadcasts. The rdd
+    // half-round path below stays as the >gate scale shape.
+    val maxCells = Gates.driver(s, Gates.AlsCells)
+    if (maxCells > 0 && cells.count() <= maxCells)
+      return alsRank1Collected(s, cells)
     // driver-state half-rounds (r12, the q105 scheduling-floor fix):
     // the factor vectors are brand-scale (v, ~25 entries) and
     // customer-scale (u — the same scale the relational spelling's
@@ -1757,47 +1763,6 @@ object SimilarityOps {
     import s.implicits._
     val E12 = BigInt(1000000000000L)
     val Cap = BigInt(1000000000000000L)
-    // r14: the cell table is (customer × brand)-bounded — below the
-    // driver gate ALL 8 alternations run over ONE collected cell array
-    // (BigInt sums are order-free, so per-partition partials merged on
-    // the driver and a flat in-memory sum are the same integers),
-    // killing the 16 half-round jobs + 16 broadcasts. The rdd
-    // half-round path below stays as the >gate scale shape.
-    val maxCells = Gates.driver(s, Gates.AlsCells)
-    if (maxCells > 0 && cells.count() <= maxCells) {
-      val rows = cells.collect()
-      val nC = rows.length
-      val brandIdx = new java.util.HashMap[String, Integer]()
-      var brandIds = new Array[String](64)
-      val bs = new Array[Int](nC); val cs = new Array[Long](nC)
-      val rs = new Array[Long](nC)
-      var i = 0
-      while (i < nC) {
-        val row = rows(i)
-        val b = row.getString(1)
-        var ix = brandIdx.get(b)
-        if (ix == null) {
-          ix = brandIdx.size
-          if (brandIdx.size == brandIds.length)
-            brandIds = java.util.Arrays.copyOf(brandIds, brandIds.length * 2)
-          brandIds(brandIdx.size) = b; brandIdx.put(b, ix)
-        }
-        bs(i) = ix.intValue; cs(i) = row.getLong(0); rs(i) = row.getLong(2)
-        i += 1
-      }
-      val nB = brandIdx.size
-      val vArr = alsRank1Loop(bs, cs, rs, nB, E12, Cap)
-      val vDf = (0 until nB).map(ix => (brandIds(ix), vArr(ix)))
-        .toDF("brand", "v_e6")
-      val n = cells.groupBy(col("brand"))
-        .agg(count(lit(1)).cast("long").as("n_raters"))
-      return vDf.join(n, "brand")
-        .withColumn("brand_rank", expr(
-          """CAST(row_number() OVER (ORDER BY v_e6 DESC, brand)
-             AS BIGINT)"""))
-        .select(col("brand"), col("n_raters"), col("v_e6"),
-          col("brand_rank"))
-    }
     val cellsRdd = cells.as[(Long, String, Long)].rdd
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def half[K](partials: Array[(K, (BigInt, BigInt))])
@@ -1844,14 +1809,8 @@ object SimilarityOps {
       bu.unpersist(false)
     }
     cellsRdd.unpersist(false)
-    val vDf = v.toSeq.toDF("brand", "v_e6")
     val n = cells.groupBy(col("brand"))
       .agg(count(lit(1)).cast("long").as("n_raters"))
-    vDf.join(n, "brand")
-      .withColumn("brand_rank", expr(
-        """CAST(row_number() OVER (ORDER BY v_e6 DESC, brand)
-           AS BIGINT)"""))
-      .select(col("brand"), col("n_raters"), col("v_e6"),
-        col("brand_rank"))
+    alsRanked(v.toSeq.toDF("brand", "v_e6").join(n, "brand"))
   }
 }

@@ -862,12 +862,49 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     qs.foreach { name =>
       val fast = rset(name)
       // every basket collect and driver kernel off → the unchanged
-      // relational builds and loops
+      // relational builds and loops (relational builds under the
+      // driver kernels: the next test)
       val rel = Gates.withMode(spark, Gates.Relational)(rset(name))
       assert(fast == rel, s"$name: fast≠relational " +
         s"extra=${(fast -- rel).take(3)} missing=${(rel -- fast).take(3)}")
       // the 80-core is legitimately empty at sf0.001
       if (name != "q109_kcore") assert(fast.nonEmpty, s"$name: empty")
+    }
+  }
+
+  test("r15 relational co-purchase builds through the driver kernels " +
+      "≡ the basket-collect fast paths (lineitem past the basket gate, " +
+      "edges under the kernel gate)") {
+    def rset(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.collect().map(_.toSeq.mkString("|")).toSet
+    // default mode: every kernel below takes its driver gate on the
+    // relational build (k-core's leg is the r14 test's k=10 case)
+    val edges = GraphOps.coPurchaseEdges(spark, Sf).localCheckpoint()
+    val seeds = GraphOps.hubSeeds(edges)
+    val wEdges = GraphOps.coPurchaseWeightedEdges(spark, Sf)
+    val pruned = GraphOps.prunedCoPurchaseEdges(spark, Sf, minCount = 2)
+      .localCheckpoint()
+    val lpa = GraphOps.labelPropagation(pruned, rounds = 5)
+      .select(col("node"), col("lbl"))
+    Seq(
+      (GraphOps.q105PageRank _, GraphOps.pageRank(edges, 15)
+        .select(col("node"), col("r"))),
+      (GraphOps.q116Ppr _, GraphOps.personalizedPageRank(edges, seeds,
+        iters = 10).select(col("node"), col("r"))),
+      (GraphOps.q110BfsHops _, GraphOps.bfsHops(edges, seeds, maxHops = 8)
+        .select(col("node"), col("hops"))),
+      (GraphOps.q193Sssp _, GraphOps.weightedSssp(wEdges,
+        GraphOps.hubSeeds(wEdges), maxRounds = 8)
+        .select(col("node"), col("dist"))),
+      (GraphOps.q126LabelProp _, lpa),
+      (GraphOps.q167Modularity _, GraphOps.modularity(pruned,
+        lpa.withColumnRenamed("lbl", "community"), topK = 25)),
+      (GraphOps.q265Scan _, GraphOps.scanCluster(pruned))
+    ).zipWithIndex.foreach { case ((query, viaRelational), i) =>
+      val fast = rset(query(spark, Sf))
+      val rel = rset(viaRelational)
+      assert(rel == fast && fast.nonEmpty, s"kernel #$i: " +
+        s"extra=${(rel -- fast).take(3)} missing=${(fast -- rel).take(3)}")
     }
   }
 

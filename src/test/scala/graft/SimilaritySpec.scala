@@ -795,11 +795,17 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     exp.foreach { case (k, x) => assert(got(k) == x, s"brand $k") }
     assert(got.values.forall(_._2 > 0))
     // r15 gate differential: the driver-join fast path (default, what
-    // `got` ran) ≡ the relational cells + rdd half-round scale path
+    // `got` ran) ≡ the relational cells + collected driver alternation
+    // (lineitem past the basket gate, cells under theirs) ≡ the
+    // relational cells + rdd half-round scale path
+    def byBrand(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2),
+        r.getLong(3)))).toMap
+    val collected = byBrand(SimilarityOps.alsRank1Collected(spark,
+      SimilarityOps.alsCells(spark, Sf)))
+    assert(collected == got, "collected-cells path diverged")
     val rel = Gates.withMode(spark, Gates.Relational)(
-      SimilarityOps.q266AlsRank1(spark, Sf).collect()
-        .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2),
-          r.getLong(3)))).toMap)
+      byBrand(SimilarityOps.q266AlsRank1(spark, Sf)))
     assert(rel == got, "relational cells + rdd half-round path diverged")
   }
 
