@@ -4,9 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
 
 /** Driver contract — see SURVEY.md §2 for the operator inventory and §7
-  * for the build plan. Every implemented operator appears in `queries`;
-  * SQL-expressible ones carry a DuckDB oracle in `oracleSql` with
-  * identical output column names.
+  * for the build plan. Every implemented operator is one [[Query]] in
+  * [[declared]]: its name, its Spark run and its DuckDB oracle, which
+  * returns identical output column names. `queries` and `oracleSql` are
+  * the two views of that list the driver reads.
   */
 object SparkEntry {
 
@@ -18,293 +19,17 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     RelationalOps.q22UsageRate(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_scan_project" -> (RelationalOps.q01ScanProject _),
-    "q02_filter" -> (RelationalOps.q02Filter _),
-    "q03_derived_flag" -> (RelationalOps.q03DerivedFlag _),
-    "q04_concat_key" -> (RelationalOps.q04ConcatKey _),
-    "q05_ts_parse" -> (RelationalOps.q05TsParse _),
-    "q06_season_assign" -> (RelationalOps.q06SeasonAssign _),
-    "q07_union_dedup" -> (RelationalOps.q07UnionDedup _),
-    "q08_insert_new_only" -> (RelationalOps.q08InsertNewOnly _),
-    "q09_semi_join" -> (RelationalOps.q09SemiJoin _),
-    "q10_blocklist" -> (RelationalOps.q10Blocklist _),
-    "q11_inner_join" -> (RelationalOps.q11InnerJoin _),
-    "q12_upsert_last_wins" -> (RelationalOps.q12UpsertLastWins _),
-    "q13_purge_keys" -> (RelationalOps.q13PurgeKeys _),
-    "q14_distinct" -> (RelationalOps.q14Distinct _),
-    "q15_json_flatten" -> (RelationalOps.q15JsonFlatten _),
-    "q16_array_guard" -> (RelationalOps.q16ArrayGuard _),
-    "q17_explode" -> (RelationalOps.q17Explode _),
-    "q18_cast_null" -> (RelationalOps.q18CastNull _),
-    "q19_recent_topk" -> (RelationalOps.q19RecentTopK _),
-    "q20_dim_join" -> (RelationalOps.q20DimJoin _),
-    "q21_win_rate" -> (RelationalOps.q21WinRate _),
-    "q22_usage_rate" -> (RelationalOps.q22UsageRate _),
-    "q23_exact_dedup" -> (DedupOps.q23ExactDedup _),
-    "q24_text_stats" -> (TextOps.q24TextStats _),
-    "q25_token_count" -> (TextOps.q25TokenCount _),
-    "q26_quality_score" -> (TextOps.q26QualityScore _),
-    "q27_lang_id" -> (TextOps.q27LangId _),
-    "q28_fingerprint" -> (TextOps.q28Fingerprint _),
-    "q29_minhash_lsh" -> (DedupOps.q29MinhashLsh _),
-    "q30_simhash" -> (DedupOps.q30Simhash _),
-    "q31_ngram_jaccard" -> (DedupOps.q31NgramJaccard _),
-    "q32_knn_bruteforce" -> (SimilarityOps.q32KnnBruteforce _),
-    "q33_ann_lsh" -> (SimilarityOps.q33AnnLsh _),
-    "q34_vector_ops" -> (SimilarityOps.q34VectorOps _),
-    "q35_multimodal" -> (MultimodalOps.q35Multimodal _),
-    "q36_embed_neardup" -> (SimilarityOps.q36EmbedNearDup _),
-    "q37_json_ingest" -> (graft.sources.JsonIngest.q37JsonIngest _),
-    "q38_topk_per_key" -> ((s, d) => graft.plans.TopK.perKey(
-      Tables.orders(s, d).select("o_custkey", "o_orderkey", "o_totalprice"),
-      keys = Seq("o_custkey"),
-      order = Seq(("o_totalprice", true), ("o_orderkey", false)), k = 3)),
-    "q39_asof_join" -> (AsOfJoin.q39AsOfJoin _),
-    "q40_ann_ivf" -> (IvfAnn.q40AnnIvf _),
-    "q41_table_stats" -> (RelationalOps.q41TableStats _),
-    "q42_running_total" -> (RelationalOps.q42RunningTotal _),
-    "q43_rollup" -> (RelationalOps.q43Rollup _),
-    "q44_pivot" -> (RelationalOps.q44Pivot _),
-    "q45_percentiles" -> (RelationalOps.q45Percentiles _),
-    "q46_seasons_table" -> (RelationalOps.q46SeasonsTable _),
-    "q47_top_ngrams" -> (TextOps.q47TopNgrams _),
-    "q48_fk_check" -> (RelationalOps.q48FkCheck _),
-    "q49_doc_embedding" -> (SimilarityOps.q49DocEmbedding _),
-    "q50_sample_per_group" -> (TextOps.q50SamplePerGroup _),
-    "q51_simhash_neardup" -> (DedupOps.q51SimhashNearDup _),
-    "q52_repetition_filters" -> (TextOps.q52RepetitionFilters _),
-    "q53_quantize" -> (SimilarityOps.q53Quantize _),
-    "q54_text_clean" -> (TextOps.q54TextClean _),
-    "q55_full_outer" -> (RelationalOps.q55FullOuter _),
-    "q56_set_ops" -> (RelationalOps.q56SetOps _),
-    "q57_surrogate_keys" -> (SurrogateKeys.q57SurrogateKeys _),
-    "q58_tfidf_terms" -> (TextOps.q58TfIdfTerms _),
-    "q59_token_histogram" -> (TextOps.q59TokenHistogram _),
-    "q60_sketch_stats" -> (RelationalOps.q60SketchStats _),
-    "q61_dedup_clusters" -> (DedupOps.q61DedupClusters _),
-    "q62_contamination" -> (DedupOps.q62Contamination _),
-    "q63_source_mix" -> (TextOps.q63SourceMix _),
-    "q64_pii_scrub" -> (TextOps.q64PiiScrub _),
-    "q65_chunking" -> (TextOps.q65Chunking _),
-    "q66_seq_packing" -> (TextOps.q66SequencePacking _),
-    "q67_boilerplate" -> (TextOps.q67Boilerplate _),
-    "q68_shuffle_order" -> (TextOps.q68ShuffleOrder _),
-    "q69_split" -> (TextOps.q69Split _),
-    "q70_domain_cap" -> (TextOps.q70DomainCap _),
-    "q71_mix_weights" -> (TextOps.q71MixWeights _),
-    "q72_user_seq" -> (RelationalOps.q72UserSeq _),
-    "q73_snap_diff" -> (RelationalOps.q73SnapDiff _),
-    "q74_bigram_cov" -> (TextOps.q74BigramCov _),
-    "q75_semdedup" -> (SimilarityOps.q75SemDedup _),
-    "q76_bpe" -> (BpeTrain.q76Bpe _),
-    "q77_hh" -> (TextOps.q77Hh _),
-    "q78_winsor" -> (RelationalOps.q78Winsor _),
-    "q79_sessions" -> (RelationalOps.q79Sessions _),
-    "q80_funnel" -> (RelationalOps.q80Funnel _),
-    "q81_retention" -> (RelationalOps.q81Retention _),
-    "q82_token_budget" -> (TextOps.q82TokenBudget _),
-    "q83_outliers" -> (RelationalOps.q83Outliers _),
-    "q84_neardup_contam" -> (DedupOps.q84NearDupContam _),
-    "q85_bloom_join" -> (BloomJoin.q85BloomJoin _),
-    "q86_salted_join" -> (SkewJoin.q86SaltedJoin _),
-    "q87_quantized_ann" -> (SimilarityOps.q87QuantizedAnn _),
-    "q88_span_scrub" -> (DedupOps.q88SpanScrub _),
-    "q89_interval_join" -> (RangeJoin.q89IntervalJoin _),
-    "q90_funnel4" -> (RelationalOps.q90Funnel4 _),
-    "q91_fuzzy_join" -> (FuzzyJoin.q91FuzzyJoin _),
-    "q92_scd2" -> (RelationalOps.q92Scd2 _),
-    "q93_corr_matrix" -> (StatsOps.q93CorrMatrix _),
-    "q94_sliding_window" -> (RelationalOps.q94SlidingWindow _),
-    "q95_dq_report" -> (StatsOps.q95DqReport _),
-    "q96_setsim_join" -> (DedupOps.q96SetSimJoin _),
-    "q97_incr_agg" -> (RelationalOps.q97IncrAgg _),
-    "q98_pit_join" -> (RelationalOps.q98PitJoin _),
-    "q99_gap_fill" -> (RelationalOps.q99GapFill _),
-    "q100_grouping_sets" -> (RelationalOps.q100GroupingSets _),
-    "q101_zorder" -> (graft.sources.ZOrderLayout.q101Zorder _),
-    "q102_incr_scd2" -> (RelationalOps.q102IncrScd2 _),
-    "q103_pmi" -> (TextOps.q103Pmi _),
-    "q104_inverted_index" -> (TextOps.q104InvertedIndex _),
-    "q105_pagerank" -> (GraphOps.q105PageRank _),
-    "q106_bpe_encode" -> (BpeTrain.q106BpeEncode _),
-    "q107_triangles" -> (GraphOps.q107Triangles _),
-    "q108_containment" -> (DedupOps.q108ContainmentJoin _),
-    "q109_kcore" -> (GraphOps.q109KCore _),
-    "q110_bfs_hops" -> (GraphOps.q110BfsHops _),
-    "q111_lm_score" -> (TextOps.q111LmScore _),
-    "q112_bm25" -> (TextOps.q112Bm25 _),
-    "q113_markov" -> (RelationalOps.q113Markov _),
-    "q114_weighted_sample" -> (TextOps.q114WeightedSample _),
-    "q115_equidepth_bins" -> (RelationalOps.q115EquidepthBins _),
-    "q116_ppr" -> (GraphOps.q116Ppr _),
-    "q117_cube" -> (RelationalOps.q117Cube _),
-    "q118_incr_index" -> (TextOps.q118IncrIndex _),
-    "q119_flow_score" -> (RelationalOps.q119FlowScore _),
-    "q120_pq_ann" -> (PqAnn.q120PqAnn _),
-    "q121_ivfpq" -> (IvfPq.q121IvfPq _),
-    "q122_skyline" -> (RelationalOps.q122Skyline _),
-    "q123_attribution" -> (RelationalOps.q123Attribution _),
-    "q124_source_drift" -> (TextOps.q124SourceDrift _),
-    "q125_item_sim" -> (SimilarityOps.q125ItemSim _),
-    "q126_label_prop" -> (GraphOps.q126LabelProp _),
-    "q127_convert_latency" -> (RelationalOps.q127ConvertLatency _),
-    "q128_neg_sampling" -> (RelationalOps.q128NegativeSampling _),
-    "q129_peak_concurrency" -> (RelationalOps.q129PeakConcurrency _),
-    "q130_ols_trend" -> (StatsOps.q130OlsTrend _),
-    "q131_assoc_rules" -> (SimilarityOps.q131AssocRules _),
-    "q132_ab_test" -> (StatsOps.q132AbTest _),
-    "q133_seasonal_anomaly" -> (StatsOps.q133SeasonalAnomaly _),
-    "q134_cusum" -> (StatsOps.q134Cusum _),
-    "q135_ks_test" -> (StatsOps.q135KsTest _),
-    "q136_winnow_repeats" -> (DedupOps.q136WinnowRepeats _),
-    "q137_skew_profile" -> (StatsOps.q137SkewProfile _),
-    "q138_bootstrap_ci" -> (StatsOps.q138BootstrapCi _),
-    "q139_textrank" -> (TextOps.q139TextRank _),
-    "q140_trigram_motifs" -> (RelationalOps.q140TrigramMotifs _),
-    "q141_behavior_diversity" -> (RelationalOps.q141BehaviorDiversity _),
-    "q142_weighted_median" -> (StatsOps.q142WeightedMedian _),
-    "q143_mann_whitney" -> (StatsOps.q143MannWhitney _),
-    "q144_benford" -> (StatsOps.q144Benford _),
-    "q145_join_cardinality" -> (StatsOps.q145JoinCardinality _),
-    "q146_pareto_abc" -> (RelationalOps.q146ParetoAbc _),
-    "q147_proration" -> (RelationalOps.q147Proration _),
-    "q148_acf" -> (StatsOps.q148Acf _),
-    "q149_survival" -> (StatsOps.q149Survival _),
-    "q150_rrf_fusion" -> (SimilarityOps.q150RrfFusion _),
-    "q151_link_predict" -> (GraphOps.q151LinkPredict _),
-    "q152_strat_sample" -> (TextOps.q152StratSample _),
-    "q153_theil_sen" -> (StatsOps.q153TheilSen _),
-    "q154_wilson_lcb" -> (StatsOps.q154WilsonLcb _),
-    "q155_cramers_v" -> (StatsOps.q155CramersV _),
-    "q156_mmr" -> (SimilarityOps.q156MmrDiversify _),
-    "q157_incr_cc" -> (GraphOps.q157IncrCc _),
-    "q158_trunc_ann" -> (SimilarityOps.q158TruncatedAnn _),
-    "q159_moments" -> (StatsOps.q159Moments _),
-    "q160_ewma" -> (StatsOps.q160Ewma _),
-    "q161_bitmap_distinct" -> (RelationalOps.q161BitmapDistinct _),
-    "q162_sketch_rollup" -> (RelationalOps.q162SketchRollup _),
-    "q163_business_days" -> (RelationalOps.q163BusinessDays _),
-    "q164_asof_snapshot" -> (RelationalOps.q164AsOfSnapshot _),
-    "q165_decile_lift" -> (StatsOps.q165DecileLift _),
-    "q166_rfm" -> (StatsOps.q166Rfm _),
-    "q167_modularity" -> (GraphOps.q167Modularity _),
-    "q168_quantile_norm" -> (TextOps.q168QuantileNorm _),
-    "q169_overlap_matrix" -> (RelationalOps.q169OverlapMatrix _),
-    "q170_cosine_allpairs" -> (SimilarityOps.q170CosineAllPairs _),
-    "q171_tv_matrix" -> (TextOps.q171TvMatrix _),
-    "q172_rolling_median" -> (StatsOps.q172RollingMedian _),
-    "q173_mann_kendall" -> (StatsOps.q173MannKendall _),
-    "q174_assortativity" -> (GraphOps.q174Assortativity _),
-    "q175_key_gaps" -> (RelationalOps.q175KeyGaps _),
-    "q176_quantile_rollup" -> (RelationalOps.q176QuantileRollup _),
-    "q177_price_volume_mix" -> (RelationalOps.q177PriceVolumeMix _),
-    "q178_repeat_decay" -> (RelationalOps.q178RepeatDecay _),
-    "q179_purchase_gaps" -> (RelationalOps.q179PurchaseGaps _),
-    "q180_tier_migration" -> (RelationalOps.q180TierMigration _),
-    "q181_rolling_distinct" -> (RelationalOps.q181RollingDistinct _),
-    "q182_concentration" -> (RelationalOps.q182Concentration _),
-    "q183_absorption" -> (RelationalOps.q183Absorption _),
-    "q184_dup_payments" -> (RelationalOps.q184DupPayments _),
-    "q185_cohort_ltv" -> (RelationalOps.q185CohortLtv _),
-    "q186_mutual_nn" -> (SimilarityOps.q186MutualNn _),
-    "q187_knn_purity" -> (SimilarityOps.q187KnnPurity _),
-    "q188_seasonal_decomp" -> (StatsOps.q188SeasonalDecomp _),
-    "q189_lead_lag" -> (StatsOps.q189LeadLag _),
-    "q190_golden_record" -> (RelationalOps.q190GoldenRecord _),
-    "q191_fd_discovery" -> (RelationalOps.q191FdDiscovery _),
-    "q192_unpivot" -> (RelationalOps.q192Unpivot _),
-    "q193_sssp" -> (GraphOps.q193Sssp _),
-    "q194_kmeans" -> (SimilarityOps.q194Kmeans _),
-    "q195_gini_rank" -> (StatsOps.q195GiniRank _),
-    "q196_interp_fill" -> (RelationalOps.q196InterpFill _),
-    "q197_table_checksum" -> (RelationalOps.q197TableChecksum _),
-    "q198_medoid" -> (SimilarityOps.q198Medoid _),
-    "q199_vocab_growth" -> (TextOps.q199VocabGrowth _),
-    "q200_holt_smoothing" -> (StatsOps.q200HoltSmoothing _),
-    "q201_rev_rec" -> (RelationalOps.q201RevenueRecognition _),
-    "q202_dwell_time" -> (RelationalOps.q202DwellTime _),
-    "q203_share_of_parent" -> (RelationalOps.q203ShareOfParent _),
-    "q204_transition_latency" -> (RelationalOps.q204TransitionLatency _),
-    "q205_k_anonymity" -> (RelationalOps.q205KAnonymity _),
-    "q206_entry_paths" -> (RelationalOps.q206EntryPaths _),
-    "q207_term_screen" -> (TextOps.q207TermScreen _),
-    "q208_twap" -> (RelationalOps.q208Twap _),
-    "q209_format_census" -> (MultimodalOps.q209FormatCensus _),
-    "q210_spend_gini" -> (StatsOps.q210SpendGini _),
-    "q211_isotonic" -> (StatsOps.q211IsotonicCalibration _),
-    "q212_shapley" -> (RelationalOps.q212ShapleyAttribution _),
-    "q213_rec_eval" -> (RelationalOps.q213RecEval _),
-    "q214_hits" -> (GraphOps.q214Hits _),
-    "q215_top_movers" -> (RelationalOps.q215TopMovers _),
-    "q216_growth_accounting" -> (RelationalOps.q216GrowthAccounting _),
-    "q217_kcenter" -> (SimilarityOps.q217KcenterCoreset _),
-    "q218_dup_source_matrix" -> (DedupOps.q218DupSourceMatrix _),
-    "q219_tokenizer_fertility" -> (TextOps.q219TokenizerFertility _),
-    "q220_interval_coverage" -> (RelationalOps.q220IntervalCoverage _),
-    "q221_spearman" -> (StatsOps.q221Spearman _),
-    "q222_changelog_compact" -> (RelationalOps.q222ChangelogCompact _),
-    "q223_clustering_coef" -> (GraphOps.q223ClusteringCoef _),
-    "q224_forecast_backtest" -> (StatsOps.q224ForecastBacktest _),
-    "q225_outlier_screen" -> (SimilarityOps.q225OutlierScreen _),
-    "q226_dedup_yield" -> (DedupOps.q226DedupYield _),
-    "q227_ann_index_search" -> (graft.sources.AnnIndexStore.q227AnnIndexSearch _),
-    "q228_rate_limit" -> (RelationalOps.q228RateLimitReplay _),
-    "q229_epsilon_join" -> (SimilarityOps.q229EpsilonJoin _),
-    "q230_ndcg_eval" -> (RelationalOps.q230NdcgEval _),
-    "q231_two_hop_reach" -> (GraphOps.q231TwoHopReach _),
-    "q232_seq_patterns" -> (RelationalOps.q232SeqPatterns _),
-    "q233_holt_winters" -> (StatsOps.q233HoltWinters _),
-    "q234_rbo" -> (SimilarityOps.q234Rbo _),
-    "q235_conformal" -> (StatsOps.q235ConformalCalibration _),
-    "q236_interval_overlap" -> (RelationalOps.q236IntervalOverlapJoin _),
-    "q237_countmin" -> (StatsOps.q237CountMin _),
-    "q238_feature_hashing" -> (TextOps.q238FeatureHashing _),
-    "q239_dbscan" -> (SimilarityOps.q239Dbscan _),
-    "q240_ktruss" -> (GraphOps.q240KTruss _),
-    "q241_user_growth" -> (RelationalOps.q241UserGrowth _),
-    "q242_conformance" -> (RelationalOps.q242Conformance _),
-    "q243_simpson" -> (StatsOps.q243SimpsonScreen _),
-    "q244_woe_iv" -> (StatsOps.q244WoeIv _),
-    "q245_js_matrix" -> (TextOps.q245JsMatrix _),
-    "q246_doc_entropy" -> (TextOps.q246DocEntropy _),
-    "q247_quality_classifier" -> (TextOps.q247QualityClassifier _),
-    "q248_softmax_mix" -> (TextOps.q248SoftmaxMix _),
-    "q249_perplexity" -> (TextOps.q249Perplexity _),
-    "q250_calibration" -> (StatsOps.q250Calibration _),
-    "q251_decayed_engagement" -> (RelationalOps.q251DecayedEngagement _),
-    "q252_roc_auc" -> (StatsOps.q252RocAuc _),
-    "q253_l_diversity" -> (RelationalOps.q253LDiversity _),
-    "q254_t_closeness" -> (RelationalOps.q254TCloseness _),
-    "q255_fifo_costing" -> (RelationalOps.q255FifoCosting _),
-    "q256_sprt" -> (StatsOps.q256Sprt _),
-    "q257_naive_bayes" -> (TextOps.q257NaiveBayes _),
-    "q258_zipf_fit" -> (TextOps.q258ZipfFit _),
-    "q259_readability" -> (TextOps.q259Readability _),
-    "q260_cuped" -> (StatsOps.q260Cuped _),
-    "q261_hill_tail" -> (StatsOps.q261HillTail _),
-    "q262_jl_projection" -> (SimilarityOps.q262JlProjection _),
-    "q263_bradley_terry" -> (StatsOps.q263BradleyTerry _),
-    "q264_rendezvous" -> (RelationalOps.q264RendezvousShards _),
-    "q265_scan_cluster" -> (GraphOps.q265Scan _),
-    "q266_als_rank1" -> (SimilarityOps.q266AlsRank1 _),
-    "q267_sax" -> (StatsOps.q267Sax _),
-    "q268_mutual_info" -> (StatsOps.q268MutualInfo _),
-    "q269_perm_test" -> (StatsOps.q269PermutationTest _),
-    "q270_dp_release" -> (RelationalOps.q270DpRelease _),
-    "q271_partial_corr" -> (StatsOps.q271PartialCorr _),
-    "q272_elasticity" -> (StatsOps.q272Elasticity _),
-    "q273_ams_sketch" -> (StatsOps.q273AmsSketch _),
-    "q274_fano_factor" -> (StatsOps.q274FanoFactor _),
-    "q275_single_linkage" -> (SimilarityOps.q275SingleLinkage _),
-    "q276_rolling_ols" -> (StatsOps.q276RollingOls _),
-    "q277_retention_halflife" -> (RelationalOps.q277RetentionHalflife _),
-    "q278_srm_check" -> (StatsOps.q278SrmCheck _),
-    "q279_seasonality_strength" -> (StatsOps.q279SeasonalityStrength _),
-    "q280_segmental_ttr" -> (TextOps.q280SegmentalTtr _),
-    "q281_diff_in_diff" -> (StatsOps.q281DiffInDiff _),
-  )
+  /** One operator from SURVEY.md §2. `oracle` is DuckDB SQL over the same
+    * parquet tables; its column names match the Spark result exactly
+    * (the driver sorts columns by name before hashing).
+    */
+  final case class Query(name: String,
+      run: (SparkSession, String) => DataFrame, oracle: String)
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    declared.map(q => q.name -> q.run).toMap
+  lazy val oracleSql: Map[String, String] =
+    declared.map(q => q.name -> q.oracle).toMap
 
   /** q29's generated oracle (r13): the q31 md5-MinHash replay widened
     * to the full 32-hash / 8-band family — 32 `list_min(md5('j|'||x))`
@@ -2878,10 +2603,6 @@ object SparkEntry {
     rows.mkString(", ")
   }
 
-  /** DuckDB-runnable equivalents over the same parquet tables. Output
-    * column names match the Spark results exactly (the driver sorts
-    * columns by name before hashing).
-    */
   /** q40's generated oracle (r12): the IntKMeans CTE chain (k=16,
     * THREE Lloyd rounds, md5-capped sample — bit-identical to the
     * Spark trainer) + full-corpus exact integer assignment + per-query
@@ -3149,89 +2870,30 @@ object SparkEntry {
          WHERE rn = 1"""
   }
 
-  def oracleSql: Map[String, String] = Map(
-    "q40_ann_ivf" -> ivfExactOracleSql,
-    "q75_semdedup" -> semDedupOracleSql,
-    "q120_pq_ann" -> pqExactOracleSql,
-    "q121_ivfpq" -> ivfPqExactOracleSql,
-    "q227_ann_index_search" -> ivfPqExactOracleSql,
-    // q60 gated like q162: the sketch VALUES have no cross-engine
-    // oracle, so the output carries exact row counts plus booleans
-    // asserting the sketch claims (HLL within 3·rsd + slack; approx
-    // median inside its ±0.001 rank-guarantee window). Same COUPLING
-    // WARNING as q162: the TRUEs depend on Spark's sketch
-    // implementations and the driver's scale factor — if this entry
-    // goes red, check RelationalOpsSpec's q60 test first (same claims,
-    // per-flag messages).
-    "q60_sketch_stats" ->
-      """SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n_rows,
-                TRUE AS orders_ndv_ok, TRUE AS parts_ndv_ok,
-                TRUE AS p50_rank_ok
-         FROM lineitem GROUP BY 1""",
-    // full DDSketch replay from the shared exact-rational range table:
-    // identical bucket assignment (integer (lo, hi] ranges), identical
-    // integer nearest-rank rule (100·cum ≥ p·n), identical exact
-    // estimates — engine-exact end to end, no libm on either side
-    "q176_quantile_rollup" ->
-      s"""WITH r(pos, lo, hi, est) AS (VALUES $ddSketchRangesSql),
-         u AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT)
-                    AS u
-           FROM events WHERE value IS NOT NULL
-         ), pb AS (
-           SELECT event_type, day, r.pos, r.est
-           FROM u JOIN r ON u.u > r.lo AND u.u <= r.hi
-         ), merged AS (
-           SELECT event_type, pos, MIN(est) AS est,
-                  CAST(COUNT(*) AS BIGINT) AS c
-           FROM pb GROUP BY 1, 2
-         ), tot AS (
-           SELECT event_type, CAST(SUM(c) AS BIGINT) AS n_events
-           FROM merged GROUP BY 1
-         ), days AS (
-           SELECT event_type, CAST(COUNT(DISTINCT day) AS BIGINT)
-                    AS n_days
-           FROM u GROUP BY 1
-         ), cum AS (
-           SELECT event_type, pos, est,
-                  SUM(c) OVER (PARTITION BY event_type ORDER BY pos)
-                    AS cum
-           FROM merged
-         )
-         SELECT c.event_type, d.n_days, t.n_events,
-                CAST(MIN(CASE WHEN cum * 100 >= 50 * t.n_events
-                              THEN est END) AS BIGINT) AS p50_units,
-                CAST(MIN(CASE WHEN cum * 100 >= 95 * t.n_events
-                              THEN est END) AS BIGINT) AS p95_units,
-                CAST(MIN(CASE WHEN cum * 100 >= 99 * t.n_events
-                              THEN est END) AS BIGINT) AS p99_units
-         FROM cum c
-         JOIN tot t USING (event_type) JOIN days d USING (event_type)
-         GROUP BY 1, 2, 3""",
-    "q01_scan_project" ->
-      "SELECT o_orderkey, o_custkey, o_orderpriority FROM orders",
-    "q02_filter" ->
+  lazy val declared: Seq[Query] = Seq(
+    Query("q01_scan_project", RelationalOps.q01ScanProject,
+      "SELECT o_orderkey, o_custkey, o_orderpriority FROM orders"),
+    Query("q02_filter", RelationalOps.q02Filter,
       """SELECT l_orderkey, l_linenumber, l_returnflag, l_shipdate
          FROM lineitem
-         WHERE l_returnflag = 'R' AND l_shipdate < TIMESTAMP '1998-01-01'""",
-    "q03_derived_flag" ->
+         WHERE l_returnflag = 'R' AND l_shipdate < TIMESTAMP '1998-01-01'"""),
+    Query("q03_derived_flag", RelationalOps.q03DerivedFlag,
       """SELECT l_orderkey, l_linenumber,
                 (l_extendedprice * (1 - l_discount) > 30000) AS high_value
-         FROM lineitem""",
-    "q04_concat_key" ->
+         FROM lineitem"""),
+    Query("q04_concat_key", RelationalOps.q04ConcatKey,
       """SELECT event_id,
                 strftime(ts, '%Y%m%d%H%M%S') || '_' || CAST(user_id AS VARCHAR)
                   AS match_key
-         FROM events""",
-    "q05_ts_parse" ->
+         FROM events"""),
+    Query("q05_ts_parse", RelationalOps.q05TsParse,
       """SELECT event_id,
                 try_strptime(
                   CASE WHEN event_type = 'error' THEN 'not-a-timestamp'
                        ELSE strftime(ts, '%Y%m%dT%H%M%S.%fZ') END,
                   '%Y%m%dT%H%M%S.%fZ') AS parsed_ts
-         FROM events""",
-    "q06_season_assign" ->
+         FROM events"""),
+    Query("q06_season_assign", RelationalOps.q06SeasonAssign,
       """WITH e AS (
            SELECT event_id, ts, date_trunc('month', ts) AS m0 FROM events
          ), s AS (
@@ -3244,65 +2906,65 @@ object SparkEntry {
                 CASE WHEN ts >= sstart THEN strftime(m0, '%Y-%m')
                      ELSE strftime(m0 - INTERVAL '1 month', '%Y-%m') END
                   AS season_id
-         FROM s""",
-    "q07_union_dedup" ->
+         FROM s"""),
+    Query("q07_union_dedup", RelationalOps.q07UnionDedup,
       """SELECT DISTINCT * FROM (
            SELECT * FROM orders WHERE o_orderdate < TIMESTAMP '1999-01-01'
            UNION ALL
            SELECT * FROM orders WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-         )""",
-    "q08_insert_new_only" ->
+         )"""),
+    Query("q08_insert_new_only", RelationalOps.q08InsertNewOnly,
       """SELECT o_orderkey, o_custkey, o_orderstatus FROM orders o
          WHERE NOT EXISTS (
-           SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)""",
-    "q09_semi_join" ->
+           SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)"""),
+    Query("q09_semi_join", RelationalOps.q09SemiJoin,
       """SELECT l_orderkey, l_linenumber, l_partkey, l_quantity
          FROM lineitem l
          WHERE EXISTS (SELECT 1 FROM part p
-                       WHERE p.p_partkey = l.l_partkey AND p.p_size > 45)""",
-    "q10_blocklist" ->
+                       WHERE p.p_partkey = l.l_partkey AND p.p_size > 45)"""),
+    Query("q10_blocklist", RelationalOps.q10Blocklist,
       """SELECT c_custkey, c_name, c_mktsegment FROM customer
-         WHERE c_custkey NOT IN (1, 7, 13, 42, 99)""",
-    "q11_inner_join" ->
+         WHERE c_custkey NOT IN (1, 7, 13, 42, 99)"""),
+    Query("q11_inner_join", RelationalOps.q11InnerJoin,
       """SELECT l_orderkey, l_linenumber, l_partkey, o_custkey, o_orderdate
-         FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey""",
-    "q12_upsert_last_wins" ->
+         FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey"""),
+    Query("q12_upsert_last_wins", RelationalOps.q12UpsertLastWins,
       """SELECT user_id, ts AS last_ts, event_type AS last_event_type,
                 "value" AS last_value
          FROM events
          QUALIFY row_number() OVER (
-           PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1""",
-    "q13_purge_keys" ->
+           PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1"""),
+    Query("q13_purge_keys", RelationalOps.q13PurgeKeys,
       """SELECT l_orderkey, l_linenumber, l_suppkey FROM lineitem l
          WHERE NOT EXISTS (
            SELECT 1 FROM supplier s
-           WHERE s.s_suppkey = l.l_suppkey AND s.s_acctbal < 0)""",
-    "q14_distinct" ->
-      "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
-    "q15_json_flatten" ->
+           WHERE s.s_suppkey = l.l_suppkey AND s.s_acctbal < 0)"""),
+    Query("q14_distinct", RelationalOps.q14Distinct,
+      "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem"),
+    Query("q15_json_flatten", RelationalOps.q15JsonFlatten,
       """SELECT event_id, event_type,
                 CAST(json_extract_string(props, '$.k') AS INTEGER) AS k
-         FROM events""",
-    "q16_array_guard" ->
+         FROM events"""),
+    Query("q16_array_guard", RelationalOps.q16ArrayGuard,
       """SELECT vec_id,
                 CAST(CASE WHEN len(embedding) >= 1 THEN embedding[1]
                           ELSE 0 END AS DOUBLE) AS e1,
                 CAST(CASE WHEN len(embedding) >= 2 THEN embedding[2]
                           ELSE 0 END AS DOUBLE) AS e2
-         FROM embeddings""",
-    "q17_explode" ->
+         FROM embeddings"""),
+    Query("q17_explode", RelationalOps.q17Explode,
       """SELECT vec_id, CAST(ord - 1 AS INTEGER) AS pos,
                 CAST(v AS DOUBLE) AS val
          FROM (SELECT vec_id, unnest(embedding) AS v,
                       generate_subscripts(embedding, 1) AS ord
-               FROM embeddings)""",
-    "q18_cast_null" ->
+               FROM embeddings)"""),
+    Query("q18_cast_null", RelationalOps.q18CastNull,
       """SELECT p_partkey, CAST(p_partkey AS VARCHAR) AS pk_str,
                 CAST(CASE WHEN p_size > 40 THEN NULL ELSE p_size END
                      AS BIGINT) AS size_masked,
                 CAST(round(p_retailprice * 100) AS BIGINT) AS retail_cents
-         FROM part""",
-    "q19_recent_topk" ->
+         FROM part"""),
+    Query("q19_recent_topk", RelationalOps.q19RecentTopK,
       """WITH o AS (
            SELECT *, date_trunc('month', o_orderdate) AS period_m FROM orders
          ), latest AS (SELECT max(period_m) AS m FROM o),
@@ -3316,13 +2978,13 @@ object SparkEntry {
            JOIN customer c ON o.o_custkey = c.c_custkey
            WHERE o.period_m = l.m
          )
-         SELECT * FROM ranked WHERE rank <= 100""",
-    "q20_dim_join" ->
+         SELECT * FROM ranked WHERE rank <= 100"""),
+    Query("q20_dim_join", RelationalOps.q20DimJoin,
       """SELECT c_custkey, c_name, n_name, r_name
          FROM customer c
          JOIN nation n ON c.c_nationkey = n.n_nationkey
-         JOIN region r ON n.n_regionkey = r.r_regionkey""",
-    "q21_win_rate" ->
+         JOIN region r ON n.n_regionkey = r.r_regionkey"""),
+    Query("q21_win_rate", RelationalOps.q21WinRate,
       """SELECT o_custkey,
                 CASE WHEN COUNT(*) = 0 THEN NULL
                      ELSE ROUND(100.0 * SUM(CASE WHEN o_orderstatus = 'F'
@@ -3331,8 +2993,8 @@ object SparkEntry {
                 CAST(COUNT(*) AS BIGINT) AS n_orders
          FROM orders
          WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-         GROUP BY o_custkey""",
-    "q22_usage_rate" ->
+         GROUP BY o_custkey"""),
+    Query("q22_usage_rate", RelationalOps.q22UsageRate,
       """WITH j AS (
            SELECT l.l_returnflag, p.p_brand
            FROM lineitem l
@@ -3348,21 +3010,21 @@ object SparkEntry {
                 ROUND(100.0 * n_uses / total, 2) AS usage_rate,
                 ROUND(100.0 * wins / n_uses, 2) AS win_rate,
                 CAST(n_uses AS BIGINT) AS n_uses
-         FROM b, t""",
-    "q23_exact_dedup" ->
+         FROM b, t"""),
+    Query("q23_exact_dedup", DedupOps.q23ExactDedup,
       """SELECT md5(lower(trim(text))) AS content_hash,
                 CAST(MIN(doc_id) AS BIGINT) AS keep_doc_id,
                 CAST(COUNT(*) AS BIGINT) AS dup_count
-         FROM documents GROUP BY 1""",
-    "q24_text_stats" ->
+         FROM documents GROUP BY 1"""),
+    Query("q24_text_stats", TextOps.q24TextStats,
       """SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS n_docs,
                 CAST(SUM(n_chars) AS BIGINT) AS total_chars,
                 CAST(MIN(n_chars) AS BIGINT) AS min_chars,
                 CAST(MAX(n_chars) AS BIGINT) AS max_chars,
                 CAST((2 * 100 * SUM(n_chars) + COUNT(*))
                   // (2 * COUNT(*)) AS BIGINT) / 100.0 AS avg_chars
-         FROM documents GROUP BY lang, source""",
-    "q25_token_count" ->
+         FROM documents GROUP BY lang, source"""),
+    Query("q25_token_count", TextOps.q25TokenCount,
       """SELECT doc_id,
                 CAST(len(string_split_regex(lower(trim(text)), '\s+'))
                      AS BIGINT) AS n_tokens,
@@ -3371,8 +3033,8 @@ object SparkEntry {
                 CAST(len(list_distinct(
                        string_split_regex(lower(trim(text)), '\s+')))
                      AS BIGINT) AS n_distinct_tokens
-         FROM documents""",
-    "q26_quality_score" ->
+         FROM documents"""),
+    Query("q26_quality_score", TextOps.q26QualityScore,
       """WITH t AS (
            SELECT doc_id,
                   CAST(len(string_split_regex(lower(trim(text)), '\s+'))
@@ -3392,10 +3054,10 @@ object SparkEntry {
                 ((nonspace * 200 + n_tokens) // (2 * n_tokens)) / 100.0
                   AS avg_token_len,
                 (n_tokens >= 20 AND n_tokens <= 1000) AS length_ok
-         FROM t""",
+         FROM t"""),
     // marker-count heuristic; tie-break priority zh>fr>es>de>en mirrors
     // the Spark foldLeft (later langs overwrite on equal score)
-    "q27_lang_id" ->
+    Query("q27_lang_id", TextOps.q27LangId,
       """WITH t AS (
            SELECT doc_id, text,
                   string_split_regex(lower(trim(text)), '\s+') AS toks
@@ -3436,12 +3098,12 @@ object SparkEntry {
                      WHEN best > 0 AND sc_de = best THEN 'de'
                      WHEN best > 0 AND sc_en = best THEN 'en'
                      ELSE 'und' END AS predicted_lang
-         FROM g""",
+         FROM g"""),
     // r14: the default md5 position-tagged family — token t at 1-based
     // position i contributes its first-13-hex-digit md5 int; Σ mod 10¹⁸.
     // Spark folds with a per-step mod (bounded long), the oracle sums in
     // HUGEINT then mods once — equal because every term is non-negative.
-    "q28_fingerprint" ->
+    Query("q28_fingerprint", TextOps.q28Fingerprint,
       """WITH tok AS (
            SELECT doc_id,
                   CAST(('0x' || substr(md5(tk[i] || ':'
@@ -3456,15 +3118,13 @@ object SparkEntry {
          SELECT doc_id,
                 CAST(SUM(CAST(h AS HUGEINT))
                      % 1000000000000000000 AS BIGINT) AS fingerprint
-         FROM tok GROUP BY 1""",
+         FROM tok GROUP BY 1"""),
     // full LSH-candidates → exact-verify pipeline: md5 minhash minima are
     // engine-identical hex strings, so DuckDB reproduces the candidate
     // set exactly — never all-pairs on either side
-    "q29_minhash_lsh" -> minhashLshOracleSql,
-    "q30_simhash" -> simhashSigOracleSql,
-    "q33_ann_lsh" -> annLshOracleSql,
-    "q51_simhash_neardup" -> simhashNearDupOracleSql,
-    "q31_ngram_jaccard" ->
+    Query("q29_minhash_lsh", DedupOps.q29MinhashLsh, minhashLshOracleSql),
+    Query("q30_simhash", DedupOps.q30Simhash, simhashSigOracleSql),
+    Query("q31_ngram_jaccard", DedupOps.q31NgramJaccard,
       """WITH corpus AS (
            SELECT doc_id, text FROM documents
            UNION ALL
@@ -3512,8 +3172,8 @@ object SparkEntry {
          )
          SELECT doc_a, doc_b,
                 ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 3) AS jaccard
-         FROM iv""",
-    "q32_knn_bruteforce" ->
+         FROM iv"""),
+    Query("q32_knn_bruteforce", SimilarityOps.q32KnnBruteforce,
       """WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
                     WHERE vec_id < 10),
          pairs AS (SELECT q.qid, e.vec_id AS nid, q.qe, e.embedding AS ne
@@ -3531,8 +3191,9 @@ object SparkEntry {
                            CAST(row_number() OVER (PARTITION BY qid
                              ORDER BY cos_sim DESC, nid) AS BIGINT) AS rank
                     FROM scored)
-         SELECT qid, nid, cos_sim, rank FROM ranked WHERE rank <= 5""",
-    "q34_vector_ops" ->
+         SELECT qid, nid, cos_sim, rank FROM ranked WHERE rank <= 5"""),
+    Query("q33_ann_lsh", SimilarityOps.q33AnnLsh, annLshOracleSql),
+    Query("q34_vector_ops", SimilarityOps.q34VectorOps,
       """WITH un AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
                             CAST(unnest(list_reverse(embedding)) AS DOUBLE)
                               AS y
@@ -3540,14 +3201,14 @@ object SparkEntry {
          SELECT vec_id,
                 ROUND(sqrt(SUM(x*x)), 4) AS l2_norm,
                 ROUND(SUM(x*y), 4) AS dot_rev
-         FROM un GROUP BY vec_id""",
+         FROM un GROUP BY vec_id"""),
     // the synthesis→decode composition has a closed form over
     // (doc_id, text): format by md5 digit (the q209 recipe), image
     // geometry/strides from the byte length, pixel/sample statistics
     // from per-character code sums (the corpus is ASCII — one byte per
     // char). The Spark side REALLY decodes the synthesized container;
     // this replays what that decode must yield.
-    "q35_multimodal" ->
+    Query("q35_multimodal", MultimodalOps.q35Multimodal,
       """WITH d AS (
            SELECT doc_id, CAST(length(text) AS BIGINT) AS L,
                   CAST(list_sum(list_transform(
@@ -3588,8 +3249,8 @@ object SparkEntry {
                   THEN (2 * 100 * bsum + 3 * w * h) // (2 * 3 * w * h)
                   ELSE (2 * 100 * asum * 256 + L) // (2 * L) END
                   AS BIGINT) AS mean_e2
-         FROM g""",
-    "q36_embed_neardup" ->
+         FROM g"""),
+    Query("q36_embed_neardup", SimilarityOps.q36EmbedNearDup,
       """WITH c AS (
            SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE))
                     AS e
@@ -3610,8 +3271,8 @@ object SparkEntry {
          SELECT va AS vec_a, vb AS vec_b,
                 ROUND(dot / (sqrt(na) * sqrt(nb)), 4) AS cos_sim
          FROM d
-         WHERE ROUND(dot / (sqrt(na) * sqrt(nb)), 4) >= 0.9""",
-    "q37_json_ingest" ->
+         WHERE ROUND(dot / (sqrt(na) * sqrt(nb)), 4) >= 0.9"""),
+    Query("q37_json_ingest", graft.sources.JsonIngest.q37JsonIngest,
       """WITH e AS (
            SELECT event_id, ts, user_id, event_type, "value",
                   CAST(json_extract_string(props, '$.k') AS INT) AS k
@@ -3635,27 +3296,31 @@ object SparkEntry {
                 CAST(CASE WHEN event_id % 3 = 0 THEN 0 ELSE k * 5 END AS INT)
                   AS princess_tower2_hp,
                 "value" AS elixir_leaked
-         FROM e WHERE event_type <> 'error'""",
-    "q38_topk_per_key" ->
+         FROM e WHERE event_type <> 'error'"""),
+    Query("q38_topk_per_key", ((s, d) => graft.plans.TopK.perKey(
+      Tables.orders(s, d).select("o_custkey", "o_orderkey", "o_totalprice"),
+      keys = Seq("o_custkey"),
+      order = Seq(("o_totalprice", true), ("o_orderkey", false)), k = 3)),
       """SELECT o_custkey, o_orderkey, o_totalprice FROM orders
          QUALIFY row_number() OVER (
            PARTITION BY o_custkey
-           ORDER BY o_totalprice DESC, o_orderkey) <= 3""",
-    "q39_asof_join" ->
+           ORDER BY o_totalprice DESC, o_orderkey) <= 3"""),
+    Query("q39_asof_join", AsOfJoin.q39AsOfJoin,
       """SELECT e.event_id, e.user_id, e.ts, p.purchase_ts AS last_purchase_ts
          FROM events e
          ASOF LEFT JOIN (SELECT user_id, ts, ts AS purchase_ts FROM events
                          WHERE event_type = 'purchase') p
-           ON e.user_id = p.user_id AND e.ts >= p.ts""",
-    "q41_table_stats" ->
+           ON e.user_id = p.user_id AND e.ts >= p.ts"""),
+    Query("q40_ann_ivf", IvfAnn.q40AnnIvf, ivfExactOracleSql),
+    Query("q41_table_stats", RelationalOps.q41TableStats,
       """SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
                 CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
                 MIN(l_quantity) AS min_qty, MAX(l_quantity) AS max_qty,
                 MIN(l_shipdate) AS min_shipdate,
                 MAX(l_shipdate) AS max_shipdate,
                 SUM(l_quantity) AS sum_qty
-         FROM lineitem""",
-    "q42_running_total" ->
+         FROM lineitem"""),
+    Query("q42_running_total", RelationalOps.q42RunningTotal,
       """SELECT o_custkey, o_orderkey, o_orderdate,
                 CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) OVER (
                   PARTITION BY o_custkey
@@ -3667,12 +3332,12 @@ object SparkEntry {
                     PARTITION BY o_custkey
                     ORDER BY o_orderdate, o_orderkey),
                   o_orderdate) AS BIGINT) AS days_since_prev
-         FROM orders""",
-    "q43_rollup" ->
+         FROM orders"""),
+    Query("q43_rollup", RelationalOps.q43Rollup,
       """SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS n_docs,
                 CAST(SUM(n_chars) AS BIGINT) AS total_chars
-         FROM documents GROUP BY ROLLUP (lang, source)""",
-    "q44_pivot" ->
+         FROM documents GROUP BY ROLLUP (lang, source)"""),
+    Query("q44_pivot", RelationalOps.q44Pivot,
       """SELECT user_id,
                 CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
                      AS BIGINT) AS n_click,
@@ -3684,13 +3349,13 @@ object SparkEntry {
                      AS BIGINT) AS n_signup,
                 CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
                      AS BIGINT) AS n_error
-         FROM events GROUP BY user_id""",
-    "q45_percentiles" ->
+         FROM events GROUP BY user_id"""),
+    Query("q45_percentiles", RelationalOps.q45Percentiles,
       """SELECT l_returnflag,
                 ROUND(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
                 ROUND(quantile_cont(l_extendedprice, 0.95), 4) AS p95
-         FROM lineitem GROUP BY l_returnflag""",
-    "q46_seasons_table" ->
+         FROM lineitem GROUP BY l_returnflag"""),
+    Query("q46_seasons_table", RelationalOps.q46SeasonsTable,
       """WITH m0 AS (SELECT DISTINCT date_trunc('month', ts) AS m0
                      FROM events),
          ms AS (SELECT DISTINCT unnest([m0 - INTERVAL '1 month', m0,
@@ -3705,8 +3370,8 @@ object SparkEntry {
                     * INTERVAL '1 day'
                   + INTERVAL '9 hours' + INTERVAL '5 minutes'
                   - INTERVAL '1 second' AS sn_end_date
-         FROM ms""",
-    "q47_top_ngrams" ->
+         FROM ms"""),
+    Query("q47_top_ngrams", TextOps.q47TopNgrams,
       """WITH t AS (
            SELECT string_split_regex(lower(trim(text)), '\s+') AS toks
            FROM documents
@@ -3717,8 +3382,8 @@ object SparkEntry {
          )
          SELECT trigram, CAST(COUNT(*) AS BIGINT) AS n
          FROM g GROUP BY trigram
-         ORDER BY n DESC, trigram ASC LIMIT 20""",
-    "q48_fk_check" ->
+         ORDER BY n DESC, trigram ASC LIMIT 20"""),
+    Query("q48_fk_check", RelationalOps.q48FkCheck,
       """SELECT 'lineitem_orders' AS fk, CAST(COUNT(*) AS BIGINT)
                   AS n_orphans
          FROM lineitem l WHERE NOT EXISTS (
@@ -3734,8 +3399,8 @@ object SparkEntry {
          UNION ALL
          SELECT 'nation_region', CAST(COUNT(*) AS BIGINT)
          FROM nation n WHERE NOT EXISTS (
-           SELECT 1 FROM region r WHERE r.r_regionkey = n.n_regionkey)""",
-    "q49_doc_embedding" ->
+           SELECT 1 FROM region r WHERE r.r_regionkey = n.n_regionkey)"""),
+    Query("q49_doc_embedding", SimilarityOps.q49DocEmbedding,
       """WITH norms AS (
            SELECT vec_id, label, ROUND(sqrt(SUM(x * x)), 4) AS l2_norm
            FROM (SELECT vec_id, label, CAST(unnest(embedding) AS DOUBLE) AS x
@@ -3743,14 +3408,16 @@ object SparkEntry {
            GROUP BY vec_id, label
          )
          SELECT d.doc_id, d.lang, d.n_chars, n.label, n.l2_norm
-         FROM documents d JOIN norms n ON d.doc_id = n.vec_id""",
-    "q50_sample_per_group" ->
+         FROM documents d JOIN norms n ON d.doc_id = n.vec_id"""),
+    Query("q50_sample_per_group", TextOps.q50SamplePerGroup,
       """SELECT doc_id, lang, source,
                 md5(CAST(doc_id AS VARCHAR)) AS sample_key
          FROM documents
          QUALIFY row_number() OVER (
-           PARTITION BY lang ORDER BY md5(CAST(doc_id AS VARCHAR))) <= 5""",
-    "q52_repetition_filters" ->
+           PARTITION BY lang ORDER BY md5(CAST(doc_id AS VARCHAR))) <= 5"""),
+    Query("q51_simhash_neardup", DedupOps.q51SimhashNearDup,
+      simhashNearDupOracleSql),
+    Query("q52_repetition_filters", TextOps.q52RepetitionFilters,
       """WITH perTok AS (
            SELECT doc_id, tok, COUNT(*) AS c
            FROM (SELECT doc_id,
@@ -3769,8 +3436,8 @@ object SparkEntry {
                   / 1000.0 AS top_token_share,
                 ((n_distinct * 2000 + n_tokens) // (2 * n_tokens))
                   / 1000.0 AS distinct_ratio
-         FROM agg""",
-    "q53_quantize" ->
+         FROM agg"""),
+    Query("q53_quantize", SimilarityOps.q53Quantize,
       """WITH e AS (
            SELECT vec_id,
                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
@@ -3787,8 +3454,8 @@ object SparkEntry {
          SELECT vec_id, pos,
                 CAST(floor((x - lo) * 254 / (hi - lo) + 0.5) AS INTEGER)
                   - 127 AS code
-         FROM u""",
-    "q54_text_clean" ->
+         FROM u"""),
+    Query("q54_text_clean", TextOps.q54TextClean,
       """SELECT doc_id, CAST(length(text) AS BIGINT) AS len_raw,
                 lower(trim(regexp_replace(regexp_replace(text,
                   '[^\x20-\x7e]', ' ', 'g'), '\s+', ' ', 'g')))
@@ -3796,8 +3463,8 @@ object SparkEntry {
                 CAST(length(lower(trim(regexp_replace(regexp_replace(text,
                   '[^\x20-\x7e]', ' ', 'g'), '\s+', ' ', 'g'))))
                   AS BIGINT) AS len_clean
-         FROM documents""",
-    "q55_full_outer" ->
+         FROM documents"""),
+    Query("q55_full_outer", RelationalOps.q55FullOuter,
       """WITH perCust AS (
            SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n_recent
            FROM orders WHERE o_orderdate >= TIMESTAMP '2000-01-01'
@@ -3806,8 +3473,8 @@ object SparkEntry {
          SELECT c.c_custkey, c.c_mktsegment,
                 COALESCE(p.n_recent, 0) AS n_recent
          FROM customer c FULL OUTER JOIN perCust p
-           ON c.c_custkey = p.o_custkey""",
-    "q56_set_ops" ->
+           ON c.c_custkey = p.o_custkey"""),
+    Query("q56_set_ops", RelationalOps.q56SetOps,
       """SELECT o_custkey, 'both' AS bucket FROM (
            SELECT o_custkey FROM orders
            WHERE o_orderdate >= TIMESTAMP '1997-01-01'
@@ -3824,9 +3491,9 @@ object SparkEntry {
            EXCEPT
            SELECT o_custkey FROM orders
            WHERE o_orderdate >= TIMESTAMP '1998-01-01'
-             AND o_orderdate < TIMESTAMP '1999-01-01')""",
+             AND o_orderdate < TIMESTAMP '1999-01-01')"""),
     // dense ids in key order == dense_rank over the fact by that key
-    "q57_surrogate_keys" ->
+    Query("q57_surrogate_keys", SurrogateKeys.q57SurrogateKeys,
       """WITH e AS (
            SELECT event_id,
                   strftime(ts, '%Y%m%d%H%M%S') || '_'
@@ -3836,10 +3503,10 @@ object SparkEntry {
          SELECT event_id, match_key,
                 CAST(dense_rank() OVER (ORDER BY match_key) AS BIGINT)
                   AS match_id
-         FROM e""",
+         FROM e"""),
     // integer-exact df-weighted score — ln-based idf is not bit-stable
     // across engines; tf * (N+1) * 1000 div (df+1) is
-    "q58_tfidf_terms" ->
+    Query("q58_tfidf_terms", TextOps.q58TfIdfTerms,
       """WITH tf AS (
            SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf
            FROM (SELECT doc_id,
@@ -3854,16 +3521,29 @@ object SparkEntry {
                 CAST(tf * (n + 1) * 1000 // (df + 1) AS BIGINT) AS score
          FROM tf JOIN dfreq USING (tok), n
          QUALIFY row_number() OVER (
-           PARTITION BY doc_id ORDER BY score DESC, tok) <= 3""",
-    "q59_token_histogram" ->
+           PARTITION BY doc_id ORDER BY score DESC, tok) <= 3"""),
+    Query("q59_token_histogram", TextOps.q59TokenHistogram,
       """SELECT CAST(len(string_split_regex(lower(trim(text)), '\s+')) // 10
                      * 10 AS BIGINT) AS bucket_lo,
                 CAST(COUNT(*) AS BIGINT) AS n_docs
-         FROM documents GROUP BY 1""",
+         FROM documents GROUP BY 1"""),
+    // q60 gated like q162: the sketch VALUES have no cross-engine
+    // oracle, so the output carries exact row counts plus booleans
+    // asserting the sketch claims (HLL within 3·rsd + slack; approx
+    // median inside its ±0.001 rank-guarantee window). Same COUPLING
+    // WARNING as q162: the TRUEs depend on Spark's sketch
+    // implementations and the driver's scale factor — if this entry
+    // goes red, check RelationalOpsSpec's q60 test first (same claims,
+    // per-flag messages).
+    Query("q60_sketch_stats", RelationalOps.q60SketchStats,
+      """SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n_rows,
+                TRUE AS orders_ndv_ok, TRUE AS parts_ndv_ok,
+                TRUE AS p50_rank_ok
+         FROM lineitem GROUP BY 1"""),
     // connected components over the SAME md5-LSH verified pairs as q31
     // (threshold 0.5): transitive closure + component-min — equals the
     // engine's min-label propagation fixpoint
-    "q61_dedup_clusters" ->
+    Query("q61_dedup_clusters", DedupOps.q61DedupClusters,
       """WITH RECURSIVE corpus AS (
            SELECT doc_id, text FROM documents
            UNION ALL
@@ -3920,10 +3600,10 @@ object SparkEntry {
          )
          SELECT src AS doc_id,
                 least(src, MIN(dst)) AS canonical_id
-         FROM reach GROUP BY src""",
+         FROM reach GROUP BY src"""),
     // contamination: corpus docs sharing any word trigram with the
     // doc_id%20==0 benchmark slice (same shingle family as q31/q61)
-    "q62_contamination" ->
+    Query("q62_contamination", DedupOps.q62Contamination,
       """WITH tk AS (
            SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS tk
            FROM documents
@@ -3942,10 +3622,10 @@ object SparkEntry {
          SELECT e.doc_id, CAST(COUNT(DISTINCT e.s) AS BIGINT) AS n_shared
          FROM ex e JOIN bench b ON e.s = b.s
          WHERE e.doc_id % 20 <> 0
-         GROUP BY e.doc_id""",
+         GROUP BY e.doc_id"""),
     // deterministic md5-threshold sampling to the smallest language's
     // count; equal-length lowercase-hex compare == top-32-bit compare
-    "q63_source_mix" ->
+    Query("q63_source_mix", TextOps.q63SourceMix,
       """WITH counts AS (
            SELECT lang, COUNT(*) AS cnt FROM documents GROUP BY lang
          ), thr AS (
@@ -3958,10 +3638,10 @@ object SparkEntry {
          )
          SELECT d.doc_id, d.lang
          FROM documents d JOIN thr USING (lang)
-         WHERE substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8) <= thr.thr""",
+         WHERE substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8) <= thr.thr"""),
     // deterministic contact-line injection, then regex redaction —
     // patterns are RE2-safe and behave identically in both engines
-    "q64_pii_scrub" ->
+    Query("q64_pii_scrub", TextOps.q64PiiScrub,
       """WITH raw AS (
            SELECT doc_id,
                   text || ' contact user' || CAST(doc_id AS VARCHAR)
@@ -3978,10 +3658,10 @@ object SparkEntry {
                 regexp_replace(regexp_replace(raw,
                   '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}', '<EMAIL>', 'g'),
                   '[0-9]{7,}', '<NUM>', 'g') AS clean_text
-         FROM raw""",
+         FROM raw"""),
     // 64-token windows, 16-token overlap (step 48); list slice is
     // end-inclusive in DuckDB, so [start+1 : start+64] is 64 tokens
-    "q65_chunking" ->
+    Query("q65_chunking", TextOps.q65Chunking,
       """WITH tk AS (
            SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS tk
            FROM documents WHERE text IS NOT NULL
@@ -3999,10 +3679,10 @@ object SparkEntry {
                 CAST(len(string_split(
                   array_to_string(tk[chunk_id*48 + 1 : chunk_id*48 + 64],
                                   ' '), ' ')) AS BIGINT) AS n_tokens
-         FROM c""",
+         FROM c"""),
     // concat-then-chunk packing: exclusive running token sum per lang
     // in doc_id order; integer window sum is exact (HUGEINT → BIGINT)
-    "q66_seq_packing" ->
+    Query("q66_seq_packing", TextOps.q66SequencePacking,
       """WITH t AS (
            SELECT doc_id, lang,
                   CAST(len(string_split_regex(lower(trim(text)), '\s+'))
@@ -4019,10 +3699,10 @@ object SparkEntry {
          SELECT doc_id, lang, n_tokens, tok_offset,
                 tok_offset // 2048 AS bin_first,
                 (tok_offset + n_tokens - 1) // 2048 AS bin_last
-         FROM r""",
+         FROM r"""),
     // tokens in > 50% of docs are corpus boilerplate; hot set is a
     // broadcastable list, membership via list_contains
-    "q67_boilerplate" ->
+    Query("q67_boilerplate", TextOps.q67Boilerplate,
       """WITH base AS (
            SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS tk
            FROM documents WHERE text IS NOT NULL
@@ -4042,30 +3722,30 @@ object SparkEntry {
                 CAST(len(tk) - len(
                   list_filter(tk, t -> NOT list_contains(hotl, t)))
                   AS BIGINT) AS n_removed
-         FROM base, hot""",
+         FROM base, hot"""),
     // md5-keyed permutation — reproducible global shuffle order
-    "q68_shuffle_order" ->
+    Query("q68_shuffle_order", TextOps.q68ShuffleOrder,
       """SELECT doc_id,
                 md5(CAST(doc_id AS VARCHAR)) AS h,
                 CAST(row_number() OVER (
                   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
                   AS BIGINT) AS shuffle_pos
-         FROM documents""",
+         FROM documents"""),
     // hash-split on md5 hex prefix: 'e666'/'f333' ≈ 0.9/0.95 of 16^4
-    "q69_split" ->
+    Query("q69_split", TextOps.q69Split,
       """SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h,
                 CASE WHEN md5(CAST(doc_id AS VARCHAR)) < 'e666' THEN 'train'
                      WHEN md5(CAST(doc_id AS VARCHAR)) < 'f333' THEN 'val'
                      ELSE 'test' END AS split
-         FROM documents""",
-    "q70_domain_cap" ->
+         FROM documents"""),
+    Query("q70_domain_cap", TextOps.q70DomainCap,
       """SELECT doc_id, lang, source, md5(CAST(doc_id AS VARCHAR)) AS cap_key
          FROM documents
          QUALIFY row_number() OVER (PARTITION BY lang, source
-           ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) <= 8""",
+           ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) <= 8"""),
     // sqrt is IEEE-correctly-rounded in every engine; the weight is
     // fixed as an integer and the share is integer round-half-up
-    "q71_mix_weights" ->
+    Query("q71_mix_weights", TextOps.q71MixWeights,
       """WITH c AS (
            SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS n_docs,
                   CAST(floor(sqrt(COUNT(*)) * 1e6) AS BIGINT) AS w_fixed
@@ -4074,14 +3754,14 @@ object SparkEntry {
          SELECT lang, source, n_docs, w_fixed,
                 (w_fixed * 1000000 * 2 + w_total) // (2 * w_total)
                   AS share_ppm
-         FROM c, t""",
-    "q72_user_seq" ->
+         FROM c, t"""),
+    Query("q72_user_seq", RelationalOps.q72UserSeq,
       """SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
                 array_to_string(
                   (list(event_type ORDER BY ts, event_id))[1:50], ' ')
                   AS seq
-         FROM events GROUP BY user_id""",
-    "q73_snap_diff" ->
+         FROM events GROUP BY user_id"""),
+    Query("q73_snap_diff", RelationalOps.q73SnapDiff,
       """WITH o AS (
            SELECT o_orderkey, o_orderstatus, o_orderpriority FROM orders
          ), a AS (
@@ -4102,8 +3782,8 @@ object SparkEntry {
            FROM a FULL OUTER JOIN b ON a.k = b.k
          )
          SELECT o_orderkey, change_type FROM j
-         WHERE change_type IS NOT NULL""",
-    "q74_bigram_cov" ->
+         WHERE change_type IS NOT NULL"""),
+    Query("q74_bigram_cov", TextOps.q74BigramCov,
       """WITH base AS (
            SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS tk
            FROM documents WHERE text IS NOT NULL
@@ -4126,24 +3806,24 @@ object SparkEntry {
                               x -> list_contains(hotbg, x))) AS BIGINT)
                            * 1000 * 2 + len(bg)) // (2 * len(bg))
                 END AS cov_ppt
-         FROM bgs, hot""",
+         FROM bgs, hot"""),
+    Query("q75_semdedup", SimilarityOps.q75SemDedup, semDedupOracleSql),
     // r14 (VERDICT r13 #3): the 12 merge rounds unrolled as
     // MATERIALIZED CTEs — see bpeMergeCtes. Flips the BPE family from
     // no-oracle to full oracle.
-    "q76_bpe" -> bpeTrainOracleSql,
-    "q106_bpe_encode" -> bpeEncodeOracleSql,
+    Query("q76_bpe", BpeTrain.q76Bpe, bpeTrainOracleSql),
     // the sketch-pruned output is EXACT heavy hitters (> n/64), so the
     // oracle is the plain groupBy it avoids at scale
-    "q77_hh" ->
+    Query("q77_hh", TextOps.q77Hh,
       """WITH base AS (
            SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
            FROM documents WHERE text IS NOT NULL
          ), tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM base)
          SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt
-         FROM base, tot GROUP BY tok, n HAVING COUNT(*) * 64 > n""",
+         FROM base, tot GROUP BY tok, n HAVING COUNT(*) * 64 > n"""),
     // quantile_cont = the engine's lo/hi interpolation (q45-validated);
     // ROUND-4 pins the clip comparison cross-engine
-    "q78_winsor" ->
+    Query("q78_winsor", RelationalOps.q78Winsor,
       """WITH p AS (
            SELECT l_returnflag,
                   ROUND(quantile_cont(l_extendedprice, 0.95), 4) AS p95
@@ -4152,10 +3832,10 @@ object SparkEntry {
          SELECT l_orderkey, l_linenumber, l.l_returnflag,
                 ROUND(LEAST(l_extendedprice, p95), 4) AS price_w,
                 l_extendedprice > p95 AS clipped
-         FROM lineitem l JOIN p USING (l_returnflag)""",
+         FROM lineitem l JOIN p USING (l_returnflag)"""),
     // 4-h gap sessionization; order pinned by (ts, event_id), gap math
     // in integer µs, SUM(int) cast (DuckDB returns HUGEINT)
-    "q79_sessions" ->
+    Query("q79_sessions", RelationalOps.q79Sessions,
       """WITH e AS (
            SELECT user_id, ts, epoch_us(ts) AS us,
                   CASE WHEN epoch_us(ts)
@@ -4177,10 +3857,10 @@ object SparkEntry {
          SELECT user_id, session_id, CAST(COUNT(*) AS BIGINT) AS n_events,
                 MIN(ts) AS session_start, MAX(ts) AS session_end,
                 (MAX(us) - MIN(us)) // 1000000 AS duration_sec
-         FROM s GROUP BY user_id, session_id""",
+         FROM s GROUP BY user_id, session_id"""),
     // ordered-step funnel: each step's min ts strictly after the prior
     // step's; per-step converted-user counts
-    "q80_funnel" ->
+    Query("q80_funnel", RelationalOps.q80Funnel,
       """WITH s1 AS (
            SELECT user_id, min(ts) AS t1 FROM events
            WHERE event_type = 'signup' GROUP BY 1
@@ -4200,9 +3880,9 @@ object SparkEntry {
                 CAST((SELECT count(*) FROM s2) AS BIGINT)
          UNION ALL
          SELECT 3, 'purchase_after_click',
-                CAST((SELECT count(*) FROM s3) AS BIGINT)""",
+                CAST((SELECT count(*) FROM s3) AS BIGINT)"""),
     // cohort = first-seen ISO week; offset in whole weeks
-    "q81_retention" ->
+    Query("q81_retention", RelationalOps.q81Retention,
       """WITH f AS (
            SELECT user_id, CAST(date_trunc('week', min(ts)) AS DATE)
                     AS cohort_week
@@ -4217,9 +3897,9 @@ object SparkEntry {
          )
          SELECT cohort_week, week_offset,
                 CAST(count(*) AS BIGINT) AS n_users
-         FROM act GROUP BY 1, 2""",
+         FROM act GROUP BY 1, 2"""),
     // per-language token-budget fill in md5 order; exclusive prefix sum
-    "q82_token_budget" ->
+    Query("q82_token_budget", TextOps.q82TokenBudget,
       """WITH t AS (
            SELECT doc_id, lang,
                   CAST(len(string_split_regex(lower(trim(text)), '\s+'))
@@ -4235,9 +3915,9 @@ object SparkEntry {
            FROM t
          )
          SELECT doc_id, lang, n_tokens, tokens_before
-         FROM c WHERE tokens_before < 2500""",
+         FROM c WHERE tokens_before < 2500"""),
     // robust z outliers: exact median/MAD, integer fixed-point boundary
-    "q83_outliers" ->
+    Query("q83_outliers", RelationalOps.q83Outliers,
       """WITH med AS (
            SELECT event_type, quantile_cont(value, 0.5) AS med
            FROM events GROUP BY 1
@@ -4253,10 +3933,10 @@ object SparkEntry {
                 ROUND(d.med, 4) AS med, ROUND(m.mad, 4) AS mad
          FROM devs d JOIN mad m USING (event_type)
          WHERE CAST(ROUND(d.dev * 10000) AS BIGINT) * 6745
-             > CAST(ROUND(m.mad * 10000) AS BIGINT) * 35000""",
+             > CAST(ROUND(m.mad * 10000) AS BIGINT) * 35000"""),
     // cross-corpus near-dup: md5-MinHash bands train ⋈ eval, exact
     // verify, best match per train doc (ppt score, eval-id tie-break)
-    "q84_neardup_contam" ->
+    Query("q84_neardup_contam", DedupOps.q84NearDupContam,
       """WITH train AS (
            SELECT doc_id, text FROM documents
          ), eval AS (
@@ -4319,25 +3999,25 @@ object SparkEntry {
            FROM scored WHERE jac_ppt >= 500
          )
          SELECT train_doc, eval_doc, jac_ppt / 1000.0 AS jaccard
-         FROM best WHERE rn = 1""",
+         FROM best WHERE rn = 1"""),
     // bloom-prefiltered join ≡ the plain inner join by definition
     // (false positives die at the exact join)
-    "q85_bloom_join" ->
+    Query("q85_bloom_join", BloomJoin.q85BloomJoin,
       """SELECT l_orderkey, l_linenumber, l_quantity, o_custkey,
                 o_totalprice
          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 150000""",
+         WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 150000"""),
     // salted join ≡ the plain inner join by definition (the salt must
     // agree, so matched rows join exactly once)
-    "q86_salted_join" ->
+    Query("q86_salted_join", SkewJoin.q86SaltedJoin,
       """SELECT l_orderkey, l_linenumber, p_partkey, p_brand
          FROM lineitem JOIN part ON l_partkey = p_partkey
-         WHERE p_size <= 10""",
+         WHERE p_size <= 10"""),
     // two-stage quantized ANN: the shortlist cut is a CENTERED integer
     // code dot (64·Σqn − Σq·Σn — exact BIGINT in both engines), so the
     // whole pipeline, re-rank included, is deterministic and
     // hash-checkable
-    "q87_quantized_ann" ->
+    Query("q87_quantized_ann", SimilarityOps.q87QuantizedAnn,
       """WITH e AS (
            SELECT vec_id,
                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
@@ -4386,10 +4066,10 @@ object SparkEntry {
                     ORDER BY cos_sim DESC, nid) AS BIGINT) AS rank
            FROM resc
          )
-         SELECT qid, nid, cos_sim, rank FROM ranked WHERE rank <= 5""",
+         SELECT qid, nid, cos_sim, rank FROM ranked WHERE rank <= 5"""),
     // duplicated-span scrub: keep the first corpus-wide occurrence of
     // each exact 32-token span, reassemble docs from survivors
-    "q88_span_scrub" ->
+    Query("q88_span_scrub", DedupOps.q88SpanScrub,
       """WITH tk AS (
            SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS tk
            FROM documents WHERE text IS NOT NULL
@@ -4415,10 +4095,10 @@ object SparkEntry {
                 string_agg(span_text, ' ' ORDER BY span_ix)
                   AS scrubbed_text
          FROM ranked WHERE rn = 1
-         GROUP BY doc_id""",
+         GROUP BY doc_id"""),
     // interval join: DuckDB's native inequality join computes the same
     // containment matches the bucketed equi-join produces
-    "q89_interval_join" ->
+    Query("q89_interval_join", RangeJoin.q89IntervalJoin,
       """WITH top AS (
            SELECT event_id, ts,
                   row_number() OVER (ORDER BY value DESC, event_id) AS rn
@@ -4432,10 +4112,10 @@ object SparkEntry {
          SELECT w.window_id, CAST(count(*) AS BIGINT) AS n_events,
                 CAST(count(DISTINCT e.user_id) AS BIGINT) AS n_users
          FROM w JOIN events e ON epoch_us(e.ts) BETWEEN w.lo AND w.hi
-         GROUP BY w.window_id""",
+         GROUP BY w.window_id"""),
     // the k=4 funnel: same nested conditional-min chain as q80, one
     // step longer
-    "q90_funnel4" ->
+    Query("q90_funnel4", RelationalOps.q90Funnel4,
       """WITH s1 AS (
            SELECT user_id, min(ts) AS t1 FROM events
            WHERE event_type = 'signup' GROUP BY 1
@@ -4462,19 +4142,19 @@ object SparkEntry {
                 CAST((SELECT count(*) FROM s3) AS BIGINT)
          UNION ALL
          SELECT 4, 'purchase_after_click',
-                CAST((SELECT count(*) FROM s4) AS BIGINT)""",
+                CAST((SELECT count(*) FROM s4) AS BIGINT)"""),
     // fuzzy join: the oracle is the naive n² inequality join the
     // delete-1 blocking exists to avoid — same output by construction
-    "q91_fuzzy_join" ->
+    Query("q91_fuzzy_join", FuzzyJoin.q91FuzzyJoin,
       """SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
                 a.c_name AS name_a, b.c_name AS name_b,
                 CAST(levenshtein(a.c_name, b.c_name) AS BIGINT) AS dist
          FROM customer a JOIN customer b
            ON a.c_custkey < b.c_custkey
-          AND levenshtein(a.c_name, b.c_name) <= 1""",
+          AND levenshtein(a.c_name, b.c_name) <= 1"""),
     // SCD2: the same lag/sum/lead gaps-and-islands chain; lag IS
     // DISTINCT FROM curr is DuckDB's null-safe spelling of Spark's <=>
-    "q92_scd2" ->
+    Query("q92_scd2", RelationalOps.q92Scd2,
       """WITH marked AS (
            SELECT o_custkey, o_orderpriority, o_orderdate, o_orderkey,
                   CASE WHEN lag(o_orderpriority) OVER w
@@ -4499,11 +4179,11 @@ object SparkEntry {
                 lead(valid_from) OVER w2 AS valid_to,
                 (lead(valid_from) OVER w2 IS NULL) AS is_current, n_orders
          FROM collapsed
-         WINDOW w2 AS (PARTITION BY custkey ORDER BY run_id)""",
+         WINDOW w2 AS (PARTITION BY custkey ORDER BY run_id)"""),
     // correlation matrix: identical HUGEINT moments (corr is
     // scale-invariant, values ×10⁴ are exact integers), identical
     // double expression tree, ROUND last
-    "q93_corr_matrix" ->
+    Query("q93_corr_matrix", StatsOps.q93CorrMatrix,
       """WITH s AS (
            SELECT CAST(CAST(l_quantity AS DECIMAL(18,4))*10000 AS HUGEINT) AS x0,
                   CAST(CAST(l_extendedprice AS DECIMAL(18,4))*10000 AS HUGEINT) AS x1,
@@ -4537,21 +4217,21 @@ object SparkEntry {
                 ROUND((n*s13 - s1*s3) / (sqrt(n*s11 - s1*s1) * sqrt(n*s33 - s3*s3)), 4) FROM m
          UNION ALL
          SELECT 'l_discount', 'l_tax',
-                ROUND((n*s23 - s2*s3) / (sqrt(n*s22 - s2*s2) * sqrt(n*s33 - s3*s3)), 4) FROM m""",
+                ROUND((n*s23 - s2*s3) / (sqrt(n*s22 - s2*s2) * sqrt(n*s33 - s3*s3)), 4) FROM m"""),
     // RANGE frame over event-time µs; DECIMAL sums so the segment-tree
     // and frame-slide accumulations agree exactly; output as e4 longs
     // (never DECIMAL — driver hashes DECIMAL differently per engine)
-    "q94_sliding_window" ->
+    Query("q94_sliding_window", RelationalOps.q94SlidingWindow,
       """SELECT event_id, user_id,
                 CAST(count(*) OVER w AS BIGINT) AS n_hour,
                 CAST(SUM(CAST(value AS DECIMAL(18,4))) OVER w * 10000
                      AS BIGINT) AS sum_hour_e4
          FROM events
          WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-                      RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)""",
+                      RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)"""),
     // expectation suite: integer-ppm metrics, floor division in both
     // engines; referential via EXISTS = the semi-join
-    "q95_dq_report" ->
+    Query("q95_dq_report", StatsOps.q95DqReport,
       """WITH m AS (
            SELECT CAST(count(*) AS BIGINT) AS n,
                   CAST(count(o_custkey) AS BIGINT) AS m_comp,
@@ -4576,11 +4256,11 @@ object SparkEntry {
          UNION ALL SELECT 'domain_o_orderstatus',
                 CAST((m_dom * 1000000) // n AS BIGINT), m_dom = n FROM m, r
          UNION ALL SELECT 'referential_o_custkey',
-                CAST((m_ref * 1000000) // n AS BIGINT), m_ref = n FROM m, r""",
+                CAST((m_ref * 1000000) // n AS BIGINT), m_ref = n FROM m, r"""),
     // exact set-similarity join: the oracle is the naive n²
     // list-intersect join the prefix filter exists to avoid; same
     // shingle construction as q31's oracle
-    "q96_setsim_join" ->
+    Query("q96_setsim_join", DedupOps.q96SetSimJoin,
       """WITH base AS (
            SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS tk
            FROM documents WHERE text IS NOT NULL
@@ -4598,11 +4278,11 @@ object SparkEntry {
                 CAST(len(b.s) AS BIGINT) AS size_b
          FROM sh a JOIN sh b ON a.doc_id < b.doc_id
          WHERE len(a.s) > 0 AND len(b.s) > 0
-           AND 3 * len(list_intersect(a.s, b.s)) >= len(a.s) + len(b.s)""",
+           AND 3 * len(list_intersect(a.s, b.s)) >= len(a.s) + len(b.s)"""),
     // incremental maintenance oracle = the FULL recompute the merge
     // must equal; money in 4-decimal fixed-point longs, avg by integer
     // round-half-up
-    "q97_incr_agg" ->
+    Query("q97_incr_agg", RelationalOps.q97IncrAgg,
       """WITH a AS (
            SELECT o_custkey AS custkey, CAST(count(*) AS BIGINT) AS n_orders,
                   CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 10000
@@ -4612,10 +4292,10 @@ object SparkEntry {
          SELECT custkey, n_orders, total_i,
                 CAST((2 * total_i + n_orders) // (2 * n_orders) AS BIGINT)
                   AS avg_i
-         FROM a""",
+         FROM a"""),
     // point-in-time join: interval containment against the SCD2
     // version table (empty same-instant intervals can never match)
-    "q98_pit_join" ->
+    Query("q98_pit_join", RelationalOps.q98PitJoin,
       """WITH marked AS (
            SELECT o_custkey, o_orderpriority, o_orderdate, o_orderkey,
                   CASE WHEN lag(o_orderpriority) OVER w
@@ -4645,12 +4325,12 @@ object SparkEntry {
          FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
          LEFT JOIN vers v ON v.custkey = o.o_custkey
            AND v.valid_from <= l.l_shipdate
-           AND (v.valid_to IS NULL OR l.l_shipdate < v.valid_to)""",
+           AND (v.valid_to IS NULL OR l.l_shipdate < v.valid_to)"""),
     // dense daily spine per user; gap days n=0/null value; LOCF carries
     // the last active day's DECIMAL sum (IGNORE NULLS = Spark's
     // last(_, ignoreNulls) over the same running frame); output as e4
     // longs (never DECIMAL — driver hashes DECIMAL per-engine)
-    "q99_gap_fill" ->
+    Query("q99_gap_fill", RelationalOps.q99GapFill,
       """WITH daily AS (
            SELECT user_id, CAST(ts AS DATE) AS day,
                   CAST(count(*) AS BIGINT) AS n_events,
@@ -4674,20 +4354,20 @@ object SparkEntry {
                   ROWS UNBOUNDED PRECEDING) * 10000 AS BIGINT)
                   AS filled_value_e4
          FROM spine s LEFT JOIN daily d
-           ON s.user_id = d.user_id AND s.day = d.day""",
+           ON s.user_id = d.user_id AND s.day = d.day"""),
     // explicit non-hierarchical set list; GROUPING bit order matches
     // Spark's grouping_id() (bit i set = column i aggregated away)
-    "q100_grouping_sets" ->
+    Query("q100_grouping_sets", RelationalOps.q100GroupingSets,
       """SELECT lang, source,
                 CAST(GROUPING(lang, source) AS BIGINT) AS gid,
                 CAST(count(*) AS BIGINT) AS n_docs,
                 CAST(SUM(n_chars) AS BIGINT) AS total_chars
          FROM documents
-         GROUP BY GROUPING SETS ((lang, source), (source), ())""",
+         GROUP BY GROUPING SETS ((lang, source), (source), ())"""),
     // Morton curve in pure integer math: 16-bit affine scale then the
     // mask-cascade bit spread (masks 0x00FF00FF / 0x0F0F0F0F /
     // 0x33333333 / 0x55555555), a on even bits, b on odd
-    "q101_zorder" ->
+    Query("q101_zorder", graft.sources.ZOrderLayout.q101Zorder,
       """WITH b AS (
            SELECT min(o_custkey) AS amn, max(o_custkey) AS amx,
                   min(date_diff('day', DATE '1970-01-01',
@@ -4720,10 +4400,10 @@ object SparkEntry {
                   (xb | (xb << 1)) & 1431655765 AS xb FROM t3
          )
          SELECT o_orderkey, CAST(xa | (xb << 1) AS BIGINT) AS zval
-         FROM t4""",
+         FROM t4"""),
     // incremental refresh oracle = the FULL history recompute it must
     // equal (the q92 chain, minus run row counts)
-    "q102_incr_scd2" ->
+    Query("q102_incr_scd2", RelationalOps.q102IncrScd2,
       """WITH marked AS (
            SELECT o_custkey, o_orderpriority, o_orderdate, o_orderkey,
                   CASE WHEN lag(o_orderpriority) OVER w
@@ -4747,10 +4427,10 @@ object SparkEntry {
                 lead(valid_from) OVER w2 AS valid_to,
                 (lead(valid_from) OVER w2 IS NULL) AS is_current
          FROM collapsed
-         WINDOW w2 AS (PARTITION BY custkey ORDER BY run_id)""",
+         WINDOW w2 AS (PARTITION BY custkey ORDER BY run_id)"""),
     // PMI ratio in round-half-up fixed-point (HUGEINT = the DECIMAL(38,0)
     // Spark side); ln is monotone so ratio order IS PMI order
-    "q103_pmi" ->
+    Query("q103_pmi", TextOps.q103Pmi,
       """WITH tk AS (
            SELECT string_split_regex(lower(trim(text)), '\s+') AS tk
            FROM documents WHERE text IS NOT NULL
@@ -4781,10 +4461,10 @@ object SparkEntry {
                 milli / 1000.0 AS score
          FROM sc
          ORDER BY milli DESC, x ASC, y ASC
-         LIMIT 50""",
+         LIMIT 50"""),
     // blocked postings: per-term doc rank → 64-doc blocks; postings are
     // doc_id:tf runs in doc_id order (engine-exact strings)
-    "q104_inverted_index" ->
+    Query("q104_inverted_index", TextOps.q104InvertedIndex,
       """WITH tf AS (
            SELECT term, doc_id, count(*) AS tf
            FROM (SELECT doc_id,
@@ -4802,11 +4482,11 @@ object SparkEntry {
                 CAST(count(*) AS BIGINT) AS n_docs,
                 string_agg(doc_id || ':' || tf, ',' ORDER BY doc_id)
                   AS postings
-         FROM rk GROUP BY term, block_id""",
+         FROM rk GROUP BY term, block_id"""),
     // integer fixed-point PageRank: long sums are order-independent, so
     // the 15-iteration recursion is engine-exact (// == Spark div on
     // positives)
-    "q105_pagerank" ->
+    Query("q105_pagerank", GraphOps.q105PageRank,
       """WITH RECURSIVE pairs AS (
            SELECT DISTINCT a.l_partkey AS s1, b.l_partkey AS s2
            FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
@@ -4831,10 +4511,11 @@ object SparkEntry {
            GROUP BY i + 1, e.dst
          )
          SELECT node AS partkey, CAST(r AS BIGINT) AS rank_ppt
-         FROM it WHERE i = 15""",
+         FROM it WHERE i = 15"""),
+    Query("q106_bpe_encode", BpeTrain.q106BpeEncode, bpeEncodeOracleSql),
     // per-node triangle counts by direct a<b<c enumeration — the
     // degree-oriented Spark plan provably finds the same triangle set
-    "q107_triangles" ->
+    Query("q107_triangles", GraphOps.q107Triangles,
       """WITH pairs AS (
            SELECT DISTINCT a.l_partkey AS s1, b.l_partkey AS s2
            FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
@@ -4847,10 +4528,10 @@ object SparkEntry {
          )
          SELECT node AS partkey, CAST(count(*) AS BIGINT) AS n_tri
          FROM (SELECT unnest([a, b, c]) AS node FROM tri)
-         GROUP BY node""",
+         GROUP BY node"""),
     // directional containment: naive n² intersect join over the same
     // corpus ∪ quote-docs derivation (drop the first word, id+1e6)
-    "q108_containment" ->
+    Query("q108_containment", DedupOps.q108ContainmentJoin,
       """WITH corpus AS (
            SELECT doc_id, text FROM documents WHERE text IS NOT NULL
            UNION ALL
@@ -4875,11 +4556,11 @@ object SparkEntry {
          SELECT id_a, id_b, inter, size_a,
                 CAST((inter * 2000 + size_a) // (2 * size_a) AS BIGINT)
                   AS cont_ppt
-         FROM pairs WHERE inter * 10 >= size_a * 9""",
+         FROM pairs WHERE inter * 10 >= size_a * 9"""),
     // 80-core by 15 fixed peeling rounds (converged by round 5 at
     // sf0.01, so capped ≡ converged); surviving edges carry the
     // recursion, in-core degree read off the final level
-    "q109_kcore" ->
+    Query("q109_kcore", GraphOps.q109KCore,
       """WITH RECURSIVE pairs AS (
            SELECT DISTINCT a.l_partkey AS s1, b.l_partkey AS s2
            FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
@@ -4898,12 +4579,12 @@ object SparkEntry {
                          GROUP BY src HAVING count(*) >= 80)
          )
          SELECT src AS partkey, CAST(count(*) AS BIGINT) AS core_deg
-         FROM it WHERE i = 15 GROUP BY src""",
+         FROM it WHERE i = 15 GROUP BY src"""),
     // min-hop BFS from the 3 highest-degree hubs: the UNION (not UNION
     // ALL) recursion dedups (node, hops) rows, so the working table
     // stays node-scale per level instead of enumerating walks; min()
     // over the ≤8-hop closure equals the visited-set BFS distance
-    "q110_bfs_hops" ->
+    Query("q110_bfs_hops", GraphOps.q110BfsHops,
       """WITH RECURSIVE pairs AS (
            SELECT DISTINCT a.l_partkey AS s1, b.l_partkey AS s2
            FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
@@ -4922,12 +4603,12 @@ object SparkEntry {
            WHERE b.hops < 8
          )
          SELECT node AS partkey, CAST(min(hops) AS BIGINT) AS hops
-         FROM bfs GROUP BY node""",
+         FROM bfs GROUP BY node"""),
     // add-one-smoothed bigram LM, all-integer round-half-up ppm: per
     // bigram type ppm = (2e6*(c_xy+1) + (c_x+V)) // (2*(c_x+V)), per doc
     // the k-weighted mean of ppms rounded the same way (no ln anywhere —
     // the q58/q103 libm rule)
-    "q111_lm_score" ->
+    Query("q111_lm_score", TextOps.q111LmScore,
       """WITH tk AS (
            SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS tk
            FROM documents WHERE text IS NOT NULL
@@ -4958,12 +4639,11 @@ object SparkEntry {
                      // (2 * sum(CAST(db.k AS HUGEINT))) AS BIGINT)
                   AS score_ppm
          FROM db JOIN sc ON db.x = sc.x AND db.y = sc.y
-         GROUP BY db.doc_id""",
-    "q112_bm25" -> bm25OracleSql,
-
+         GROUP BY db.doc_id"""),
+    Query("q112_bm25", TextOps.q112Bm25, bm25OracleSql),
     // per-user consecutive-event transitions; probability in
     // round-half-up integer ppm over the from-state row total
-    "q113_markov" ->
+    Query("q113_markov", RelationalOps.q113Markov,
       """WITH pairs AS (
            SELECT event_type AS from_type,
                   lead(event_type) OVER (PARTITION BY user_id
@@ -4979,11 +4659,11 @@ object SparkEntry {
                       + sum(n) OVER (PARTITION BY from_type))
                      // (2 * sum(n) OVER (PARTITION BY from_type))
                      AS BIGINT) AS p_ppm
-         FROM t""",
+         FROM t"""),
     // sequential-Poisson draw key h DIV w: h = first 13 md5 hex digits
     // (engine-identical hash family), integer division (non-negative →
     // Spark DIV == DuckDB //); k smallest per lang, ties by doc_id
-    "q114_weighted_sample" ->
+    Query("q114_weighted_sample", TextOps.q114WeightedSample,
       """WITH w AS (
            SELECT doc_id, lang,
                   CAST(len(string_split_regex(lower(trim(text)), '\s+'))
@@ -5000,20 +4680,20 @@ object SparkEntry {
                        ORDER BY sp_key, doc_id) AS rn
            FROM keyed
          )
-         SELECT doc_id, lang, weight, sp_key FROM rk WHERE rn <= 10""",
+         SELECT doc_id, lang, weight, sp_key FROM rk WHERE rn <= 10"""),
     // global 16-quantile equi-depth bin per row: floor((rank-1)*B/n)
     // over the (price, orderkey, linenumber) total order
-    "q115_equidepth_bins" ->
+    Query("q115_equidepth_bins", RelationalOps.q115EquidepthBins,
       """SELECT l_orderkey, l_linenumber, l_extendedprice,
                 CAST(((row_number() OVER (ORDER BY l_extendedprice,
                                           l_orderkey, l_linenumber) - 1)
                       * 16)
                      // (SELECT count(*) FROM lineitem) AS BIGINT) AS bin
-         FROM lineitem""",
+         FROM lineitem"""),
     // personalized PageRank from the 3 hub seeds: identical integer
     // fixed-point update as q105, teleport UNIONed with contributions
     // (a seed keeps its teleport even with no inbound flow that round)
-    "q116_ppr" ->
+    Query("q116_ppr", GraphOps.q116Ppr,
       """WITH RECURSIVE pairs AS (
            SELECT DISTINCT a.l_partkey AS s1, b.l_partkey AS s2
            FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
@@ -5047,19 +4727,19 @@ object SparkEntry {
            GROUP BY j, node
          )
          SELECT node AS partkey, CAST(r AS BIGINT) AS ppr_ppt
-         FROM it WHERE i = 10""",
+         FROM it WHERE i = 10"""),
     // the full 2^k grouping lattice; GROUPING(lang, source) bit order
     // matches Spark's grouping_id()
-    "q117_cube" ->
+    Query("q117_cube", RelationalOps.q117Cube,
       """SELECT lang, source,
                 CAST(GROUPING(lang, source) AS BIGINT) AS gid,
                 CAST(count(*) AS BIGINT) AS n_docs,
                 CAST(SUM(n_chars) AS BIGINT) AS total_chars
          FROM documents
-         GROUP BY CUBE (lang, source)""",
+         GROUP BY CUBE (lang, source)"""),
     // the delta-maintained index is DEFINED to equal the full rebuild,
     // so the oracle is q104's full-corpus index verbatim
-    "q118_incr_index" ->
+    Query("q118_incr_index", TextOps.q118IncrIndex,
       """WITH tf AS (
            SELECT term, doc_id, count(*) AS tf
            FROM (SELECT doc_id,
@@ -5077,10 +4757,10 @@ object SparkEntry {
                 CAST(count(*) AS BIGINT) AS n_docs,
                 string_agg(doc_id || ':' || tf, ',' ORDER BY doc_id)
                   AS postings
-         FROM rk GROUP BY term, block_id""",
+         FROM rk GROUP BY term, block_id"""),
     // per-user mean transition ppm under the q113 model — two-stage
     // round-half-up integer ppm, engine-exact
-    "q119_flow_score" ->
+    Query("q119_flow_score", RelationalOps.q119FlowScore,
       """WITH pairs AS (
            SELECT user_id, event_type AS from_type,
                   lead(event_type) OVER (PARTITION BY user_id
@@ -5105,8 +4785,10 @@ object SparkEntry {
                      // (2 * count(*)) AS BIGINT) AS flow_ppm
          FROM p2 JOIN m ON p2.from_type = m.from_type
                        AND p2.to_type = m.to_type
-         GROUP BY p2.user_id""",
-    "q122_skyline" ->
+         GROUP BY p2.user_id"""),
+    Query("q120_pq_ann", PqAnn.q120PqAnn, pqExactOracleSql),
+    Query("q121_ivfpq", IvfPq.q121IvfPq, ivfPqExactOracleSql),
+    Query("q122_skyline", RelationalOps.q122Skyline,
       """SELECT p.p_partkey, p.p_size,
                 CAST(CAST(p.p_retailprice AS DECIMAL(18,4)) * 10000
                      AS BIGINT) AS price_e4
@@ -5116,8 +4798,8 @@ object SparkEntry {
            WHERE q.p_size >= p.p_size
              AND q.p_retailprice <= p.p_retailprice
              AND (q.p_size > p.p_size
-                  OR q.p_retailprice < p.p_retailprice))""",
-    "q123_attribution" ->
+                  OR q.p_retailprice < p.p_retailprice))"""),
+    Query("q123_attribution", RelationalOps.q123Attribution,
       """WITH p AS (
            SELECT event_id AS pid, user_id, ts AS pts,
                   CAST(CAST(COALESCE(value, 0) AS DECIMAL(18,4)) * 10000
@@ -5150,8 +4832,8 @@ object SparkEntry {
            WHERE NOT EXISTS (SELECT 1 FROM pt WHERE pt.pid = p.pid))
          SELECT channel, model, CAST(SUM(credit) AS BIGINT) AS credit_e4,
                 CAST(COUNT(*) AS BIGINT) AS n_credits
-         FROM credits GROUP BY channel, model""",
-    "q124_source_drift" ->
+         FROM credits GROUP BY channel, model"""),
+    Query("q124_source_drift", TextOps.q124SourceDrift,
       """WITH tok AS (
            SELECT d.source, t.term
            FROM (SELECT source,
@@ -5176,8 +4858,8 @@ object SparkEntry {
                 CAST(COUNT(*) AS BIGINT) AS n_terms,
                 CAST((SUM(ABS(j.s_ppm - j.t_ppm)) + MAX(tot.tot_ppm)
                       - SUM(j.t_ppm)) // 2 AS BIGINT) AS tv_ppm
-         FROM j, tot GROUP BY j.source""",
-    "q125_item_sim" ->
+         FROM j, tot GROUP BY j.source"""),
+    Query("q125_item_sim", SimilarityOps.q125ItemSim,
       """WITH li AS (
            SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
            FROM lineitem),
@@ -5194,8 +4876,8 @@ object SparkEntry {
                  ORDER BY score_ppm DESC, j ASC) AS rk FROM sc)
          SELECT i, j, CAST(cij AS BIGINT) AS cij,
                 CAST(score_ppm AS BIGINT) AS score_ppm
-         FROM r WHERE rk <= 5""",
-    "q126_label_prop" ->
+         FROM r WHERE rk <= 5"""),
+    Query("q126_label_prop", GraphOps.q126LabelProp,
       """WITH RECURSIVE li AS (
            SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
            FROM lineitem
@@ -5220,8 +4902,8 @@ object SparkEntry {
                ORDER BY c DESC, lbl ASC) = 1
          )
          SELECT node AS partkey, CAST(lbl AS BIGINT) AS community
-         FROM it WHERE i = 5""",
-    "q127_convert_latency" ->
+         FROM it WHERE i = 5"""),
+    Query("q127_convert_latency", RelationalOps.q127ConvertLatency,
       """WITH t1 AS (
            SELECT user_id, MIN(ts) AS t1 FROM events
            WHERE event_type = 'signup' GROUP BY 1),
@@ -5244,8 +4926,8 @@ object SparkEntry {
          SELECT CAST(ps.p AS BIGINT) AS p,
                 CAST(n.n AS BIGINT) AS n_converted, r.lat_s AS latency_s
          FROM (VALUES (50), (90), (99)) AS ps(p), r, n
-         WHERE r.rn = (ps.p * n.n + 99) // 100""",
-    "q128_neg_sampling" ->
+         WHERE r.rn = (ps.p * n.n + 99) // 100"""),
+    Query("q128_neg_sampling", RelationalOps.q128NegativeSampling,
       """WITH pos AS (
            SELECT DISTINCT o.o_custkey AS cust, l.l_partkey AS item
            FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
@@ -5265,8 +4947,8 @@ object SparkEntry {
          r AS (SELECT *, row_number() OVER (PARTITION BY cust
                  ORDER BY attempt, item) AS rk FROM neg)
          SELECT cust, item, CAST(attempt AS BIGINT) AS attempt
-         FROM r WHERE rk <= 2""",
-    "q129_peak_concurrency" ->
+         FROM r WHERE rk <= 2"""),
+    Query("q129_peak_concurrency", RelationalOps.q129PeakConcurrency,
       """WITH e AS (
            SELECT user_id, ts, event_id, epoch_us(ts) AS us,
                   CASE WHEN epoch_us(ts)
@@ -5299,8 +4981,8 @@ object SparkEntry {
          )
          SELECT CAST(make_timestamp(us) AS DATE) AS day,
                 MAX(conc) AS peak_concurrent
-         FROM run GROUP BY 1""",
-    "q130_ols_trend" ->
+         FROM run GROUP BY 1"""),
+    Query("q130_ols_trend", StatsOps.q130OlsTrend,
       """WITH b AS (
            SELECT o_orderpriority AS g,
                   CAST(epoch_us(o_orderdate) // 86400000000
@@ -5332,8 +5014,8 @@ object SparkEntry {
                   ROUND((n*sxy - sx*sy)*(n*sxy - sx*sy)
                     /((n*sxx - sx*sx)*(n*syy - sy*sy)), 6)
                 END AS r2
-         FROM m""",
-    "q131_assoc_rules" ->
+         FROM m"""),
+    Query("q131_assoc_rules", SimilarityOps.q131AssocRules,
       """WITH b AS (
            SELECT DISTINCT l.l_orderkey AS ok, p.p_brand AS item
            FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
@@ -5366,8 +5048,8 @@ object SparkEntry {
              antecedent, consequent) AS rk FROM r
          )
          SELECT antecedent, consequent, n_pair, conf_ppt, lift_ppm
-         FROM rk WHERE rk <= 20""",
-    "q132_ab_test" ->
+         FROM rk WHERE rk <= 20"""),
+    Query("q132_ab_test", StatsOps.q132AbTest,
       """WITH u AS (
            SELECT user_id,
                   MAX(CASE WHEN event_type = 'purchase' AND value > 100
@@ -5407,8 +5089,8 @@ object SparkEntry {
                 CASE WHEN conv_a + conv_b > 0
                        AND conv_a + conv_b < n_a + n_b
                      THEN ABS(z_raw) > 1.96 END AS significant
-         FROM z""",
-    "q133_seasonal_anomaly" ->
+         FROM z"""),
+    Query("q133_seasonal_anomaly", StatsOps.q133SeasonalAnomaly,
       """WITH daily AS (
            SELECT event_type, CAST(ts AS DATE) AS day,
                   CAST(SUM(CAST(value AS DECIMAL(18,4)))
@@ -5436,9 +5118,8 @@ object SparkEntry {
          SELECT event_type, day, ROUND(total_d, 4) AS total,
                 ROUND(dev / std, 4) AS z
          FROM j
-         WHERE n >= 5 AND std > 0 AND ABS(dev) > 1.5 * std""",
-
-    "q134_cusum" ->
+         WHERE n >= 5 AND std > 0 AND ABS(dev) > 1.5 * std"""),
+    Query("q134_cusum", StatsOps.q134Cusum,
       """WITH daily AS (
            SELECT event_type, CAST(ts AS DATE) AS day,
                   CAST(SUM(CAST(value AS DECIMAL(18,4)))
@@ -5484,9 +5165,8 @@ object SparkEntry {
                 ROUND(CASE WHEN s_up > 2.0 * std THEN s_up
                            ELSE s_dn END / std, 4) AS stat_sigma
          FROM sc
-         WHERE s_up > 2.0 * std OR s_dn > 2.0 * std""",
-
-    "q135_ks_test" ->
+         WHERE s_up > 2.0 * std OR s_dn > 2.0 * std"""),
+    Query("q135_ks_test", StatsOps.q135KsTest,
       """WITH counts AS (
            SELECT CAST(value AS DECIMAL(18,4)) AS v,
                   CAST(SUM(CASE WHEN event_type = 'purchase'
@@ -5522,9 +5202,8 @@ object SparkEntry {
                         + CAST(n2 AS DOUBLE))
                       / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)))
                 END AS significant
-         FROM m""",
-
-    "q136_winnow_repeats" ->
+         FROM m"""),
+    Query("q136_winnow_repeats", DedupOps.q136WinnowRepeats,
       """WITH base AS (
            SELECT doc_id, text, length(text) - 29 AS np
            FROM documents
@@ -5559,9 +5238,8 @@ object SparkEntry {
          )
          SELECT doc_id, n_sel, n_rep,
                 (n_rep * 2000 + n_sel) // (2 * n_sel) AS rep_ppt
-         FROM per WHERE n_rep > 0""",
-
-    "q137_skew_profile" ->
+         FROM per WHERE n_rep > 0"""),
+    Query("q137_skew_profile", StatsOps.q137SkewProfile,
       """WITH f1 AS (
            SELECT user_id AS k, CAST(COUNT(*) AS BIGINT) AS f
            FROM events WHERE user_id IS NOT NULL GROUP BY 1
@@ -5623,9 +5301,8 @@ object SparkEntry {
                 CAST(((2 * s1 - (CAST(n_keys AS HUGEINT) + 1) * n_rows)
                     * 2000000 + CAST(n_keys AS HUGEINT) * n_rows)
                   // (2 * CAST(n_keys AS HUGEINT) * n_rows) AS BIGINT)
-         FROM a3""",
-
-    "q138_bootstrap_ci" ->
+         FROM a3"""),
+    Query("q138_bootstrap_ci", StatsOps.q138BootstrapCi,
       """WITH o AS (
            SELECT o_orderkey,
                   CAST(o_totalprice AS DECIMAL(18,4)) AS price
@@ -5669,9 +5346,8 @@ object SparkEntry {
          )
          SELECT n, ROUND(m, 4) AS mean, ROUND(lo, 4) AS ci_lo,
                 ROUND(hi, 4) AS ci_hi
-         FROM p, ci""",
-
-    "q139_textrank" ->
+         FROM p, ci"""),
+    Query("q139_textrank", TextOps.q139TextRank,
       """WITH RECURSIVE toks AS (
            SELECT list_filter(string_split_regex(lower(text), '[^a-z]+'),
                     x -> length(x) >= 4) AS tk
@@ -5705,9 +5381,8 @@ object SparkEntry {
          )
          SELECT node AS word, CAST(r AS BIGINT) AS rank_ppt
          FROM it WHERE i = 10
-         ORDER BY rank_ppt DESC, word LIMIT 20""",
-
-    "q140_trigram_motifs" ->
+         ORDER BY rank_ppt DESC, word LIMIT 20"""),
+    Query("q140_trigram_motifs", RelationalOps.q140TrigramMotifs,
       """WITH seq AS (
            SELECT user_id, event_type AS e1,
                   LEAD(event_type, 1) OVER w AS e2,
@@ -5732,9 +5407,8 @@ object SparkEntry {
          JOIN bi b12 ON b12.b1 = t.e1 AND b12.b2 = t.e2
          JOIN bi b23 ON b23.b1 = t.e2 AND b23.b2 = t.e3
          JOIN ft f ON f.b1 = t.e2
-         ORDER BY t.n DESC, t.e1, t.e2, t.e3 LIMIT 25""",
-
-    "q141_behavior_diversity" ->
+         ORDER BY t.n DESC, t.e1, t.e2, t.e3 LIMIT 25"""),
+    Query("q141_behavior_diversity", RelationalOps.q141BehaviorDiversity,
       """WITH c AS (
            SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS c
            FROM events GROUP BY 1, 2
@@ -5749,9 +5423,8 @@ object SparkEntry {
                       * 1000000 + CAST(n_events AS HUGEINT) * n_events)
                   // (2 * CAST(n_events AS HUGEINT) * n_events)
                   AS BIGINT) AS diversity_ppm
-         FROM u""",
-
-    "q142_weighted_median" ->
+         FROM u"""),
+    Query("q142_weighted_median", StatsOps.q142WeightedMedian,
       """WITH b AS (
            SELECT l_returnflag AS g,
                   CAST(l_extendedprice AS DECIMAL(18,4)) AS v,
@@ -5769,9 +5442,8 @@ object SparkEntry {
          )
          SELECT g AS l_returnflag, CAST(MAX(wt) AS BIGINT) AS w_total,
                 ROUND(CAST(MIN(v) AS DOUBLE), 4) AS median_v
-         FROM c WHERE 2 * cw >= wt GROUP BY g""",
-
-    "q143_mann_whitney" ->
+         FROM c WHERE 2 * cw >= wt GROUP BY g"""),
+    Query("q143_mann_whitney", StatsOps.q143MannWhitney,
       """WITH counts AS (
            SELECT CAST(value AS DECIMAL(18,4)) AS v,
                   CAST(SUM(CASE WHEN event_type = 'purchase'
@@ -5813,9 +5485,8 @@ object SparkEntry {
                   THEN ROUND((u1 - mu) / sqrt(va), 4) END AS z,
                 CASE WHEN n1 > 0 AND n2 > 0 AND va > 0
                   THEN ABS((u1 - mu) / sqrt(va)) > 1.96 END AS significant
-         FROM zz""",
-
-    "q144_benford" ->
+         FROM zz"""),
+    Query("q144_benford", StatsOps.q144Benford,
       """WITH d AS (
            SELECT CAST(substr(CAST(CAST(o_totalprice AS DECIMAL(18,4))
                     AS VARCHAR), 1, 1) AS INT) AS digit,
@@ -5838,9 +5509,8 @@ object SparkEntry {
                       / (CAST(n AS DOUBLE)
                         * (CAST(e.exp_ppm AS DOUBLE) / 1000000.0)), 4)
                   AS chi2_contrib
-         FROM d JOIN e ON d.digit = e.digit, tt""",
-
-    "q145_join_cardinality" ->
+         FROM d JOIN e ON d.digit = e.digit, tt"""),
+    Query("q145_join_cardinality", StatsOps.q145JoinCardinality,
       """WITH fa AS (
            SELECT o_custkey AS k, CAST(COUNT(*) AS BIGINT) AS fa
            FROM orders WHERE o_custkey IS NOT NULL GROUP BY 1
@@ -5856,9 +5526,8 @@ object SparkEntry {
                 CAST(MAX(contrib) AS BIGINT) AS max_key_contrib,
                 CAST((2 * MAX(contrib) * 1000000 + SUM(contrib))
                   // (2 * SUM(contrib)) AS BIGINT) AS top_contrib_ppm
-         FROM j""",
-
-    "q146_pareto_abc" ->
+         FROM j"""),
+    Query("q146_pareto_abc", RelationalOps.q146ParetoAbc,
       """WITH rev AS (
            SELECT l_partkey,
                   CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)))
@@ -5887,9 +5556,8 @@ object SparkEntry {
                     + MAX(t100))
                   // (2 * CAST(MAX(t100) AS HUGEINT)) AS BIGINT)
                   AS share_ppm
-         FROM cl GROUP BY cls""",
-
-    "q147_proration" ->
+         FROM cl GROUP BY cls"""),
+    Query("q147_proration", RelationalOps.q147Proration,
       """WITH li AS (
            SELECT l_orderkey, l_linenumber,
                   CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * 100
@@ -5923,9 +5591,8 @@ object SparkEntry {
          SELECT l_orderkey, l_linenumber,
                 CAST(base + CASE WHEN rk <= leftover THEN 1 ELSE 0 END
                   AS BIGINT) AS alloc_cents
-         FROM r""",
-
-    "q148_acf" ->
+         FROM r"""),
+    Query("q148_acf", StatsOps.q148Acf,
       """WITH daily AS (
            SELECT epoch_us(o_orderdate) // 86400000000 AS day,
                   SUM(CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 100
@@ -5957,9 +5624,8 @@ object SparkEntry {
                     THEN (2 * num * 1000000 + den) // (2 * den)
                     ELSE -((2 * (-num) * 1000000 + den) // (2 * den))
                     END AS BIGINT) END AS acf_ppm
-         FROM num, den""",
-
-    "q149_survival" ->
+         FROM num, den"""),
+    Query("q149_survival", StatsOps.q149Survival,
       """WITH RECURSIVE per AS (
            SELECT user_id, MIN(epoch_us(ts)) AS m0, MAX(epoch_us(ts)) AS m1
            FROM events
@@ -5994,9 +5660,8 @@ object SparkEntry {
          SELECT lt.t AS t_days, CAST(lt.n_risk AS BIGINT) AS n_risk,
                 lt.d AS n_events, CAST(km.s AS BIGINT) AS surv_ppm
          FROM lt JOIN km ON km.i = lt.i
-         WHERE lt.d > 0""",
-
-    "q150_rrf_fusion" ->
+         WHERE lt.d > 0"""),
+    Query("q150_rrf_fusion", SimilarityOps.q150RrfFusion,
       """WITH docs AS (
            SELECT doc_id,
                   list_distinct(string_split_regex(lower(trim(text)),
@@ -6071,9 +5736,8 @@ object SparkEntry {
                   ROW_NUMBER() OVER (PARTITION BY qid
                     ORDER BY rrf DESC, did) AS rn
            FROM fused)
-         WHERE rn <= 10""",
-
-    "q151_link_predict" ->
+         WHERE rn <= 10"""),
+    Query("q151_link_predict", GraphOps.q151LinkPredict,
       """WITH li AS (
            SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
            FROM lineitem
@@ -6112,9 +5776,8 @@ object SparkEntry {
                   ROW_NUMBER() OVER (PARTITION BY node
                     ORDER BY jac_ppm DESC, cn DESC, other) AS rn
            FROM bidir)
-         WHERE rn <= 5""",
-
-    "q152_strat_sample" ->
+         WHERE rn <= 5"""),
+    Query("q152_strat_sample", TextOps.q152StratSample,
       """WITH c AS (
            SELECT lang AS s, CAST(COUNT(*) AS BIGINT) AS n
            FROM documents WHERE lang IS NOT NULL GROUP BY 1
@@ -6145,9 +5808,8 @@ object SparkEntry {
          )
          SELECT rr.s AS lang, rr.doc_id, rr.rk AS sample_rank
          FROM rr JOIN ks ON rr.s = ks.s
-         WHERE rr.rk <= ks.k_s""",
-
-    "q153_theil_sen" ->
+         WHERE rr.rk <= ks.k_s"""),
+    Query("q153_theil_sen", StatsOps.q153TheilSen,
       """WITH daily AS (
            SELECT epoch_us(o_orderdate) // 86400000000 AS day,
                   SUM(CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 100
@@ -6182,14 +5844,67 @@ object SparkEntry {
            WHERE rk = (c + 1) // 2
          )
          SELECT n.n_pairs, med.slope_e6, CAST(rmed.r AS BIGINT) AS icept_e6
-         FROM n, med, rmed""",
-
+         FROM n, med, rmed"""),
+    Query("q154_wilson_lcb", StatsOps.q154WilsonLcb,
+      """WITH g AS (
+           SELECT p_brand, CAST(COUNT(*) AS BIGINT) AS n,
+                  CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
+                    AS BIGINT) AS k
+           FROM lineitem JOIN part ON l_partkey = p_partkey
+           GROUP BY 1
+         )
+         SELECT p_brand, n, k,
+                ROUND((CAST(k AS DOUBLE) / CAST(n AS DOUBLE)
+                       + 1.96 * 1.96 / (2.0 * CAST(n AS DOUBLE))
+                       - 1.96 * sqrt(CAST(k AS DOUBLE) / CAST(n AS DOUBLE)
+                           * (1.0 - CAST(k AS DOUBLE) / CAST(n AS DOUBLE))
+                           / CAST(n AS DOUBLE)
+                         + 1.96 * 1.96 / (4.0 * CAST(n AS DOUBLE)
+                           * CAST(n AS DOUBLE))))
+                      / (1.0 + 1.96 * 1.96 / CAST(n AS DOUBLE)), 6)
+                  AS wilson_lcb
+         FROM g"""),
+    Query("q155_cramers_v", StatsOps.q155CramersV,
+      """WITH base AS (
+           SELECT lang AS a, source AS b FROM documents
+           WHERE lang IS NOT NULL AND source IS NOT NULL
+         ), cont AS (
+           SELECT a, b, CAST(COUNT(*) AS BIGINT) AS o
+           FROM base GROUP BY 1, 2
+         ), ra AS (
+           SELECT a, CAST(SUM(o) AS BIGINT) AS ra FROM cont GROUP BY 1
+         ), cb AS (
+           SELECT b, CAST(SUM(o) AS BIGINT) AS cb FROM cont GROUP BY 1
+         ), tot AS (
+           SELECT CAST(SUM(o) AS BIGINT) AS n,
+                  CAST(COUNT(DISTINCT a) AS BIGINT) AS r,
+                  CAST(COUNT(DISTINCT c2.b) AS BIGINT) AS c
+           FROM cont c2
+         ), s12 AS (
+           SELECT SUM((2 * CAST(o AS HUGEINT) * o * 1000000000000
+                       + CAST(ra.ra AS HUGEINT) * cb.cb)
+                      // (2 * CAST(ra.ra AS HUGEINT) * cb.cb)) AS s12
+           FROM cont JOIN ra USING (a) JOIN cb USING (b)
+         ), f AS (
+           SELECT n, r, c,
+                  CAST(n AS HUGEINT) * (s12 - 1000000000000) AS chi2_e12
+           FROM s12, tot
+         )
+         SELECT n, r, c,
+                ROUND(CAST(chi2_e12 AS DOUBLE) / 1e12, 6) AS chi2,
+                CASE WHEN r > 1 AND c > 1 THEN
+                  ROUND(sqrt(CAST(chi2_e12 AS DOUBLE)
+                    / (CAST(n AS DOUBLE) * CAST(least(r, c) - 1 AS DOUBLE)
+                       * 1e12)), 6)
+                END AS cramers_v
+         FROM f"""),
+    Query("q156_mmr", SimilarityOps.q156MmrDiversify, mmrOracleSql),
     // full-recompute CC over the combined co-purchase graph — the
     // incremental maintenance is DEFINED to equal it. Self-loops fold
     // each node's own label into the per-round MIN so the recursive
     // term references `it` exactly once; 15 synchronous rounds >> the
     // dense co-purchase graph's min-label convergence depth.
-    "q157_incr_cc" ->
+    Query("q157_incr_cc", GraphOps.q157IncrCc,
       """WITH RECURSIVE li AS (
            SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
            FROM lineitem
@@ -6211,35 +5926,12 @@ object SparkEntry {
            GROUP BY 1, 2
          )
          SELECT node AS partkey, CAST(lbl AS BIGINT) AS component
-         FROM it WHERE i = 15""",
-
-    "q154_wilson_lcb" ->
-      """WITH g AS (
-           SELECT p_brand, CAST(COUNT(*) AS BIGINT) AS n,
-                  CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS k
-           FROM lineitem JOIN part ON l_partkey = p_partkey
-           GROUP BY 1
-         )
-         SELECT p_brand, n, k,
-                ROUND((CAST(k AS DOUBLE) / CAST(n AS DOUBLE)
-                       + 1.96 * 1.96 / (2.0 * CAST(n AS DOUBLE))
-                       - 1.96 * sqrt(CAST(k AS DOUBLE) / CAST(n AS DOUBLE)
-                           * (1.0 - CAST(k AS DOUBLE) / CAST(n AS DOUBLE))
-                           / CAST(n AS DOUBLE)
-                         + 1.96 * 1.96 / (4.0 * CAST(n AS DOUBLE)
-                           * CAST(n AS DOUBLE))))
-                      / (1.0 + 1.96 * 1.96 / CAST(n AS DOUBLE)), 6)
-                  AS wilson_lcb
-         FROM g""",
-
-    "q156_mmr" -> mmrOracleSql,
-
+         FROM it WHERE i = 15"""),
     // two-stage truncated-dim ANN is deterministic end to end (ROUND-4
     // prefix cosines cut at rank 100 with nid tie-breaks, then ROUND-4
     // full-vector re-rank — the q32 cosine recipe twice), so the oracle
     // replays the exact pipeline: no float-library internals anywhere
-    "q158_trunc_ann" ->
+    Query("q158_trunc_ann", SimilarityOps.q158TruncatedAnn,
       """WITH pre AS (
            SELECT vec_id, embedding[1:32] AS pe FROM embeddings
          ), q AS (
@@ -6285,44 +5977,8 @@ object SparkEntry {
          SELECT qid, nid, cos_sim FROM (
            SELECT qid, nid, cos_sim, row_number() OVER (PARTITION BY qid
              ORDER BY cos_sim DESC, nid) AS rn FROM scored)
-         WHERE rn <= 5""",
-
-    "q155_cramers_v" ->
-      """WITH base AS (
-           SELECT lang AS a, source AS b FROM documents
-           WHERE lang IS NOT NULL AND source IS NOT NULL
-         ), cont AS (
-           SELECT a, b, CAST(COUNT(*) AS BIGINT) AS o
-           FROM base GROUP BY 1, 2
-         ), ra AS (
-           SELECT a, CAST(SUM(o) AS BIGINT) AS ra FROM cont GROUP BY 1
-         ), cb AS (
-           SELECT b, CAST(SUM(o) AS BIGINT) AS cb FROM cont GROUP BY 1
-         ), tot AS (
-           SELECT CAST(SUM(o) AS BIGINT) AS n,
-                  CAST(COUNT(DISTINCT a) AS BIGINT) AS r,
-                  CAST(COUNT(DISTINCT c2.b) AS BIGINT) AS c
-           FROM cont c2
-         ), s12 AS (
-           SELECT SUM((2 * CAST(o AS HUGEINT) * o * 1000000000000
-                       + CAST(ra.ra AS HUGEINT) * cb.cb)
-                      // (2 * CAST(ra.ra AS HUGEINT) * cb.cb)) AS s12
-           FROM cont JOIN ra USING (a) JOIN cb USING (b)
-         ), f AS (
-           SELECT n, r, c,
-                  CAST(n AS HUGEINT) * (s12 - 1000000000000) AS chi2_e12
-           FROM s12, tot
-         )
-         SELECT n, r, c,
-                ROUND(CAST(chi2_e12 AS DOUBLE) / 1e12, 6) AS chi2,
-                CASE WHEN r > 1 AND c > 1 THEN
-                  ROUND(sqrt(CAST(chi2_e12 AS DOUBLE)
-                    / (CAST(n AS DOUBLE) * CAST(least(r, c) - 1 AS DOUBLE)
-                       * 1e12)), 6)
-                END AS cramers_v
-         FROM f""",
-
-    "q159_moments" ->
+         WHERE rn <= 5"""),
+    Query("q159_moments", StatsOps.q159Moments,
       """WITH scaled AS (
            SELECT l_returnflag, l_linestatus,
                   CAST(CAST(l_quantity AS DECIMAL(18,4)) * 10000
@@ -6350,9 +6006,8 @@ object SparkEntry {
                   THEN ROUND(m3/(sqrt(m2)*m2), 4) END AS skewness,
                 CASE WHEN m2 > 0
                   THEN ROUND(m4/(m2*m2) - 3, 4) END AS kurtosis_excess
-         FROM c""",
-
-    "q160_ewma" ->
+         FROM c"""),
+    Query("q160_ewma", StatsOps.q160Ewma,
       """WITH daily AS (
            SELECT l_returnflag, date_trunc('day', l_shipdate) AS day,
                   SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * 10000
@@ -6385,15 +6040,13 @@ object SparkEntry {
          )
          SELECT l_returnflag, day, CAST(rev AS BIGINT) AS rev_units,
                 CAST((2*num + den) // (2*den) AS BIGINT) AS ewma_units
-         FROM f""",
-
-    "q161_bitmap_distinct" ->
+         FROM f"""),
+    Query("q161_bitmap_distinct", RelationalOps.q161BitmapDistinct,
       """SELECT event_type,
                 CAST(COUNT(DISTINCT user_id) AS BIGINT) AS distinct_users,
                 CAST(COUNT(*) AS BIGINT) AS n_events
          FROM events WHERE user_id IS NOT NULL
-         GROUP BY event_type""",
-
+         GROUP BY event_type"""),
     // the NDV estimate has no ANSI oracle (different sketch), so the
     // output carries the operator's claims as engine-exact fields: the
     // oracle asserts the exact counts and that merge-invariance and
@@ -6407,7 +6060,7 @@ object SparkEntry {
     // the same two claims with a per-type message, so diagnose THERE
     // first: if the suite test is red, this oracle is stale, not the
     // engine.
-    "q162_sketch_rollup" ->
+    Query("q162_sketch_rollup", RelationalOps.q162SketchRollup,
       """WITH daily AS (
            SELECT event_type, date_trunc('day', ts) AS day,
                   count(*) AS n
@@ -6415,9 +6068,8 @@ object SparkEntry {
          SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
                 CAST(sum(n) AS BIGINT) AS n_events,
                 TRUE AS merge_invariant, TRUE AS est_within_2pct
-         FROM daily GROUP BY 1""",
-
-    "q163_business_days" ->
+         FROM daily GROUP BY 1"""),
+    Query("q163_business_days", RelationalOps.q163BusinessDays,
       """WITH span AS (
            SELECT CAST(min(o_orderdate) AS DATE) AS lo,
                   CAST(max(o_orderdate) AS DATE) AS hi
@@ -6446,9 +6098,8 @@ object SparkEntry {
          FROM orders o
          JOIN counted c ON CAST(o.o_orderdate AS DATE) = c.day
          JOIN ranks r ON r.target = c.bd_count + 3
-         WHERE o.o_orderdate IS NOT NULL""",
-
-    "q164_asof_snapshot" ->
+         WHERE o.o_orderdate IS NOT NULL"""),
+    Query("q164_asof_snapshot", RelationalOps.q164AsOfSnapshot,
       """WITH marked AS (
            SELECT o_custkey, o_orderpriority, o_orderdate, o_orderkey,
                   CASE WHEN lag(o_orderpriority) OVER w
@@ -6476,9 +6127,8 @@ object SparkEntry {
          SELECT custkey, priority, valid_from, valid_to
          FROM hist
          WHERE valid_from <= TIMESTAMP '1995-06-01'
-           AND (valid_to IS NULL OR valid_to > TIMESTAMP '1995-06-01')""",
-
-    "q165_decile_lift" ->
+           AND (valid_to IS NULL OR valid_to > TIMESTAMP '1995-06-01')"""),
+    Query("q165_decile_lift", StatsOps.q165DecileLift,
       """WITH cust AS (
            SELECT c_custkey,
                   CAST(CAST(c_acctbal AS DECIMAL(18,4)) * 100 AS BIGINT)
@@ -6528,9 +6178,8 @@ object SparkEntry {
                     // (2 * CAST(cum_n AS HUGEINT)
                         * (SELECT t_resp FROM tot))
                   AS BIGINT) END AS cum_lift_ppm
-         FROM c""",
-
-    "q166_rfm" ->
+         FROM c"""),
+    Query("q166_rfm", StatsOps.q166Rfm,
       """WITH per AS (
            SELECT o_custkey,
                   max(o_orderdate) AS last_order,
@@ -6563,9 +6212,8 @@ object SparkEntry {
          SELECT custkey, f_raw, m_raw, r_score, f_score, m_score,
                 CAST(r_score AS VARCHAR) || CAST(f_score AS VARCHAR)
                   || CAST(m_score AS VARCHAR) AS segment
-         FROM sc""",
-
-    "q167_modularity" ->
+         FROM sc"""),
+    Query("q167_modularity", GraphOps.q167Modularity,
       """WITH RECURSIVE li AS (
            SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
            FROM lineitem
@@ -6626,9 +6274,8 @@ object SparkEntry {
                        AS BIGINT) END AS q_ppm
          FROM f
          ORDER BY n_nodes DESC, community
-         LIMIT 25""",
-
-    "q168_quantile_norm" ->
+         LIMIT 25"""),
+    Query("q168_quantile_norm", TextOps.q168QuantileNorm,
       """WITH docs AS (
            SELECT doc_id, source, n_chars FROM documents
            WHERE n_chars IS NOT NULL
@@ -6650,9 +6297,8 @@ object SparkEntry {
          SELECT w.doc_id, w.source, w.n_chars, g.norm_chars
          FROM wr w
          JOIN gr g ON g.rn_g =
-           (w.rn_s * (SELECT n_total FROM tot) + w.n_s - 1) // w.n_s""",
-
-    "q169_overlap_matrix" ->
+           (w.rn_s * (SELECT n_total FROM tot) + w.n_s - 1) // w.n_s"""),
+    Query("q169_overlap_matrix", RelationalOps.q169OverlapMatrix,
       """WITH u AS (
            SELECT DISTINCT event_type, user_id FROM events
            WHERE user_id IS NOT NULL
@@ -6678,9 +6324,8 @@ object SparkEntry {
          FROM s sa
          JOIN s sb ON sa.event_type < sb.event_type
          LEFT JOIN ov o ON o.type_a = sa.event_type
-                       AND o.type_b = sb.event_type""",
-
-    "q170_cosine_allpairs" ->
+                       AND o.type_b = sb.event_type"""),
+    Query("q170_cosine_allpairs", SimilarityOps.q170CosineAllPairs,
       """WITH base AS (
            SELECT doc_id,
                   string_split_regex(lower(trim(text)), '\s+') AS tk
@@ -6726,9 +6371,8 @@ object SparkEntry {
          FROM dot d
          JOIN norms na ON d.id_a = na.id
          JOIN norms nb ON d.id_b = nb.id
-         WHERE d.dt * d.dt * 4 >= na.n2 * nb.n2""",
-
-    "q171_tv_matrix" ->
+         WHERE d.dt * d.dt * 4 >= na.n2 * nb.n2"""),
+    Query("q171_tv_matrix", TextOps.q171TvMatrix,
       """WITH binned AS (
            SELECT source, LEAST(n_chars // 500, 20) AS bin
            FROM documents WHERE n_chars IS NOT NULL
@@ -6755,9 +6399,8 @@ object SparkEntry {
          JOIN grid b ON a.bin = b.bin AND a.source < b.source
          JOIN sizes sa ON sa.source = a.source
          JOIN sizes sb ON sb.source = b.source
-         GROUP BY 1, 2, 3, 4""",
-
-    "q172_rolling_median" ->
+         GROUP BY 1, 2, 3, 4"""),
+    Query("q172_rolling_median", StatsOps.q172RollingMedian,
       """WITH daily AS (
            SELECT l_returnflag, date_trunc('day', l_shipdate) AS day,
                   CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,4))
@@ -6774,9 +6417,8 @@ object SparkEntry {
          )
          SELECT l_returnflag, day, rev_units,
                 win[(len(win) + 1) // 2] AS med7_units
-         FROM w""",
-
-    "q173_mann_kendall" ->
+         FROM w"""),
+    Query("q173_mann_kendall", StatsOps.q173MannKendall,
       """WITH daily AS (
            SELECT epoch_us(CAST(o_orderdate AS TIMESTAMP))
                     // 86400000000 AS day,
@@ -6806,9 +6448,8 @@ object SparkEntry {
                 CASE WHEN var18 > 0 THEN
                   ROUND((CAST(s AS DOUBLE) - sign(CAST(s AS DOUBLE)))
                     / sqrt(CAST(var18 AS DOUBLE) / 18.0), 4) END AS z
-         FROM f""",
-
-    "q174_assortativity" ->
+         FROM f"""),
+    Query("q174_assortativity", GraphOps.q174Assortativity,
       """WITH li AS (
            SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
            FROM lineitem
@@ -6845,9 +6486,8 @@ object SparkEntry {
                 CASE WHEN vx > 0 AND vy > 0
                   THEN ROUND(cov / (sqrt(vx) * sqrt(vy)), 4)
                 END AS assortativity
-         FROM c""",
-
-    "q175_key_gaps" ->
+         FROM c"""),
+    Query("q175_key_gaps", RelationalOps.q175KeyGaps,
       """WITH keys AS (
            SELECT DISTINCT CAST(l_orderkey AS BIGINT) AS k
            FROM lineitem WHERE l_orderkey IS NOT NULL
@@ -6856,9 +6496,49 @@ object SparkEntry {
          )
          SELECT k + 1 AS gap_start, k2 - 1 AS gap_end,
                 k2 - k - 1 AS n_missing
-         FROM nxt WHERE k2 - k > 1""",
-
-    "q177_price_volume_mix" ->
+         FROM nxt WHERE k2 - k > 1"""),
+    // full DDSketch replay from the shared exact-rational range table:
+    // identical bucket assignment (integer (lo, hi] ranges), identical
+    // integer nearest-rank rule (100·cum ≥ p·n), identical exact
+    // estimates — engine-exact end to end, no libm on either side
+    Query("q176_quantile_rollup", RelationalOps.q176QuantileRollup,
+      s"""WITH r(pos, lo, hi, est) AS (VALUES $ddSketchRangesSql),
+         u AS (
+           SELECT event_type, date_trunc('day', ts) AS day,
+                  CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT)
+                    AS u
+           FROM events WHERE value IS NOT NULL
+         ), pb AS (
+           SELECT event_type, day, r.pos, r.est
+           FROM u JOIN r ON u.u > r.lo AND u.u <= r.hi
+         ), merged AS (
+           SELECT event_type, pos, MIN(est) AS est,
+                  CAST(COUNT(*) AS BIGINT) AS c
+           FROM pb GROUP BY 1, 2
+         ), tot AS (
+           SELECT event_type, CAST(SUM(c) AS BIGINT) AS n_events
+           FROM merged GROUP BY 1
+         ), days AS (
+           SELECT event_type, CAST(COUNT(DISTINCT day) AS BIGINT)
+                    AS n_days
+           FROM u GROUP BY 1
+         ), cum AS (
+           SELECT event_type, pos, est,
+                  SUM(c) OVER (PARTITION BY event_type ORDER BY pos)
+                    AS cum
+           FROM merged
+         )
+         SELECT c.event_type, d.n_days, t.n_events,
+                CAST(MIN(CASE WHEN cum * 100 >= 50 * t.n_events
+                              THEN est END) AS BIGINT) AS p50_units,
+                CAST(MIN(CASE WHEN cum * 100 >= 95 * t.n_events
+                              THEN est END) AS BIGINT) AS p95_units,
+                CAST(MIN(CASE WHEN cum * 100 >= 99 * t.n_events
+                              THEN est END) AS BIGINT) AS p99_units
+         FROM cum c
+         JOIN tot t USING (event_type) JOIN days d USING (event_type)
+         GROUP BY 1, 2, 3"""),
+    Query("q177_price_volume_mix", RelationalOps.q177PriceVolumeMix,
       """WITH li AS (
            SELECT p.p_brand,
                   year(l.l_shipdate) AS yr,
@@ -6901,9 +6581,8 @@ object SparkEntry {
                          // (2 * q1) AS BIGINT)
                   END
                 END AS volume_eff_cents
-         FROM agg""",
-
-    "q178_repeat_decay" ->
+         FROM agg"""),
+    Query("q178_repeat_decay", RelationalOps.q178RepeatDecay,
       """WITH per AS (
            SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS c
            FROM orders GROUP BY 1
@@ -6929,9 +6608,8 @@ object SparkEntry {
                   CAST((2 * CAST(nxt AS HUGEINT) * 1000000 + n_reached)
                     // (2 * CAST(n_reached AS HUGEINT)) AS BIGINT)
                 END AS continue_ppm
-         FROM nx""",
-
-    "q179_purchase_gaps" ->
+         FROM nx"""),
+    Query("q179_purchase_gaps", RelationalOps.q179PurchaseGaps,
       """WITH lagged AS (
            SELECT o_orderdate,
                   lag(o_orderdate) OVER w AS prev
@@ -6956,9 +6634,8 @@ object SparkEntry {
                     + (SELECT n_total FROM tot))
                   // (2 * CAST((SELECT n_total FROM tot) AS HUGEINT))
                   AS BIGINT) AS share_ppm
-         FROM hist""",
-
-    "q180_tier_migration" ->
+         FROM hist"""),
+    Query("q180_tier_migration", RelationalOps.q180TierMigration,
       """WITH per AS (
            SELECT o_custkey,
                   CAST(SUM(CASE WHEN year(o_orderdate) = 1995
@@ -6991,11 +6668,10 @@ object SparkEntry {
                 CAST((2 * CAST(c.n_customers AS HUGEINT) * 1000000
                     + ft.t) // (2 * CAST(ft.t AS HUGEINT)) AS BIGINT)
                   AS share_ppm
-         FROM cells c JOIN ft ON c.tier_from = ft.tier_from""",
-
+         FROM cells c JOIN ft ON c.tier_from = ft.tier_from"""),
     // the naive sliding-distinct: re-scan the 7-day band per output
     // day — exactly the corpus re-read the bitmap rollup avoids
-    "q181_rolling_distinct" ->
+    Query("q181_rolling_distinct", RelationalOps.q181RollingDistinct,
       """WITH daily AS (
            SELECT CAST(ts AS DATE) AS day, count(*) AS n
            FROM events WHERE user_id IS NOT NULL GROUP BY 1)
@@ -7004,11 +6680,10 @@ object SparkEntry {
          FROM daily d JOIN events e
            ON e.user_id IS NOT NULL
           AND CAST(e.ts AS DATE) BETWEEN d.day - 6 AND d.day
-         GROUP BY 1, 2""",
-
+         GROUP BY 1, 2"""),
     // Gini / HHI / top-1 share per segment — exact HUGEINT rationals,
     // round-half-up ppm, non-negative numerators (no DIV sign trap)
-    "q182_concentration" ->
+    Query("q182_concentration", RelationalOps.q182Concentration,
       """WITH spend AS (
            SELECT o_custkey,
                   CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,4))
@@ -7035,13 +6710,12 @@ object SparkEntry {
                   // (2 * sx * sx) AS BIGINT) AS hhi_ppm,
                 CAST((2 * CAST(xmax AS HUGEINT) * 1000000 + sx)
                   // (2 * sx) AS BIGINT) AS top1_ppm
-         FROM m""",
-
+         FROM m"""),
     // 8-step absorption into 'purchase': q113's ppm matrix, purchase
     // row dropped (modeled absorbing, value pinned to 1e6), then 8
     // UNROLLED integer matrix-vector steps — per-term (p*a)//1e6 on
     // non-negative longs, the exact Spark DIV replay
-    "q183_absorption" ->
+    Query("q183_absorption", RelationalOps.q183Absorption,
       """WITH pairs AS (
            SELECT event_type AS from_type,
                   lead(event_type) OVER (PARTITION BY user_id
@@ -7126,10 +6800,9 @@ object SparkEntry {
              FROM t JOIN a7 p ON p.state = t.to_type GROUP BY 1) x
            ON x.from_type = st.state
          )
-         SELECT state, CAST(a AS BIGINT) AS p_convert_ppm FROM a8""",
-
+         SELECT state, CAST(a AS BIGINT) AS p_convert_ppm FROM a8"""),
     // custkey-blocked near-duplicate pairs; amount band in integer e4
-    "q184_dup_payments" ->
+    Query("q184_dup_payments", RelationalOps.q184DupPayments,
       """WITH o AS (
            SELECT o_custkey, o_orderkey,
                   CAST(o_orderdate AS DATE) AS day,
@@ -7143,11 +6816,10 @@ object SparkEntry {
          FROM o a JOIN o b ON a.o_custkey = b.o_custkey
            AND a.o_orderkey < b.o_orderkey
            AND abs(a.day - b.day) <= 7
-           AND abs(a.amt - b.amt) * 100 <= least(a.amt, b.amt) * 5""",
-
+           AND abs(a.amt - b.amt) * 100 <= least(a.amt, b.amt) * 5"""),
     // integer y*12+m month arithmetic on both engines; HUGEINT window
     // cumsum (integer segment tree is exact); truncating LTV division
-    "q185_cohort_ltv" ->
+    Query("q185_cohort_ltv", RelationalOps.q185CohortLtv,
       """WITH o AS (
            SELECT o_custkey,
                   CAST(EXTRACT(year FROM o_orderdate) * 12
@@ -7175,8 +6847,7 @@ object SparkEntry {
                 CAST(c.cym % 12 + 1 AS BIGINT) AS cohort_month,
                 c.age_months, s.n_customers, c.n_orders,
                 CAST(c.cumrev // s.n_customers AS BIGINT) AS ltv_e4
-         FROM cum c JOIN sizes s ON c.cym = s.cym""",
-
+         FROM cum c JOIN sizes s ON c.cym = s.cym"""),
     // full-corpus top-1 (the q32 ROUND-4 cosine pattern) then the
     // reciprocity self-join; each mutual pair emitted once (id_a<id_b)
     // q186/q187 ORACLE CEILING (r12 advice): these replay the EXACT
@@ -7189,7 +6860,7 @@ object SparkEntry {
     // (`scale`-forced IVF vs exact on the same world; r13 at sf1:
     // recall@5 0.886, mutual-pair recall 0.84, rounded-cos
     // disagreements 0).
-    "q186_mutual_nn" ->
+    Query("q186_mutual_nn", SimilarityOps.q186MutualNn,
       """WITH pairs AS (
            SELECT a.vec_id AS qid, b.vec_id AS nid,
                   a.embedding AS qe, b.embedding AS ne
@@ -7215,11 +6886,10 @@ object SparkEntry {
          )
          SELECT x.qid AS id_a, x.nid AS id_b, x.cos_sim AS mutual_cos
          FROM top1 x JOIN top1 y
-           ON x.nid = y.qid AND y.nid = x.qid AND x.qid < y.qid""",
-
+           ON x.nid = y.qid AND y.nid = x.qid AND x.qid < y.qid"""),
     // top-5 by the q32 ROUND-4 cosine recipe, then label agreement in
     // round-half-up ppm over the constant k = 5
-    "q187_knn_purity" ->
+    Query("q187_knn_purity", SimilarityOps.q187KnnPurity,
       """WITH pairs AS (
            SELECT a.vec_id AS qid, a.label AS qlabel,
                   b.vec_id AS nid, b.label AS nlabel,
@@ -7248,12 +6918,11 @@ object SparkEntry {
                                     THEN 1 ELSE 0 END) + 5)
                      // 10 AS BIGINT) AS purity_ppm
          FROM ranked WHERE rk <= 5
-         GROUP BY 1, 2""",
-
+         GROUP BY 1, 2"""),
     // centered 7-day MA trend (full windows only), per-isodow seasonal
     // mean with the sign split out of the round-half-up division
     // (detrended values go negative; // floors, DIV truncates)
-    "q188_seasonal_decomp" ->
+    Query("q188_seasonal_decomp", StatsOps.q188SeasonalDecomp,
       """WITH daily AS (
            SELECT CAST(o_orderdate AS DATE) AS day,
                   CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,4))
@@ -7282,12 +6951,12 @@ object SparkEntry {
          SELECT tr.day, tr.value_e4, tr.trend_e4, tr.dow,
                 se.seasonal_e4,
                 CAST(tr.d - se.seasonal_e4 AS BIGINT) AS remainder_e4
-         FROM tr JOIN se ON tr.dow = se.dow""",
+         FROM tr JOIN se ON tr.dow = se.dow"""),
     // lead-lag OLS slope in pure integer rationals (no sqrt — the
     // correlation denominator is libm; the slope form is exact), with
     // the signed round-half-up sign split (Spark DIV truncates,
     // DuckDB // floors; identical on non-negatives only)
-    "q189_lead_lag" ->
+    Query("q189_lead_lag", StatsOps.q189LeadLag,
       """WITH daily AS (
            SELECT epoch_us(o_orderdate) // 86400000000 AS day,
                   CAST(COUNT(*) AS BIGINT) AS x,
@@ -7318,10 +6987,10 @@ object SparkEntry {
                             + (n * sxx - sx * sx))
                            // (2 * (n * sxx - sx * sx)))
                   END AS BIGINT) END AS beta_ppm
-         FROM agg""",
+         FROM agg"""),
     // survivorship rules replayed as windows: MODE = highest count,
     // smallest value; LATEST = max (day, orderkey)
-    "q190_golden_record" ->
+    Query("q190_golden_record", RelationalOps.q190GoldenRecord,
       """WITH obs AS (
            SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS day,
                   o_orderstatus, o_orderpriority,
@@ -7352,8 +7021,8 @@ object SparkEntry {
          FROM f
          JOIN md ON md.o_custkey = f.o_custkey AND md.rn = 1
          JOIN lt ON lt.o_custkey = f.o_custkey AND lt.rn = 1
-         LEFT JOIN customer c ON c.c_custkey = f.o_custkey""",
-    "q191_fd_discovery" ->
+         LEFT JOIN customer c ON c.c_custkey = f.o_custkey"""),
+    Query("q191_fd_discovery", RelationalOps.q191FdDiscovery,
       """WITH c1 AS (SELECT l_orderkey AS a, CAST(l_returnflag AS VARCHAR) AS b, COUNT(*) AS c FROM lineitem GROUP BY 1,2),
          g1 AS (SELECT CAST(SUM(mc) AS BIGINT) AS keep_rows, CAST(SUM(n) AS BIGINT) AS n_rows FROM (SELECT a, MAX(c) AS mc, SUM(c) AS n FROM c1 GROUP BY a)),
          c2 AS (SELECT l_orderkey AS a, CAST(l_linestatus AS VARCHAR) AS b, COUNT(*) AS c FROM lineitem GROUP BY 1,2),
@@ -7374,9 +7043,9 @@ object SparkEntry {
          SELECT lhs, rhs, n_rows, keep_rows,
                 CAST((2 * (n_rows - keep_rows) * 10000 + n_rows)
                      // (2 * n_rows) AS BIGINT) AS g3_e4
-         FROM u""",
+         FROM u"""),
     // melt replayed as the ANSI UNION-ALL stack
-    "q192_unpivot" ->
+    Query("q192_unpivot", RelationalOps.q192Unpivot,
       """WITH wide AS (
            SELECT n.n_name,
                   CAST(SUM(CAST(CAST(o.o_totalprice AS DECIMAL(18,4))
@@ -7392,12 +7061,12 @@ object SparkEntry {
          UNION ALL
          SELECT n_name, 'n_orders', n_orders FROM wide
          UNION ALL
-         SELECT n_name, 'n_customers', n_customers FROM wide""",
+         SELECT n_name, 'n_customers', n_customers FROM wide"""),
     // hop-bounded Bellman–Ford: after k relaxations dist = cheapest
     // cost over ≤k-hop paths, so the bounded run replays as k
     // unrolled min-plus CTEs (NOT a recursive CTE — weighted label
     // states explode; the unroll is the exact mirror of the loop)
-    "q193_sssp" ->
+    Query("q193_sssp", GraphOps.q193Sssp,
       """WITH pr AS (
            SELECT a.l_partkey AS s1, b.l_partkey AS s2, COUNT(*) AS c
            FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
@@ -7444,12 +7113,12 @@ object SparkEntry {
            SELECT node, dist FROM d7 UNION ALL
            SELECT e.dst, p.dist + e.w FROM d7 p
            JOIN edges e ON p.node = e.src) GROUP BY node)
-         SELECT node AS partkey, CAST(dist AS BIGINT) AS cost FROM d8""",
+         SELECT node AS partkey, CAST(dist AS BIGINT) AS cost FROM d8"""),
     // exact integer-lattice Lloyd rounds: floor-e6 points (floor, not
     // CAST — DuckDB CAST rounds, ANSI Spark truncates), squared-long
     // distances, smallest-cid ties, signed round-half-up means; three
     // unrolled assign/update rounds mirror the loop exactly
-    "q194_kmeans" ->
+    Query("q194_kmeans", SimilarityOps.q194Kmeans,
       """WITH base AS (
            SELECT vec_id,
                   [CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)
@@ -7502,10 +7171,10 @@ object SparkEntry {
                 CAST(d2 AS BIGINT) AS d2
          FROM (SELECT vec_id, cid, d2, ROW_NUMBER() OVER (
                  PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM a3)
-         WHERE rn = 1""",
+         WHERE rn = 1"""),
     // Gini is a pure rational in counts (entropy needs ln — libm);
     // per-value e9 terms round-half-up THEN sum exactly (q155 rule)
-    "q195_gini_rank" ->
+    Query("q195_gini_rank", StatsOps.q195GiniRank,
       """WITH root AS (
            SELECT CAST((2 * (n * n - s2) * 1000000000 + n * n)
                   // (2 * n * n) AS BIGINT) AS root_e9
@@ -7559,11 +7228,11 @@ object SparkEntry {
                 root_e9 - split_e9 FROM f2, root
          UNION ALL
          SELECT 'c_mktsegment', n_values, split_e9,
-                root_e9 - split_e9 FROM f3, root""",
+                root_e9 - split_e9 FROM f3, root"""),
     // anchors via IGNORE NULLS frames; the increment rounds with the
     // sign split and the division runs on the increment so both
     // engines round the identical rational
-    "q196_interp_fill" ->
+    Query("q196_interp_fill", RelationalOps.q196InterpFill,
       """WITH daily AS (
            SELECT n.n_name, CAST(o.o_orderdate AS DATE) AS day,
                   CAST(SUM(CAST(CAST(o.o_totalprice AS DECIMAL(18,4))
@@ -7607,11 +7276,11 @@ object SparkEntry {
                       // (2 * (nd - pd))) END
            END AS BIGINT) AS value_e4,
            (v IS NULL) AS is_interp
-         FROM w""",
+         FROM w"""),
     // 60-bit row hash from the md5 hex prefix (engine-identical), then
     // BIT_XOR per month — commutative/associative/self-inverse, so the
     // checksum is order-free and map-side combinable
-    "q197_table_checksum" ->
+    Query("q197_table_checksum", RelationalOps.q197TableChecksum,
       """WITH h AS (
            SELECT COALESCE(strftime(o_orderdate, '%Y-%m'), 'unknown')
                     AS month,
@@ -7631,12 +7300,12 @@ object SparkEntry {
                   [(CAST(strpos('0123456789abcdef', hx[i]) AS BIGINT) - 1)
                    << ((15 - i) * 4) for i in range(1, 16)]))
                   AS BIGINT) AS cksum
-         FROM h GROUP BY month""",
+         FROM h GROUP BY month"""),
     // exact medoid replay: brute-force all-pairs squared distance per
     // label in HUGEINT on the same e6 lattice — equals the engine's
     // centroid decomposition exactly (both are Σ_j |p_i − p_j|² in
     // exact integer arithmetic)
-    "q198_medoid" ->
+    Query("q198_medoid", SimilarityOps.q198Medoid,
       """WITH pts AS (
            SELECT vec_id, CAST(label AS BIGINT) AS label,
                   [CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)
@@ -7666,11 +7335,11 @@ object SparkEntry {
                                      ORDER BY s, vec_id) AS rk
            FROM score
          )
-         SELECT label, medoid_id, n, mean_d2 FROM ranked WHERE rk = 1""",
+         SELECT label, medoid_id, n, mean_d2 FROM ranked WHERE rk = 1"""),
     // vocab-growth replay: same whitespace tokens, per-source doc rank
     // by doc_id, power-of-two checkpoints ∪ {n_docs}, cumulative token
     // count + first-position distinct count — all integer-exact
-    "q199_vocab_growth" ->
+    Query("q199_vocab_growth", TextOps.q199VocabGrowth,
       """WITH docs AS (
            SELECT doc_id, source,
                   list_filter(
@@ -7709,11 +7378,11 @@ object SparkEntry {
          )
          SELECT t.source, t.checkpoint, t.n_tokens, d.n_distinct
          FROM cumtok t JOIN cumdist d
-           ON t.source = d.source AND t.checkpoint = d.checkpoint""",
+           ON t.source = d.source AND t.checkpoint = d.checkpoint"""),
     // Holt replay: identical integer recursion as a lockstep recursive
     // CTE — the round-half-away-from-zero CASE arithmetic is expanded
     // inline (l₁ appears twice inside b₁'s sign split)
-    "q200_holt_smoothing" ->
+    Query("q200_holt_smoothing", StatsOps.q200HoltSmoothing,
       """WITH RECURSIVE daily AS (
            SELECT n.n_name AS nation,
                   date_trunc('day', o.o_orderdate) AS day,
@@ -7758,8 +7427,8 @@ object SparkEntry {
                 h.b AS trend_units,
                 h.l + 7 * h.b AS forecast7_units
          FROM hw h JOIN ns
-           ON ns.nation = h.nation AND h.rn = ns.n_days""",
-    "q201_rev_rec" ->
+           ON ns.nation = h.nation AND h.rn = ns.n_days"""),
+    Query("q201_rev_rec", RelationalOps.q201RevenueRecognition,
       """WITH ship AS (
            SELECT l_orderkey,
                   date_trunc('month', MAX(l_shipdate)) AS m_end
@@ -7784,11 +7453,11 @@ object SparkEntry {
          )
          SELECT month, CAST(SUM(a) AS BIGINT) AS recognized_units,
                 CAST(COUNT(*) AS BIGINT) AS n_orders
-         FROM alloc GROUP BY 1""",
+         FROM alloc GROUP BY 1"""),
     // the null next-event rows filter BEFORE the cap on BOTH sides —
     // LEAST skips NULLs in both engines, so a NULL gap would silently
     // become the cap (the q179 rule)
-    "q202_dwell_time" ->
+    Query("q202_dwell_time", RelationalOps.q202DwellTime,
       """WITH raw AS (
            SELECT event_type,
                   CAST(epoch_us(LEAD(ts) OVER w) - epoch_us(ts)
@@ -7803,58 +7472,8 @@ object SparkEntry {
                 CAST(SUM(gap_us) AS BIGINT) AS total_dwell_us,
                 CAST((2 * SUM(gap_us) + 1000 * COUNT(*))
                      // (2000 * COUNT(*)) AS BIGINT) AS mean_dwell_ms
-         FROM g GROUP BY 1""",
-    "q204_transition_latency" ->
-      """WITH g AS (
-           SELECT event_type AS from_type,
-                  LEAD(event_type) OVER w AS to_type,
-                  CAST(epoch_us(LEAD(ts) OVER w) - epoch_us(ts)
-                    AS BIGINT) AS gap_us,
-                  user_id, event_id
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-         ), r AS (
-           SELECT from_type, to_type, gap_us,
-                  CAST(ROW_NUMBER() OVER (PARTITION BY from_type, to_type
-                    ORDER BY gap_us, user_id, event_id) AS BIGINT) AS rk,
-                  CAST(COUNT(*) OVER (PARTITION BY from_type, to_type)
-                    AS BIGINT) AS n
-           FROM g WHERE to_type IS NOT NULL
-         )
-         SELECT from_type, to_type, n,
-                CAST((2 * MIN(CASE WHEN rk = (n + 1) // 2
-                                   THEN gap_us END) + 1000) // 2000
-                  AS BIGINT) AS median_gap_ms,
-                CAST((2 * MIN(CASE WHEN rk = (9 * n + 9) // 10
-                                   THEN gap_us END) + 1000) // 2000
-                  AS BIGINT) AS p90_gap_ms
-         FROM r
-         WHERE rk = (n + 1) // 2 OR rk = (9 * n + 9) // 10
-         GROUP BY 1, 2, 3""",
-    "q205_k_anonymity" ->
-      """WITH sizes AS (
-           SELECT c_nationkey, c_mktsegment,
-                  CAST(COUNT(*) AS BIGINT) AS g
-           FROM customer GROUP BY 1, 2
-         ), tot AS (
-           SELECT CAST(SUM(g) AS BIGINT) AS n,
-                  CAST(COUNT(*) AS BIGINT) AS n_groups,
-                  CAST(MIN(g) AS BIGINT) AS min_group_size
-           FROM sizes
-         ), ks AS (
-           SELECT CAST(unnest([2, 5, 10, 25]) AS BIGINT) AS k
-         )
-         SELECT ks.k, tot.n_groups, tot.min_group_size,
-                CAST(COALESCE(COUNT(CASE WHEN s.g < ks.k THEN 1 END), 0)
-                  AS BIGINT) AS n_groups_below,
-                CAST(COALESCE(SUM(CASE WHEN s.g < ks.k THEN s.g END), 0)
-                  AS BIGINT) AS rows_at_risk,
-                CAST((2000000 * COALESCE(SUM(CASE WHEN s.g < ks.k
-                       THEN s.g END), 0) + tot.n) // (2 * tot.n)
-                  AS BIGINT) AS risk_ppm
-         FROM ks CROSS JOIN tot LEFT JOIN sizes s ON TRUE
-         GROUP BY 1, 2, 3, tot.n""",
-    "q203_share_of_parent" ->
+         FROM g GROUP BY 1"""),
+    Query("q203_share_of_parent", RelationalOps.q203ShareOfParent,
       """WITH natrev AS (
            SELECT r.r_name AS region, n.n_name AS nation,
                   CAST(SUM(CAST(CAST(o.o_totalprice AS DECIMAL(18,4))
@@ -7880,8 +7499,58 @@ object SparkEntry {
                   AS BIGINT) AS region_share_ppm
          FROM natrev nv
          JOIN regtot rt ON nv.region = rt.region
-         CROSS JOIN gtot gl""",
-    "q206_entry_paths" ->
+         CROSS JOIN gtot gl"""),
+    Query("q204_transition_latency", RelationalOps.q204TransitionLatency,
+      """WITH g AS (
+           SELECT event_type AS from_type,
+                  LEAD(event_type) OVER w AS to_type,
+                  CAST(epoch_us(LEAD(ts) OVER w) - epoch_us(ts)
+                    AS BIGINT) AS gap_us,
+                  user_id, event_id
+           FROM events
+           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+         ), r AS (
+           SELECT from_type, to_type, gap_us,
+                  CAST(ROW_NUMBER() OVER (PARTITION BY from_type, to_type
+                    ORDER BY gap_us, user_id, event_id) AS BIGINT) AS rk,
+                  CAST(COUNT(*) OVER (PARTITION BY from_type, to_type)
+                    AS BIGINT) AS n
+           FROM g WHERE to_type IS NOT NULL
+         )
+         SELECT from_type, to_type, n,
+                CAST((2 * MIN(CASE WHEN rk = (n + 1) // 2
+                                   THEN gap_us END) + 1000) // 2000
+                  AS BIGINT) AS median_gap_ms,
+                CAST((2 * MIN(CASE WHEN rk = (9 * n + 9) // 10
+                                   THEN gap_us END) + 1000) // 2000
+                  AS BIGINT) AS p90_gap_ms
+         FROM r
+         WHERE rk = (n + 1) // 2 OR rk = (9 * n + 9) // 10
+         GROUP BY 1, 2, 3"""),
+    Query("q205_k_anonymity", RelationalOps.q205KAnonymity,
+      """WITH sizes AS (
+           SELECT c_nationkey, c_mktsegment,
+                  CAST(COUNT(*) AS BIGINT) AS g
+           FROM customer GROUP BY 1, 2
+         ), tot AS (
+           SELECT CAST(SUM(g) AS BIGINT) AS n,
+                  CAST(COUNT(*) AS BIGINT) AS n_groups,
+                  CAST(MIN(g) AS BIGINT) AS min_group_size
+           FROM sizes
+         ), ks AS (
+           SELECT CAST(unnest([2, 5, 10, 25]) AS BIGINT) AS k
+         )
+         SELECT ks.k, tot.n_groups, tot.min_group_size,
+                CAST(COALESCE(COUNT(CASE WHEN s.g < ks.k THEN 1 END), 0)
+                  AS BIGINT) AS n_groups_below,
+                CAST(COALESCE(SUM(CASE WHEN s.g < ks.k THEN s.g END), 0)
+                  AS BIGINT) AS rows_at_risk,
+                CAST((2000000 * COALESCE(SUM(CASE WHEN s.g < ks.k
+                       THEN s.g END), 0) + tot.n) // (2 * tot.n)
+                  AS BIGINT) AS risk_ppm
+         FROM ks CROSS JOIN tot LEFT JOIN sizes s ON TRUE
+         GROUP BY 1, 2, 3, tot.n"""),
+    Query("q206_entry_paths", RelationalOps.q206EntryPaths,
       """WITH e AS (
            SELECT user_id, ts, event_id, event_type, epoch_us(ts) AS us
            FROM events
@@ -7906,8 +7575,8 @@ object SparkEntry {
          )
          SELECT path, CAST(COUNT(*) AS BIGINT) AS n_sessions
          FROM p GROUP BY 1
-         ORDER BY n_sessions DESC, path LIMIT 20""",
-    "q207_term_screen" ->
+         ORDER BY n_sessions DESC, path LIMIT 20"""),
+    Query("q207_term_screen", TextOps.q207TermScreen,
       """SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
                 CAST(SUM(h) AS BIGINT) AS total_hits,
                 CAST(SUM(CASE WHEN h >= 3 THEN 1 ELSE 0 END) AS BIGINT)
@@ -7922,8 +7591,8 @@ object SparkEntry {
                     t -> list_contains(['slow', 'dup', 'big'], t)))
                     AS BIGINT) AS h
            FROM documents WHERE text IS NOT NULL
-         ) GROUP BY 1""",
-    "q208_twap" ->
+         ) GROUP BY 1"""),
+    Query("q208_twap", RelationalOps.q208Twap,
       """WITH obs AS (
            SELECT p.p_brand,
                   epoch_us(date_trunc('day', l.l_shipdate)) AS us,
@@ -7944,10 +7613,10 @@ object SparkEntry {
                   THEN CAST((2 * SUM(CAST(pr AS HUGEINT) * (nus - us))
                              + SUM(nus - us)) // (2 * SUM(nus - us))
                     AS BIGINT) END AS twap_units
-         FROM seg WHERE nus IS NOT NULL GROUP BY 1""",
+         FROM seg WHERE nus IS NOT NULL GROUP BY 1"""),
     // same magic choice (md5 first hex digit mod 3), same sniff on the
     // leading bytes; DuckDB hex() is uppercase like Spark's
-    "q209_format_census" ->
+    Query("q209_format_census", MultimodalOps.q209FormatCensus,
       """WITH blobs AS (
            SELECT source,
                   unhex(CASE (strpos('0123456789abcdef',
@@ -7975,8 +7644,8 @@ object SparkEntry {
          SELECT c.source, c.format, c.n_blobs, c.total_bytes,
                 CAST((2000000 * c.n_blobs + t.n) // (2 * t.n) AS BIGINT)
                   AS mix_ppm
-         FROM census c JOIN tot t ON c.source = t.source""",
-    "q210_spend_gini" ->
+         FROM census c JOIN tot t ON c.source = t.source"""),
+    Query("q210_spend_gini", StatsOps.q210SpendGini,
       """WITH spend AS (
            SELECT n.n_name AS nation, o.o_custkey,
                   CAST(SUM(CAST(CAST(o.o_totalprice AS DECIMAL(18,4))
@@ -8002,14 +7671,14 @@ object SparkEntry {
                 CAST((2 * ((2 * six - (n + 1) * sx) * 1000000)
                       + (n * sx)) // (2 * (n * sx)) AS BIGINT)
                   AS gini_ppm
-         FROM a""",
+         FROM a"""),
     // same minimax closed form fitted(i) = max_{j<=i} min_{k>=i}
     // wavg(j..k); rational argmin/argmax picked by double division —
     // exact-decision here because distinct rationals with den ≤ cells
     // differ by ≥ 1/(d1·d2) ≫ ulp — and the e4 emission is integer
     // round-half-up from the picked (num, den), which is invariant
     // under representation scaling
-    "q211_isotonic" ->
+    Query("q211_isotonic", StatsOps.q211IsotonicCalibration,
       """WITH cells AS (
            SELECT p.p_brand AS brand,
                   CAST(CAST(l.l_discount AS DECIMAL(18,4)) * 100
@@ -8051,11 +7720,11 @@ object SparkEntry {
                   AS raw_avg_qty_e4,
                 CAST((20000 * r['num'] + r['den']) // (2 * r['den'])
                   AS BIGINT) AS iso_avg_qty_e4
-         FROM mx""",
+         FROM mx"""),
     // same user-day journeys, v(S) by subset containment on the 2^n
     // lattice, factorial weights in HUGEINT; φ stays n!-scaled until
     // the integer round-half-up emission
-    "q212_shapley" ->
+    Query("q212_shapley", RelationalOps.q212ShapleyAttribution,
       """WITH RECURSIVE base AS (
            SELECT user_id, date_trunc('day', ts) AS day, event_type
            FROM events WHERE user_id IS NOT NULL
@@ -8108,12 +7777,12 @@ object SparkEntry {
                 CASE WHEN t.tot = 0 THEN NULL
                      ELSE CAST((2 * 1000000 * p.phi + t.tot)
                        // (2 * t.tot) AS BIGINT) END AS share_ppm
-         FROM phi p, tot t""",
+         FROM phi p, tot t"""),
     // same 80%-span day split, same popularity top-10 (count desc,
     // partkey tie-break), reciprocal ranks in 1/2520 units and AP
     // terms in 1/2520^2 units — every division is exact (2520^2 is
     // divisible by any rank*min(m,10) product, both factors <= 10)
-    "q213_rec_eval" ->
+    Query("q213_rec_eval", RelationalOps.q213RecEval,
       """WITH o AS (
            SELECT o_orderkey, o_custkey, CAST(o_orderdate AS DATE)
              AS day
@@ -8166,10 +7835,10 @@ object SparkEntry {
                   // (2 * 2520 * u) AS BIGINT) AS mrr_ppm,
                 CAST((2 * 1000000 * sap + 6350400 * u)
                   // (2 * 6350400 * u) AS BIGINT) AS map_ppm
-         FROM fin""",
+         FROM fin"""),
     // same M = EᵀE contraction and the same 4 L1-normalized integer
     // rounds, unrolled as chained CTEs (floor division in HUGEINT)
-    "q214_hits" ->
+    Query("q214_hits", GraphOps.q214Hits,
       """WITH e AS (
            SELECT DISTINCT o.o_custkey AS c, l.l_partkey AS p
            FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
@@ -8211,8 +7880,8 @@ object SparkEntry {
          )
          SELECT d.p AS partkey, d.n_buyers, CAST(a4.a AS BIGINT)
            AS auth_ppt
-         FROM deg d JOIN a4 ON d.p = a4.node""",
-    "q215_top_movers" ->
+         FROM deg d JOIN a4 ON d.p = a4.node"""),
+    Query("q215_top_movers", RelationalOps.q215TopMovers,
       """WITH agg AS (
            SELECT p.p_brand,
                   CAST(SUM(CASE WHEN year(l.l_shipdate) = 1995
@@ -8237,9 +7906,8 @@ object SparkEntry {
                   ELSE -CAST((2000000 * (r1 - r2) + ta) // (2 * ta)
                     AS BIGINT) END AS contrib_ppm
          FROM agg CROSS JOIN tot
-         ORDER BY abs(r2 - r1) DESC, p_brand LIMIT 15""",
-
-    "q216_growth_accounting" ->
+         ORDER BY abs(r2 - r1) DESC, p_brand LIMIT 15"""),
+    Query("q216_growth_accounting", RelationalOps.q216GrowthAccounting,
       """WITH bc AS (
            SELECT o_custkey,
                   CAST(SUM(CASE WHEN year(o_orderdate) = 1995
@@ -8281,11 +7949,9 @@ object SparkEntry {
                 CAST(SUM(CASE WHEN cls = 'churned' THEN r2 - r1
                   ELSE 0 END) AS BIGINT) AS churn_units,
                 CAST(SUM(r2 - r1) AS BIGINT) AS net_units
-         FROM cl GROUP BY 1""",
-
-    "q217_kcenter" -> kcenterOracleSql,
-
-    "q218_dup_source_matrix" ->
+         FROM cl GROUP BY 1"""),
+    Query("q217_kcenter", SimilarityOps.q217KcenterCoreset, kcenterOracleSql),
+    Query("q218_dup_source_matrix", DedupOps.q218DupSourceMatrix,
       """WITH corpus AS (
            SELECT doc_id, text FROM documents
            UNION ALL
@@ -8343,9 +8009,8 @@ object SparkEntry {
          FROM flt
          JOIN documents sa ON sa.doc_id = flt.ba
          JOIN documents sb ON sb.doc_id = flt.bb
-         GROUP BY 1, 2""",
-
-    "q219_tokenizer_fertility" ->
+         GROUP BY 1, 2"""),
+    Query("q219_tokenizer_fertility", TextOps.q219TokenizerFertility,
       """WITH per AS (
            SELECT lang,
                   CAST(len(string_split_regex(lower(trim(text)), '\s+'))
@@ -8377,9 +8042,8 @@ object SparkEntry {
                   AS chars_per_subtoken_mills,
                 CAST((2 * 1000000 * n_types + subtokens)
                   // (2 * subtokens) AS BIGINT) AS ttr_ppm
-         FROM ag JOIN tp ON ag.lang = tp.lang""",
-
-    "q220_interval_coverage" ->
+         FROM ag JOIN tp ON ag.lang = tp.lang"""),
+    Query("q220_interval_coverage", RelationalOps.q220IntervalCoverage,
       """WITH ev AS (
            SELECT user_id, epoch_us(ts) AS us, event_id
            FROM events WHERE user_id IS NOT NULL
@@ -8410,9 +8074,8 @@ object SparkEntry {
                       + (MAX(us) + 1800000000 - MIN(us)))
                   // (2 * (MAX(us) + 1800000000 - MIN(us))) AS BIGINT)
                   AS util_ppm
-         FROM contrib GROUP BY 1""",
-
-    "q221_spearman" ->
+         FROM contrib GROUP BY 1"""),
+    Query("q221_spearman", StatsOps.q221Spearman,
       """WITH spend AS (
            SELECT o_custkey,
                   CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,4))
@@ -8446,9 +8109,8 @@ object SparkEntry {
                   ELSE -CAST((2 * 1000000 * (6 * sd2 - (n * n * n - n))
                     + (n * n * n - n)) // (2 * (n * n * n - n))
                     AS BIGINT) END AS rho_ppm
-         FROM ag WHERE n >= 2""",
-
-    "q222_changelog_compact" ->
+         FROM ag WHERE n >= 2"""),
+    Query("q222_changelog_compact", RelationalOps.q222ChangelogCompact,
       """WITH ev AS (
            SELECT user_id, epoch_us(ts) AS us, event_id,
                   CASE event_type WHEN 'signup' THEN 'I'
@@ -8477,9 +8139,8 @@ object SparkEntry {
                      ELSE 'upsert' END AS net_op,
                 n_ops, first_us, last_us,
                 CASE WHEN lop <> 'D' THEN lnd END AS value_units
-         FROM ag""",
-
-    "q223_clustering_coef" ->
+         FROM ag"""),
+    Query("q223_clustering_coef", GraphOps.q223ClusteringCoef,
       """WITH pairs AS (
            SELECT DISTINCT a.l_partkey AS s1, b.l_partkey AS s2
            FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
@@ -8508,9 +8169,8 @@ object SparkEntry {
                   // (2 * d.degree * (d.degree - 1)) AS BIGINT)
                   AS cc_ppm
          FROM deg d LEFT JOIN tcnt t ON d.node = t.node
-         WHERE d.degree >= 2""",
-
-    "q224_forecast_backtest" ->
+         WHERE d.degree >= 2"""),
+    Query("q224_forecast_backtest", StatsOps.q224ForecastBacktest,
       """WITH daily AS (
            SELECT event_type, date_trunc('day', ts) AS day,
                   CAST(COUNT(*) AS BIGINT) AS y
@@ -8536,9 +8196,8 @@ object SparkEntry {
                   AS mae_naive,
                 CAST((2 * 1000000 * ses + sen) // (2 * sen) AS BIGINT)
                   AS mase_ppm
-         FROM ag WHERE sen > 0""",
-
-    "q225_outlier_screen" ->
+         FROM ag WHERE sen > 0"""),
+    Query("q225_outlier_screen", SimilarityOps.q225OutlierScreen,
       """WITH base AS (
            SELECT vec_id, CAST(label AS BIGINT) AS label,
                   [CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)
@@ -8576,9 +8235,8 @@ object SparkEntry {
                 CAST((2 * 1000000 * l.n * CAST(r.d2 AS HUGEINT)
                   + l.sd2) // (2 * l.sd2) AS BIGINT) AS ratio_ppm
          FROM rk r JOIN lab l ON r.label = l.label
-         WHERE r.rn <= 3 AND l.sd2 > 0""",
-
-    "q226_dedup_yield" ->
+         WHERE r.rn <= 3 AND l.sd2 > 0"""),
+    Query("q226_dedup_yield", DedupOps.q226DedupYield,
       """WITH corpus AS (
            SELECT doc_id, text FROM documents
            UNION ALL
@@ -8643,13 +8301,14 @@ object SparkEntry {
                 CAST(COALESCE(n_docs_involved, 0) AS BIGINT)
                   AS n_docs_involved
          FROM th LEFT JOIN pc ON pc.t = th.t
-                 LEFT JOIN dc ON dc.t = th.t""",
-
+                 LEFT JOIN dc ON dc.t = th.t"""),
+    Query("q227_ann_index_search", graft.sources.AnnIndexStore.q227AnnIndexSearch,
+      ivfPqExactOracleSql),
     // q228: lockstep recursive replay of the same integer token-bucket
     // recursion (capacity 3e6 µtok, cost 1e6, refill Δµs // 86400 —
     // all operands non-negative, so DuckDB's flooring // equals
     // Spark's truncating DIV)
-    "q228_rate_limit" ->
+    Query("q228_rate_limit", RelationalOps.q228RateLimitReplay,
       """WITH RECURSIVE ev AS (
            SELECT user_id, epoch_us(ts) AS us, event_id,
                   ROW_NUMBER() OVER (PARTITION BY user_id
@@ -8684,12 +8343,11 @@ object SparkEntry {
                 st.ad AS n_admitted, st.dn AS n_denied,
                 st.tk AS final_units
          FROM st JOIN nn ON nn.user_id = st.user_id
-         WHERE st.rn = nn.n_events""",
-
+         WHERE st.rn = nn.n_events"""),
     // q229: naive n² inequality join — same integer coordinates and
     // exact dist² cut, quadratically more work (the q96/q108
     // deliberately-quadratic-oracle class)
-    "q229_epsilon_join" ->
+    Query("q229_epsilon_join", SimilarityOps.q229EpsilonJoin,
       """WITH pts AS (
            SELECT p_partkey,
                   CAST(CAST(p_retailprice AS DECIMAL(18,4)) * 100
@@ -8703,12 +8361,11 @@ object SparkEntry {
                   AS dist2_units
          FROM pts a JOIN pts b ON a.p_partkey < b.p_partkey
          WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
-               <= 10000""",
-
+               <= 10000"""),
     // q230: same split/top10/holdout CTEs as q213; discounts and ideal
     // prefix sums are the SAME e6 integer literals as the Spark side
     // (round(1e6/log2(r+1)) — fixed table, no libm in either engine)
-    "q230_ndcg_eval" ->
+    Query("q230_ndcg_eval", RelationalOps.q230NdcgEval,
       """WITH o AS (
            SELECT o_orderkey, o_custkey, CAST(o_orderdate AS DATE)
              AS day
@@ -8769,12 +8426,11 @@ object SparkEntry {
                 CAST((2 * sp2 + u) // (2 * u) AS BIGINT)
                   AS precision_ppm,
                 CAST((2 * sr + u) // (2 * u) AS BIGINT) AS recall_ppm
-         FROM fin""",
-
+         FROM fin"""),
     // q231: same ≥2-shared-orders symmetric graph (q151's), exact
     // distance-2 census via wedge join + distinct + adjacency
     // anti-filter
-    "q231_two_hop_reach" ->
+    Query("q231_two_hop_reach", GraphOps.q231TwoHopReach,
       """WITH li AS (
            SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
            FROM lineitem
@@ -8805,12 +8461,11 @@ object SparkEntry {
                 CAST(COALESCE(r2.reach2, 0) AS BIGINT) AS reach2,
                 CAST((2 * 1000000 * COALESCE(r2.reach2, 0) + d.deg)
                   // (2 * d.deg) AS BIGINT) AS amp_ppm
-         FROM deg d LEFT JOIN r2 ON r2.node = d.node""",
-
+         FROM deg d LEFT JOIN r2 ON r2.node = d.node"""),
     // q232: same 4-h-gap sessions (LAG + running SUM), containment as
     // DISTINCT inequality self-joins within the session — subsequence
     // existence i<j(<k), quadratic per session by design
-    "q232_seq_patterns" ->
+    Query("q232_seq_patterns", RelationalOps.q232SeqPatterns,
       """WITH ev AS (
            SELECT user_id, epoch_us(ts) AS us, event_id, event_type,
                   ROW_NUMBER() OVER (PARTITION BY user_id
@@ -8858,14 +8513,13 @@ object SparkEntry {
                 CAST((2 * 1000000 * COUNT(*) + MAX(tot.n))
                   // (2 * MAX(tot.n)) AS BIGINT) AS support_ppm
          FROM allc CROSS JOIN tot
-         GROUP BY pattern, k""",
-
+         GROUP BY pattern, k"""),
     // q233: lockstep Holt-Winters replay — the same integer recursion
     // with the 7 seasonal slots carried as columns s1..s7; layered
     // derived tables in the recursive term keep each sign-split
     // formula written once (l1 in the inner layer, b1/snew next, the
     // slot CASE assembly outermost)
-    "q233_holt_winters" ->
+    Query("q233_holt_winters", StatsOps.q233HoltWinters,
       """WITH RECURSIVE daily AS (
            SELECT event_type, date_trunc('day', ts) AS day,
                   CAST(SUM(CAST(CAST(value AS DECIMAL(18,4)) * 10000
@@ -8950,12 +8604,11 @@ object SparkEntry {
                        ELSE h.s7 END AS forecast7_units
          FROM hw h JOIN ns
            ON ns.event_type = h.event_type AND h.rn = ns.n_days
-         WHERE ns.n_days >= 8""",
-
+         WHERE ns.n_days >= 8"""),
     // q234: q150's ranking CTEs at depth 10 + the same 10 exact RBO
     // weight literals W_m = Σ_{d=m..10} (2520/d)·10^(10−d)·9^d
     // (p = 9/10; 2520 = lcm(1..10)); D = 9·2520·10^10
-    "q234_rbo" ->
+    Query("q234_rbo", SimilarityOps.q234Rbo,
       """WITH docs AS (
            SELECT doc_id,
                   list_distinct(string_split_regex(lower(trim(text)),
@@ -9034,12 +8687,11 @@ object SparkEntry {
                 CAST((2 * 1000000 * COALESCE(a.sw, 0)
                   + 226800000000000)
                   // (2 * 226800000000000) AS BIGINT) AS rbo_ppm
-         FROM seeds s LEFT JOIN agg a ON a.qid = s.qid""",
-
+         FROM seeds s LEFT JOIN agg a ON a.qid = s.qid"""),
     // q235: same daily series, lag-7 residuals, exact nearest-rank
     // q-hat at ceil(4(n+1)/5) = (4n+8)//5 clamped to n_cal, integer
     // coverage ppm
-    "q235_conformal" ->
+    Query("q235_conformal", StatsOps.q235ConformalCalibration,
       """WITH daily AS (
            SELECT event_type, date_trunc('day', ts) AS day,
                   CAST(SUM(CAST(CAST(value AS DECIMAL(18,4)) * 10000
@@ -9084,11 +8736,10 @@ object SparkEntry {
          SELECT q.event_type, q.n_cal, t.n_test, q.qhat_units,
                 CAST((2 * 1000000 * t.cov + t.n_test)
                   // (2 * t.n_test) AS BIGINT) AS coverage_ppm
-         FROM qh q JOIN tst t ON t.event_type = q.event_type""",
-
+         FROM qh q JOIN tst t ON t.event_type = q.event_type"""),
     // q236: same sessions/incidents, direct inequality overlap join
     // (no banding — quadratic candidates, same output)
-    "q236_interval_overlap" ->
+    Query("q236_interval_overlap", RelationalOps.q236IntervalOverlapJoin,
       """WITH ev AS (
            SELECT user_id, epoch_us(ts) AS us, event_id, event_type
            FROM events WHERE user_id IS NOT NULL
@@ -9122,12 +8773,11 @@ object SparkEntry {
                 LEAST(s.s_end, i.i_end)
                   - GREATEST(s.s_start, i.i_start) AS overlap_us
          FROM sess s JOIN inc i
-           ON s.s_start <= i.i_end AND i.i_start <= s.s_end""",
-
+           ON s.s_start <= i.i_end AND i.i_start <= s.s_end"""),
     // q237: identical md5-prefix Count-Min — same 4×256 bucket keys
     // (first two hex chars of md5(j || '|' || key)), same min-of-rows
     // estimate, same top-20 probe set
-    "q237_countmin" ->
+    Query("q237_countmin", StatsOps.q237CountMin,
       """WITH li AS (
            SELECT l_partkey FROM lineitem
          ), keyed AS (
@@ -9153,10 +8803,9 @@ object SparkEntry {
                 CAST(MIN(s.c) - p.true_cnt AS BIGINT) AS overcount
          FROM probes p JOIN sketch s
            ON s.j = p.j AND s.bucket = p.bucket
-         GROUP BY 1, 2""",
-
+         GROUP BY 1, 2"""),
     // q238: same whitespace tokenization and md5-prefix dimension
-    "q238_feature_hashing" ->
+    Query("q238_feature_hashing", TextOps.q238FeatureHashing,
       """SELECT doc_id, substr(md5(tok), 1, 2) AS dim,
                 CAST(COUNT(*) AS BIGINT) AS weight
          FROM (SELECT doc_id,
@@ -9164,13 +8813,12 @@ object SparkEntry {
                         '\s+')) AS tok
                FROM documents WHERE text IS NOT NULL)
          WHERE len(tok) > 0
-         GROUP BY 1, 2""",
-
+         GROUP BY 1, 2"""),
     // q239: naive n² ε-neighbors + recursive-CTE transitive closure on
     // the core-core graph (UNION dedup terminates on cycles); cluster
     // = min core id in the component, borders adopt the min core-
     // neighbor cluster, noise = -1
-    "q239_dbscan" ->
+    Query("q239_dbscan", SimilarityOps.q239Dbscan,
       """WITH RECURSIVE pts AS (
            SELECT p_partkey AS pid,
                   CAST(CAST(p_retailprice AS DECIMAL(18,4)) * 100
@@ -9211,13 +8859,12 @@ object SparkEntry {
                   AS cluster
          FROM pts p
          LEFT JOIN lab l ON l.pid = p.pid
-         LEFT JOIN bord b ON b.pid = p.pid""",
-
+         LEFT JOIN bord b ON b.pid = p.pid"""),
     // q240: fixed-8-round recursive peel; per-level support is the
     // direct u<v<w triangle enumeration credited to all 3 edges (the
     // Spark side early-exits at the fixpoint, which the cascade
     // reaches well inside 8 rounds)
-    "q240_ktruss" ->
+    Query("q240_ktruss", GraphOps.q240KTruss,
       """WITH RECURSIVE e0 AS (
            SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
            FROM lineitem a JOIN lineitem b
@@ -9261,11 +8908,10 @@ object SparkEntry {
            ) GROUP BY 1, 2
          )
          SELECT f.u, f.v, COALESCE(s.support, 0) AS support
-         FROM fin f LEFT JOIN sup s ON s.u = f.u AND s.v = f.v""",
-
+         FROM fin f LEFT JOIN sup s ON s.u = f.u AND s.v = f.v"""),
     // q241: same Monday weeks, same lag classification, churn via
     // NOT EXISTS restricted to observed weeks
-    "q241_user_growth" ->
+    Query("q241_user_growth", RelationalOps.q241UserGrowth,
       """WITH uw AS (
            SELECT DISTINCT user_id, date_trunc('week', ts) AS wk
            FROM events WHERE user_id IS NOT NULL
@@ -9296,11 +8942,10 @@ object SparkEntry {
          SELECT epoch_us(a.wk) AS week_us, a.n_active, a.n_new,
                 a.n_retained, a.n_resurrected,
                 CAST(COALESCE(c.n_churned, 0) AS BIGINT) AS n_churned
-         FROM agg a LEFT JOIN ch c ON c.wk = a.wk""",
-
+         FROM agg a LEFT JOIN ch c ON c.wk = a.wk"""),
     // q242: same 4-h sessions, first-letter traces capped at 20,
     // DuckDB's unit-cost levenshtein (identical DP to Spark's)
-    "q242_conformance" ->
+    Query("q242_conformance", RelationalOps.q242Conformance,
       """WITH ev AS (
            SELECT user_id, epoch_us(ts) AS us, event_id, event_type,
                   ROW_NUMBER() OVER (PARTITION BY user_id
@@ -9329,11 +8974,10 @@ object SparkEntry {
          SELECT CAST(len(trace) AS BIGINT) AS trace_len,
                 CAST(levenshtein(trace, 'vcp') AS BIGINT) AS dist,
                 CAST(COUNT(*) AS BIGINT) AS n_sessions
-         FROM tr GROUP BY 1, 2""",
-
+         FROM tr GROUP BY 1, 2"""),
     // q243: same (brand, year) moment cells in HUGEINT; the slope
     // sign is the q130 numerator — no division anywhere
-    "q243_simpson" ->
+    Query("q243_simpson", StatsOps.q243SimpsonScreen,
       """WITH base AS (
            SELECT p.p_brand, year(l.l_shipdate) AS yr,
                   CAST(CAST(l.l_discount AS DECIMAL(18,4)) * 10000
@@ -9379,45 +9023,56 @@ object SparkEntry {
                             OR (p.overall_sign < 0
                                 AND g.n_pos > g.n_neg)
                      THEN 1 ELSE 0 END AS BIGINT) AS simpson_flag
-         FROM segs g JOIN pooled p ON p.p_brand = g.p_brand""",
-
-    "q244_woe_iv" -> woeIvOracleSql,
-    "q245_js_matrix" -> jsMatrixOracleSql,
-    "q246_doc_entropy" -> docEntropyOracleSql,
-    "q247_quality_classifier" -> qualityClassifierOracleSql,
-    "q248_softmax_mix" -> softmaxMixOracleSql,
-    "q249_perplexity" -> perplexityOracleSql,
-    "q250_calibration" -> calibrationOracleSql,
-    "q251_decayed_engagement" -> decayedEngagementOracleSql,
-    "q252_roc_auc" -> rocAucOracleSql,
-    "q253_l_diversity" -> lDiversityOracleSql,
-    "q254_t_closeness" -> tClosenessOracleSql,
-    "q255_fifo_costing" -> fifoCostingOracleSql,
-    "q256_sprt" -> sprtOracleSql,
-    "q257_naive_bayes" -> naiveBayesOracleSql,
-    "q258_zipf_fit" -> zipfFitOracleSql,
-    "q259_readability" -> readabilityOracleSql,
-    "q260_cuped" -> cupedOracleSql,
-    "q261_hill_tail" -> hillTailOracleSql,
-    "q262_jl_projection" -> jlProjectionOracleSql,
-    "q263_bradley_terry" -> bradleyTerryOracleSql,
-    "q264_rendezvous" -> rendezvousOracleSql,
-    "q265_scan_cluster" -> scanClusterOracleSql,
-    "q266_als_rank1" -> alsRank1OracleSql,
-    "q267_sax" -> saxOracleSql,
-    "q268_mutual_info" -> mutualInfoOracleSql,
-    "q269_perm_test" -> permTestOracleSql,
-    "q270_dp_release" -> dpReleaseOracleSql,
-    "q271_partial_corr" -> partialCorrOracleSql,
-    "q272_elasticity" -> elasticityOracleSql,
-    "q273_ams_sketch" -> amsSketchOracleSql,
-    "q274_fano_factor" -> fanoFactorOracleSql,
-    "q275_single_linkage" -> singleLinkageOracleSql,
-    "q276_rolling_ols" -> rollingOlsOracleSql,
-    "q277_retention_halflife" -> retentionHalflifeOracleSql,
-    "q278_srm_check" -> srmCheckOracleSql,
-    "q279_seasonality_strength" -> seasonalityStrengthOracleSql,
-    "q280_segmental_ttr" -> segmentalTtrOracleSql,
-    "q281_diff_in_diff" -> diffInDiffOracleSql,
+         FROM segs g JOIN pooled p ON p.p_brand = g.p_brand"""),
+    Query("q244_woe_iv", StatsOps.q244WoeIv, woeIvOracleSql),
+    Query("q245_js_matrix", TextOps.q245JsMatrix, jsMatrixOracleSql),
+    Query("q246_doc_entropy", TextOps.q246DocEntropy, docEntropyOracleSql),
+    Query("q247_quality_classifier", TextOps.q247QualityClassifier,
+      qualityClassifierOracleSql),
+    Query("q248_softmax_mix", TextOps.q248SoftmaxMix, softmaxMixOracleSql),
+    Query("q249_perplexity", TextOps.q249Perplexity, perplexityOracleSql),
+    Query("q250_calibration", StatsOps.q250Calibration, calibrationOracleSql),
+    Query("q251_decayed_engagement", RelationalOps.q251DecayedEngagement,
+      decayedEngagementOracleSql),
+    Query("q252_roc_auc", StatsOps.q252RocAuc, rocAucOracleSql),
+    Query("q253_l_diversity", RelationalOps.q253LDiversity,
+      lDiversityOracleSql),
+    Query("q254_t_closeness", RelationalOps.q254TCloseness,
+      tClosenessOracleSql),
+    Query("q255_fifo_costing", RelationalOps.q255FifoCosting,
+      fifoCostingOracleSql),
+    Query("q256_sprt", StatsOps.q256Sprt, sprtOracleSql),
+    Query("q257_naive_bayes", TextOps.q257NaiveBayes, naiveBayesOracleSql),
+    Query("q258_zipf_fit", TextOps.q258ZipfFit, zipfFitOracleSql),
+    Query("q259_readability", TextOps.q259Readability, readabilityOracleSql),
+    Query("q260_cuped", StatsOps.q260Cuped, cupedOracleSql),
+    Query("q261_hill_tail", StatsOps.q261HillTail, hillTailOracleSql),
+    Query("q262_jl_projection", SimilarityOps.q262JlProjection,
+      jlProjectionOracleSql),
+    Query("q263_bradley_terry", StatsOps.q263BradleyTerry,
+      bradleyTerryOracleSql),
+    Query("q264_rendezvous", RelationalOps.q264RendezvousShards,
+      rendezvousOracleSql),
+    Query("q265_scan_cluster", GraphOps.q265Scan, scanClusterOracleSql),
+    Query("q266_als_rank1", SimilarityOps.q266AlsRank1, alsRank1OracleSql),
+    Query("q267_sax", StatsOps.q267Sax, saxOracleSql),
+    Query("q268_mutual_info", StatsOps.q268MutualInfo, mutualInfoOracleSql),
+    Query("q269_perm_test", StatsOps.q269PermutationTest, permTestOracleSql),
+    Query("q270_dp_release", RelationalOps.q270DpRelease, dpReleaseOracleSql),
+    Query("q271_partial_corr", StatsOps.q271PartialCorr, partialCorrOracleSql),
+    Query("q272_elasticity", StatsOps.q272Elasticity, elasticityOracleSql),
+    Query("q273_ams_sketch", StatsOps.q273AmsSketch, amsSketchOracleSql),
+    Query("q274_fano_factor", StatsOps.q274FanoFactor, fanoFactorOracleSql),
+    Query("q275_single_linkage", SimilarityOps.q275SingleLinkage,
+      singleLinkageOracleSql),
+    Query("q276_rolling_ols", StatsOps.q276RollingOls, rollingOlsOracleSql),
+    Query("q277_retention_halflife", RelationalOps.q277RetentionHalflife,
+      retentionHalflifeOracleSql),
+    Query("q278_srm_check", StatsOps.q278SrmCheck, srmCheckOracleSql),
+    Query("q279_seasonality_strength", StatsOps.q279SeasonalityStrength,
+      seasonalityStrengthOracleSql),
+    Query("q280_segmental_ttr", TextOps.q280SegmentalTtr,
+      segmentalTtrOracleSql),
+    Query("q281_diff_in_diff", StatsOps.q281DiffInDiff, diffInDiffOracleSql),
   )
 }
