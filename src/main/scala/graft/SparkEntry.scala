@@ -41,47 +41,10 @@ object SparkEntry {
     * pair-side joins — the q263 CTE-inlining rule).
     */
   private def minhashLshOracleSql: String = {
-    val minima = (0 until 32).map(j =>
-      s"list_min(list_transform(sh, x -> md5('$j|' || x))) AS m$j")
-      .mkString(",\n                  ")
-    val bandIds = (0 until 8).mkString(", ")
-    val bandKeys = (0 until 8).map(b =>
-      s"m${4 * b} || ',' || m${4 * b + 1} || ',' || " +
-        s"m${4 * b + 2} || ',' || m${4 * b + 3}")
-      .mkString(",\n                          ")
     val agree = (0 until 32).map(j =>
       s"CASE WHEN sa.m$j = sb.m$j THEN 1 ELSE 0 END")
       .mkString("\n                    + ")
-    s"""WITH corpus AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 1000000, substr(text, strpos(text, ' ') + 1)
-           FROM documents
-         ), base AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS tk
-           FROM corpus
-         ), shs AS (
-           SELECT doc_id,
-                  CASE WHEN len(tk) >= 3 THEN
-                    list_distinct([tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]
-                                   for i in range(1, len(tk) - 1)])
-                  ELSE [array_to_string(tk, ' ')] END AS sh
-           FROM base
-         ), sigs AS MATERIALIZED (
-           SELECT doc_id,
-                  $minima
-           FROM shs
-         ), banded AS (
-           SELECT doc_id,
-                  unnest([$bandIds]) AS band_id,
-                  unnest([$bandKeys]) AS band_key
-           FROM sigs
-         ), pairs AS (
-           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM banded a JOIN banded b
-             ON a.band_id = b.band_id AND a.band_key = b.band_key
-            AND a.doc_id < b.doc_id
-         ), ag AS (
+    s"""WITH ${DedupOps.md5CandidateCtes(32, 8)}, ag AS (
            SELECT p.doc_a, p.doc_b,
                   ($agree) AS agree
            FROM pairs p
@@ -1550,18 +1513,8 @@ object SparkEntry {
     * ≥2-cluster hub test.
     */
   private def scanClusterOracleSql: String =
-    """WITH RECURSIVE li AS (
-           SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-           FROM lineitem
-         ), pr AS (
-           SELECT a.pk AS s1, b.pk AS s2
-           FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2
-         ), e AS (
-           SELECT s1 AS src, s2 AS dst FROM pr
-           UNION ALL SELECT s2, s1 FROM pr
-         ), adj AS (
-           SELECT src, list_sort(list(dst)) AS nb FROM e GROUP BY 1
+    s"""WITH RECURSIVE ${GraphOps.prunedCoPurchaseEdgesCtes(2)}, adj AS (
+           SELECT src, list_sort(list(dst)) AS nb FROM edges GROUP BY 1
          ), deg AS (
            SELECT src AS node, CAST(len(nb) AS BIGINT) AS deg FROM adj
          ), sup AS (
@@ -1569,7 +1522,7 @@ object SparkEntry {
                   CAST(len(list_intersect(a.nb, b.nb)) AS BIGINT)
                     AS support,
                   da.deg AS du, db.deg AS dv
-           FROM pr p
+           FROM pairs p
            JOIN adj a ON a.src = p.s1 JOIN adj b ON b.src = p.s2
            JOIN deg da ON da.node = p.s1 JOIN deg db ON db.node = p.s2
          ), eps AS (
@@ -1609,7 +1562,7 @@ object SparkEntry {
          ), nbc AS (
            SELECT e.src AS node,
                   CAST(COUNT(DISTINCT l.cluster) AS BIGINT) AS ncl
-           FROM e JOIN labeled l ON l.node = e.dst GROUP BY 1
+           FROM edges e JOIN labeled l ON l.node = e.dst GROUP BY 1
          )
          SELECT n.node, n.deg, n.n_eps,
                 CASE WHEN cl.node IS NOT NULL THEN 'core'
@@ -3125,51 +3078,7 @@ object SparkEntry {
     Query("q29_minhash_lsh", DedupOps.q29MinhashLsh, minhashLshOracleSql),
     Query("q30_simhash", DedupOps.q30Simhash, simhashSigOracleSql),
     Query("q31_ngram_jaccard", DedupOps.q31NgramJaccard,
-      """WITH corpus AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 1000000, substr(text, strpos(text, ' ') + 1)
-           FROM documents
-         ), base AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS tk
-           FROM corpus
-         ), sh AS (
-           SELECT doc_id, list_distinct(tk) AS toks,
-                  CASE WHEN len(tk) >= 3 THEN
-                    list_distinct([tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]
-                                   for i in range(1, len(tk) - 1)])
-                  ELSE [array_to_string(tk, ' ')] END AS sh
-           FROM base
-         ), sigs AS (
-           SELECT doc_id, toks,
-                  list_min(list_transform(sh, x -> md5('0|' || x))) AS m0,
-                  list_min(list_transform(sh, x -> md5('1|' || x))) AS m1,
-                  list_min(list_transform(sh, x -> md5('2|' || x))) AS m2,
-                  list_min(list_transform(sh, x -> md5('3|' || x))) AS m3,
-                  list_min(list_transform(sh, x -> md5('4|' || x))) AS m4,
-                  list_min(list_transform(sh, x -> md5('5|' || x))) AS m5,
-                  list_min(list_transform(sh, x -> md5('6|' || x))) AS m6,
-                  list_min(list_transform(sh, x -> md5('7|' || x))) AS m7
-           FROM sh
-         ), banded AS (
-           SELECT doc_id,
-                  unnest([0, 1, 2, 3]) AS band_id,
-                  unnest([m0 || ',' || m1, m2 || ',' || m3,
-                          m4 || ',' || m5, m6 || ',' || m7]) AS band_key
-           FROM sigs
-         ), pairs AS (
-           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM banded a JOIN banded b
-             ON a.band_id = b.band_id AND a.band_key = b.band_key
-            AND a.doc_id < b.doc_id
-         ), iv AS (
-           SELECT p.doc_a, p.doc_b,
-                  len(list_intersect(ta.toks, tb.toks)) AS inter,
-                  len(ta.toks) AS na, len(tb.toks) AS nb
-           FROM pairs p
-           JOIN sh ta ON ta.doc_id = p.doc_a
-           JOIN sh tb ON tb.doc_id = p.doc_b
-         )
+      s"""WITH ${DedupOps.ngramVerifiedPairsCtes}
          SELECT doc_a, doc_b,
                 ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 3) AS jaccard
          FROM iv"""),
@@ -3544,51 +3453,9 @@ object SparkEntry {
     // (threshold 0.5): transitive closure + component-min — equals the
     // engine's min-label propagation fixpoint
     Query("q61_dedup_clusters", DedupOps.q61DedupClusters,
-      """WITH RECURSIVE corpus AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 1000000, substr(text, strpos(text, ' ') + 1)
-           FROM documents
-         ), base AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS tk
-           FROM corpus
-         ), sh AS (
-           SELECT doc_id, list_distinct(tk) AS toks,
-                  CASE WHEN len(tk) >= 3 THEN
-                    list_distinct([tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]
-                                   for i in range(1, len(tk) - 1)])
-                  ELSE [array_to_string(tk, ' ')] END AS sh
-           FROM base
-         ), sigs AS (
-           SELECT doc_id, toks,
-                  list_min(list_transform(sh, x -> md5('0|' || x))) AS m0,
-                  list_min(list_transform(sh, x -> md5('1|' || x))) AS m1,
-                  list_min(list_transform(sh, x -> md5('2|' || x))) AS m2,
-                  list_min(list_transform(sh, x -> md5('3|' || x))) AS m3,
-                  list_min(list_transform(sh, x -> md5('4|' || x))) AS m4,
-                  list_min(list_transform(sh, x -> md5('5|' || x))) AS m5,
-                  list_min(list_transform(sh, x -> md5('6|' || x))) AS m6,
-                  list_min(list_transform(sh, x -> md5('7|' || x))) AS m7
-           FROM sh
-         ), banded AS (
-           SELECT doc_id,
-                  unnest([0, 1, 2, 3]) AS band_id,
-                  unnest([m0 || ',' || m1, m2 || ',' || m3,
-                          m4 || ',' || m5, m6 || ',' || m7]) AS band_key
-           FROM sigs
-         ), pairs AS (
-           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM banded a JOIN banded b
-             ON a.band_id = b.band_id AND a.band_key = b.band_key
-            AND a.doc_id < b.doc_id
-         ), strong AS (
-           SELECT p.doc_a, p.doc_b
-           FROM pairs p
-           JOIN sh ta ON ta.doc_id = p.doc_a
-           JOIN sh tb ON tb.doc_id = p.doc_b
-           WHERE ROUND(CAST(len(list_intersect(ta.toks, tb.toks)) AS DOUBLE)
-                 / (len(ta.toks) + len(tb.toks)
-                    - len(list_intersect(ta.toks, tb.toks))), 3) >= 0.5
+      s"""WITH RECURSIVE ${DedupOps.ngramVerifiedPairsCtes}, strong AS (
+           SELECT doc_a, doc_b FROM iv
+           WHERE ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 3) >= 0.5
          ), edges AS (
            SELECT doc_a AS src, doc_b AS dst FROM strong
            UNION
@@ -3937,7 +3804,7 @@ object SparkEntry {
     // cross-corpus near-dup: md5-MinHash bands train ⋈ eval, exact
     // verify, best match per train doc (ppt score, eval-id tie-break)
     Query("q84_neardup_contam", DedupOps.q84NearDupContam,
-      """WITH train AS (
+      s"""WITH train AS (
            SELECT doc_id, text FROM documents
          ), eval AS (
            SELECT doc_id + 1000000 AS doc_id,
@@ -3947,35 +3814,7 @@ object SparkEntry {
            SELECT 't' AS side, doc_id, text FROM train
            UNION ALL
            SELECT 'e', doc_id, text FROM eval
-         ), base AS (
-           SELECT side, doc_id,
-                  string_split_regex(lower(trim(text)), '\s+') AS tk
-           FROM corpus
-         ), sh AS (
-           SELECT side, doc_id, list_distinct(tk) AS toks,
-                  CASE WHEN len(tk) >= 3 THEN
-                    list_distinct([tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]
-                                   for i in range(1, len(tk) - 1)])
-                  ELSE [array_to_string(tk, ' ')] END AS sh
-           FROM base
-         ), sigs AS (
-           SELECT side, doc_id, toks,
-                  list_min(list_transform(sh, x -> md5('0|' || x))) AS m0,
-                  list_min(list_transform(sh, x -> md5('1|' || x))) AS m1,
-                  list_min(list_transform(sh, x -> md5('2|' || x))) AS m2,
-                  list_min(list_transform(sh, x -> md5('3|' || x))) AS m3,
-                  list_min(list_transform(sh, x -> md5('4|' || x))) AS m4,
-                  list_min(list_transform(sh, x -> md5('5|' || x))) AS m5,
-                  list_min(list_transform(sh, x -> md5('6|' || x))) AS m6,
-                  list_min(list_transform(sh, x -> md5('7|' || x))) AS m7
-           FROM sh
-         ), banded AS (
-           SELECT side, doc_id,
-                  unnest([0, 1, 2, 3]) AS band_id,
-                  unnest([m0 || ',' || m1, m2 || ',' || m3,
-                          m4 || ',' || m5, m6 || ',' || m7]) AS band_key
-           FROM sigs
-         ), pairs AS (
+         ), ${DedupOps.md5BandCtes("side, doc_id")}, pairs AS (
            SELECT DISTINCT a.doc_id AS train_doc, b.doc_id AS eval_doc
            FROM banded a JOIN banded b
              ON a.band_id = b.band_id AND a.band_key = b.band_key
@@ -4155,31 +3994,9 @@ object SparkEntry {
     // SCD2: the same lag/sum/lead gaps-and-islands chain; lag IS
     // DISTINCT FROM curr is DuckDB's null-safe spelling of Spark's <=>
     Query("q92_scd2", RelationalOps.q92Scd2,
-      """WITH marked AS (
-           SELECT o_custkey, o_orderpriority, o_orderdate, o_orderkey,
-                  CASE WHEN lag(o_orderpriority) OVER w
-                            IS DISTINCT FROM o_orderpriority
-                       THEN 1 ELSE 0 END AS chg
-           FROM orders
-           WINDOW w AS (PARTITION BY o_custkey
-                        ORDER BY o_orderdate, o_orderkey)
-         ), runs AS (
-           SELECT *, SUM(chg) OVER (PARTITION BY o_custkey
-                      ORDER BY o_orderdate, o_orderkey
-                      ROWS UNBOUNDED PRECEDING) AS run_id
-           FROM marked
-         ), collapsed AS (
-           SELECT o_custkey AS custkey, run_id,
-                  min(o_orderpriority) AS priority,
-                  min(o_orderdate) AS valid_from,
-                  CAST(count(*) AS BIGINT) AS n_orders
-           FROM runs GROUP BY custkey, run_id
-         )
-         SELECT custkey, priority, valid_from,
-                lead(valid_from) OVER w2 AS valid_to,
-                (lead(valid_from) OVER w2 IS NULL) AS is_current, n_orders
-         FROM collapsed
-         WINDOW w2 AS (PARTITION BY custkey ORDER BY run_id)"""),
+      s"""WITH ${RelationalOps.q92Scd2Ctes}
+         SELECT custkey, priority, valid_from, valid_to, is_current, n_orders
+         FROM vers"""),
     // correlation matrix: identical HUGEINT moments (corr is
     // scale-invariant, values ×10⁴ are exact integers), identical
     // double expression tree, ROUND last
@@ -4296,30 +4113,7 @@ object SparkEntry {
     // point-in-time join: interval containment against the SCD2
     // version table (empty same-instant intervals can never match)
     Query("q98_pit_join", RelationalOps.q98PitJoin,
-      """WITH marked AS (
-           SELECT o_custkey, o_orderpriority, o_orderdate, o_orderkey,
-                  CASE WHEN lag(o_orderpriority) OVER w
-                            IS DISTINCT FROM o_orderpriority
-                       THEN 1 ELSE 0 END AS chg
-           FROM orders
-           WINDOW w AS (PARTITION BY o_custkey
-                        ORDER BY o_orderdate, o_orderkey)
-         ), runs AS (
-           SELECT *, SUM(chg) OVER (PARTITION BY o_custkey
-                      ORDER BY o_orderdate, o_orderkey
-                      ROWS UNBOUNDED PRECEDING) AS run_id
-           FROM marked
-         ), collapsed AS (
-           SELECT o_custkey AS custkey, run_id,
-                  min(o_orderpriority) AS priority,
-                  min(o_orderdate) AS valid_from
-           FROM runs GROUP BY custkey, run_id
-         ), vers AS (
-           SELECT custkey, priority, valid_from,
-                  lead(valid_from) OVER w2 AS valid_to
-           FROM collapsed
-           WINDOW w2 AS (PARTITION BY custkey ORDER BY run_id)
-         )
+      s"""WITH ${RelationalOps.q92Scd2Ctes}
          SELECT l.l_orderkey, l.l_linenumber, o.o_custkey AS custkey,
                 v.priority AS priority_at_ship
          FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -4404,30 +4198,9 @@ object SparkEntry {
     // incremental refresh oracle = the FULL history recompute it must
     // equal (the q92 chain, minus run row counts)
     Query("q102_incr_scd2", RelationalOps.q102IncrScd2,
-      """WITH marked AS (
-           SELECT o_custkey, o_orderpriority, o_orderdate, o_orderkey,
-                  CASE WHEN lag(o_orderpriority) OVER w
-                            IS DISTINCT FROM o_orderpriority
-                       THEN 1 ELSE 0 END AS chg
-           FROM orders
-           WINDOW w AS (PARTITION BY o_custkey
-                        ORDER BY o_orderdate, o_orderkey)
-         ), runs AS (
-           SELECT *, SUM(chg) OVER (PARTITION BY o_custkey
-                      ORDER BY o_orderdate, o_orderkey
-                      ROWS UNBOUNDED PRECEDING) AS run_id
-           FROM marked
-         ), collapsed AS (
-           SELECT o_custkey AS custkey, run_id,
-                  min(o_orderpriority) AS priority,
-                  min(o_orderdate) AS valid_from
-           FROM runs GROUP BY custkey, run_id
-         )
-         SELECT custkey, priority, valid_from,
-                lead(valid_from) OVER w2 AS valid_to,
-                (lead(valid_from) OVER w2 IS NULL) AS is_current
-         FROM collapsed
-         WINDOW w2 AS (PARTITION BY custkey ORDER BY run_id)"""),
+      s"""WITH ${RelationalOps.q92Scd2Ctes}
+         SELECT custkey, priority, valid_from, valid_to, is_current
+         FROM vers"""),
     // PMI ratio in round-half-up fixed-point (HUGEINT = the DECIMAL(38,0)
     // Spark side); ln is monotone so ratio order IS PMI order
     Query("q103_pmi", TextOps.q103Pmi,
@@ -4487,14 +4260,7 @@ object SparkEntry {
     // the 15-iteration recursion is engine-exact (// == Spark div on
     // positives)
     Query("q105_pagerank", GraphOps.q105PageRank,
-      """WITH RECURSIVE pairs AS (
-           SELECT DISTINCT a.l_partkey AS s1, b.l_partkey AS s2
-           FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-           WHERE a.l_partkey < b.l_partkey
-         ), edges AS (
-           SELECT s1 AS src, s2 AS dst FROM pairs
-           UNION ALL SELECT s2, s1 FROM pairs
-         ), deg AS (
+      s"""WITH RECURSIVE ${GraphOps.coPurchaseEdgesCtes}, deg AS (
            SELECT src, count(*) AS od FROM edges GROUP BY src
          ), n AS (SELECT count(*) AS nn FROM deg),
          it AS (
@@ -4516,11 +4282,7 @@ object SparkEntry {
     // per-node triangle counts by direct a<b<c enumeration — the
     // degree-oriented Spark plan provably finds the same triangle set
     Query("q107_triangles", GraphOps.q107Triangles,
-      """WITH pairs AS (
-           SELECT DISTINCT a.l_partkey AS s1, b.l_partkey AS s2
-           FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-           WHERE a.l_partkey < b.l_partkey
-         ), tri AS (
+      s"""WITH ${GraphOps.coPurchaseEdgesCtes}, tri AS (
            SELECT p1.s1 AS a, p2.s1 AS b, p2.s2 AS c
            FROM pairs p1
            JOIN pairs p2 ON p1.s2 = p2.s1 AND p1.s1 < p2.s1
@@ -4561,14 +4323,7 @@ object SparkEntry {
     // sf0.01, so capped ≡ converged); surviving edges carry the
     // recursion, in-core degree read off the final level
     Query("q109_kcore", GraphOps.q109KCore,
-      """WITH RECURSIVE pairs AS (
-           SELECT DISTINCT a.l_partkey AS s1, b.l_partkey AS s2
-           FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-           WHERE a.l_partkey < b.l_partkey
-         ), edges AS (
-           SELECT s1 AS src, s2 AS dst FROM pairs
-           UNION ALL SELECT s2, s1 FROM pairs
-         ), it(i, src, dst) AS (
+      s"""WITH RECURSIVE ${GraphOps.coPurchaseEdgesCtes}, it(i, src, dst) AS (
            SELECT 0, src, dst FROM edges
            UNION ALL
            SELECT i + 1, src, dst FROM it
@@ -4585,14 +4340,7 @@ object SparkEntry {
     // stays node-scale per level instead of enumerating walks; min()
     // over the ≤8-hop closure equals the visited-set BFS distance
     Query("q110_bfs_hops", GraphOps.q110BfsHops,
-      """WITH RECURSIVE pairs AS (
-           SELECT DISTINCT a.l_partkey AS s1, b.l_partkey AS s2
-           FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-           WHERE a.l_partkey < b.l_partkey
-         ), edges AS (
-           SELECT s1 AS src, s2 AS dst FROM pairs
-           UNION ALL SELECT s2, s1 FROM pairs
-         ), seeds AS (
+      s"""WITH RECURSIVE ${GraphOps.coPurchaseEdgesCtes}, seeds AS (
            SELECT src AS node FROM edges
            GROUP BY src ORDER BY count(*) DESC, src LIMIT 3
          ), bfs AS (
@@ -4694,14 +4442,7 @@ object SparkEntry {
     // fixed-point update as q105, teleport UNIONed with contributions
     // (a seed keeps its teleport even with no inbound flow that round)
     Query("q116_ppr", GraphOps.q116Ppr,
-      """WITH RECURSIVE pairs AS (
-           SELECT DISTINCT a.l_partkey AS s1, b.l_partkey AS s2
-           FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-           WHERE a.l_partkey < b.l_partkey
-         ), edges AS (
-           SELECT s1 AS src, s2 AS dst FROM pairs
-           UNION ALL SELECT s2, s1 FROM pairs
-         ), deg AS (
+      s"""WITH RECURSIVE ${GraphOps.coPurchaseEdgesCtes}, deg AS (
            SELECT src, count(*) AS od FROM edges GROUP BY src
          ), seedtab AS (
            SELECT src AS node FROM edges
@@ -4878,17 +4619,8 @@ object SparkEntry {
                 CAST(score_ppm AS BIGINT) AS score_ppm
          FROM r WHERE rk <= 5"""),
     Query("q126_label_prop", GraphOps.q126LabelProp,
-      """WITH RECURSIVE li AS (
-           SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-           FROM lineitem
-         ), pairs AS (
-           SELECT a.pk AS s1, b.pk AS s2
-           FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2
-         ), edges AS (
-           SELECT s1 AS src, s2 AS dst FROM pairs
-           UNION ALL SELECT s2, s1 FROM pairs
-         ), nodes AS (SELECT src FROM edges GROUP BY src),
+      s"""WITH RECURSIVE ${GraphOps.prunedCoPurchaseEdgesCtes(2)},
+         nodes AS (SELECT src FROM edges GROUP BY src),
          it AS (
            SELECT 0 AS i, src AS node, src AS lbl FROM nodes
            UNION ALL
@@ -5662,65 +5394,7 @@ object SparkEntry {
          FROM lt JOIN km ON km.i = lt.i
          WHERE lt.d > 0"""),
     Query("q150_rrf_fusion", SimilarityOps.q150RrfFusion,
-      """WITH docs AS (
-           SELECT doc_id,
-                  list_distinct(string_split_regex(lower(trim(text)),
-                    '\s+')) AS tk
-           FROM documents WHERE text IS NOT NULL
-         ), seeds AS (
-           SELECT d.doc_id AS qid FROM docs d
-           JOIN embeddings e ON d.doc_id = e.vec_id
-           ORDER BY qid LIMIT 8
-         ), qtok AS (
-           SELECT qid, unnest(tk) AS term
-           FROM docs JOIN seeds ON doc_id = qid
-         ), qsize AS (
-           SELECT qid, CAST(COUNT(*) AS BIGINT) AS qn
-           FROM qtok GROUP BY 1
-         ), dtok AS (
-           SELECT doc_id AS did, CAST(len(tk) AS BIGINT) AS dn,
-                  unnest(tk) AS term
-           FROM docs
-         ), inter AS (
-           SELECT qid, did, dn, CAST(COUNT(*) AS BIGINT) AS inter
-           FROM dtok JOIN qtok USING (term)
-           WHERE did <> qid
-           GROUP BY 1, 2, 3
-         ), lex AS (
-           SELECT qid, did,
-                  (2 * inter * 1000000 + (qn + dn - inter))
-                    // (2 * (qn + dn - inter)) AS jac_ppm
-           FROM inter JOIN qsize USING (qid)
-         ), lexr AS (
-           SELECT qid, did, lrank FROM (
-             SELECT qid, did,
-                    CAST(ROW_NUMBER() OVER (PARTITION BY qid
-                      ORDER BY jac_ppm DESC, did) AS BIGINT) AS lrank
-             FROM lex)
-           WHERE lrank <= 50
-         ), qv AS (
-           SELECT qid, embedding AS qe
-           FROM seeds JOIN embeddings ON vec_id = qid
-         ), pairs AS (
-           SELECT qid, vec_id AS did, qe, embedding AS ne
-           FROM qv, embeddings WHERE vec_id <> qid
-         ), un AS (
-           SELECT qid, did, CAST(unnest(qe) AS DOUBLE) AS x,
-                  CAST(unnest(ne) AS DOUBLE) AS y
-           FROM pairs
-         ), dots AS (
-           SELECT qid, did, SUM(x*y) AS dot, SUM(x*x) AS na,
-                  SUM(y*y) AS nb
-           FROM un GROUP BY 1, 2
-         ), semr AS (
-           SELECT qid, did, srank FROM (
-             SELECT qid, did,
-                    CAST(ROW_NUMBER() OVER (PARTITION BY qid
-                      ORDER BY ROUND(dot / (sqrt(na) * sqrt(nb)), 4) DESC,
-                        did) AS BIGINT) AS srank
-             FROM dots)
-           WHERE srank <= 50
-         ), fused AS (
+      s"""WITH ${SimilarityOps.hybridRanksCtes(8, 50)}, fused AS (
            SELECT COALESCE(l.qid, s.qid) AS qid,
                   COALESCE(l.did, s.did) AS did,
                   l.lrank AS lex_rank, s.srank AS sem_rank,
@@ -5738,17 +5412,7 @@ object SparkEntry {
            FROM fused)
          WHERE rn <= 10"""),
     Query("q151_link_predict", GraphOps.q151LinkPredict,
-      """WITH li AS (
-           SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-           FROM lineitem
-         ), pairs AS (
-           SELECT a.pk AS s1, b.pk AS s2
-           FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2
-         ), edges AS (
-           SELECT s1 AS src, s2 AS dst FROM pairs
-           UNION ALL SELECT s2, s1 FROM pairs
-         ), deg AS (
+      s"""WITH ${GraphOps.prunedCoPurchaseEdgesCtes(2)}, deg AS (
            SELECT src AS n, CAST(COUNT(*) AS BIGINT) AS deg
            FROM edges GROUP BY 1
          ), cand AS (
@@ -6100,32 +5764,9 @@ object SparkEntry {
          JOIN ranks r ON r.target = c.bd_count + 3
          WHERE o.o_orderdate IS NOT NULL"""),
     Query("q164_asof_snapshot", RelationalOps.q164AsOfSnapshot,
-      """WITH marked AS (
-           SELECT o_custkey, o_orderpriority, o_orderdate, o_orderkey,
-                  CASE WHEN lag(o_orderpriority) OVER w
-                            IS DISTINCT FROM o_orderpriority
-                       THEN 1 ELSE 0 END AS chg
-           FROM orders
-           WINDOW w AS (PARTITION BY o_custkey
-                        ORDER BY o_orderdate, o_orderkey)
-         ), runs AS (
-           SELECT *, SUM(chg) OVER (PARTITION BY o_custkey
-                      ORDER BY o_orderdate, o_orderkey
-                      ROWS UNBOUNDED PRECEDING) AS run_id
-           FROM marked
-         ), collapsed AS (
-           SELECT o_custkey AS custkey, run_id,
-                  min(o_orderpriority) AS priority,
-                  min(o_orderdate) AS valid_from
-           FROM runs GROUP BY custkey, run_id
-         ), hist AS (
-           SELECT custkey, priority, valid_from,
-                  lead(valid_from) OVER w2 AS valid_to
-           FROM collapsed
-           WINDOW w2 AS (PARTITION BY custkey ORDER BY run_id)
-         )
+      s"""WITH ${RelationalOps.q92Scd2Ctes}
          SELECT custkey, priority, valid_from, valid_to
-         FROM hist
+         FROM vers
          WHERE valid_from <= TIMESTAMP '1995-06-01'
            AND (valid_to IS NULL OR valid_to > TIMESTAMP '1995-06-01')"""),
     Query("q165_decile_lift", StatsOps.q165DecileLift,
@@ -6214,17 +5855,8 @@ object SparkEntry {
                   || CAST(m_score AS VARCHAR) AS segment
          FROM sc"""),
     Query("q167_modularity", GraphOps.q167Modularity,
-      """WITH RECURSIVE li AS (
-           SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-           FROM lineitem
-         ), pairs AS (
-           SELECT a.pk AS s1, b.pk AS s2
-           FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2
-         ), edges AS (
-           SELECT s1 AS src, s2 AS dst FROM pairs
-           UNION ALL SELECT s2, s1 FROM pairs
-         ), nodes AS (SELECT src FROM edges GROUP BY src),
+      s"""WITH RECURSIVE ${GraphOps.prunedCoPurchaseEdgesCtes(2)},
+         nodes AS (SELECT src FROM edges GROUP BY src),
          it AS (
            SELECT 0 AS i, src AS node, src AS lbl FROM nodes
            UNION ALL
@@ -6450,17 +6082,7 @@ object SparkEntry {
                     / sqrt(CAST(var18 AS DOUBLE) / 18.0), 4) END AS z
          FROM f"""),
     Query("q174_assortativity", GraphOps.q174Assortativity,
-      """WITH li AS (
-           SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-           FROM lineitem
-         ), pairs AS (
-           SELECT a.pk AS s1, b.pk AS s2
-           FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2
-         ), edges AS (
-           SELECT s1 AS src, s2 AS dst FROM pairs
-           UNION ALL SELECT s2, s1 FROM pairs
-         ), deg AS (
+      s"""WITH ${GraphOps.prunedCoPurchaseEdgesCtes(2)}, deg AS (
            SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS deg
            FROM edges GROUP BY 1
          ), m AS (
@@ -7952,51 +7574,7 @@ object SparkEntry {
          FROM cl GROUP BY 1"""),
     Query("q217_kcenter", SimilarityOps.q217KcenterCoreset, kcenterOracleSql),
     Query("q218_dup_source_matrix", DedupOps.q218DupSourceMatrix,
-      """WITH corpus AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 1000000, substr(text, strpos(text, ' ') + 1)
-           FROM documents
-         ), base AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS tk
-           FROM corpus
-         ), sh AS (
-           SELECT doc_id, list_distinct(tk) AS toks,
-                  CASE WHEN len(tk) >= 3 THEN
-                    list_distinct([tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]
-                                   for i in range(1, len(tk) - 1)])
-                  ELSE [array_to_string(tk, ' ')] END AS sh
-           FROM base
-         ), sigs AS (
-           SELECT doc_id, toks,
-                  list_min(list_transform(sh, x -> md5('0|' || x))) AS m0,
-                  list_min(list_transform(sh, x -> md5('1|' || x))) AS m1,
-                  list_min(list_transform(sh, x -> md5('2|' || x))) AS m2,
-                  list_min(list_transform(sh, x -> md5('3|' || x))) AS m3,
-                  list_min(list_transform(sh, x -> md5('4|' || x))) AS m4,
-                  list_min(list_transform(sh, x -> md5('5|' || x))) AS m5,
-                  list_min(list_transform(sh, x -> md5('6|' || x))) AS m6,
-                  list_min(list_transform(sh, x -> md5('7|' || x))) AS m7
-           FROM sh
-         ), banded AS (
-           SELECT doc_id,
-                  unnest([0, 1, 2, 3]) AS band_id,
-                  unnest([m0 || ',' || m1, m2 || ',' || m3,
-                          m4 || ',' || m5, m6 || ',' || m7]) AS band_key
-           FROM sigs
-         ), pairs AS (
-           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM banded a JOIN banded b
-             ON a.band_id = b.band_id AND a.band_key = b.band_key
-            AND a.doc_id < b.doc_id
-         ), iv AS (
-           SELECT p.doc_a, p.doc_b,
-                  len(list_intersect(ta.toks, tb.toks)) AS inter,
-                  len(ta.toks) AS na, len(tb.toks) AS nb
-           FROM pairs p
-           JOIN sh ta ON ta.doc_id = p.doc_a
-           JOIN sh tb ON tb.doc_id = p.doc_b
-         ), flt AS (
+      s"""WITH ${DedupOps.ngramVerifiedPairsCtes}, flt AS (
            SELECT doc_a % 1000000 AS ba, doc_b % 1000000 AS bb,
                   (2 * 1000 * inter + (na + nb - inter))
                     // (2 * (na + nb - inter)) AS jm
@@ -8141,17 +7719,9 @@ object SparkEntry {
                 CASE WHEN lop <> 'D' THEN lnd END AS value_units
          FROM ag"""),
     Query("q223_clustering_coef", GraphOps.q223ClusteringCoef,
-      """WITH pairs AS (
-           SELECT DISTINCT a.l_partkey AS s1, b.l_partkey AS s2
-           FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-           WHERE a.l_partkey < b.l_partkey
-         ), sym AS (
-           SELECT s1 AS src, s2 AS dst FROM pairs
-           UNION ALL
-           SELECT s2, s1 FROM pairs
-         ), deg AS (
+      s"""WITH ${GraphOps.coPurchaseEdgesCtes}, deg AS (
            SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS degree
-           FROM sym GROUP BY 1
+           FROM edges GROUP BY 1
          ), tri AS (
            SELECT p1.s1 AS a, p2.s1 AS b, p2.s2 AS c
            FROM pairs p1
@@ -8237,56 +7807,11 @@ object SparkEntry {
          FROM rk r JOIN lab l ON r.label = l.label
          WHERE r.rn <= 3 AND l.sd2 > 0"""),
     Query("q226_dedup_yield", DedupOps.q226DedupYield,
-      """WITH corpus AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 1000000, substr(text, strpos(text, ' ') + 1)
-           FROM documents
-         ), base AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS tk
-           FROM corpus
-         ), sh AS (
-           SELECT doc_id, list_distinct(tk) AS toks,
-                  CASE WHEN len(tk) >= 3 THEN
-                    list_distinct([tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]
-                                   for i in range(1, len(tk) - 1)])
-                  ELSE [array_to_string(tk, ' ')] END AS sh
-           FROM base
-         ), sigs AS (
-           SELECT doc_id, toks,
-                  list_min(list_transform(sh, x -> md5('0|' || x))) AS m0,
-                  list_min(list_transform(sh, x -> md5('1|' || x))) AS m1,
-                  list_min(list_transform(sh, x -> md5('2|' || x))) AS m2,
-                  list_min(list_transform(sh, x -> md5('3|' || x))) AS m3,
-                  list_min(list_transform(sh, x -> md5('4|' || x))) AS m4,
-                  list_min(list_transform(sh, x -> md5('5|' || x))) AS m5,
-                  list_min(list_transform(sh, x -> md5('6|' || x))) AS m6,
-                  list_min(list_transform(sh, x -> md5('7|' || x))) AS m7
-           FROM sh
-         ), banded AS (
-           SELECT doc_id,
-                  unnest([0, 1, 2, 3]) AS band_id,
-                  unnest([m0 || ',' || m1, m2 || ',' || m3,
-                          m4 || ',' || m5, m6 || ',' || m7]) AS band_key
-           FROM sigs
-         ), prs AS (
-           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM banded a JOIN banded b
-             ON a.band_id = b.band_id AND a.band_key = b.band_key
-            AND a.doc_id < b.doc_id
-         ), iv AS (
-           SELECT p.doc_a, p.doc_b,
-                  1000 * len(list_intersect(ta.toks, tb.toks)) AS sc,
-                  len(ta.toks) + len(tb.toks)
-                    - len(list_intersect(ta.toks, tb.toks)) AS den
-           FROM prs p
-           JOIN sh ta ON ta.doc_id = p.doc_a
-           JOIN sh tb ON tb.doc_id = p.doc_b
-         ), th AS (
+      s"""WITH ${DedupOps.ngramVerifiedPairsCtes}, th AS (
            SELECT unnest([500, 700, 900]) AS t
          ), fl AS (
            SELECT t, doc_a, doc_b
-           FROM th CROSS JOIN iv WHERE sc >= t * den
+           FROM th CROSS JOIN iv WHERE 1000 * inter >= t * (na + nb - inter)
          ), pc AS (
            SELECT t, CAST(COUNT(*) AS BIGINT) AS n_pairs
            FROM fl GROUP BY 1
@@ -8431,27 +7956,16 @@ object SparkEntry {
     // distance-2 census via wedge join + distinct + adjacency
     // anti-filter
     Query("q231_two_hop_reach", GraphOps.q231TwoHopReach,
-      """WITH li AS (
-           SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-           FROM lineitem
-         ), pr AS (
-           SELECT a.pk AS s1, b.pk AS s2
-           FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-           GROUP BY 1, 2 HAVING COUNT(*) >= 2
-         ), e AS (
-           SELECT s1 AS src, s2 AS dst FROM pr
-           UNION ALL
-           SELECT s2, s1 FROM pr
-         ), deg AS (
+      s"""WITH ${GraphOps.prunedCoPurchaseEdgesCtes(2)}, deg AS (
            SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS deg
-           FROM e GROUP BY 1
+           FROM edges GROUP BY 1
          ), two AS (
            SELECT DISTINCT a.src AS a, b.dst AS c
-           FROM e a JOIN e b ON a.dst = b.src
+           FROM edges a JOIN edges b ON a.dst = b.src
            WHERE a.src <> b.dst
          ), nonadj AS (
            SELECT t.a, t.c FROM two t
-           WHERE NOT EXISTS (SELECT 1 FROM e
+           WHERE NOT EXISTS (SELECT 1 FROM edges e
                              WHERE e.src = t.a AND e.dst = t.c)
          ), r2 AS (
            SELECT a AS node, CAST(COUNT(*) AS BIGINT) AS reach2
@@ -8609,65 +8123,7 @@ object SparkEntry {
     // weight literals W_m = Σ_{d=m..10} (2520/d)·10^(10−d)·9^d
     // (p = 9/10; 2520 = lcm(1..10)); D = 9·2520·10^10
     Query("q234_rbo", SimilarityOps.q234Rbo,
-      """WITH docs AS (
-           SELECT doc_id,
-                  list_distinct(string_split_regex(lower(trim(text)),
-                    '\s+')) AS tk
-           FROM documents WHERE text IS NOT NULL
-         ), seeds AS (
-           SELECT d.doc_id AS qid FROM docs d
-           JOIN embeddings e ON d.doc_id = e.vec_id
-           ORDER BY qid LIMIT 8
-         ), qtok AS (
-           SELECT qid, unnest(tk) AS term
-           FROM docs JOIN seeds ON doc_id = qid
-         ), qsize AS (
-           SELECT qid, CAST(COUNT(*) AS BIGINT) AS qn
-           FROM qtok GROUP BY 1
-         ), dtok AS (
-           SELECT doc_id AS did, CAST(len(tk) AS BIGINT) AS dn,
-                  unnest(tk) AS term
-           FROM docs
-         ), inter AS (
-           SELECT qid, did, dn, CAST(COUNT(*) AS BIGINT) AS inter
-           FROM dtok JOIN qtok USING (term)
-           WHERE did <> qid
-           GROUP BY 1, 2, 3
-         ), lex AS (
-           SELECT qid, did,
-                  (2 * inter * 1000000 + (qn + dn - inter))
-                    // (2 * (qn + dn - inter)) AS jac_ppm
-           FROM inter JOIN qsize USING (qid)
-         ), lexr AS (
-           SELECT qid, did, lrank FROM (
-             SELECT qid, did,
-                    CAST(ROW_NUMBER() OVER (PARTITION BY qid
-                      ORDER BY jac_ppm DESC, did) AS BIGINT) AS lrank
-             FROM lex)
-           WHERE lrank <= 10
-         ), qv AS (
-           SELECT qid, embedding AS qe
-           FROM seeds JOIN embeddings ON vec_id = qid
-         ), pairs AS (
-           SELECT qid, vec_id AS did, qe, embedding AS ne
-           FROM qv, embeddings WHERE vec_id <> qid
-         ), un AS (
-           SELECT qid, did, CAST(unnest(qe) AS DOUBLE) AS x,
-                  CAST(unnest(ne) AS DOUBLE) AS y
-           FROM pairs
-         ), dots AS (
-           SELECT qid, did, SUM(x*y) AS dot, SUM(x*x) AS na,
-                  SUM(y*y) AS nb
-           FROM un GROUP BY 1, 2
-         ), semr AS (
-           SELECT qid, did, srank FROM (
-             SELECT qid, did,
-                    CAST(ROW_NUMBER() OVER (PARTITION BY qid
-                      ORDER BY ROUND(dot / (sqrt(na) * sqrt(nb)), 4) DESC,
-                        did) AS BIGINT) AS srank
-             FROM dots)
-           WHERE srank <= 10
-         ), wt AS (
+      s"""WITH ${SimilarityOps.hybridRanksCtes(8, 10)}, wt AS (
            SELECT * FROM (VALUES
              (1, 53392439389752), (2, 30712439389752),
              (3, 20506439389752), (4, 14382839389752),

@@ -385,6 +385,78 @@ object DedupOps {
         size(col("toks_b")).cast("long").as("nb"))
   }
 
+  // ---- The same pipelines in DuckDB SQL (the oracles' CTEs) ----------
+
+  /** The md5 MinHash banding over a CTE `corpus(keys…, text)`: `base`
+    * (tokens), `sh` (distinct tokens `toks`, word 3-shingles `sh`),
+    * `sigs` (`nHashes` minima `m0…` of md5('j|' || shingle); MATERIALIZED,
+    * q29 reads it again for the agreement count) and `banded` (keys,
+    * band_id, band_key = `bands` comma-joined runs of minima) — the
+    * signatures and band keys of [[minhashCandidatesMd5]],
+    * [[ngramVerifiedPairs]] and [[nearDupContamination]].
+    */
+  def md5BandCtes(keys: String,
+      nHashes: Int = VerifyBands * VerifyRowsPerBand,
+      bands: Int = VerifyBands): String = {
+    val rows = nHashes / bands
+    val minima = (0 until nHashes).map(j =>
+      s"list_min(list_transform(sh, x -> md5('$j|' || x))) AS m$j")
+      .mkString(",\n                  ")
+    val bandKeys = (0 until bands).map(b =>
+      (0 until rows).map(r => s"m${b * rows + r}").mkString(" || ',' || "))
+      .mkString(",\n                          ")
+    s"""base AS (
+           SELECT $keys, string_split_regex(lower(trim(text)), '\\s+') AS tk
+           FROM corpus
+         ), sh AS (
+           SELECT $keys, list_distinct(tk) AS toks,
+                  CASE WHEN len(tk) >= 3 THEN
+                    list_distinct([tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]
+                                   for i in range(1, len(tk) - 1)])
+                  ELSE [array_to_string(tk, ' ')] END AS sh
+           FROM base
+         ), sigs AS MATERIALIZED (
+           SELECT $keys,
+                  $minima
+           FROM sh
+         ), banded AS (
+           SELECT $keys,
+                  unnest([${(0 until bands).mkString(", ")}]) AS band_id,
+                  unnest([$bandKeys]) AS band_key
+           FROM sigs
+         )"""
+  }
+
+  /** [[corpusWithPlantedDups]] as `corpus`, [[md5BandCtes]] over it, and
+    * `pairs(doc_a < doc_b)`: the distinct pairs sharing a band key.
+    */
+  def md5CandidateCtes(nHashes: Int = VerifyBands * VerifyRowsPerBand,
+      bands: Int = VerifyBands): String =
+    s"""corpus AS (
+           SELECT doc_id, text FROM documents
+           UNION ALL
+           SELECT doc_id + 1000000, substr(text, strpos(text, ' ') + 1)
+           FROM documents
+         ), ${md5BandCtes("doc_id", nHashes, bands)}, pairs AS (
+           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+           FROM banded a JOIN banded b
+             ON a.band_id = b.band_id AND a.band_key = b.band_key
+            AND a.doc_id < b.doc_id
+         )"""
+
+  /** [[ngramVerifiedPairs]] over [[corpusWithPlantedDups]]: the
+    * candidate CTEs plus `iv(doc_a, doc_b, inter, na, nb)`.
+    */
+  def ngramVerifiedPairsCtes: String =
+    s"""${md5CandidateCtes()}, iv AS (
+           SELECT p.doc_a, p.doc_b,
+                  len(list_intersect(ta.toks, tb.toks)) AS inter,
+                  len(ta.toks) AS na, len(tb.toks) AS nb
+           FROM pairs p
+           JOIN sh ta ON ta.doc_id = p.doc_a
+           JOIN sh tb ON tb.doc_id = p.doc_b
+         )"""
+
   /** [[ngramVerifiedPairs]] reduced to q31's rounded-double contract:
     * (doc_a, doc_b, jaccard ROUND-3). Kept as the public verify shape;
     * consumers needing exact integer similarity (q218's rollup) read

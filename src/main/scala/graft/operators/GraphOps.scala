@@ -1389,6 +1389,19 @@ object GraphOps {
       .unionByName(pairs.select(col("s2").as("src"), col("s1").as("dst")))
   }
 
+  /** [[coPurchaseEdges]] in DuckDB: the CTEs `pairs(s1 < s2)` and
+    * `edges(src, dst)`, both directions.
+    */
+  val coPurchaseEdgesCtes: String =
+    """pairs AS (
+           SELECT DISTINCT a.l_partkey AS s1, b.l_partkey AS s2
+           FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
+           WHERE a.l_partkey < b.l_partkey
+         ), edges AS (
+           SELECT s1 AS src, s2 AS dst FROM pairs
+           UNION ALL SELECT s2, s1 FROM pairs
+         )"""
+
   /** Symmetric co-purchase pairs WITH duplicates (one row per ordered
     * pair per shared order) for consumers that dedup internally
     * (triangleCounts' collect_set adjacency): one groupBy into
@@ -1432,6 +1445,23 @@ object GraphOps {
     pairs.select(col("s1").as("src"), col("s2").as("dst"))
       .unionByName(pairs.select(col("s2").as("src"), col("s1").as("dst")))
   }
+
+  /** [[prunedCoPurchaseEdges]] in DuckDB: the CTEs `li` (distinct order
+    * lines), `pairs(s1 < s2)` sharing at least `minCount` orders and
+    * `edges(src, dst)`, both directions.
+    */
+  def prunedCoPurchaseEdgesCtes(minCount: Int): String =
+    s"""li AS (
+           SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
+           FROM lineitem
+         ), pairs AS (
+           SELECT a.pk AS s1, b.pk AS s2
+           FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
+           GROUP BY 1, 2 HAVING COUNT(*) >= $minCount
+         ), edges AS (
+           SELECT s1 AS src, s2 AS dst FROM pairs
+           UNION ALL SELECT s2, s1 FROM pairs
+         )"""
 
   /** 142. Community detection by synchronous label propagation
     * (Raghavan, Albert & Kumara 2007), made DETERMINISTIC: every node

@@ -1111,6 +1111,38 @@ object RelationalOps {
         col("valid_from"), col("valid_to"), col("is_current"),
         col("n_rows").as("n_orders"))
 
+  /** [[q92Scd2]] in DuckDB: the lag/sum/lead chain `marked`, `runs`,
+    * `collapsed` and `vers(custkey, priority, valid_from, valid_to,
+    * is_current, n_orders)`; IS DISTINCT FROM is the null-safe `<=>`.
+    */
+  val q92Scd2Ctes: String =
+    """marked AS (
+           SELECT o_custkey, o_orderpriority, o_orderdate, o_orderkey,
+                  CASE WHEN lag(o_orderpriority) OVER w
+                            IS DISTINCT FROM o_orderpriority
+                       THEN 1 ELSE 0 END AS chg
+           FROM orders
+           WINDOW w AS (PARTITION BY o_custkey
+                        ORDER BY o_orderdate, o_orderkey)
+         ), runs AS (
+           SELECT *, SUM(chg) OVER (PARTITION BY o_custkey
+                      ORDER BY o_orderdate, o_orderkey
+                      ROWS UNBOUNDED PRECEDING) AS run_id
+           FROM marked
+         ), collapsed AS (
+           SELECT o_custkey AS custkey, run_id,
+                  min(o_orderpriority) AS priority,
+                  min(o_orderdate) AS valid_from,
+                  CAST(count(*) AS BIGINT) AS n_orders
+           FROM runs GROUP BY custkey, run_id
+         ), vers AS (
+           SELECT custkey, priority, valid_from,
+                  lead(valid_from) OVER w2 AS valid_to,
+                  (lead(valid_from) OVER w2 IS NULL) AS is_current, n_orders
+           FROM collapsed
+           WINDOW w2 AS (PARTITION BY custkey ORDER BY run_id)
+         )"""
+
   /** Algebraic partial-aggregate merge: combine per-partition aggregate
     * tables (counts and sums are associative) into the aggregate of the
     * union WITHOUT rescanning the inputs — the incremental

@@ -575,6 +575,71 @@ object SimilarityOps {
         "full_outer")
   }
 
+  /** [[hybridRanks]] in DuckDB: the CTEs `docs`, `seeds` … through
+    * `lexr(qid, did, lrank)` and `semr(qid, did, srank)`, the two ranked
+    * lists cut to `perList`.
+    */
+  def hybridRanksCtes(nQueries: Int, perList: Int): String =
+    s"""docs AS (
+           SELECT doc_id,
+                  list_distinct(string_split_regex(lower(trim(text)),
+                    '\\s+')) AS tk
+           FROM documents WHERE text IS NOT NULL
+         ), seeds AS (
+           SELECT d.doc_id AS qid FROM docs d
+           JOIN embeddings e ON d.doc_id = e.vec_id
+           ORDER BY qid LIMIT $nQueries
+         ), qtok AS (
+           SELECT qid, unnest(tk) AS term
+           FROM docs JOIN seeds ON doc_id = qid
+         ), qsize AS (
+           SELECT qid, CAST(COUNT(*) AS BIGINT) AS qn
+           FROM qtok GROUP BY 1
+         ), dtok AS (
+           SELECT doc_id AS did, CAST(len(tk) AS BIGINT) AS dn,
+                  unnest(tk) AS term
+           FROM docs
+         ), inter AS (
+           SELECT qid, did, dn, CAST(COUNT(*) AS BIGINT) AS inter
+           FROM dtok JOIN qtok USING (term)
+           WHERE did <> qid
+           GROUP BY 1, 2, 3
+         ), lex AS (
+           SELECT qid, did,
+                  (2 * inter * 1000000 + (qn + dn - inter))
+                    // (2 * (qn + dn - inter)) AS jac_ppm
+           FROM inter JOIN qsize USING (qid)
+         ), lexr AS (
+           SELECT qid, did, lrank FROM (
+             SELECT qid, did,
+                    CAST(ROW_NUMBER() OVER (PARTITION BY qid
+                      ORDER BY jac_ppm DESC, did) AS BIGINT) AS lrank
+             FROM lex)
+           WHERE lrank <= $perList
+         ), qv AS (
+           SELECT qid, embedding AS qe
+           FROM seeds JOIN embeddings ON vec_id = qid
+         ), pairs AS (
+           SELECT qid, vec_id AS did, qe, embedding AS ne
+           FROM qv, embeddings WHERE vec_id <> qid
+         ), un AS (
+           SELECT qid, did, CAST(unnest(qe) AS DOUBLE) AS x,
+                  CAST(unnest(ne) AS DOUBLE) AS y
+           FROM pairs
+         ), dots AS (
+           SELECT qid, did, SUM(x*y) AS dot, SUM(x*x) AS na,
+                  SUM(y*y) AS nb
+           FROM un GROUP BY 1, 2
+         ), semr AS (
+           SELECT qid, did, srank FROM (
+             SELECT qid, did,
+                    CAST(ROW_NUMBER() OVER (PARTITION BY qid
+                      ORDER BY ROUND(dot / (sqrt(na) * sqrt(nb)), 4) DESC,
+                        did) AS BIGINT) AS srank
+             FROM dots)
+           WHERE srank <= $perList
+         )"""
+
   def rrfFusion(s: SparkSession, d: String, nQueries: Int, perList: Int,
       k: Int, rrfK: Int): DataFrame = {
     val fused = hybridRanks(s, d, nQueries, perList)
