@@ -31,6 +31,29 @@ object SparkEntry {
   lazy val oracleSql: Map[String, String] =
     declared.map(q => q.name -> q.oracle).toMap
 
+  /** q104's blocked postings; q118's delta-maintained index is defined
+    * to equal the full rebuild, so it is q118's oracle too.
+    */
+  private def invertedIndexOracleSql: String =
+    """WITH tf AS (
+           SELECT term, doc_id, count(*) AS tf
+           FROM (SELECT doc_id,
+                        unnest(string_split_regex(lower(trim(text)), '\s+'))
+                          AS term
+                 FROM documents WHERE text IS NOT NULL)
+           GROUP BY 1, 2
+         ), rk AS (
+           SELECT term, doc_id, tf,
+                  (row_number() OVER (PARTITION BY term ORDER BY doc_id)
+                   - 1) // 64 AS block_id
+           FROM tf
+         )
+         SELECT term, CAST(block_id AS BIGINT) AS block_id,
+                CAST(count(*) AS BIGINT) AS n_docs,
+                string_agg(doc_id || ':' || tf, ',' ORDER BY doc_id)
+                  AS postings
+         FROM rk GROUP BY term, block_id"""
+
   /** q29's generated oracle (r13): the q31 md5-MinHash replay widened
     * to the full 32-hash / 8-band family — 32 `list_min(md5('j|'||x))`
     * minima, comma-joined 4-minima band keys, the bucket-join distinct
@@ -645,7 +668,14 @@ object SparkEntry {
     * round-half-up division by the doc length.
     */
   private def docEntropyOracleSql: String =
-    s"""WITH tok AS (
+    s"""WITH $docEntropyCtes
+         SELECT doc_id, n_tokens, xent_e9 FROM ent"""
+
+  /** q246's chain through `ent(doc_id, n_tokens, xent_e9)`; q249 reads
+    * it too.
+    */
+  private def docEntropyCtes: String =
+    s"""tok AS (
            SELECT d.doc_id, t.term
            FROM (SELECT doc_id,
                         string_split_regex(lower(trim(text)), '\\s+')
@@ -668,12 +698,13 @@ object SparkEntry {
            SELECT term,
                   ${lnSelect("_nl9")}
            FROM tp
-         )
-         SELECT f.doc_id, CAST(SUM(f.tf) AS BIGINT) AS n_tokens,
-                CAST((2 * SUM(f.tf * l._nl9) + SUM(f.tf))
-                     // (2 * SUM(f.tf)) AS BIGINT) AS xent_e9
-         FROM tf f JOIN lnt l ON f.term = l.term
-         GROUP BY f.doc_id"""
+         ), ent AS (
+           SELECT f.doc_id, CAST(SUM(f.tf) AS BIGINT) AS n_tokens,
+                  CAST((2 * SUM(f.tf * l._nl9) + SUM(f.tf))
+                       // (2 * SUM(f.tf)) AS BIGINT) AS xent_e9
+           FROM tf f JOIN lnt l ON f.term = l.term
+           GROUP BY f.doc_id
+         )"""
 
   /** Lateral-alias select fragment for the shared fixed-point exp. */
   private def expSelect(out: String): String =
@@ -820,36 +851,7 @@ object SparkEntry {
          FROM w GROUP BY user_id"""
 
   private def perplexityOracleSql: String =
-    s"""WITH tok AS (
-           SELECT d.doc_id, t.term
-           FROM (SELECT doc_id,
-                        string_split_regex(lower(trim(text)), '\\s+')
-                          AS toks
-                 FROM documents WHERE text IS NOT NULL) d,
-                LATERAL unnest(d.toks) AS t(term)
-           WHERE len(t.term) > 0
-         ), tf AS (
-           SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-           FROM tok GROUP BY 1, 2
-         ), nc AS (
-           SELECT CAST(SUM(tf) AS BIGINT) AS n_c FROM tf
-         ), tp AS (
-           SELECT term,
-                  1000000 AS _p,
-                  GREATEST((2000000 * CAST(SUM(tf) AS BIGINT) + n_c)
-                           // (2 * n_c), 1) AS _q
-           FROM tf, nc GROUP BY term, n_c
-         ), lnt AS (
-           SELECT term,
-                  ${lnSelect("_nl9")}
-           FROM tp
-         ), ent AS (
-           SELECT f.doc_id, CAST(SUM(f.tf) AS BIGINT) AS n_tokens,
-                  CAST((2 * SUM(f.tf * l._nl9) + SUM(f.tf))
-                       // (2 * SUM(f.tf)) AS BIGINT) AS xent_e9
-           FROM tf f JOIN lnt l ON f.term = l.term
-           GROUP BY f.doc_id
-         ), pex AS (
+    s"""WITH $docEntropyCtes, pex AS (
            SELECT doc_id, n_tokens, xent_e9, xent_e9 AS _x,
                   ${expSelect("_a")}
            FROM ent
@@ -4238,24 +4240,7 @@ object SparkEntry {
     // blocked postings: per-term doc rank → 64-doc blocks; postings are
     // doc_id:tf runs in doc_id order (engine-exact strings)
     Query("q104_inverted_index", TextOps.q104InvertedIndex,
-      """WITH tf AS (
-           SELECT term, doc_id, count(*) AS tf
-           FROM (SELECT doc_id,
-                        unnest(string_split_regex(lower(trim(text)), '\s+'))
-                          AS term
-                 FROM documents WHERE text IS NOT NULL)
-           GROUP BY 1, 2
-         ), rk AS (
-           SELECT term, doc_id, tf,
-                  (row_number() OVER (PARTITION BY term ORDER BY doc_id)
-                   - 1) // 64 AS block_id
-           FROM tf
-         )
-         SELECT term, CAST(block_id AS BIGINT) AS block_id,
-                CAST(count(*) AS BIGINT) AS n_docs,
-                string_agg(doc_id || ':' || tf, ',' ORDER BY doc_id)
-                  AS postings
-         FROM rk GROUP BY term, block_id"""),
+      invertedIndexOracleSql),
     // integer fixed-point PageRank: long sums are order-independent, so
     // the 15-iteration recursion is engine-exact (// == Spark div on
     // positives)
@@ -4480,25 +4465,7 @@ object SparkEntry {
          GROUP BY CUBE (lang, source)"""),
     // the delta-maintained index is DEFINED to equal the full rebuild,
     // so the oracle is q104's full-corpus index verbatim
-    Query("q118_incr_index", TextOps.q118IncrIndex,
-      """WITH tf AS (
-           SELECT term, doc_id, count(*) AS tf
-           FROM (SELECT doc_id,
-                        unnest(string_split_regex(lower(trim(text)), '\s+'))
-                          AS term
-                 FROM documents WHERE text IS NOT NULL)
-           GROUP BY 1, 2
-         ), rk AS (
-           SELECT term, doc_id, tf,
-                  (row_number() OVER (PARTITION BY term ORDER BY doc_id)
-                   - 1) // 64 AS block_id
-           FROM tf
-         )
-         SELECT term, CAST(block_id AS BIGINT) AS block_id,
-                CAST(count(*) AS BIGINT) AS n_docs,
-                string_agg(doc_id || ':' || tf, ',' ORDER BY doc_id)
-                  AS postings
-         FROM rk GROUP BY term, block_id"""),
+    Query("q118_incr_index", TextOps.q118IncrIndex, invertedIndexOracleSql),
     // per-user mean transition ppm under the q113 model — two-stage
     // round-half-up integer ppm, engine-exact
     Query("q119_flow_score", RelationalOps.q119FlowScore,
@@ -7405,30 +7372,7 @@ object SparkEntry {
     // terms in 1/2520^2 units — every division is exact (2520^2 is
     // divisible by any rank*min(m,10) product, both factors <= 10)
     Query("q213_rec_eval", RelationalOps.q213RecEval,
-      """WITH o AS (
-           SELECT o_orderkey, o_custkey, CAST(o_orderdate AS DATE)
-             AS day
-           FROM orders WHERE o_orderdate IS NOT NULL
-         ), sp AS (
-           SELECT MIN(day) + CAST((4 * date_diff('day', MIN(day),
-             MAX(day))) // 5 AS INT) AS split
-           FROM o
-         ), top10 AS (
-           SELECT rec, rnk FROM (
-             SELECT l.l_partkey AS rec,
-                    CAST(ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC,
-                      l.l_partkey) AS BIGINT) AS rnk
-             FROM o CROSS JOIN sp
-             JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-             WHERE o.day < sp.split
-             GROUP BY l.l_partkey
-           ) WHERE rnk <= 10
-         ), test AS (
-           SELECT DISTINCT o.o_custkey AS cust, l.l_partkey AS part
-           FROM o CROSS JOIN sp
-           JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-           WHERE o.day >= sp.split
-         ), pu AS (
+      s"""WITH ${RelationalOps.popularityHarnessCtes}, pu AS (
            SELECT t.cust, CAST(COUNT(*) AS BIGINT) AS m,
                   MIN(r.rnk) AS minr
            FROM test t LEFT JOIN top10 r ON t.part = r.rec GROUP BY 1
@@ -7891,30 +7835,7 @@ object SparkEntry {
     // prefix sums are the SAME e6 integer literals as the Spark side
     // (round(1e6/log2(r+1)) — fixed table, no libm in either engine)
     Query("q230_ndcg_eval", RelationalOps.q230NdcgEval,
-      """WITH o AS (
-           SELECT o_orderkey, o_custkey, CAST(o_orderdate AS DATE)
-             AS day
-           FROM orders WHERE o_orderdate IS NOT NULL
-         ), sp AS (
-           SELECT MIN(day) + CAST((4 * date_diff('day', MIN(day),
-             MAX(day))) // 5 AS INT) AS split
-           FROM o
-         ), top10 AS (
-           SELECT rec, rnk FROM (
-             SELECT l.l_partkey AS rec,
-                    CAST(ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC,
-                      l.l_partkey) AS BIGINT) AS rnk
-             FROM o CROSS JOIN sp
-             JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-             WHERE o.day < sp.split
-             GROUP BY l.l_partkey
-           ) WHERE rnk <= 10
-         ), test AS (
-           SELECT DISTINCT o.o_custkey AS cust, l.l_partkey AS part
-           FROM o CROSS JOIN sp
-           JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-           WHERE o.day >= sp.split
-         ), dtab AS (
+      s"""WITH ${RelationalOps.popularityHarnessCtes}, dtab AS (
            SELECT * FROM (VALUES (1, 1000000), (2, 630930), (3, 500000),
              (4, 430677), (5, 386853), (6, 356207), (7, 333333),
              (8, 315465), (9, 301030), (10, 289065)) AS t(rnk, disc)
@@ -7980,22 +7901,7 @@ object SparkEntry {
     // DISTINCT inequality self-joins within the session — subsequence
     // existence i<j(<k), quadratic per session by design
     Query("q232_seq_patterns", RelationalOps.q232SeqPatterns,
-      """WITH ev AS (
-           SELECT user_id, epoch_us(ts) AS us, event_id, event_type,
-                  ROW_NUMBER() OVER (PARTITION BY user_id
-                    ORDER BY epoch_us(ts), event_id) AS rn
-           FROM events WHERE user_id IS NOT NULL
-         ), gap AS (
-           SELECT *, CASE WHEN us - LAG(us) OVER (PARTITION BY user_id
-                    ORDER BY rn) > 14400000000
-                  THEN 1 ELSE 0 END AS brk
-           FROM ev
-         ), s AS (
-           SELECT user_id, rn, event_type,
-                  SUM(brk) OVER (PARTITION BY user_id ORDER BY rn)
-                    AS sid
-           FROM gap
-         ), tot AS (
+      s"""WITH ${RelationalOps.sessionCtes}, tot AS (
            SELECT CAST(COUNT(*) AS BIGINT) AS n FROM
              (SELECT DISTINCT user_id, sid FROM s)
          ), c1 AS (
@@ -8402,22 +8308,7 @@ object SparkEntry {
     // q242: same 4-h sessions, first-letter traces capped at 20,
     // DuckDB's unit-cost levenshtein (identical DP to Spark's)
     Query("q242_conformance", RelationalOps.q242Conformance,
-      """WITH ev AS (
-           SELECT user_id, epoch_us(ts) AS us, event_id, event_type,
-                  ROW_NUMBER() OVER (PARTITION BY user_id
-                    ORDER BY epoch_us(ts), event_id) AS rn
-           FROM events WHERE user_id IS NOT NULL
-         ), gap AS (
-           SELECT *, CASE WHEN us - LAG(us) OVER (PARTITION BY user_id
-                    ORDER BY rn) > 14400000000
-                  THEN 1 ELSE 0 END AS brk
-           FROM ev
-         ), s AS (
-           SELECT user_id, rn, event_type,
-                  SUM(brk) OVER (PARTITION BY user_id ORDER BY rn)
-                    AS sid
-           FROM gap
-         ), sr AS (
+      s"""WITH ${RelationalOps.sessionCtes}, sr AS (
            SELECT user_id, sid, event_type,
                   ROW_NUMBER() OVER (PARTITION BY user_id, sid
                     ORDER BY rn) AS k

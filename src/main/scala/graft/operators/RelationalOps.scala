@@ -3106,28 +3106,12 @@ object RelationalOps {
                           AS BIGINT) END""").as("share_ppm"))
   }
 
-  /** q213: RECOMMENDER RANKING EVALUATION — Hit@10 / MRR@10 / MAP@10
-    * of a train-period popularity recommender against each customer's
-    * held-out purchases (the offline eval harness every recommender /
-    * retrieval system ships with; the metrics are the classic IR
-    * ones, e.g. Manning et al. IR ch.8). Time split at the 80% point
-    * of the order-date span (integer day arithmetic — no config);
-    * recommend the 10 most-purchased parts of the train period
-    * (popularity baseline — the eval MACHINERY is the operator);
-    * evaluate on customers with ≥1 post-split purchase.
-    *
-    * Exactness: reciprocal ranks in 1/2520 units (2520 = lcm(1..10))
-    * and AP terms in 1/6350400 units (2520² is divisible by any
-    * rank·min(m,10) product, both ≤ 10) — every per-user metric is an
-    * exact scaled integer, corpus means emit by integer round-half-up
-    * from DECIMAL(38,0) sums. Scale shape: train popularity is one
-    * map-combined count + a global top-10 (catalog-bounded — for
-    * per-key variants [[TopKPerKey]] is the operator); the 10-row
-    * list broadcasts into the test join; per-user scoring is one
-    * groupBy over (customer, part) distincts; hit terms unfold by
-    * posexplode on ≤10-element arrays. No driver loops, no doubles.
+  /** q213/q230's recommender harness: the train-period top-10 parts
+    * `(_rec, _rnk)` and the distinct held-out `(_cust, _part)`
+    * purchases, split at 80% of the order-date span.
     */
-  def q213RecEval(s: SparkSession, d: String): DataFrame = {
+  private def popularityHarness(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = {
     val o = Tables.orders(s, d).filter(col("o_orderdate").isNotNull)
       .select(col("o_orderkey"), col("o_custkey"),
         to_date(col("o_orderdate")).as("day"))
@@ -3150,6 +3134,61 @@ object RelationalOps {
       .join(li, col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("_cust"), col("l_partkey").as("_part"))
       .distinct()
+    (top10, testParts)
+  }
+
+  /** [[popularityHarness]] in DuckDB: the CTEs `o`, `sp` (the split
+    * day), `top10(rec, rnk)` and `test(cust, part)`.
+    */
+  val popularityHarnessCtes: String =
+    """o AS (
+           SELECT o_orderkey, o_custkey, CAST(o_orderdate AS DATE)
+             AS day
+           FROM orders WHERE o_orderdate IS NOT NULL
+         ), sp AS (
+           SELECT MIN(day) + CAST((4 * date_diff('day', MIN(day),
+             MAX(day))) // 5 AS INT) AS split
+           FROM o
+         ), top10 AS (
+           SELECT rec, rnk FROM (
+             SELECT l.l_partkey AS rec,
+                    CAST(ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC,
+                      l.l_partkey) AS BIGINT) AS rnk
+             FROM o CROSS JOIN sp
+             JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+             WHERE o.day < sp.split
+             GROUP BY l.l_partkey
+           ) WHERE rnk <= 10
+         ), test AS (
+           SELECT DISTINCT o.o_custkey AS cust, l.l_partkey AS part
+           FROM o CROSS JOIN sp
+           JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+           WHERE o.day >= sp.split
+         )"""
+
+  /** q213: RECOMMENDER RANKING EVALUATION — Hit@10 / MRR@10 / MAP@10
+    * of a train-period popularity recommender against each customer's
+    * held-out purchases (the offline eval harness every recommender /
+    * retrieval system ships with; the metrics are the classic IR
+    * ones, e.g. Manning et al. IR ch.8). Time split at the 80% point
+    * of the order-date span (integer day arithmetic — no config);
+    * recommend the 10 most-purchased parts of the train period
+    * (popularity baseline — the eval MACHINERY is the operator);
+    * evaluate on customers with ≥1 post-split purchase.
+    *
+    * Exactness: reciprocal ranks in 1/2520 units (2520 = lcm(1..10))
+    * and AP terms in 1/6350400 units (2520² is divisible by any
+    * rank·min(m,10) product, both ≤ 10) — every per-user metric is an
+    * exact scaled integer, corpus means emit by integer round-half-up
+    * from DECIMAL(38,0) sums. Scale shape: train popularity is one
+    * map-combined count + a global top-10 (catalog-bounded — for
+    * per-key variants [[TopKPerKey]] is the operator); the 10-row
+    * list broadcasts into the test join; per-user scoring is one
+    * groupBy over (customer, part) distincts; hit terms unfold by
+    * posexplode on ≤10-element arrays. No driver loops, no doubles.
+    */
+  def q213RecEval(s: SparkSession, d: String): DataFrame = {
+    val (top10, testParts) = popularityHarness(s, d)
     val perUser = testParts
       .join(broadcast(top10), col("_part") === col("_rec"), "left")
       .groupBy(col("_cust"))
@@ -3425,28 +3464,7 @@ object RelationalOps {
     val idcg = disc.scanLeft(0L)(_ + _).tail
     val discArr = array(disc.map(lit): _*)
     val idcgArr = array(idcg.map(lit): _*)
-    val o = Tables.orders(s, d).filter(col("o_orderdate").isNotNull)
-      .select(col("o_orderkey"), col("o_custkey"),
-        to_date(col("o_orderdate")).as("day"))
-    val span = o.agg(min(col("day")).as("_mn"), max(col("day")).as("_mx"))
-      .select(expr(
-        "date_add(_mn, CAST((4 * datediff(_mx, _mn)) DIV 5 AS INT))")
-        .as("_split"))
-    val od = o.crossJoin(broadcast(span))
-    val li = Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_partkey"))
-    val top10 = od.filter(col("day") < col("_split"))
-      .join(li, col("o_orderkey") === col("l_orderkey"))
-      .groupBy(col("l_partkey")).agg(count(lit(1)).as("_n"))
-      .orderBy(col("_n").desc, col("l_partkey").asc).limit(10)
-      .select(col("l_partkey").as("_rec"), row_number().over(
-        // global window over the LIMIT-10 artifact — bounded, benign
-        Window.orderBy(col("_n").desc, col("l_partkey").asc))
-        .cast("long").as("_rnk"))
-    val testParts = od.filter(col("day") >= col("_split"))
-      .join(li, col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("_cust"), col("l_partkey").as("_part"))
-      .distinct()
+    val (top10, testParts) = popularityHarness(s, d)
     val perUser = testParts
       .join(broadcast(top10), col("_part") === col("_rec"), "left")
       .groupBy(col("_cust"))
@@ -3478,6 +3496,27 @@ object RelationalOps {
         expr("CAST((2 * _sr + _u) DIV (2 * _u) AS BIGINT)")
           .as("recall_ppm"))
   }
+
+  /** q232/q242's 4-hour-gap sessions in DuckDB: the CTEs `ev`, `gap`
+    * and `s(user_id, rn, event_type, sid)`.
+    */
+  val sessionCtes: String =
+    """ev AS (
+           SELECT user_id, epoch_us(ts) AS us, event_id, event_type,
+                  ROW_NUMBER() OVER (PARTITION BY user_id
+                    ORDER BY epoch_us(ts), event_id) AS rn
+           FROM events WHERE user_id IS NOT NULL
+         ), gap AS (
+           SELECT *, CASE WHEN us - LAG(us) OVER (PARTITION BY user_id
+                    ORDER BY rn) > 14400000000
+                  THEN 1 ELSE 0 END AS brk
+           FROM ev
+         ), s AS (
+           SELECT user_id, rn, event_type,
+                  SUM(brk) OVER (PARTITION BY user_id ORDER BY rn)
+                    AS sid
+           FROM gap
+         )"""
 
   /** q232: SEQUENTIAL PATTERN MINING — support of every event-type
     * subsequence of length ≤ 3 within 4-h-gap sessions (the GSP /
