@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.internal.SQLConf
 
 /** The size gates that choose, from footer and size statistics, between
@@ -15,7 +15,9 @@ import org.apache.spark.sql.internal.SQLConf
   *   - `scale`: relational, plus every memory bound on its past-the-bound
   *     side — the 100 TB shape.
   *
-  * Any other value throws: a typo must not silently run `auto`.
+  * Any other value throws: a typo must not silently run `auto`. The
+  * scan-spread gate ([[spreadScan]]) reads no mode: a spread changes
+  * parallelism, not the path, so plans are the same under every mode.
   */
 object Gates {
   val Key = "spark.graft.gates"
@@ -66,6 +68,29 @@ object Gates {
   val BitmapDenseDomain = 1L << 26
   /** TopK map-side heap rows per partition: this / k keys, at least 1. */
   val TopKMapRows = 1L << 22
+
+  // Scan-spread gates: [[spreadScan]] round-robins a scan while the
+  // table's footer rows are at most the constant.
+  /** Footer rows of `embeddings` for the q120/q121 encode + ADC scan. */
+  val SpreadAnnRows = 1000000L
+  /** Footer rows of `orders`/`lineitem` for the q138/q237/q272 scans. */
+  val SpreadFactRows = 64000000L
+
+  /** `scan` (of table `table` under `d`) repartitioned round-robin to
+    * `defaultParallelism` when it has fewer partitions and the table's
+    * footer rows (no job) are at most `maxRows`. A one-file parquet
+    * table scans in a few tasks locally; at cluster scale the scan has
+    * enough partitions and this is a no-op, and past `maxRows` the
+    * round-robin would be a full shuffle the scan does not need.
+    */
+  def spreadScan(s: SparkSession, d: String, table: String,
+      scan: DataFrame, maxRows: Long): DataFrame = {
+    val cores = s.sparkContext.defaultParallelism
+    if (scan.rdd.getNumPartitions < cores &&
+        graft.sources.TableStatistics.tableRowCount(s, d, table) <= maxRows)
+      scan.repartition(cores)
+    else scan
+  }
 
   def mode(s: SparkSession): Mode = parse(s.conf.getOption(Key))
   def mode(conf: SQLConf): Mode = parse(Option(conf.getConfString(Key, null)))

@@ -43,7 +43,6 @@ object IvfPq {
 
   private[graft] val M = 8
   private[graft] val SubK = 16
-  private val K = 5
   private[graft] val CoarseRounds = 3
   private[graft] val SampleCap = 4096
 
@@ -169,58 +168,22 @@ object IvfPq {
       nProbe, "pcell")
 
     // per-(query, cell) ADC tables on the query residual — |queries|·
-    // nProbe rows, each M maps of ≤SubK exact long entries → broadcast
+    // nProbe rows, each M maps of ≤SubK exact long entries → broadcast;
+    // the cell-pruned scan reads codes + cell only (when codes come from
+    // a cell-partitioned parquet artifact the probe join's cell
+    // predicate is partition pruning, not a scan)
     val withRes = probed.withColumn("_qr",
       residual(col("_q6"), col("pcell"), coarse))
-    val tables = (0 until M).foldLeft(withRes) { (df, m) =>
-      val sl = slice(col("_qr"), m * subDim + 1, subDim)
-      val p2 = VectorExpressions.idot(spark, sl, sl)
-      val cb = pq(m)
-      df.withColumn(s"dt$m", map_from_arrays(
-        typedlit(cb.map(_._1).toSeq),
-        array(cb.map { case (_, c) =>
-          val cl = typedlit(c.map(_.toInt).toSeq)
-          val c2 = c.map(v => v * v).sum
-          p2 + lit(c2) - lit(2L) * VectorExpressions.idot(spark, sl, cl)
-        }: _*)))
-    }.select(col("qid") +: col("pcell") +:
-      (0 until M).map(m => col(s"dt$m")): _*)
-
-    // cell-pruned ADC scan: codes + cell only; when codes come from a
-    // cell-partitioned parquet artifact the probe join's cell predicate
-    // is partition pruning, not a scan
-    val codesOnly = codes.select(
-      col("vec_id").as("nid") +: col("cell") +:
-        (0 until M).map(m => col(s"code$m")): _*)
-    val adist = (0 until M).map(m =>
-      element_at(col(s"dt$m"), col(s"code$m"))).reduce(_ + _)
-    val cand = codesOnly
-      .join(broadcast(tables), col("cell") === col("pcell"))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("adist", adist)
-    val short = graft.plans.TopK.perKey(cand, keys = Seq("qid"),
-      order = Seq(("adist", false), ("nid", false)), k = shortlist)
-      .select("qid", "nid")
-
-    // exact re-rank: floats touched only for the shortlist
-    val reranked = short
-      .join(vecs.select(col("vec_id").as("nid"), col("embedding").as("ne")),
-        "nid")
-      .join(broadcast(queries.select(col("qid"), col("qe"))), "qid")
-      .withColumn("cos_sim",
-        round(VectorExpressions.cosine(spark, col("qe"), col("ne")), 4))
-    graft.plans.TopK.perKey(reranked, keys = Seq("qid"),
-        order = Seq(("cos_sim", true), ("nid", false)), k = K)
-      .select("qid", "nid", "cos_sim")
+    PqAnn.adcSearch(spark, withRes, col("_qr"), pq, subDim,
+      tables => codes.select(
+          col("vec_id").as("nid") +: col("cell") +:
+            (0 until M).map(m => col(s"code$m")): _*)
+        .join(broadcast(tables.select(col("qid") +: col("pcell") +:
+          (0 until M).map(m => col(s"dt$m")): _*)),
+          col("cell") === col("pcell")),
+      vecs, queries, shortlist)
   }
 
-  def q121IvfPq(s: SparkSession, d: String): DataFrame = {
-    // r15: size-gated scan spread — the q120 rationale
-    val emb = Tables.embeddings(s, d)
-    val spread = if (graft.sources.TableStatistics
-          .tableRowCount(s, d, "embeddings") <= 1000000L &&
-        emb.rdd.getNumPartitions < s.sparkContext.defaultParallelism)
-      emb.repartition(s.sparkContext.defaultParallelism) else emb
-    search(s, spread, nCells = 16, nProbe = 8)
-  }
+  def q121IvfPq(s: SparkSession, d: String): DataFrame =
+    search(s, PqAnn.spreadEmbeddings(s, d), nCells = 16, nProbe = 8)
 }

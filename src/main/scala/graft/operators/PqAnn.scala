@@ -107,15 +107,33 @@ object PqAnn {
     val subDim = dim / M
     val codebooks = trainCodebooks(emb, dim)
     val coded = encode(emb, codebooks, dim).localCheckpoint(false)
+    val queries = coded.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+      .withColumn("_q6", IntKMeans.e6(col("qe")))
+    // the scan side carries ONLY ids + codes
+    adcSearch(spark, queries, col("_q6"), codebooks, subDim,
+      tables => coded.select(
+          col("vec_id").as("nid") +: (0 until M).map(m => col(s"code$m")): _*)
+        .crossJoin(broadcast(tables.select(
+          col("qid") +: (0 until M).map(m => col(s"dt$m")): _*))),
+      coded, queries, shortlist)
+  }
 
-    // per-query ADC tables: M maps code → exact long d² (maps, not
-    // arrays — dropped empty clusters may leave cid gaps)
-    val queries = (0 until M).foldLeft(
-      coded.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-        .withColumn("_q6", IntKMeans.e6(col("qe")))
-    ) { (df, m) =>
-      val sl = slice(col("_q6"), m * subDim + 1, subDim)
+  /** The ADC search tail of [[search]] and [[IvfPq.searchEncoded]]:
+    * per-row tables `dt0..dt{M-1}` on `probes` — maps code → exact long
+    * d² between each subspace slice of the e6 column `q` and
+    * `codebooks` (maps, not arrays: dropped empty clusters may leave
+    * cid gaps) —, the candidates `candidates(tables)` (qid, nid,
+    * code and table columns) scored by M map lookups, the (adist, nid)
+    * `shortlist` cut, and the exact cosine re-rank of the survivors
+    * against `vecs(vec_id, embedding)` for the `queries(qid, qe)`.
+    */
+  private[operators] def adcSearch(spark: SparkSession, probes: DataFrame,
+      q: Column, codebooks: Array[Array[(Int, Array[Long])]], subDim: Int,
+      candidates: DataFrame => DataFrame, vecs: DataFrame,
+      queries: DataFrame, shortlist: Int): DataFrame = {
+    val tables = (0 until M).foldLeft(probes) { (df, m) =>
+      val sl = slice(q, m * subDim + 1, subDim)
       val p2 = VectorExpressions.idot(spark, sl, sl)
       val cb = codebooks(m)
       df.withColumn(s"dt$m", map_from_arrays(
@@ -125,17 +143,10 @@ object PqAnn {
           val c2 = c.map(v => v * v).sum
           p2 + lit(c2) - lit(2L) * VectorExpressions.idot(spark, sl, cl)
         }: _*)))
-    }.drop("_q6")
-
-    // the scan side carries ONLY ids + codes; approximate distance is
-    // M map lookups per candidate — exact long
-    val codesOnly = coded.select(
-      col("vec_id").as("nid") +: (0 until M).map(m => col(s"code$m")): _*)
+    }
     val adist = (0 until M).map(m =>
       element_at(col(s"dt$m"), col(s"code$m"))).reduce(_ + _)
-    val cand = codesOnly.crossJoin(
-        broadcast(queries.select(
-          col("qid") +: (0 until M).map(m => col(s"dt$m")): _*)))
+    val cand = candidates(tables)
       .filter(col("qid") =!= col("nid"))
       .withColumn("adist", adist)
     val short = graft.plans.TopK.perKey(cand, keys = Seq("qid"),
@@ -144,7 +155,7 @@ object PqAnn {
 
     // exact re-rank: vectors touched only for the shortlist
     val reranked = short
-      .join(coded.select(col("vec_id").as("nid"), col("embedding").as("ne")),
+      .join(vecs.select(col("vec_id").as("nid"), col("embedding").as("ne")),
         "nid")
       .join(broadcast(queries.select(col("qid"), col("qe"))), "qid")
       .withColumn("cos_sim",
@@ -154,16 +165,14 @@ object PqAnn {
       .select("qid", "nid", "cos_sim")
   }
 
-  def q120PqAnn(s: SparkSession, d: String): DataFrame = {
-    // r15: the encode + ADC scan inherits the one-file parquet split
-    // (≤4 tasks carried the whole per-row subArgmin/map-lookup work) —
-    // spread it, SIZE-GATED like q36 (footer stat, no job; past 1M
-    // rows the round-robin is a real shuffle the scan doesn't need)
-    val emb = Tables.embeddings(s, d)
-    val spread = if (graft.sources.TableStatistics
-          .tableRowCount(s, d, "embeddings") <= 1000000L &&
-        emb.rdd.getNumPartitions < s.sparkContext.defaultParallelism)
-      emb.repartition(s.sparkContext.defaultParallelism) else emb
-    search(s, spread)
-  }
+  /** `embeddings` spread for the per-row encode + ADC work, which
+    * would otherwise run in the few tasks of a one-file scan.
+    */
+  private[operators] def spreadEmbeddings(s: SparkSession, d: String)
+      : DataFrame =
+    graft.Gates.spreadScan(s, d, "embeddings", Tables.embeddings(s, d),
+      graft.Gates.SpreadAnnRows)
+
+  def q120PqAnn(s: SparkSession, d: String): DataFrame =
+    search(s, spreadEmbeddings(s, d))
 }

@@ -570,19 +570,11 @@ object StatsOps {
     val b = 64
     // the testdata parquet is a single row group → one scan task; the
     // 64× explode+md5 behind it is per-row-heavy, so spread the skinny
-    // (key, price) projection across cores first (the Tables.events
-    // rebalance rationale — at production scale multi-row-group files
-    // make this a no-op-cost shuffle of a 2-column table)
-    val orders0 = Tables.orders(s, d)
-      .select(col("o_orderkey"),
-        col("o_totalprice").cast("decimal(18,4)").as("price"))
-    // r15: partition-count + size gate (the q237 rule) — the spread
-    // was unconditional before
-    val orders = if (orders0.rdd.getNumPartitions <
-          s.sparkContext.defaultParallelism &&
-        graft.sources.TableStatistics.tableRowCount(s, d, "orders")
-          <= 64000000L)
-      orders0.repartition(s.sparkContext.defaultParallelism) else orders0
+    // (key, price) projection across cores first
+    val orders = graft.Gates.spreadScan(s, d, "orders",
+      Tables.orders(s, d).select(col("o_orderkey"),
+        col("o_totalprice").cast("decimal(18,4)").as("price")),
+      graft.Gates.SpreadFactRows)
     val thresholds = PoissonT.zipWithIndex
       .foldRight(lit(PoissonT.size)) { case ((t, k), els) =>
         when(col("hx") < t, lit(k)).otherwise(els) }
@@ -2126,20 +2118,11 @@ object StatsOps {
     * is a broadcast of 20×4 bucket keys.
     */
   def q237CountMin(s: SparkSession, d: String): DataFrame = {
-    // r14: the 4 md5 bucket hashes per row dominate, and the slim
-    // one-column scan arrives in ≤4 parquet tasks locally — spread it
-    // ONLY when the scan's own parallelism is below the session's
-    // (at cluster scale the scan already has more partitions and the
-    // condition is false, so no extra shuffle is ever added there)
-    val li0 = Tables.lineitem(s, d).select(col("l_partkey"))
-    // r15 (ADVICE low): ALSO size-gate the spread (footer row count,
-    // no job) — partition-count-vs-core-count alone would full-shuffle
-    // a moderately-split corpus scan on a many-core cluster
-    val li = if (li0.rdd.getNumPartitions <
-          s.sparkContext.defaultParallelism &&
-        graft.sources.TableStatistics.tableRowCount(s, d, "lineitem")
-          <= 64000000L)
-      li0.repartition(s.sparkContext.defaultParallelism) else li0
+    // the 4 md5 bucket hashes per row dominate, and the slim
+    // one-column scan arrives in ≤4 parquet tasks locally
+    val li = graft.Gates.spreadScan(s, d, "lineitem",
+      Tables.lineitem(s, d).select(col("l_partkey")),
+      graft.Gates.SpreadFactRows)
     val rows = array((0 until 4).map(lit): _*)
     val keyed = li.select(col("l_partkey"),
       explode(rows).as("j"))
@@ -2905,16 +2888,11 @@ object StatsOps {
     * ln is per-row column work (codegen'd integer arithmetic).
     */
   def q272Elasticity(s: SparkSession, d: String): DataFrame = {
-    // r14: spread the fact scan when parquet under-parallelizes it
-    // locally (the q237 partition-aware gate — no-op at cluster scale)
-    val li0 = Tables.lineitem(s, d)
-      .select(col("l_partkey"), col("l_quantity"), col("l_extendedprice"))
-    // r15 (ADVICE low): size-gated like q237 — see the note there
-    val li = if (li0.rdd.getNumPartitions <
-          s.sparkContext.defaultParallelism &&
-        graft.sources.TableStatistics.tableRowCount(s, d, "lineitem")
-          <= 64000000L)
-      li0.repartition(s.sparkContext.defaultParallelism) else li0
+    // spread the fact scan when parquet under-parallelizes it locally
+    val li = graft.Gates.spreadScan(s, d, "lineitem",
+      Tables.lineitem(s, d)
+        .select(col("l_partkey"), col("l_quantity"), col("l_extendedprice")),
+      graft.Gates.SpreadFactRows)
     val base = li
       .join(Tables.part(s, d).select(col("p_partkey"), col("p_brand")),
         col("l_partkey") === col("p_partkey"))
