@@ -7,6 +7,14 @@ package graft
   * then each query is timed. Prints ONE machine-parseable JSON line.
   */
 object Bench {
+
+  /** A run is contended, so not an idle record, when the 1-min loadavg
+    * at its start exceeds a quarter of the session's cores: 8.0 at
+    * `local[32]`, 1.0 at `local[4]`.
+    */
+  def contended(startLoadAvg: Double, cpus: Int): Boolean =
+    startLoadAvg > cpus / 4.0
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // sampled BEFORE this JVM generates its own load — external
@@ -81,26 +89,15 @@ object Bench {
     try {
       val sfName = new java.io.File(sfDir).getName
       val dir = sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR", ".")
-      // r15 (VERDICT r14 #2): key the durable record on CORE COUNT too —
-      // the r14 loadavg guard stopped SF/condition clobbering but the
-      // driver's 8-core scaling sweep still overwrote the idle local[32]
-      // record (same SF, same idle box, different master). Per-(SF, cpus)
-      // names make the two sweeps distinct artifacts.
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+      // the durable record is keyed on SF and on the session's core
+      // count, so a scaling sweep at another master is its own artifact
+      val cpus = spark.sparkContext.defaultParallelism
       val path = java.nio.file.Paths.get(dir,
         s"BENCH_LOCAL_${sfName}_c$cpus.json")
-      // condition guard (r14, VERDICT r13 #1/#8): the per-SF name
-      // protects the durable record from SF clobbering but not from
-      // CONDITION clobbering — r13's driver gate run (loadavg ≈ a full
-      // verify pipeline) overwrote the idle 346.6 s record with a
-      // 393.6 s contended one. If the 1-min loadavg at START exceeded
-      // the threshold (external load beyond this JVM's own 32 threads)
-      // and a record already exists, keep the record and write the
-      // contended run to a sidecar instead. The stdout line (what the
-      // driver parses) is always printed unconditionally above.
-      val contended = startLoadAvg > sys.env
-        .getOrElse("SPARK_GRAFT_BENCH_MAX_LOAD", "8.0").toDouble
-      if (contended && java.nio.file.Files.exists(path)) {
+      // condition guard: a run started under external load (see
+      // [[contended]]) keeps an existing record and goes to a sidecar.
+      // The stdout line is always printed above.
+      if (contended(startLoadAvg, cpus) && java.nio.file.Files.exists(path)) {
         System.err.println(f"[bench] loadavg $startLoadAvg%.1f at start " +
           "— keeping the existing idle record, writing .contended sidecar")
         java.nio.file.Files.write(

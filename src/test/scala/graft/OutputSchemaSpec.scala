@@ -33,6 +33,18 @@ class OutputSchemaSpec extends AnyFunSuite with SparkTestBase {
       case _ => Seq.empty
     }
 
+  test("SparkEntry.declared: 281 uniquely named queries, each with a " +
+      "non-blank oracle; queries and oracleSql share its key set") {
+    val names = SparkEntry.declared.map(_.name)
+    assert(names.size == 281, s"${names.size} declared queries")
+    assert(names.distinct.size == names.size,
+      "duplicate names: " + names.diff(names.distinct).mkString(", "))
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+    assert(SparkEntry.queries.keySet == names.toSet)
+    val blank = SparkEntry.declared.filter(_.oracle.trim.isEmpty)
+    assert(blank.isEmpty, "blank oracles: " + blank.map(_.name).mkString(", "))
+  }
+
   test("no SparkEntry.queries output schema contains DecimalType " +
       "(cross-engine hash rule)") {
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
