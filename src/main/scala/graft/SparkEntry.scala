@@ -2569,30 +2569,13 @@ object SparkEntry {
   private def ivfExactOracleSql: String = {
     val km = graft.operators.IntKMeans
       .kmeansCtes("base", "vec_id", k = 16, rounds = 3, cap = 4096, p = "k")
-    val rr = graft.operators.IntKMeans.cosineRerankCtes("cand", "r")
+    val rr = graft.operators.IntKMeans.cosineRerankCtes("cand")
     s"""WITH base AS MATERIALIZED (
            SELECT vec_id,
                   ${graft.operators.IntKMeans.e6Sql("embedding")} AS e6
            FROM embeddings
-         ), $km, ad AS (
-           SELECT vec_id, i, e6[i] AS e
-           FROM (SELECT vec_id, e6,
-                        unnest(generate_series(1, len(e6))) AS i
-                 FROM base)
-         ), aa AS MATERIALIZED (
-           SELECT p.vec_id, c.cid, SUM((p.e - c.e) * (p.e - c.e)) AS d2
-           FROM ad p JOIN kcd3 c ON p.i = c.i GROUP BY 1, 2
-         ), asg AS (
-           SELECT vec_id, cid FROM (
-             SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id
-               ORDER BY d2, cid) AS rn FROM aa)
-           WHERE rn = 1
-         ), probe AS (
-           SELECT vec_id AS qid, cid FROM (
-             SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id
-               ORDER BY d2, cid) AS rn FROM aa WHERE vec_id < 10)
-           WHERE rn <= 8
-         ), cand AS (
+         ), $km,
+         ${graft.operators.IntKMeans.assignCtes("kcd3", nProbe = 8)}, cand AS (
            SELECT pr.qid, a.vec_id AS nid
            FROM probe pr JOIN asg a USING (cid)
            WHERE a.vec_id <> pr.qid
@@ -2665,7 +2648,7 @@ object SparkEntry {
              SELECT qid, nid, ROW_NUMBER() OVER (PARTITION BY qid
                ORDER BY adist, nid) AS rn FROM adc)
            WHERE rn <= 96
-         ), ${graft.operators.IntKMeans.cosineRerankCtes("shortc", "r")}
+         ), ${graft.operators.IntKMeans.cosineRerankCtes("shortc")}
          SELECT qid, nid, cos_sim FROM (
            SELECT qid, nid, cos_sim, row_number() OVER (PARTITION BY qid
              ORDER BY cos_sim DESC, nid) AS rn FROM rscored)
@@ -2695,25 +2678,8 @@ object SparkEntry {
            SELECT vec_id,
                   ${graft.operators.IntKMeans.e6Sql("embedding")} AS e6
            FROM embeddings
-         ), $km, ad AS MATERIALIZED (
-           SELECT vec_id, i, e6[i] AS e
-           FROM (SELECT vec_id, e6,
-                        unnest(generate_series(1, len(e6))) AS i
-                 FROM base)
-         ), aa AS MATERIALIZED (
-           SELECT p.vec_id, c.cid, SUM((p.e - c.e) * (p.e - c.e)) AS d2
-           FROM ad p JOIN $kcd c ON p.i = c.i GROUP BY 1, 2
-         ), asg AS MATERIALIZED (
-           SELECT vec_id, cid FROM (
-             SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id
-               ORDER BY d2, cid) AS rn FROM aa)
-           WHERE rn = 1
-         ), probe AS (
-           SELECT vec_id AS qid, cid FROM (
-             SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id
-               ORDER BY d2, cid) AS rn FROM aa WHERE vec_id < 10)
-           WHERE rn <= 8
-         ), rd AS MATERIALIZED (
+         ), $km, ${graft.operators.IntKMeans.assignCtes(kcd, nProbe = 8)},
+         rd AS MATERIALIZED (
            SELECT p.vec_id, g.cid AS cell, p.i, p.e - c.e AS e
            FROM ad p JOIN asg g USING (vec_id)
            JOIN $kcd c ON c.cid = g.cid AND c.i = p.i
@@ -2770,7 +2736,7 @@ object SparkEntry {
              SELECT qid, nid, ROW_NUMBER() OVER (PARTITION BY qid
                ORDER BY adist, nid) AS rn FROM adc)
            WHERE rn <= 64
-         ), ${graft.operators.IntKMeans.cosineRerankCtes("shortc", "r")}
+         ), ${graft.operators.IntKMeans.cosineRerankCtes("shortc")}
          SELECT qid, nid, cos_sim FROM (
            SELECT qid, nid, cos_sim, row_number() OVER (PARTITION BY qid
              ORDER BY cos_sim DESC, nid) AS rn FROM rscored)
@@ -2790,20 +2756,7 @@ object SparkEntry {
            SELECT vec_id, embedding,
                   ${graft.operators.IntKMeans.e6Sql("embedding")} AS e6
            FROM embeddings
-         ), $km, ad AS (
-           SELECT vec_id, i, e6[i] AS e
-           FROM (SELECT vec_id, e6,
-                        unnest(generate_series(1, len(e6))) AS i
-                 FROM base)
-         ), aa AS (
-           SELECT p.vec_id, c.cid, SUM((p.e - c.e) * (p.e - c.e)) AS d2
-           FROM ad p JOIN kcd2 c ON p.i = c.i GROUP BY 1, 2
-         ), asg AS (
-           SELECT vec_id, cid FROM (
-             SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id
-               ORDER BY d2, cid) AS rn FROM aa)
-           WHERE rn = 1
-         ), un AS (
+         ), $km, ${graft.operators.IntKMeans.assignCtes("kcd2")}, un AS (
            SELECT b.vec_id, g.cid AS cell,
                   CAST(b.embedding[c.i] AS DOUBLE) AS x,
                   CAST(c.e AS DOUBLE) AS y
@@ -4245,22 +4198,8 @@ object SparkEntry {
     // the 15-iteration recursion is engine-exact (// == Spark div on
     // positives)
     Query("q105_pagerank", GraphOps.q105PageRank,
-      s"""WITH RECURSIVE ${GraphOps.coPurchaseEdgesCtes}, deg AS (
-           SELECT src, count(*) AS od FROM edges GROUP BY src
-         ), n AS (SELECT count(*) AS nn FROM deg),
-         it AS (
-           SELECT 0 AS i, src AS node, 1000000000000 // nn AS r
-           FROM deg, n
-           UNION ALL
-           SELECT i + 1, e.dst,
-                  CAST((15 * (1000000000000 // (SELECT nn FROM n))) // 100
-                       + (85 * SUM(r // d.od)) // 100 AS BIGINT)
-           FROM it
-           JOIN edges e ON it.node = e.src
-           JOIN deg d ON it.node = d.src
-           WHERE i < 15
-           GROUP BY i + 1, e.dst
-         )
+      s"""WITH RECURSIVE ${GraphOps.coPurchaseEdgesCtes},
+         ${GraphOps.pageRankCtes(15)}
          SELECT node AS partkey, CAST(r AS BIGINT) AS rank_ppt
          FROM it WHERE i = 15"""),
     Query("q106_bpe_encode", BpeTrain.q106BpeEncode, bpeEncodeOracleSql),
@@ -4587,19 +4526,7 @@ object SparkEntry {
          FROM r WHERE rk <= 5"""),
     Query("q126_label_prop", GraphOps.q126LabelProp,
       s"""WITH RECURSIVE ${GraphOps.prunedCoPurchaseEdgesCtes(2)},
-         nodes AS (SELECT src FROM edges GROUP BY src),
-         it AS (
-           SELECT 0 AS i, src AS node, src AS lbl FROM nodes
-           UNION ALL
-           SELECT i, node, lbl FROM (
-             SELECT it.i + 1 AS i, e.dst AS node, it.lbl AS lbl,
-                    COUNT(*) AS c
-             FROM it JOIN edges e ON it.node = e.src
-             WHERE it.i < 5
-             GROUP BY 1, 2, 3
-           ) QUALIFY row_number() OVER (PARTITION BY i, node
-               ORDER BY c DESC, lbl ASC) = 1
-         )
+         ${GraphOps.labelPropagationCtes(5)}
          SELECT node AS partkey, CAST(lbl AS BIGINT) AS community
          FROM it WHERE i = 5"""),
     Query("q127_convert_latency", RelationalOps.q127ConvertLatency,
@@ -5047,7 +4974,7 @@ object SparkEntry {
                 ROUND(hi, 4) AS ci_hi
          FROM p, ci"""),
     Query("q139_textrank", TextOps.q139TextRank,
-      """WITH RECURSIVE toks AS (
+      s"""WITH RECURSIVE toks AS (
            SELECT list_filter(string_split_regex(lower(text), '[^a-z]+'),
                     x -> length(x) >= 4) AS tk
            FROM documents WHERE text IS NOT NULL
@@ -5062,22 +4989,7 @@ object SparkEntry {
          ), edges AS (
            SELECT w1 AS src, w2 AS dst FROM pairs
            UNION ALL SELECT w2, w1 FROM pairs
-         ), deg AS (
-           SELECT src, count(*) AS od FROM edges GROUP BY src
-         ), n AS (SELECT count(*) AS nn FROM deg),
-         it AS (
-           SELECT 0 AS i, src AS node, 1000000000000 // nn AS r
-           FROM deg, n
-           UNION ALL
-           SELECT i + 1, e.dst,
-                  CAST((15 * (1000000000000 // (SELECT nn FROM n))) // 100
-                       + (85 * SUM(r // d.od)) // 100 AS BIGINT)
-           FROM it
-           JOIN edges e ON it.node = e.src
-           JOIN deg d ON it.node = d.src
-           WHERE i < 10
-           GROUP BY i + 1, e.dst
-         )
+         ), ${GraphOps.pageRankCtes(10)}
          SELECT node AS word, CAST(r AS BIGINT) AS rank_ppt
          FROM it WHERE i = 10
          ORDER BY rank_ppt DESC, word LIMIT 20"""),
@@ -5823,19 +5735,7 @@ object SparkEntry {
          FROM sc"""),
     Query("q167_modularity", GraphOps.q167Modularity,
       s"""WITH RECURSIVE ${GraphOps.prunedCoPurchaseEdgesCtes(2)},
-         nodes AS (SELECT src FROM edges GROUP BY src),
-         it AS (
-           SELECT 0 AS i, src AS node, src AS lbl FROM nodes
-           UNION ALL
-           SELECT i, node, lbl FROM (
-             SELECT it.i + 1 AS i, e.dst AS node, it.lbl AS lbl,
-                    COUNT(*) AS c
-             FROM it JOIN edges e ON it.node = e.src
-             WHERE it.i < 5
-             GROUP BY 1, 2, 3
-           ) QUALIFY row_number() OVER (PARTITION BY i, node
-               ORDER BY c DESC, lbl ASC) = 1
-         ), comm AS (
+         ${GraphOps.labelPropagationCtes(5)}, comm AS (
            SELECT node, lbl AS community FROM it WHERE i = 5
          ), m2t AS (
            SELECT CAST(COUNT(*) AS BIGINT) AS m2 FROM edges

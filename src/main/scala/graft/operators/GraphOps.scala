@@ -73,6 +73,27 @@ object GraphOps {
     } finally table.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
+  /** [[pageRank]] in DuckDB over a CTE `edges(src, dst)`: `deg`, `n`
+    * and the recursive `it(i, node, r)`; round `iters` is the result.
+    */
+  def pageRankCtes(iters: Int): String =
+    s"""deg AS (
+           SELECT src, count(*) AS od FROM edges GROUP BY src
+         ), n AS (SELECT count(*) AS nn FROM deg),
+         it AS (
+           SELECT 0 AS i, src AS node, 1000000000000 // nn AS r
+           FROM deg, n
+           UNION ALL
+           SELECT i + 1, e.dst,
+                  CAST((15 * (1000000000000 // (SELECT nn FROM n))) // 100
+                       + (85 * SUM(r // d.od)) // 100 AS BIGINT)
+           FROM it
+           JOIN edges e ON it.node = e.src
+           JOIN deg d ON it.node = d.src
+           WHERE i < $iters
+           GROUP BY i + 1, e.dst
+         )"""
+
   /** 15-iteration damped PageRank over a SYMMETRIC edge list
     * (src, dst) with no self-loops (symmetry ⇒ no dangling mass, every
     * node keeps outdeg ≥ 1). Rank mass totals ~10¹² ppt; the update is
@@ -1461,6 +1482,25 @@ object GraphOps {
          ), edges AS (
            SELECT s1 AS src, s2 AS dst FROM pairs
            UNION ALL SELECT s2, s1 FROM pairs
+         )"""
+
+  /** [[labelPropagation]] in DuckDB over a CTE `edges(src, dst)`:
+    * `nodes` and the recursive `it(i, node, lbl)`; round `rounds` is
+    * the result.
+    */
+  def labelPropagationCtes(rounds: Int): String =
+    s"""nodes AS (SELECT src FROM edges GROUP BY src),
+         it AS (
+           SELECT 0 AS i, src AS node, src AS lbl FROM nodes
+           UNION ALL
+           SELECT i, node, lbl FROM (
+             SELECT it.i + 1 AS i, e.dst AS node, it.lbl AS lbl,
+                    COUNT(*) AS c
+             FROM it JOIN edges e ON it.node = e.src
+             WHERE it.i < $rounds
+             GROUP BY 1, 2, 3
+           ) QUALIFY row_number() OVER (PARTITION BY i, node
+               ORDER BY c DESC, lbl ASC) = 1
          )"""
 
   /** 142. Community detection by synchronous label propagation

@@ -225,29 +225,58 @@ object IntKMeans {
     sb.toString
   }
 
+  /** [[assignCell]] (and, for `nProbe` > 0, [[probeCells]] of the
+    * queries vec_id < 10) in DuckDB over `base(vec_id, e6)` and the
+    * centroid CTE `cents(cid, i, e)` of a [[kmeansCtes]] chain: `ad`
+    * (one row per coordinate), `aa` (exact long d² for every (vector,
+    * centroid) pair), `asg(vec_id, cid)` (argmin, smallest-cid ties)
+    * and `probe(qid, cid)` (the `nProbe` nearest cells).
+    */
+  def assignCtes(cents: String, nProbe: Int = 0): String = {
+    val probe = if (nProbe <= 0) "" else s""", probe AS (
+           SELECT vec_id AS qid, cid FROM (
+             SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id
+               ORDER BY d2, cid) AS rn FROM aa WHERE vec_id < 10)
+           WHERE rn <= $nProbe
+         )"""
+    s"""ad AS MATERIALIZED (
+           SELECT vec_id, i, e6[i] AS e
+           FROM (SELECT vec_id, e6,
+                        unnest(generate_series(1, len(e6))) AS i
+                 FROM base)
+         ), aa AS MATERIALIZED (
+           SELECT p.vec_id, c.cid, SUM((p.e - c.e) * (p.e - c.e)) AS d2
+           FROM ad p JOIN $cents c ON p.i = c.i GROUP BY 1, 2
+         ), asg AS MATERIALIZED (
+           SELECT vec_id, cid FROM (
+             SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id
+               ORDER BY d2, cid) AS rn FROM aa)
+           WHERE rn = 1
+         )$probe"""
+  }
+
   /** The q32 cosine re-rank tail shared by the ANN oracles: CTEs
     * scoring `(qid, nid)` pairs from `candCte` by ROUND-4 cosine over
-    * the ORIGINAL float embeddings, then the top-`k` cut by
-    * (cos_sim DESC, nid). Emits `{p}fu, {p}un, {p}dots, {p}scored`;
-    * the caller SELECTs from `{p}scored` with its own rank filter.
+    * the ORIGINAL float embeddings. Emits `rfu, run, rdots, rscored`;
+    * the caller SELECTs from `rscored` with its own rank filter.
     */
-  def cosineRerankCtes(candCte: String, p: String): String =
-    s"""${p}fu AS (
+  def cosineRerankCtes(candCte: String): String =
+    s"""rfu AS (
           SELECT c.qid, c.nid, eq.embedding AS qe, en.embedding AS ne
           FROM $candCte c
           JOIN embeddings eq ON eq.vec_id = c.qid
           JOIN embeddings en ON en.vec_id = c.nid
-        ), ${p}un AS (
+        ), run AS (
           SELECT qid, nid, CAST(unnest(qe) AS DOUBLE) AS x,
                  CAST(unnest(ne) AS DOUBLE) AS y
-          FROM ${p}fu
-        ), ${p}dots AS (
+          FROM rfu
+        ), rdots AS (
           SELECT qid, nid, SUM(x*y) AS dot, SUM(x*x) AS na,
                  SUM(y*y) AS nb
-          FROM ${p}un GROUP BY qid, nid
-        ), ${p}scored AS (
+          FROM run GROUP BY qid, nid
+        ), rscored AS (
           SELECT qid, nid,
                  ROUND(dot / (sqrt(na) * sqrt(nb)), 4) AS cos_sim
-          FROM ${p}dots
+          FROM rdots
         )"""
 }
