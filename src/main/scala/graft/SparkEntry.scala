@@ -26,9 +26,11 @@ object SparkEntry {
   final case class Query(name: String,
       run: (SparkSession, String) => DataFrame, oracle: String)
 
+  // `declared` is rebuilt per call and not kept: only the run functions
+  // stay live, the ~0.8 MB of oracle text is built when it is asked for
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     declared.map(q => q.name -> q.run).toMap
-  lazy val oracleSql: Map[String, String] =
+  def oracleSql: Map[String, String] =
     declared.map(q => q.name -> q.oracle).toMap
 
   /** q104's blocked postings; q118's delta-maintained index is defined
@@ -54,14 +56,12 @@ object SparkEntry {
                   AS postings
          FROM rk GROUP BY term, block_id"""
 
-  /** q29's generated oracle (r13): the q31 md5-MinHash replay widened
-    * to the full 32-hash / 8-band family — 32 `list_min(md5('j|'||x))`
-    * minima, comma-joined 4-minima band keys, the bucket-join distinct
-    * pairs, and the signature-agreement estimate as 32 exact equality
+  /** q29's oracle: q31's md5-MinHash candidates
+    * ([[DedupOps.md5CandidateCtes]]) at the full 32-hash / 8-band
+    * shape, and the signature-agreement estimate as 32 exact equality
     * terms; the 0.5 threshold is the integer compare agree·2 ≥ 32 and
     * est_jaccard = ROUND(agree/32, 3) rounds an exact dyadic on both
-    * engines. `sigs` is MATERIALIZED (read by the band explode and both
-    * pair-side joins — the q263 CTE-inlining rule).
+    * engines.
     */
   private def minhashLshOracleSql: String = {
     val agree = (0 until 32).map(j =>
@@ -89,14 +89,6 @@ object SparkEntry {
     * sign-disagreement terms, ≤ 12. All-integer end to end.
     */
   private def simhashNearDupOracleSql: String = {
-    val nibs = (0 until 16).map(p =>
-      s"strpos('0123456789abcdef', substr(hx, ${p + 1}, 1)) - 1 AS n$p")
-      .mkString(",\n                  ")
-    val votes = (0 until 64).map { b =>
-      val p = b / 4
-      val m = 1 << (b % 4)
-      s"SUM(CASE WHEN ((n$p // $m) % 2) = 1 THEN 1 ELSE -1 END) AS v$b"
-    }.mkString(",\n                  ")
     val signs = (0 until 64).map(b =>
       s"CASE WHEN v$b >= 0 THEN 1 ELSE 0 END AS s$b")
       .mkString(",\n                  ")
@@ -107,31 +99,12 @@ object SparkEntry {
     val ham = (0 until 64).map(b =>
       s"CASE WHEN sa.s$b <> sb.s$b THEN 1 ELSE 0 END")
       .mkString("\n                    + ")
-    s"""WITH corpus AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 1000000, substr(text, strpos(text, ' ') + 1)
-           FROM documents
-         ), plan AS (
+    s"""WITH ${DedupOps.plantedCorpusCte}, plan AS (
            SELECT CASE WHEN 2 * count(*) <= 2097152 THEN 4
                        WHEN 2 * count(*) <= 67108864 THEN 3
                        ELSE 2 END AS bands
            FROM documents
-         ), tkn AS (
-           SELECT doc_id,
-                  unnest(string_split_regex(lower(trim(text)), '\\s+')) AS t
-           FROM corpus
-         ), hxs AS (
-           SELECT doc_id, md5(t) AS hx FROM tkn
-         ), nib AS (
-           SELECT doc_id,
-                  $nibs
-           FROM hxs
-         ), votes AS (
-           SELECT doc_id,
-                  $votes
-           FROM nib GROUP BY doc_id
-         ), sigs AS MATERIALIZED (
+         ), ${DedupOps.md5SimhashVoteCtes("corpus")}, sigs AS MATERIALIZED (
            SELECT doc_id,
                   $signs
            FROM votes
@@ -407,32 +380,10 @@ object SparkEntry {
     * signature — matching Spark's null-in/null-out expression.
     */
   private def simhashSigOracleSql: String = {
-    val nibs = (0 until 16).map(p =>
-      s"strpos('0123456789abcdef', substr(hx, ${p + 1}, 1)) - 1 AS n$p")
-      .mkString(",\n                  ")
-    val votes = (0 until 64).map { b =>
-      val p = b / 4
-      val m = 1 << (b % 4)
-      s"SUM(CASE WHEN ((n$p // $m) % 2) = 1 THEN 1 ELSE -1 END) AS v$b"
-    }.mkString(",\n                  ")
     val low = (0 until 63).map(b =>
       s"CASE WHEN v$b >= 0 THEN ${1L << b} ELSE 0 END")
       .mkString("\n                    + ")
-    s"""WITH tkn AS (
-           SELECT doc_id,
-                  unnest(string_split_regex(lower(trim(text)), '\\s+')) AS t
-           FROM documents
-         ), hxs AS (
-           SELECT doc_id, md5(t) AS hx FROM tkn
-         ), nib AS (
-           SELECT doc_id,
-                  $nibs
-           FROM hxs
-         ), votes AS (
-           SELECT doc_id,
-                  $votes
-           FROM nib GROUP BY doc_id
-         ), sigs AS (
+    s"""WITH ${DedupOps.md5SimhashVoteCtes("documents")}, sigs AS (
            SELECT doc_id,
                   CAST(($low)
                     + CASE WHEN v63 >= 0
@@ -2778,7 +2729,7 @@ object SparkEntry {
          WHERE rn = 1"""
   }
 
-  lazy val declared: Seq[Query] = Seq(
+  def declared: Seq[Query] = Seq(
     Query("q01_scan_project", RelationalOps.q01ScanProject,
       "SELECT o_orderkey, o_custkey, o_orderpriority FROM orders"),
     Query("q02_filter", RelationalOps.q02Filter,

@@ -230,6 +230,37 @@ object DedupOps {
   private def simhash(s: SparkSession): Column =
     graft.functions.Md5SimHashExpression.md5SimHash(s, tokens(normText))
 
+  /** [[simhash]]'s votes in DuckDB over `table(doc_id, text)`: `tkn`
+    * (tokens), `hxs` (their md5), `nib` (16 hex nibbles) and
+    * `votes(doc_id, v0…v63)`, the ±1 vote sum of bit b = bit b % 4 of
+    * nibble b / 4 over the doc's tokens.
+    */
+  def md5SimhashVoteCtes(table: String): String = {
+    val nibs = (0 until 16).map(p =>
+      s"strpos('0123456789abcdef', substr(hx, ${p + 1}, 1)) - 1 AS n$p")
+      .mkString(",\n                  ")
+    val votes = (0 until 64).map { b =>
+      val p = b / 4
+      val m = 1 << (b % 4)
+      s"SUM(CASE WHEN ((n$p // $m) % 2) = 1 THEN 1 ELSE -1 END) AS v$b"
+    }.mkString(",\n                  ")
+    s"""tkn AS (
+           SELECT doc_id,
+                  unnest(string_split_regex(lower(trim(text)), '\\s+')) AS t
+           FROM $table
+         ), hxs AS (
+           SELECT doc_id, md5(t) AS hx FROM tkn
+         ), nib AS (
+           SELECT doc_id,
+                  $nibs
+           FROM hxs
+         ), votes AS (
+           SELECT doc_id,
+                  $votes
+           FROM nib GROUP BY doc_id
+         )"""
+  }
+
   /** 30. SimHash per document. The oracle rebuilds the signed long as
     * Σ_{b<63} s_b·2^b − s63·2^63, all BIGINT.
     */
@@ -387,6 +418,15 @@ object DedupOps {
 
   // ---- The same pipelines in DuckDB SQL (the oracles' CTEs) ----------
 
+  /** [[corpusWithPlantedDups]] as the CTE `corpus(doc_id, text)`. */
+  val plantedCorpusCte: String =
+    """corpus AS (
+           SELECT doc_id, text FROM documents
+           UNION ALL
+           SELECT doc_id + 1000000, substr(text, strpos(text, ' ') + 1)
+           FROM documents
+         )"""
+
   /** The md5 MinHash banding over a CTE `corpus(keys…, text)`: `base`
     * (tokens), `sh` (distinct tokens `toks`, word 3-shingles `sh`),
     * `sigs` (`nHashes` minima `m0…` of md5('j|' || shingle); MATERIALIZED,
@@ -432,12 +472,7 @@ object DedupOps {
     */
   def md5CandidateCtes(nHashes: Int = VerifyBands * VerifyRowsPerBand,
       bands: Int = VerifyBands): String =
-    s"""corpus AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 1000000, substr(text, strpos(text, ' ') + 1)
-           FROM documents
-         ), ${md5BandCtes("doc_id", nHashes, bands)}, pairs AS (
+    s"""$plantedCorpusCte, ${md5BandCtes("doc_id", nHashes, bands)}, pairs AS (
            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
            FROM banded a JOIN banded b
              ON a.band_id = b.band_id AND a.band_key = b.band_key
