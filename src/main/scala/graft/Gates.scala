@@ -5,8 +5,9 @@ import org.apache.spark.sql.internal.SQLConf
 
 /** The size gates that choose, from footer and size statistics, between
   * an in-memory shape (a driver kernel, a broadcast, a dense buffer) and
-  * the distributed path. Every threshold is a constant here; the one
-  * conf key [[Key]] selects which path set runs:
+  * the distributed path, and the scan-spread gates that round-robin a
+  * few-task scan across the session's cores. Every threshold is a
+  * constant here; the one conf key [[Key]] selects which path set runs:
   *
   *   - `auto` (default): every gate compares its statistic with its
   *     constant.
@@ -16,8 +17,8 @@ import org.apache.spark.sql.internal.SQLConf
   *     side — the 100 TB shape.
   *
   * Any other value throws: a typo must not silently run `auto`. The
-  * scan-spread gate ([[spreadScan]]) reads no mode: a spread changes
-  * parallelism, not the path, so plans are the same under every mode.
+  * scan-spread gates read no mode: a spread changes parallelism, not
+  * the path, so their plans are the same under every mode.
   */
 object Gates {
   val Key = "spark.graft.gates"
@@ -69,12 +70,18 @@ object Gates {
   /** TopK map-side heap rows per partition: this / k keys, at least 1. */
   val TopKMapRows = 1L << 22
 
-  // Scan-spread gates: [[spreadScan]] round-robins a scan while the
-  // table's footer rows are at most the constant.
-  /** Footer rows of `embeddings` for the q120/q121 encode + ADC scan. */
+  // Scan-spread gates: a scan is round-robined to `defaultParallelism`
+  // while its statistic is at most the constant ([[spreadScan]]).
+  /** Footer rows of `embeddings` for the q120/q121 encode + ADC scan,
+    * and of the planted vector corpus for the q36 sign-LSH scan.
+    */
   val SpreadAnnRows = 1000000L
   /** Footer rows of `orders`/`lineitem` for the q138/q237/q272 scans. */
   val SpreadFactRows = 64000000L
+  /** File bytes of `events`/`documents`, whose per-row work is heavy
+    * (`Tables.events`, `Tables.documents`).
+    */
+  val SpreadSourceBytes = 256L << 20
 
   /** `scan` (of table `table` under `d`) repartitioned round-robin to
     * `defaultParallelism` when it has fewer partitions and the table's

@@ -18,23 +18,22 @@ object Tables {
     * tables feeding JSON round-trips, shingling, hashing, scoring): the
     * testdata files are single-row-group parquet, so a scan is ONE task
     * no matter the split size and the expensive per-row work would run
-    * single-threaded on a 32-core box. Files under HiBytes repartition
-    * to core count — the shuffle moves a few MB once and unlocks
-    * full-core scans. Tables whose per-row work is cheap (lineitem,
+    * single-threaded on a 32-core box. Files under
+    * [[Gates.SpreadSourceBytes]] repartition to core count — the
+    * shuffle moves a few MB once and unlocks full-core scans. Tables whose per-row work is cheap (lineitem,
     * orders, embeddings) are NOT rebalanced: measured at sf0.1, the
     * extra exchange costs more than the parallelism returns there. At
-    * production scale files carry many row groups, exceed HiBytes, and
+    * production scale files carry many row groups, exceed the gate, and
     * the gate never fires — size-based, like broadcast selection.
     */
-  private val HiBytes = 256L << 20
-
   private def rebalanceSmall(spark: SparkSession, path: String,
       df: DataFrame): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes =
       if (fs.exists(p)) fs.getContentSummary(p).getLength else Long.MaxValue
-    if (bytes < HiBytes) df.repartition(spark.sparkContext.defaultParallelism)
+    if (bytes < Gates.SpreadSourceBytes)
+      df.repartition(spark.sparkContext.defaultParallelism)
     else df
   }
 

@@ -203,7 +203,7 @@ object SimilarityOps {
     // spread is SIZE-GATED: past 1M rows a round-robin of the vector
     // corpus is a real shuffle the bucket join doesn't need.
     val spread =
-      if (nRows <= 1000000L)
+      if (nRows <= graft.Gates.SpreadAnnRows)
         corpus.repartition(s.sparkContext.defaultParallelism)
       else corpus
     val bucketed = spread
