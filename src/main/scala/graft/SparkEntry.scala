@@ -2729,6 +2729,7 @@ object SparkEntry {
          WHERE rn = 1"""
   }
 
+  /** Every query, in q-number order; names are unique. */
   def declared: Seq[Query] = Seq(
     Query("q01_scan_project", RelationalOps.q01ScanProject,
       "SELECT o_orderkey, o_custkey, o_orderpriority FROM orders"),

@@ -119,14 +119,15 @@ object PqAnn {
       coded, queries, shortlist)
   }
 
-  /** The ADC search tail of [[search]] and [[IvfPq.searchEncoded]]:
-    * per-row tables `dt0..dt{M-1}` on `probes` — maps code → exact long
-    * d² between each subspace slice of the e6 column `q` and
+  /** The ADC search tail of [[search]] and [[IvfPq.searchEncoded]].
+    * Each row of `probes` gets tables `dt0..dt{M-1}`: maps code → exact
+    * long d² between a subspace slice of its e6 column `q` and
     * `codebooks` (maps, not arrays: dropped empty clusters may leave
-    * cid gaps) —, the candidates `candidates(tables)` (qid, nid,
-    * code and table columns) scored by M map lookups, the (adist, nid)
-    * `shortlist` cut, and the exact cosine re-rank of the survivors
-    * against `vecs(vec_id, embedding)` for the `queries(qid, qe)`.
+    * cid gaps). `candidates(tables)` pairs them with the codes (qid,
+    * nid, code and table columns); each candidate scores by M map
+    * lookups, the (adist, nid) `shortlist` survives, and it is
+    * re-ranked by exact cosine against `vecs(vec_id, embedding)` for
+    * the `queries(qid, qe)`.
     */
   private[operators] def adcSearch(spark: SparkSession, probes: DataFrame,
       q: Column, codebooks: Array[Array[(Int, Array[Long])]], subDim: Int,
