@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
+import graft.sources.TableStatistics
+
 /** Parquet table loaders for the driver-provided test data.
   *
   * One loader per table so every operator reads through a single choke
@@ -11,8 +13,15 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType}
   * catalog tables / bucketed layouts without touching operator code.
   */
 object Tables {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** The table with the schema its footer declares
+    * ([[TableStatistics.parquetSchema]]): a schema-less
+    * `spark.read.parquet` runs a one-task inference job per read: 367 of
+    * the 2172 jobs of one pass over the 281 queries at sf0.001.
+    */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(TableStatistics.parquetSchema(spark, path)).parquet(path)
+  }
 
   /** Rebalance gate for PER-ROW-COST-HEAVY sources (text and raw-event
     * tables feeding JSON round-trips, shingling, hashing, scoring): the

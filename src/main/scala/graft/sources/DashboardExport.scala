@@ -55,7 +55,8 @@ object DashboardExport {
       fs.delete(dst, false)
       fs.rename(part, dst)
       fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      val n = spark.read.parquet(s"$outDir/$name.parquet").count()
+      // exact, from the written files' footers: no inference or count job
+      val n = TableStatistics.parquetRowCount(spark, s"$outDir/$name.parquet")
       (name, n, df.columns.toSeq)
     }
     val manifest = counts.map { case (name, n, cols) =>

@@ -1,14 +1,16 @@
 package graft.sources
 
 import java.io.IOException
+import java.util.UUID
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.{JobExecutionStatus, ListenerBusDrain}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
+
+import scala.util.Try
 
 /** Keyed parquet table with MERGE/DELETE semantics — the engine's
   * equivalent of the reference's MSSQL upserts and purge cascade
@@ -36,9 +38,6 @@ object ParquetUpsertSink {
 
   private def dataPath(tableDir: String) = new Path(tableDir, "data")
 
-  /** Footer key under which Spark's parquet writer stores the row schema. */
-  private val SchemaKey = "org.apache.spark.sql.parquet.row.metadata"
-
   def exists(spark: SparkSession, tableDir: String): Boolean =
     fs(spark, dataPath(tableDir)).exists(dataPath(tableDir))
 
@@ -51,29 +50,62 @@ object ParquetUpsertSink {
     val file = fs(spark, data).listStatus(data).map(_.getPath)
       .find(_.getName.endsWith(".parquet"))
       .getOrElse(throw new IOException(s"no parquet data file under $data"))
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
-    val json =
-      try reader.getFooter.getFileMetaData.getKeyValueMetaData.get(SchemaKey)
-      finally reader.close()
-    if (json == null)
-      throw new IOException(s"$file has no $SchemaKey footer key")
+    val json = TableStatistics.footer(spark, file)(
+      _.getFileMetaData.getKeyValueMetaData.get(TableStatistics.SparkSchemaKey))
+    if (json == null) throw new IOException(
+      s"$file has no ${TableStatistics.SparkSchemaKey} footer key")
     spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType])
       .parquet(data.toString)
   }
 
+  /** Upper bound on waiting for a failed write's tasks to end: a task
+    * that never ends must not hang the caller, who then gets the write's
+    * error with the temp dir deleted as far as it can be.
+    */
+  private val SettleTimeoutMs = 300000L
+
+  /** Runs `write` under a job tag of its own. When it throws, the tag's
+    * jobs are cancelled and this returns (rethrowing) only after every
+    * task of them has ended: the write's job fails as soon as one task
+    * fails, while the stage's other tasks keep running, and a task that
+    * starts its file writer late creates the output dir anew.
+    */
+  private def settled(spark: SparkSession)(write: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val tag = s"graft-sink-${UUID.randomUUID()}"
+    sc.addJobTag(tag)
+    try write
+    catch {
+      case e: Throwable =>
+        sc.cancelJobsWithTag(tag)
+        // every job and task start posted before the failure reaches the
+        // status store first; a job's end is posted after its last task
+        // start, so ended jobs with no active task are final. A bus still
+        // busy after the drain's own 10 s leaves it to the poll's deadline
+        Try(ListenerBusDrain(sc))
+        val st = sc.statusTracker
+        def running = st.getJobIdsForTag(tag).toSeq.flatMap(st.getJobInfo)
+          .exists(j => j.status == JobExecutionStatus.RUNNING ||
+            j.stageIds.exists(st.getStageInfo(_).exists(_.numActiveTasks > 0)))
+        val deadline = System.currentTimeMillis + SettleTimeoutMs
+        while (running && System.currentTimeMillis < deadline) Thread.sleep(10)
+        throw e
+    } finally sc.removeJobTag(tag)
+  }
+
   /** Atomically replace the table's data dir with `df`'s rows. A failed
-    * write deletes its temp dir; a failed commit restores the old
-    * snapshot, so the table always reads back whole.
+    * write deletes its temp dir once all its tasks have ended; a failed
+    * commit restores the old snapshot, so the table always reads back
+    * whole.
     */
   private def replace(spark: SparkSession, tableDir: String, df: DataFrame)
       : Unit = {
     val data = dataPath(tableDir)
     val f = fs(spark, data)
-    val tmp = new Path(tableDir, s"tmp-${java.util.UUID.randomUUID()}")
-    try df.write.mode("overwrite").parquet(tmp.toString)
+    val tmp = new Path(tableDir, s"tmp-${UUID.randomUUID()}")
+    try settled(spark)(df.write.mode("overwrite").parquet(tmp.toString))
     catch { case e: Throwable => f.delete(tmp, true); throw e }
-    val old = new Path(tableDir, s"old-${java.util.UUID.randomUUID()}")
+    val old = new Path(tableDir, s"old-${UUID.randomUUID()}")
     val staged = f.exists(data)
     if (staged && !f.rename(data, old)) {
       f.delete(tmp, true)

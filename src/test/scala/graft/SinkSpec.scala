@@ -208,6 +208,34 @@ class SinkSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("a failed write returns only after its stage's other tasks end: " +
+      "no temp dir right after the throw nor seconds later") {
+    val dir = tmpTable()
+    // partition 0 fails at once; partition 1 is still computing its
+    // first row then, and only afterwards opens its file writer (a write
+    // task with a non-zero partition id asks for a row before it creates
+    // its output file) — the late writer that re-creates a temp dir. Its
+    // 2 s of work ignore the cancel's interrupt, as blocking I/O can
+    val slowFirstRow = udf { (id: Long) =>
+      val until = System.currentTimeMillis + 2000
+      while (id == 1L && System.currentTimeMillis < until)
+        try Thread.sleep(math.max(1L, until - System.currentTimeMillis))
+        catch { case _: InterruptedException => }
+      id
+    }
+    val batch = spark.range(0, 2, 1, 2).select(
+      when(col("id") === 0L, raise_error(lit("fails at once")))
+        .otherwise(slowFirstRow(col("id"))).as("id"))
+    def leftovers = new java.io.File(dir).list().toSeq
+    within {
+      intercept[Exception](
+        ParquetUpsertSink.insertNewOnly(spark, dir, batch, Seq("id")))
+    }
+    assert(leftovers.isEmpty)
+    Thread.sleep(3000)
+    assert(leftovers.isEmpty)
+  }
+
   test("a failed commit rename restores the old snapshot") {
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.failcommit.impl", classOf[FailingCommitFs].getName)
