@@ -45,12 +45,8 @@ object GraftSession {
   def get(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
     val spark = builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SQL users get the native functions without touching Scala helpers
-    graft.functions.VectorExpressions.register(spark)
-    graft.functions.MinHashExpression.register(spark)
-    graft.functions.PairMergeExpression.register(spark)
-    graft.functions.BpeEncodeExpression.register(spark)
-    graft.functions.CountInSorted.register(spark)
+    // every graft_* function, for SQL and the Scala helpers alike
+    graft.functions.Registry.register(spark)
     Gates.mode(spark) // a bad gate mode fails here, before any query
     spark
   }

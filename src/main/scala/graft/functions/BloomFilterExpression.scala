@@ -21,6 +21,11 @@ import org.apache.spark.util.sketch.BloomFilter
   * `mightContainLong` call inside whole-stage codegen. Long keys probe
   * directly; string keys probe their UTF-8 bytes (matching what
   * `DataFrameStatFunctions.bloomFilter` inserts for each type).
+  *
+  * The one native function that stays an expression class rather than
+  * a [[Registry]] kernel row: its analysis-time check rejects a
+  * non-literal or NULL filter argument with a clear message, where a
+  * static call would fail per task when the filter is deserialized.
   */
 case class BloomMightContain(left: Expression, right: Expression)
     extends BinaryExpression with Predicate {
@@ -77,8 +82,6 @@ case class BloomMightContain(left: Expression, right: Expression)
 object BloomFilterExpression {
   def mightContain(spark: SparkSession, key: Column,
       filter: BloomFilter): Column = {
-    Registry.ensure(spark, "graft_bloom_might_contain",
-      es => BloomMightContain(es(0), es(1)))
     val bytes = {
       val out = new java.io.ByteArrayOutputStream()
       filter.writeTo(out)

@@ -1,12 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The canonical BPE ENCODER (Sennrich et al. 2016's apply-side — the
@@ -25,6 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 final class BpeEncoder(merges: Array[(String, String)])
     extends Serializable {
+  override def toString: String = s"BpeEncoder(${merges.length} merges)"
   @transient private lazy val rank: java.util.HashMap[String, Integer] = {
     val m = new java.util.HashMap[String, Integer]()
     var i = 0
@@ -89,7 +86,7 @@ final class BpeEncoder(merges: Array[(String, String)])
   }
 
   /** Encode a word array (one document's tokens) to one flat subword
-    * array. Called from generated code — must stay allocation-lean.
+    * array. The `graft_bpe_encode` kernel — must stay allocation-lean.
     */
   def encode(words: ArrayData): ArrayData = {
     val n = words.numElements()
@@ -111,48 +108,21 @@ final class BpeEncoder(merges: Array[(String, String)])
 /** `graft_bpe_encode(words, mergeSpec)`: array<string> words → flat
   * array<string> BPE subword tokens under a LITERAL merge table (the
   * artifact [[graft.operators.BpeTrain]] learns — vocab-scale by
-  * definition, shipped to executors once via `addReferenceObj`, so the
-  * hot path is one virtual call per row inside whole-stage codegen).
+  * definition). The registry row parses the table once when the
+  * function is built and calls [[BpeEncoder.encode]] on it as an object
+  * literal, so the hot path is one virtual call per row inside
+  * whole-stage codegen.
   */
-case class BpeEncode(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(s"expected array<string>, got $other")
-  }
-
-  @transient private lazy val encoder = new BpeEncoder(merges.toArray)
-
-  override def nullSafeEval(c: Any): Any =
-    encoder.encode(c.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val enc = ctx.addReferenceObj("bpeEncoder", encoder)
-      s"${ev.value} = $enc.encode($a);"
-    })
-
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
 object BpeEncodeExpression {
   // merge table wire format inside the function-call literal: pairs
   // joined by \\u0002, left/right by \\u0001 (bpeEncode rejects merge
   // symbols carrying these — raw web text CAN contain control chars)
-  private def parse(spec: String): Seq[(String, String)] =
-    if (spec.isEmpty) Seq.empty
-    else spec.split('\u0002').toSeq.map { p =>
+  def encoder(spec: String): BpeEncoder = new BpeEncoder(
+    if (spec.isEmpty) Array.empty
+    else spec.split('\u0002').map { p =>
       val i = p.indexOf('\u0001')
       (p.substring(0, i), p.substring(i + 1))
-    }
-
-  def register(spark: SparkSession): Unit =
-    Registry.ensure(spark, "graft_bpe_encode",
-      es => BpeEncode(es(0), parse(
-        es(1).eval(null).asInstanceOf[UTF8String].toString)))
+    })
 
   def bpeEncode(spark: SparkSession, words: Column,
       merges: Seq[(String, String)]): Column = {
@@ -161,7 +131,6 @@ object BpeEncodeExpression {
     require(merges.forall { case (l, r) =>
       !(l + r).exists(c => c == '\u0000' || c == '\u0001' || c == '\u0002')
     }, "merge symbols must not contain \\u0000-\\u0002 control characters")
-    register(spark)
     call_function("graft_bpe_encode", words,
       lit(merges.map(m => m._1 + "\u0001" + m._2).mkString("\u0002")))
   }

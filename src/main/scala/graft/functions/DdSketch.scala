@@ -106,23 +106,6 @@ object DdSketch {
   def estimateOf(bucket: Int): Double =
     if (bucket == 0) 0.0
     else 2.0 * math.pow(Gamma, bucket) / (Gamma + 1.0)
-
-  /** Quantile q (0..1] from a bucket-count array: the value estimate of
-    * the bucket holding the ⌈q·n⌉-th smallest element (nearest-rank).
-    */
-  def quantileFromCounts(counts: Array[Long], q: Double): Double = {
-    val n = counts.sum
-    require(n > 0, "empty sketch")
-    val target = math.max(1L, math.ceil(q * n).toLong)
-    var cum = 0L
-    var i = 0
-    while (i < counts.length) {
-      cum += counts(i)
-      if (cum >= target) return estimateOf(i)
-      i += 1
-    }
-    estimateOf(counts.length - 1)
-  }
 }
 
 /** Bucket-count aggregation of non-negative long units. */

@@ -1,84 +1,34 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{DataType, LongType}
 
-/** Native codegen forms of the [[FixedLn]]/[[FixedExp]] e9 fixed-point
+/** Native forms of the [[FixedLn]]/[[FixedExp]] e9 fixed-point
   * transcendentals — `graft_ln_e9(p, q)` = ln(p/q)·1e9 and
   * `graft_exp_e9(x)` = exp(x/1e9)·1e9, evaluating [[FixedLn.lnE9]] /
   * [[FixedExp.expE9]] directly (definitionally bit-identical to the
-  * generated SQL step lists — the suite pins expression ≡ step-fold on
+  * generated SQL step lists — the suite pins function ≡ step-fold on
   * a value grid).
   *
-  * Why this exists (r14, guide §1.2 step 2 / §4-equivalent): the
-  * step-list fold spells each call as ~16 chained `withColumn`s, and a
-  * per-ROW use on a fact table stacks ~30 non-codegen `Project`
-  * operators — q272's scan ran interpreted end to end (7.4 s steady at
-  * sf0.1, zero WholeStageCodegen in the plan). One expression keeps
-  * the whole scan inside one codegen stage. Domain contract is the
-  * callers' (p ≥ q ≥ 1; 0 ≤ x ≤ MaxX): out-of-domain inputs FAIL LOUD
-  * (the ANSI rule) — hot call sites enforce the domain with filters or
-  * clamps before evaluating, exactly as they did for the step fold.
-  * The DuckDB oracles are untouched — they keep replaying the step
-  * CTEs, which is what makes the swap oracle-provably value-preserving.
+  * Why this exists: the step-list fold spells each call as ~16 chained
+  * `withColumn`s, and a per-ROW use on a fact table stacks ~30
+  * non-codegen `Project` operators — q272's scan ran interpreted end to
+  * end (7.4 s steady at sf0.1, zero WholeStageCodegen in the plan). One
+  * function keeps the whole scan inside one codegen stage. Domain
+  * contract is the callers' (p ≥ q ≥ 1; 0 ≤ x ≤ MaxX): out-of-domain
+  * inputs FAIL LOUD (the ANSI rule) — hot call sites enforce the domain
+  * with filters or clamps before evaluating, exactly as they did for
+  * the step fold. The DuckDB oracles are untouched — they keep
+  * replaying the step CTEs, which is what makes the swap
+  * oracle-provably value-preserving.
   */
 object FixedPointExpressions {
 
-  case class LnE9(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes() =
-      if (left.dataType == LongType && right.dataType == LongType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_ln_e9 needs (bigint, bigint), got " +
-            s"(${left.dataType}, ${right.dataType})")
-    override def nullSafeEval(p: Any, q: Any): Any =
-      FixedLn.lnE9(p.asInstanceOf[Long], q.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (p, q) => {
-        val helper = FixedLn.getClass.getName.stripSuffix("$") + "$.MODULE$"
-        s"${ev.value} = $helper.lnE9($p, $q);"
-      })
-    override protected def withNewChildrenInternal(l: Expression,
-        r: Expression) = copy(left = l, right = r)
-  }
-
-  case class ExpE9(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes() =
-      if (child.dataType == LongType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_exp_e9 needs bigint, got ${child.dataType}")
-    override def nullSafeEval(x: Any): Any =
-      FixedExp.expE9(x.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, x => {
-        val helper = FixedExp.getClass.getName.stripSuffix("$") + "$.MODULE$"
-        s"${ev.value} = $helper.expE9($x);"
-      })
-    override protected def withNewChildInternal(c: Expression) =
-      copy(child = c)
-  }
-
-  /** ln(p/q)·1e9 as a column (registers the function on first use). */
-  def lnE9(spark: SparkSession, p: Column, q: Column): Column = {
-    Registry.ensure(spark, "graft_ln_e9",
-      es => LnE9(es(0), es(1)))
+  /** ln(p/q)·1e9 as a column. */
+  def lnE9(spark: SparkSession, p: Column, q: Column): Column =
     call_function("graft_ln_e9", p, q)
-  }
 
-  /** exp(x/1e9)·1e9 as a column (registers the function on first use). */
-  def expE9(spark: SparkSession, x: Column): Column = {
-    Registry.ensure(spark, "graft_exp_e9", es => ExpE9(es(0)))
+  /** exp(x/1e9)·1e9 as a column. */
+  def expE9(spark: SparkSession, x: Column): Column =
     call_function("graft_exp_e9", x)
-  }
 }

@@ -1,27 +1,24 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** k MinHash minima over an array of shingle strings using md5 — the
-  * CROSS-ENGINE family: hash j of shingle s is md5Hex(j + "|" + s), and
-  * the minimum is plain byte-wise order on the lowercase hex, so any
-  * ANSI engine with md5() (e.g. the DuckDB oracle) reproduces the exact
-  * minima. The xxhash64-seeded MinHashSig is faster but engine-private;
-  * it serves only incremental dedup, which has no oracle.
+/** `graft_md5_minhash(shingles, k)`: k MinHash minima over an array of
+  * shingle strings using md5 — the CROSS-ENGINE family: hash j of
+  * shingle s is md5Hex(j + "|" + s), and the minimum is plain byte-wise
+  * order on the lowercase hex, so any ANSI engine with md5() (e.g. the
+  * DuckDB oracle) reproduces the exact minima. The xxhash64-seeded
+  * [[MinHashExpression]] is faster but engine-private; it serves only
+  * incremental dedup, which has no oracle.
   *
   * One k×L loop per row inside whole-stage codegen; the equivalent
   * built-in form (k × array_min(transform(md5(concat(...))))) evaluates
   * interpreted per element per hash function — measured ~2× slower on
   * the q31 verify pipeline.
   */
-object Md5MinHashImpl {
+object Md5MinHashExpression {
   private val digest = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
@@ -29,8 +26,8 @@ object Md5MinHashImpl {
   private val Hex = "0123456789abcdef".getBytes
 
   // "j|" prefix bytes per hash index, built once per k — rebuilding the
-  // k arrays inside compute() put k allocations on every ROW of the
-  // pipeline this codegen expression exists to speed up
+  // k arrays inside minima() put k allocations on every ROW of the
+  // pipeline this kernel exists to speed up
   private val prefixCache =
     new java.util.concurrent.ConcurrentHashMap[Int, Array[Array[Byte]]]
   private def prefixesFor(k: Int): Array[Array[Byte]] =
@@ -48,7 +45,8 @@ object Md5MinHashImpl {
     UTF8String.fromBytes(out)
   }
 
-  def compute(arr: ArrayData, k: Int): ArrayData = {
+  /** The kernel ([[Registry]]). */
+  def minima(arr: ArrayData, k: Int): ArrayData = {
     val md = digest.get()
     val prefixes = prefixesFor(k)
     val mins = new Array[UTF8String](k)
@@ -71,33 +69,7 @@ object Md5MinHashImpl {
     }
     new GenericArrayData(mins.asInstanceOf[Array[Any]])
   }
-}
 
-case class Md5MinHash(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(s"expected array<string>, got $other")
-  }
-
-  override def nullSafeEval(c: Any): Any =
-    Md5MinHashImpl.compute(c.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.Md5MinHashImpl.compute($a, $k);")
-
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-object Md5MinHashExpression {
-  def md5MinHash(spark: SparkSession, shingles: Column, k: Int): Column = {
-    Registry.ensure(spark, "graft_md5_minhash",
-      es => Md5MinHash(es.head,
-        es(1).eval(null).asInstanceOf[Int]))
-    call_function("graft_md5_minhash", shingles,
-      org.apache.spark.sql.functions.lit(k))
-  }
+  def md5MinHash(spark: SparkSession, shingles: Column, k: Int): Column =
+    call_function("graft_md5_minhash", shingles, lit(k))
 }

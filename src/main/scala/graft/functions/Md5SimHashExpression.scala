@@ -1,18 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types._
 
-/** 64-bit SimHash over an array of token strings using md5 — the
-  * CROSS-ENGINE family (r13, the Md5MinHash precedent): token t's
-  * 64-bit feature hash is the FIRST 16 HEX CHARS of md5(t), read
-  * nibble-by-nibble — bit b (0..63) is bit (b mod 4) of hex char
-  * b DIV 4, i.e. `(strpos('0123456789abcdef', substr(md5(t), b//4 + 1,
+/** `graft_md5_simhash(tokens)`: 64-bit SimHash over an array of token
+  * strings using md5 — the CROSS-ENGINE family (the md5 MinHash
+  * precedent): token t's 64-bit feature hash is the FIRST 16 HEX CHARS
+  * of md5(t), read nibble-by-nibble — bit b (0..63) is bit (b mod 4)
+  * of hex char b DIV 4, i.e. `(strpos('0123456789abcdef', substr(md5(t), b//4 + 1,
   * 1)) - 1) >> (b%4) & 1` in ANSI SQL — so any engine with md5()
   * (e.g. the DuckDB oracle) reproduces the exact per-bit ±1 vote sums
   * and therefore the exact signature. Each token OCCURRENCE votes
@@ -23,13 +19,14 @@ import org.apache.spark.sql.types._
   * reference: near-dup detection of etl_pipeline_script.py:60-75's
   * exact-dup stage generalized.
   */
-object Md5SimHashImpl {
+object Md5SimHashExpression {
   private val digest = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  def compute(arr: ArrayData): Long = {
+  /** The kernel ([[Registry]]). */
+  def simhash(arr: ArrayData): Long = {
     val md = digest.get()
     val votes = new Array[Int](64)
     var i = 0
@@ -62,30 +59,7 @@ object Md5SimHashImpl {
     }
     sig
   }
-}
 
-case class Md5SimHash(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(s"expected array<string>, got $other")
-  }
-
-  override def nullSafeEval(c: Any): Any =
-    Md5SimHashImpl.compute(c.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.Md5SimHashImpl.compute($a);")
-
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-object Md5SimHashExpression {
-  def md5SimHash(spark: SparkSession, tokens: Column): Column = {
-    Registry.ensure(spark, "graft_md5_simhash", es => Md5SimHash(es.head))
+  def md5SimHash(spark: SparkSession, tokens: Column): Column =
     call_function("graft_md5_simhash", tokens)
-  }
 }

@@ -1,32 +1,27 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.{call_function, lit}
 
-/** MinHash signature over an array of base (shingle) hashes: element j of
-  * the result is min over the array of XXH64(h, seed = j).
+/** MinHash over base (shingle) hashes, engine-private (xxhash64; the
+  * oracle-checkable family is [[Md5MinHashExpression]]).
   *
-  * One k×L primitive loop per row in whole-stage codegen. The equivalent
-  * built-in formulation (k separate `array_min(transform(...))` columns)
-  * evaluates interpreted per element per hash function and allocates k
-  * intermediate arrays per row — it was the benchmark's slowest operator.
+  * `graft_minhash(hashes, k)`: element j of the result is min over the
+  * array of XXH64(h, seed = j) — one k×L primitive loop per row in
+  * whole-stage codegen. The equivalent built-in formulation (k separate
+  * `array_min(transform(...))` columns) evaluates interpreted per
+  * element per hash function and allocates k intermediate arrays per
+  * row — it was the benchmark's slowest operator.
+  *
+  * `graft_sig_agree(a, b)`: the number of positions where two
+  * signatures agree — the MinHash Jaccard estimator numerator.
   */
-case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+object MinHashExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(s"expected array<long>, got $other")
-  }
-
-  override def nullSafeEval(c: Any): Any = {
-    val arr = c.asInstanceOf[ArrayData]
+  /** The `graft_minhash` kernel ([[Registry]]). */
+  def signature(arr: ArrayData, k: Int): ArrayData = {
     val mins = Array.fill(k)(Long.MaxValue)
     var i = 0
     while (i < arr.numElements()) {
@@ -39,89 +34,20 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
       }
       i += 1
     }
-    new GenericArrayData(mins)
+    UnsafeArrayData.fromPrimitiveArray(mins)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val mins = ctx.freshName("mins"); val h = ctx.freshName("h")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val v = ctx.freshName("v")
-      val xxh = classOf[XXH64].getName
-      s"""
-         |long[] $mins = new long[$k];
-         |java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |for (int $i = 0; $i < $a.numElements(); $i++) {
-         |  long $h = $a.getLong($i);
-         |  for (int $j = 0; $j < $k; $j++) {
-         |    long $v = $xxh.hashLong($h, (long) $j);
-         |    if ($v < $mins[$j]) $mins[$j] = $v;
-         |  }
-         |}
-         |${ev.value} =
-         |  new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-/** Number of positions where two equal-length long arrays agree — the
-  * MinHash Jaccard estimator numerator, as one codegen'd loop.
-  */
-case class SigAgreement(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = IntegerType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(s"expected array<long> pair: $other")
-    }
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
+  /** The `graft_sig_agree` kernel ([[Registry]]). */
+  def agreement(a: ArrayData, b: ArrayData): Int = {
     val n = math.min(a.numElements(), b.numElements())
     var c = 0; var i = 0
     while (i < n) { if (a.getLong(i) == b.getLong(i)) c += 1; i += 1 }
-    java.lang.Integer.valueOf(c)
+    c
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val c = ctx.freshName("c")
-      s"""
-         |int $n = Math.min($a.numElements(), $b.numElements());
-         |int $c = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.getLong($i) == $b.getLong($i)) $c++;
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
+  def minhashSig(spark: SparkSession, baseHashes: Column, k: Int): Column =
+    call_function("graft_minhash", baseHashes, lit(k))
 
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-}
-
-object MinHashExpression {
-  def register(spark: SparkSession): Unit =
-    Registry.ensure(spark, "graft_minhash",
-      es => MinHashSig(es.head,
-        es(1).eval(null).asInstanceOf[Int]))
-
-  def minhashSig(spark: SparkSession, baseHashes: Column, k: Int): Column = {
-    register(spark)
-    call_function("graft_minhash", baseHashes,
-      org.apache.spark.sql.functions.lit(k))
-  }
-
-  def sigAgreement(spark: SparkSession, a: Column, b: Column): Column = {
-    Registry.ensure(spark, "graft_sig_agree",
-      es => SigAgreement(es(0), es(1)))
+  def sigAgreement(spark: SparkSession, a: Column, b: Column): Column =
     call_function("graft_sig_agree", a, b)
-  }
 }

@@ -1,48 +1,36 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** BPE merge step (the `(left, right) → leftmost non-overlapping fuse`
-  * of Sennrich et al. 2016): rewrite a symbol array by replacing every
-  * leftmost, non-overlapping adjacent occurrence of the pair with the
-  * fused symbol, as one O(L) codegen'd pass per row.
+/** `graft_pair_merge(syms, left, right)` — the BPE merge step (the
+  * `(left, right) → leftmost non-overlapping fuse` of Sennrich et al.
+  * 2016): rewrite a symbol array by replacing every leftmost,
+  * non-overlapping adjacent occurrence of the pair with the fused
+  * symbol, as one O(L) codegen'd pass per row.
   *
   * The built-in-function formulation needs a sequential fold
   * (`aggregate` HOF) whose accumulator append is O(L) — O(L²) copies
   * per row, interpreted. This stays inside whole-stage codegen and
   * allocates one output array.
   */
-case class PairMerge(child: Expression, mergeLeft: String, mergeRight: String)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+object PairMergeExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(s"expected array<string>, got $other")
-  }
-
-  @transient private lazy val l8 = UTF8String.fromString(mergeLeft)
-  @transient private lazy val r8 = UTF8String.fromString(mergeRight)
-  @transient private lazy val fused =
-    UTF8String.fromString(mergeLeft + mergeRight)
-
-  override def nullSafeEval(c: Any): Any = {
-    val arr = c.asInstanceOf[ArrayData]
+  /** The kernel ([[Registry]]); `fused` = left ++ right, a plan
+    * constant the registry row adds.
+    */
+  def merge(arr: ArrayData, left: UTF8String, right: UTF8String,
+      fused: UTF8String): ArrayData = {
     val n = arr.numElements()
     val out = new Array[AnyRef](n)
     var m = 0
     var i = 0
     while (i < n) {
       val cur = arr.getUTF8String(i)
-      if (i + 1 < n && l8.equals(cur) && r8.equals(arr.getUTF8String(i + 1))) {
+      if (i + 1 < n && left.equals(cur)
+          && right.equals(arr.getUTF8String(i + 1))) {
         out(m) = fused; m += 1; i += 2
       } else { out(m) = cur; m += 1; i += 1 }
     }
@@ -50,43 +38,7 @@ case class PairMerge(child: Expression, mergeLeft: String, mergeRight: String)
       if (m == n) out else java.util.Arrays.copyOf(out, m))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val lRef = ctx.addReferenceObj("mergeL", l8)
-      val rRef = ctx.addReferenceObj("mergeR", r8)
-      val fRef = ctx.addReferenceObj("fused", fused)
-      val n = ctx.freshName("n"); val out = ctx.freshName("out")
-      val m = ctx.freshName("m"); val i = ctx.freshName("i")
-      val cur = ctx.freshName("cur")
-      s"""
-         |int $n = $a.numElements();
-         |Object[] $out = new Object[$n];
-         |int $m = 0; int $i = 0;
-         |while ($i < $n) {
-         |  org.apache.spark.unsafe.types.UTF8String $cur = $a.getUTF8String($i);
-         |  if ($i + 1 < $n && $lRef.equals($cur)
-         |      && $rRef.equals($a.getUTF8String($i + 1))) {
-         |    $out[$m++] = $fRef; $i += 2;
-         |  } else { $out[$m++] = $cur; $i++; }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  $m == $n ? $out : java.util.Arrays.copyOf($out, $m));
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-object PairMergeExpression {
-  def register(spark: SparkSession): Unit =
-    Registry.ensure(spark, "graft_pair_merge",
-      es => PairMerge(es(0),
-        es(1).eval(null).asInstanceOf[UTF8String].toString,
-        es(2).eval(null).asInstanceOf[UTF8String].toString))
-
   def pairMerge(spark: SparkSession, syms: Column, left: String,
-      right: String): Column = {
-    register(spark)
+      right: String): Column =
     call_function("graft_pair_merge", syms, lit(left), lit(right))
-  }
 }

@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `graft_seq_patterns(arr)` — every event-type subsequence pattern of
@@ -15,43 +12,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * session's distinct types in first-occurrence order.
   *
   * Replaces q232's nested `transform`/`slice`/`array_position` HOF
-  * tower (r15): HOF lambdas run INTERPRETED per element and every
+  * tower: HOF lambdas run INTERPRETED per element and every
   * `after(...)` slice copies the array tail — measured as the dominant
-  * cost of the whole query. This expression is the identical greedy
+  * cost of the whole query. This function is the identical greedy
   * logic in one pass of primitive scans; SeqPatternsSpec pins
   * native ≡ HOF on the real sessions and an edge grid. The DuckDB
   * oracle (DISTINCT inequality self-joins) is untouched.
   */
-case class SeqPatterns(child: Expression) extends UnaryExpression {
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes() = child.dataType match {
-    case ArrayType(StringType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_seq_patterns needs array<string>, got $other")
-  }
-
-  override def nullSafeEval(arr: Any): Any =
-    SeqPatterns.patterns(arr.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val helper = SeqPatterns.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      s"${ev.value} = $helper.patterns($a);"
-    })
-
-  override protected def withNewChildInternal(c: Expression) =
-    copy(child = c)
-}
-
 object SeqPatterns {
   private val Gt = UTF8String.fromString(">")
 
-  /** Public: called from generated code. */
+  /** The kernel ([[Registry]]). */
   def patterns(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     val a = new Array[UTF8String](n)
@@ -104,12 +75,6 @@ object SeqPatterns {
     new GenericArrayData(out.toArray)
   }
 
-  def register(spark: SparkSession): Unit =
-    Registry.ensure(spark, "graft_seq_patterns",
-      es => SeqPatterns(es(0)))
-
-  def patterns(spark: SparkSession, arr: Column): Column = {
-    register(spark)
+  def patterns(spark: SparkSession, arr: Column): Column =
     call_function("graft_seq_patterns", arr)
-  }
 }

@@ -1,14 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types._
 
-/** `sorted_pair_dot(a, b)` — the exact weighted dot product of two
+/** `graft_sorted_pair_dot(a, b)` — the exact weighted dot product of two
   * ASCENDING-sorted sparse vectors, each an
   * `array<struct<tok: string, w2: bigint>>`: Σ w2 over tokens present
   * in BOTH arrays, one O(|a| + |b|) merge scan per row.
@@ -18,52 +14,20 @@ import org.apache.spark.sql.types._
   * same from either side): the relational spelling — explode candidate
   * pairs against one side's postings and inner-join the other's —
   * shuffles |cand| × avg-tokens skinny rows plus a (id_a, id_b)
-  * re-aggregate; this expression instead rides the candidate join
+  * re-aggregate; this function instead rides the candidate join
   * (one array payload per doc) and stays inside whole-stage codegen,
   * replacing the two heaviest shuffles of the verify stage with a
   * per-row native loop (the q74/CountInSorted playbook).
   *
   * Caller contract: arrays ascending by `tok` in Spark's binary string
   * order (`sort_array` on the struct — it compares field 1 first) with
-  * unique, non-null toks. Null arrays yield null (BinaryExpression
-  * default). Exact long arithmetic — admission stays engine-exact.
+  * unique, non-null toks. Null arrays yield null. Exact long
+  * arithmetic — admission stays engine-exact.
   */
-case class SortedPairDot(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-
-  private def chk(e: Expression, side: String): TypeCheckResult =
-    e.dataType match {
-      case ArrayType(StructType(Array(f0, f1)), _)
-          if f0.dataType == StringType && f1.dataType == LongType =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$side must be array<struct<string, bigint>>, got $other")
-    }
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val l = chk(left, "left")
-    if (!l.isSuccess) l else chk(right, "right")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SortedPairDot.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val helper =
-        SortedPairDot.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      s"${ev.value} = $helper.dot($a, $b);"
-    })
-
-  override protected def withNewChildrenInternal(l: Expression,
-      r: Expression) = copy(left = l, right = r)
-}
-
 object SortedPairDot {
   /** Merge-scan two ascending (tok, w2) arrays, summing w2 on matches.
-    * Public: called from generated code. UTF8String.compareTo is the
-    * same binary order sort_array used to build the arrays.
+    * The kernel ([[Registry]]). UTF8String.compareTo is the same
+    * binary order sort_array used to build the arrays.
     */
   def dot(a: ArrayData, b: ArrayData): Long = {
     val na = a.numElements(); val nb = b.numElements()
@@ -79,12 +43,6 @@ object SortedPairDot {
     s
   }
 
-  def register(spark: SparkSession): Unit =
-    Registry.ensure(spark, "graft_sorted_pair_dot",
-      es => SortedPairDot(es(0), es(1)))
-
-  def dot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+  def dot(spark: SparkSession, a: Column, b: Column): Column =
     call_function("graft_sorted_pair_dot", a, b)
-  }
 }

@@ -1,14 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types._
 
-/** `sorted_intersect_above(a, b, threshold)` — the ascending-sorted
+/** `graft_sorted_intersect_above(a, b, threshold)` — the ascending-sorted
   * intersection of two ASCENDING-sorted `array<bigint>`s, keeping only
   * elements strictly greater than `threshold`.
   *
@@ -20,57 +17,18 @@ import org.apache.spark.sql.types._
   * smallest corner pair. The HOF spelling
   * `filter(array_intersect(nu, nv), w -> w > pkv)` runs the lambda
   * interpreted and hash-builds a set per row (measured ~5 s over the
-  * 1.2 M-edge co-purchase graph at sf0.1); this expression instead
+  * 1.2 M-edge co-purchase graph at sf0.1); this function instead
   * binary-searches both arrays to the threshold suffix and merge-scans,
   * O(|suffix(a)| + |suffix(b)|) per row with no per-element dispatch.
   *
   * Caller contract: both arrays ascending (`sort_array` default) with
   * non-null elements — the graph code builds them from
   * `sort_array(collect_set(<non-null long>))`. Null ARRAYS or a null
-  * threshold yield null (TernaryExpression default).
+  * threshold yield null.
   */
-case class SortedIntersectAbove(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  private def chk(e: Expression, side: String) = e.dataType match {
-    case ArrayType(LongType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$side must be array<bigint>, got $other")
-  }
-  override def checkInputDataTypes() = {
-    val l = chk(first, "first")
-    if (!l.isSuccess) l
-    else if (!chk(second, "second").isSuccess) chk(second, "second")
-    else third.dataType match {
-      case LongType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"third must be bigint, got $other")
-    }
-  }
-
-  override def nullSafeEval(a: Any, b: Any, t: Any): Any =
-    SortedIntersectAbove.intersectAbove(a.asInstanceOf[ArrayData],
-      b.asInstanceOf[ArrayData], t.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, t) => {
-      val helper =
-        SortedIntersectAbove.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      s"${ev.value} = $helper.intersectAbove($a, $b, $t);"
-    })
-
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression) = copy(first = f, second = s, third = t)
-}
-
 object SortedIntersectAbove {
   /** Merge-scan the suffixes of two ascending long arrays above `t`.
-    * Public: called from generated code. The hot loop touches primitive
+    * The kernel ([[Registry]]). The hot loop touches primitive
     * longs only — no boxing, no per-element virtual dispatch.
     */
   def intersectAbove(a: ArrayData, b: ArrayData, t: Long): ArrayData = {
@@ -101,13 +59,7 @@ object SortedIntersectAbove {
     lo
   }
 
-  def register(spark: SparkSession): Unit =
-    Registry.ensure(spark, "graft_sorted_intersect_above",
-      es => SortedIntersectAbove(es(0), es(1), es(2)))
-
   def intersectAbove(spark: SparkSession, a: Column, b: Column,
-      threshold: Column): Column = {
-    register(spark)
+      threshold: Column): Column =
     call_function("graft_sorted_intersect_above", a, b, threshold)
-  }
 }

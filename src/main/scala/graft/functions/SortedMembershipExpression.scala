@@ -1,14 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** `count_in_sorted(arr, sorted_set)` — how many elements of `arr`
+/** `graft_count_in_sorted(arr, sorted_set)` — how many elements of `arr`
   * (duplicates counted) appear in the ASCENDING-sorted string array
   * `sorted_set`, by per-element binary search.
   *
@@ -21,64 +18,28 @@ import org.apache.spark.unsafe.types.UTF8String
   * lambda dispatch — the caller guarantees `sorted_set` ascending
   * (`sort_array` default), same binary UTF8 ordering used here.
   *
-  * Null contract: null input arrays → null (BinaryExpression default);
-  * null ELEMENTS of `arr` never match (array_contains semantics).
+  * Null contract: null input arrays → null; null ELEMENTS of `arr`
+  * never match (array_contains semantics).
   */
-case class CountInSorted(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-
-  private def checkStrArray(e: Expression, side: String) = e.dataType match {
-    case ArrayType(StringType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$side must be array<string>, got $other")
-  }
-  override def checkInputDataTypes() = {
-    val l = checkStrArray(left, "left")
-    if (l.isSuccess) checkStrArray(right, "right") else l
-  }
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val arr = l.asInstanceOf[ArrayData]; val set = r.asInstanceOf[ArrayData]
+object CountInSorted {
+  /** The kernel ([[Registry]]). */
+  def count(arr: ArrayData, set: ArrayData): Long = {
     var cnt = 0L; var i = 0
     while (i < arr.numElements()) {
-      if (!arr.isNullAt(i) &&
-          CountInSorted.found(set, arr.getUTF8String(i))) cnt += 1
+      if (!arr.isNullAt(i) && found(set, arr.getUTF8String(i))) cnt += 1
       i += 1
     }
     cnt
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val cnt = ctx.freshName("cnt")
-      val helper = CountInSorted.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      s"""
-         |long $cnt = 0L;
-         |for (int $i = 0; $i < $a.numElements(); $i++) {
-         |  if (!$a.isNullAt($i) &&
-         |      $helper.found($b, $a.getUTF8String($i))) $cnt++;
-         |}
-         |${ev.value} = $cnt;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-}
-
-object CountInSorted {
   /** Binary search `needle` in the ascending string array `set`
-    * (binary UTF8 order — `sort_array`'s order). Public: called from
-    * generated code. Null elements in `set` sort FIRST under
-    * sort_array's default; they never equal a non-null needle, and a
-    * run of leading nulls keeps lo at a null slot only while the
-    * needle compares greater, so correctness holds if callers pass a
-    * set with nulls — they just never match.
+    * (binary UTF8 order — `sort_array`'s order). Null elements in
+    * `set` sort FIRST under sort_array's default; they never equal a
+    * non-null needle, and a run of leading nulls keeps lo at a null
+    * slot only while the needle compares greater, so correctness holds
+    * if callers pass a set with nulls — they just never match.
     */
-  def found(set: ArrayData, needle: UTF8String): Boolean = {
+  private def found(set: ArrayData, needle: UTF8String): Boolean = {
     var lo = 0; var hi = set.numElements() - 1
     while (lo <= hi) {
       val mid = (lo + hi) >>> 1
@@ -91,11 +52,6 @@ object CountInSorted {
     false
   }
 
-  def register(spark: SparkSession): Unit =
-    Registry.ensure(spark, "graft_count_in_sorted",
-      es => CountInSorted(es(0), es(1)))
-
-  def countIn(spark: SparkSession, arr: Column, sortedSet: Column): Column = {
-    register(spark); call_function("graft_count_in_sorted", arr, sortedSet)
-  }
+  def countIn(spark: SparkSession, arr: Column, sortedSet: Column): Column =
+    call_function("graft_count_in_sorted", arr, sortedSet)
 }

@@ -1,127 +1,78 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types._
 
-/** Native Catalyst expressions for embedding math over `array<float>` /
-  * `array<double>` columns. These stay inside whole-stage codegen (a tight
-  * primitive loop per row), unlike a Scala UDF which breaks codegen and
-  * pays serialization per call — at 100 TB the difference is the job.
+/** Embedding math over `array<float>` / `array<double>` columns as
+  * native functions (`graft_cosine`, `graft_dot`, `graft_norm`,
+  * `graft_idot`; see [[Registry]]): a tight primitive loop per row
+  * inside whole-stage codegen, unlike a Scala UDF, which breaks codegen
+  * and pays serialization per call — at 100 TB the difference is the
+  * job. Each kernel has an `F` and a `D` form, picked from the element
+  * type when the function is built.
   *
   * Accumulation is sequential in DOUBLE regardless of element type, so
   * results are deterministic and reproducible across engines.
   */
 object VectorExpressions {
 
-  private def elemGetter(dt: DataType, arr: String, i: String): String =
-    dt.asInstanceOf[ArrayType].elementType match {
-      case FloatType  => s"(double) $arr.getFloat($i)"
-      case DoubleType => s"$arr.getDouble($i)"
-      case other => throw new IllegalArgumentException(s"bad element: $other")
+  /** cosine(a, b) = dot / (|a| * |b|); null when either norm is zero. */
+  def cosineF(a: ArrayData, b: ArrayData): java.lang.Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var dot = 0d; var na = 0d; var nb = 0d; var i = 0
+    while (i < n) {
+      val x = a.getFloat(i).toDouble; val y = b.getFloat(i).toDouble
+      dot += x * y; na += x * x; nb += y * y; i += 1
     }
-
-  private def elemAt(dt: DataType, arr: ArrayData, i: Int): Double =
-    dt.asInstanceOf[ArrayType].elementType match {
-      case FloatType  => arr.getFloat(i).toDouble
-      case DoubleType => arr.getDouble(i)
-      case other => throw new IllegalArgumentException(s"bad element: $other")
-    }
-
-  private def checkArray(e: Expression, side: String) = e.dataType match {
-    case ArrayType(FloatType | DoubleType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$side must be array<float|double>, got $other")
+    ratio(dot, na, nb)
   }
 
-  /** cosine(a, b) = dot / (|a| * |b|); NULL when either norm is zero. */
-  case class CosineSimilarity(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    override def nullable: Boolean = true
-    override def checkInputDataTypes() = {
-      val l = checkArray(left, "left")
-      if (l.isSuccess) checkArray(right, "right") else l
+  def cosineD(a: ArrayData, b: ArrayData): java.lang.Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var dot = 0d; var na = 0d; var nb = 0d; var i = 0
+    while (i < n) {
+      val x = a.getDouble(i); val y = b.getDouble(i)
+      dot += x * y; na += x * x; nb += y * y; i += 1
     }
+    ratio(dot, na, nb)
+  }
 
-    override def nullSafeEval(l: Any, r: Any): Any = {
-      val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
-      val n = math.min(a.numElements(), b.numElements())
-      var dot = 0d; var na = 0d; var nb = 0d; var i = 0
-      while (i < n) {
-        val x = elemAt(left.dataType, a, i); val y = elemAt(right.dataType, b, i)
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      val denom = math.sqrt(na) * math.sqrt(nb)
-      if (denom == 0d) null else dot / denom
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val n = ctx.freshName("n"); val i = ctx.freshName("i")
-        val dot = ctx.freshName("dot"); val na = ctx.freshName("na")
-        val nb = ctx.freshName("nb"); val x = ctx.freshName("x")
-        val y = ctx.freshName("y"); val denom = ctx.freshName("denom")
-        s"""
-           |int $n = Math.min($a.numElements(), $b.numElements());
-           |double $dot = 0.0, $na = 0.0, $nb = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  double $x = ${elemGetter(left.dataType, a, i)};
-           |  double $y = ${elemGetter(right.dataType, b, i)};
-           |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-           |}
-           |double $denom = Math.sqrt($na) * Math.sqrt($nb);
-           |if ($denom == 0.0) { ${ev.isNull} = true; }
-           |else { ${ev.value} = $dot / $denom; }
-         """.stripMargin
-      })
-
-    override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-      copy(left = l, right = r)
+  private def ratio(dot: Double, na: Double, nb: Double): java.lang.Double = {
+    val denom = math.sqrt(na) * math.sqrt(nb)
+    if (denom == 0d) null else dot / denom
   }
 
   /** dot(a, b) — sequential double accumulation. */
-  case class DotProduct(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    override def checkInputDataTypes() = {
-      val l = checkArray(left, "left")
-      if (l.isSuccess) checkArray(right, "right") else l
+  def dotF(a: ArrayData, b: ArrayData): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var dot = 0d; var i = 0
+    while (i < n) { dot += a.getFloat(i).toDouble * b.getFloat(i); i += 1 }
+    dot
+  }
+
+  def dotD(a: ArrayData, b: ArrayData): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var dot = 0d; var i = 0
+    while (i < n) { dot += a.getDouble(i) * b.getDouble(i); i += 1 }
+    dot
+  }
+
+  /** |a| — L2 norm, sequential double accumulation. */
+  def normF(a: ArrayData): Double = {
+    var acc = 0d; var i = 0
+    while (i < a.numElements()) {
+      val x = a.getFloat(i).toDouble; acc += x * x; i += 1
     }
+    math.sqrt(acc)
+  }
 
-    override def nullSafeEval(l: Any, r: Any): Any = {
-      val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
-      val n = math.min(a.numElements(), b.numElements())
-      var dot = 0d; var i = 0
-      while (i < n) {
-        dot += elemAt(left.dataType, a, i) * elemAt(right.dataType, b, i)
-        i += 1
-      }
-      dot
+  def normD(a: ArrayData): Double = {
+    var acc = 0d; var i = 0
+    while (i < a.numElements()) {
+      val x = a.getDouble(i); acc += x * x; i += 1
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val n = ctx.freshName("n"); val i = ctx.freshName("i")
-        val dot = ctx.freshName("dot")
-        s"""
-           |int $n = Math.min($a.numElements(), $b.numElements());
-           |double $dot = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  $dot += (${elemGetter(left.dataType, a, i)})
-           |        * (${elemGetter(right.dataType, b, i)});
-           |}
-           |${ev.value} = $dot;
-         """.stripMargin
-      })
-
-    override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-      copy(left = l, right = r)
+    math.sqrt(acc)
   }
 
   /** idot(a, b) over array<int> — exact LONG accumulation. The stage-1
@@ -130,103 +81,19 @@ object VectorExpressions {
     * deterministic with no float accumulation order to pin. Bounds: for
     * int8 codes the per-term product is ≤ 127², far from Long overflow.
     */
-  case class IntDotProduct(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = LongType
-
-    private def checkIntArray(e: Expression, side: String) = e.dataType match {
-      case ArrayType(IntegerType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$side must be array<int>, got $other")
-    }
-    override def checkInputDataTypes() = {
-      val l = checkIntArray(left, "left")
-      if (l.isSuccess) checkIntArray(right, "right") else l
-    }
-
-    override def nullSafeEval(l: Any, r: Any): Any = {
-      val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
-      val n = math.min(a.numElements(), b.numElements())
-      var acc = 0L; var i = 0
-      while (i < n) { acc += a.getInt(i).toLong * b.getInt(i); i += 1 }
-      acc
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val n = ctx.freshName("n"); val i = ctx.freshName("i")
-        val acc = ctx.freshName("acc")
-        s"""
-           |int $n = Math.min($a.numElements(), $b.numElements());
-           |long $acc = 0L;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  $acc += (long) $a.getInt($i) * (long) $b.getInt($i);
-           |}
-           |${ev.value} = $acc;
-         """.stripMargin
-      })
-
-    override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-      copy(left = l, right = r)
+  def idot(a: ArrayData, b: ArrayData): Long = {
+    val n = math.min(a.numElements(), b.numElements())
+    var acc = 0L; var i = 0
+    while (i < n) { acc += a.getInt(i).toLong * b.getInt(i); i += 1 }
+    acc
   }
 
-  /** |a| — L2 norm, sequential double accumulation. */
-  case class L2Norm(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = DoubleType
-    override def checkInputDataTypes() = checkArray(child, "child")
-
-    override def nullSafeEval(c: Any): Any = {
-      val a = c.asInstanceOf[ArrayData]
-      var acc = 0d; var i = 0
-      while (i < a.numElements()) {
-        val x = elemAt(child.dataType, a, i); acc += x * x; i += 1
-      }
-      math.sqrt(acc)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val i = ctx.freshName("i"); val acc = ctx.freshName("acc")
-        val x = ctx.freshName("x")
-        s"""
-           |double $acc = 0.0;
-           |for (int $i = 0; $i < $a.numElements(); $i++) {
-           |  double $x = ${elemGetter(child.dataType, a, i)};
-           |  $acc += $x * $x;
-           |}
-           |${ev.value} = Math.sqrt($acc);
-         """.stripMargin
-      })
-
-    override protected def withNewChildInternal(c: Expression) = copy(child = c)
-  }
-
-  /** Idempotently register the functions on a session's registry so they
-    * are usable from both SQL text and `call_function`.
-    */
-  def register(spark: SparkSession): Unit = {
-    Registry.ensure(spark, "graft_cosine",
-      es => CosineSimilarity(es(0), es(1)))
-    Registry.ensure(spark, "graft_dot",
-      es => DotProduct(es(0), es(1)))
-    Registry.ensure(spark, "graft_idot",
-      es => IntDotProduct(es(0), es(1)))
-    Registry.ensure(spark, "graft_norm",
-      es => L2Norm(es.head))
-  }
-
-  def cosine(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark); call_function("graft_cosine", a, b)
-  }
-  def dot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark); call_function("graft_dot", a, b)
-  }
-  def idot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark); call_function("graft_idot", a, b)
-  }
-  def norm(spark: SparkSession, a: Column): Column = {
-    register(spark); call_function("graft_norm", a)
-  }
+  def cosine(spark: SparkSession, a: Column, b: Column): Column =
+    call_function("graft_cosine", a, b)
+  def dot(spark: SparkSession, a: Column, b: Column): Column =
+    call_function("graft_dot", a, b)
+  def idot(spark: SparkSession, a: Column, b: Column): Column =
+    call_function("graft_idot", a, b)
+  def norm(spark: SparkSession, a: Column): Column =
+    call_function("graft_norm", a)
 }

@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `graft_word_shingles(text, k)` — the DISTINCT k-token word shingles
@@ -14,13 +11,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * shingle (the `shingles(tokens(normText), k)` spelling of DedupOps,
   * fused into one codegen-friendly pass).
   *
-  * Why (r15, guide §1.2 step 2 / §4-equivalent): the HOF spelling
+  * Why: the HOF spelling
   * (`transform(sequence(...), i -> concat_ws(" ", slice(tk, i+1, k)))`
   * + `array_distinct`) runs the lambda INTERPRETED per shingle window
   * and materializes the token array, the window slices and the
   * pre-distinct shingle array per row — measured as the dominant cost
   * of the q96/q108 prefix joins (the base build alone was ~3 s of
-  * q96's 4.4 s steady at sf0.1). This expression makes one pass over
+  * q96's 4.4 s steady at sf0.1). This function makes one pass over
   * the text: trim/lower via the same UTF8String kernels the built-ins
   * call, the same Java-regex split, and an insertion-ordered dedup —
   * value-identical to the SQL spelling (pinned on the real corpus and
@@ -29,39 +26,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * The DuckDB oracles are untouched — they re-derive shingle lists in
   * SQL, which is what makes the swap value-provable at the gate.
   */
-case class WordShingles(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes() =
-    if (left.dataType == StringType && right.dataType == IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_word_shingles needs (string, int), got " +
-          s"(${left.dataType}, ${right.dataType})")
-
-  override def nullSafeEval(text: Any, k: Any): Any =
-    WordShingles.shingles(text.asInstanceOf[UTF8String],
-      k.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, k) => {
-      val helper = WordShingles.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      s"${ev.value} = $helper.shingles($t, $k);"
-    })
-
-  override protected def withNewChildrenInternal(l: Expression,
-      r: Expression) = copy(left = l, right = r)
-}
-
 object WordShingles {
   // identical pattern string to DedupOps' split(c, "\\s+")
   private val Whitespace = java.util.regex.Pattern.compile("\\s+")
 
-  /** Public: called from generated code. One pass per row; the dedup
+  /** The kernel ([[Registry]]). One pass per row; the dedup
     * set preserves insertion order — exactly `array_distinct`.
     */
   def shingles(text: UTF8String, k: Int): ArrayData = {
@@ -94,14 +63,7 @@ object WordShingles {
     new GenericArrayData(arr)
   }
 
-  def register(spark: SparkSession): Unit =
-    Registry.ensure(spark, "graft_word_shingles",
-      es => WordShingles(es(0), es(1)))
-
   /** Distinct k-word shingles of `text` as a column. */
-  def shingles(spark: SparkSession, text: Column, k: Int): Column = {
-    register(spark)
-    call_function("graft_word_shingles", text,
-      org.apache.spark.sql.functions.lit(k))
-  }
+  def shingles(spark: SparkSession, text: Column, k: Int): Column =
+    call_function("graft_word_shingles", text, lit(k))
 }

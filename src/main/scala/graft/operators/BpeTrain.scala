@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * costs 32k in-memory rounds, not 32k sequential Spark jobs. The
   * distributed loop — one partially-aggregated pair count plus a
   * 1-row argmax per round, symbol arrays rewritten by the codegen'd
-  * O(L) [[PairMerge]] pass, lineage cut per round (the q61 loop
+  * O(L) `graft_pair_merge` pass, lineage cut per round (the q61 loop
   * pattern) — remains the fallback for symbol tables that outgrow the
   * driver. Both paths are deterministic and merge-by-merge identical
   * (differential-tested): the argmax breaks ties on (weight desc,
@@ -197,7 +197,7 @@ object BpeTrain {
 
   /** 121. Tokenize the corpus with the vocabulary q76 trains — the
     * apply-side that turns a merge table into training tokens
-    * ([[graft.functions.BpeEncode]]: min-rank loop, codepoint symbols,
+    * ([[graft.functions.BpeEncoder]]: min-rank loop, codepoint symbols,
     * per-executor word memoization). The merge table is the bounded
     * driver-side artifact train() already materializes; encoding itself
     * is ONE scan, zero shuffle, one codegen'd call per row — the shape

@@ -66,8 +66,8 @@ object DedupOps {
       .otherwise(graft.functions.WordShingles.shingles(s, col("text"), k))
 
   /** MinHash signature. Each shingle STRING is hashed exactly once; the
-    * 32-function family is derived inside the native MinHashSig
-    * expression by re-hashing the long with the function index (one
+    * 32-function family is derived inside the native `graft_minhash`
+    * kernel by re-hashing the long with the function index (one
     * codegen'd k×L loop — the built-in HOF formulation ran interpreted
     * and dominated the benchmark). No shuffle, no UDF.
     */

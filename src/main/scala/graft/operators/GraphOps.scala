@@ -431,6 +431,29 @@ object GraphOps {
     def toArray: Array[Long] = java.util.Arrays.copyOf(ids, size)
   }
 
+  /** Path-halving union-find over dense indexes; an index is its own
+    * root until first joined, and a union keeps the smaller root, so
+    * every root is its component's smallest index.
+    */
+  private final class UnionFind {
+    private var parent = new Array[Int](0)
+    def find(a0: Int): Int = {
+      if (a0 >= parent.length) {
+        val n = parent.length
+        parent = java.util.Arrays.copyOf(parent, math.max(a0 + 1, n * 2))
+        var i = n
+        while (i < parent.length) { parent(i) = i; i += 1 }
+      }
+      var a = a0
+      while (parent(a) != a) { parent(a) = parent(parent(a)); a = parent(a) }
+      a
+    }
+    def union(a: Int, b: Int): Unit = {
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+  }
+
   /** `df`'s first `width` long columns, one packed array per partition,
     * collected by ONE parallel job (toLocalIterator would run one
     * SERIAL job per partition, which cost more than the round loop it
@@ -1769,96 +1792,42 @@ object GraphOps {
   private def driverForestComponents(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     val forests: Array[Array[Long]] = edges.rdd.mapPartitions { it =>
-      val nodeIdx = new java.util.HashMap[java.lang.Long, Integer]()
-      var ids = new Array[Long](1024)
-      var parent = new Array[Int](1024)
-      def idOf(x: Long): Int = {
-        val got = nodeIdx.get(x)
-        if (got != null) got.intValue
-        else {
-          val ix = nodeIdx.size
-          if (ix == ids.length) {
-            ids = java.util.Arrays.copyOf(ids, ix * 2)
-            parent = java.util.Arrays.copyOf(parent, ix * 2)
-          }
-          ids(ix) = x; parent(ix) = ix
-          nodeIdx.put(x, ix); ix
-        }
-      }
-      def find(a0: Int): Int = { // path halving
-        var a = a0
-        while (parent(a) != a) {
-          parent(a) = parent(parent(a)); a = parent(a)
-        }
-        a
-      }
-      it.foreach { row =>
-        val ra = find(idOf(row.getLong(0)))
-        val rb = find(idOf(row.getLong(1)))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val n = nodeIdx.size
+      val ids = new LongIds; val uf = new UnionFind
+      it.foreach(row => uf.union(ids(row.getLong(0)), ids(row.getLong(1))))
+      val n = ids.size
       val out = new Array[Long](2 * n)
       var o = 0
       var i = 0
       while (i < n) {
-        val r = find(i)
-        if (r != i) { out(o) = ids(i); out(o + 1) = ids(r); o += 2 }
+        val r = uf.find(i)
+        if (r != i) { out(o) = ids.id(i); out(o + 1) = ids.id(r); o += 2 }
         i += 1
       }
       Iterator.single(java.util.Arrays.copyOf(out, o))
     }.collect()
     // driver union-find over the forest pairs (size-bounded by
     // Σ_p distinct-nodes(p)), then component min per root
-    val nodeIdx = new java.util.HashMap[java.lang.Long, Integer]()
-    var ids = new Array[Long](1024)
-    var parent = new Array[Int](1024)
-    def idOf(x: Long): Int = {
-      val got = nodeIdx.get(x)
-      if (got != null) got.intValue
-      else {
-        val ix = nodeIdx.size
-        if (ix == ids.length) {
-          ids = java.util.Arrays.copyOf(ids, ix * 2)
-          parent = java.util.Arrays.copyOf(parent, ix * 2)
-        }
-        ids(ix) = x; parent(ix) = ix
-        nodeIdx.put(x, ix); ix
-      }
-    }
-    def find(a0: Int): Int = {
-      var a = a0
-      while (parent(a) != a) {
-        parent(a) = parent(parent(a)); a = parent(a)
-      }
-      a
-    }
+    val ids = new LongIds; val uf = new UnionFind
     forests.foreach { pairs =>
       var i = 0
       while (i < pairs.length) {
-        val ra = find(idOf(pairs(i)))
-        val rb = find(idOf(pairs(i + 1)))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+        uf.union(ids(pairs(i)), ids(pairs(i + 1)))
         i += 2
       }
     }
-    val n = nodeIdx.size
+    val n = ids.size
     val minOf = new Array[Long](n)
     java.util.Arrays.fill(minOf, Long.MaxValue)
     var i = 0
     while (i < n) {
-      val r = find(i)
-      if (ids(i) < minOf(r)) minOf(r) = ids(i)
+      val r = uf.find(i)
+      if (ids.id(i) < minOf(r)) minOf(r) = ids.id(i)
       i += 1
     }
-    val idsF = ids; val parentF = parent // stable refs for the closure
     val rows = new java.util.AbstractList[org.apache.spark.sql.Row] {
       override def size(): Int = n
-      override def get(ix: Int): org.apache.spark.sql.Row = {
-        var a = ix
-        while (parentF(a) != a) a = parentF(a)
-        org.apache.spark.sql.Row(idsF(ix), minOf(a))
-      }
+      override def get(ix: Int): org.apache.spark.sql.Row =
+        org.apache.spark.sql.Row(ids.id(ix), minOf(uf.find(ix)))
     }
     spark.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("node",
@@ -2619,13 +2588,6 @@ object GraphOps {
     */
   private[graft] def driverPeel(spark: SparkSession, ids: Array[Long],
       us: Array[Int], vs: Array[Int], k: Int): DataFrame = {
-    val dbg = sys.env.contains("GRAFT_PEEL_DEBUG")
-    var tDbg = System.nanoTime
-    def mark(name: String): Unit = if (dbg) {
-      val now = System.nanoTime
-      System.err.println(f"[peel] $name%-18s ${(now - tDbg) / 1e9}%6.2f s")
-      tDbg = now
-    }
     val n = us.length
     val sup = new Array[Long](n)
     var i = 0
@@ -2653,7 +2615,6 @@ object GraphOps {
     while (v0 < nNodes) {
       java.util.Arrays.sort(packed, off(v0), off(v0 + 1)); v0 += 1
     }
-    mark("csr1 build+sort")
     // initial supports via the DEGREE-ORIENTED intersect: orient every
     // edge low-rank → high-rank (rank = (degree, id)); a triangle with
     // ranks r1<r2<r3 is found exactly once, intersecting out(r1) ∩
@@ -2686,7 +2647,6 @@ object GraphOps {
     while (v0 < nNodes) {
       java.util.Arrays.sort(packed2, off2(v0), off2(v0 + 1)); v0 += 1
     }
-    mark("csr2 build+sort")
     // r15: the initial support pass is order-free integer adds over
     // READ-ONLY adjacency — embarrassingly parallel. Split the edge
     // range across driver threads, each accumulating into a PRIVATE
@@ -2731,7 +2691,6 @@ object GraphOps {
         while (j < n) { sup(j) += p(j); j += 1 }
       }
     }
-    mark("support init")
     val alive = Array.fill(n)(true)
     var stack = new Array[Int](math.max(16, n / 4)); var top = 0
     def push(e: Int): Unit = {
@@ -2766,7 +2725,6 @@ object GraphOps {
         }
       }
     }
-    mark("cascade peel")
     // survivors into compact primitive arrays, exposed to Spark as a
     // lazily-mapped List — Rows materialize one at a time during the
     // LocalRelation conversion instead of as a strict boxed Seq
@@ -2817,7 +2775,6 @@ object GraphOps {
     var r = 0
     var done = false
     var lastScored: DataFrame = null
-    val t0 = System.nanoTime()
     while (r < rounds && !done) {
       val scored = und.join(sup, Seq("u", "v"), "left")
         .select(col("u"), col("v"),
@@ -2828,9 +2785,6 @@ object GraphOps {
         .select(col("u"), col("v"))
       val kept = scored.filter(col("support") >= k - 2)
       val nDrop = dropped.count()
-      if (sys.env.contains("GRAFT_KTRUSS_DEBUG"))
-        println(s"[ktruss] round=$r edges=${scored.count()} drop=$nDrop" +
-          s" t=${(System.nanoTime() - t0) / 1e9}")
       if (nDrop == 0) done = true
       else {
         // kept/sup/delta all derive from the checkpointed `scored` —
@@ -3078,20 +3032,10 @@ object GraphOps {
     while (i < nN) { isCore(i) = nepsOf(i) >= 4L; i += 1 }
     // min-label components over core-core ε-edges: union-find, then
     // the component label is the min node ID in the component
-    val parent = new Array[Int](nN)
-    i = 0
-    while (i < nN) { parent(i) = i; i += 1 }
-    def find(a0: Int): Int = {
-      var a = a0
-      while (parent(a) != a) { parent(a) = parent(parent(a)); a = parent(a) }
-      a
-    }
+    val uf = new UnionFind
     i = 0
     while (i < nEps) {
-      if (isCore(epsU(i)) && isCore(epsV(i))) {
-        val ra = find(epsU(i)); val rb = find(epsV(i))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
+      if (isCore(epsU(i)) && isCore(epsV(i))) uf.union(epsU(i), epsV(i))
       i += 1
     }
     val minId = new Array[Long](nN)
@@ -3099,7 +3043,7 @@ object GraphOps {
     i = 0
     while (i < nN) {
       if (isCore(i)) {
-        val r = find(i)
+        val r = uf.find(i)
         if (g.id(i) < minId(r)) minId(r) = g.id(i)
       }
       i += 1
@@ -3111,7 +3055,7 @@ object GraphOps {
     java.util.Arrays.fill(cluster, NoCluster)
     i = 0
     while (i < nN) {
-      if (isCore(i)) cluster(i) = minId(find(i))
+      if (isCore(i)) cluster(i) = minId(uf.find(i))
       i += 1
     }
     // borders: non-core with an ε-edge to a core — min adjacent core

@@ -17,15 +17,9 @@ object TextSources {
       .option("mode", "PERMISSIVE")
       .csv(path)
 
-  def readJsonl(spark: SparkSession, path: String, schema: StructType)
-      : DataFrame =
-    spark.read.schema(schema)
-      .option("mode", "PERMISSIVE")
-      .json(path)
-
-  /** Same read but with malformed rows routed to a `_corrupt` column so
-    * bad feeds are observable (count them, quarantine them) instead of
-    * silently null.
+  /** JSON lines under `schema`, with malformed rows routed to a
+    * `_corrupt` column so bad feeds are observable (count them,
+    * quarantine them) instead of silently null.
     */
   def readJsonlWithCorrupt(spark: SparkSession, path: String,
       schema: StructType): DataFrame = {

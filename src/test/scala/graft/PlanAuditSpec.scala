@@ -373,7 +373,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     // NOTHING: no join, no aggregate, no extra exchange
     assert(!p.contains("Join"), p.take(2000))
     assert("Exchange".r.findAllIn(p).length <= 1, p.take(2000))
-    assert(p.contains("bpeencode"), p.take(2000))
+    assert(p.contains("BpeEncoder(2 merges).encode("), p.take(2000))
   }
 
   test("q112 bm25: query terms broadcast into the posting scan — the " +
@@ -920,7 +920,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     assert(!p.contains("Exchange"),
       "assignment must not shuffle the corpus\n" + p.take(2500))
     assert(!p.contains("Join"), p.take(2500))
-    assert(p.contains("intdotproduct"), p.take(2500))
+    assert(p.contains("VectorExpressions.idot("), p.take(2500))
   }
 
   test("q195 Gini ranking: candidate scans prune to their columns, the " +

@@ -40,7 +40,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("functions usable from SQL after registration") {
-    VectorExpressions.register(spark)
+    // GraftSession.get registered every graft_* function
     val r = spark.sql(
       "SELECT graft_cosine(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c")
       .first().getDouble(0)

@@ -12,9 +12,13 @@ matches a DOUBLE oracle. This replica therefore ALSO:
     decimal-typed output column (the r7/r10 escape class), and
   - compares type CLASSES (int/float/decimal/...) between the Spark
     parquet schema and the DuckDB oracle result, per column.
+Each query's line also gives its seconds, split into the oracle SQL
+(DuckDB over the testdata) and the compare (reading the Spark result,
+the checks, sort and cell compare); the ten slowest close the report.
+
 Not part of the shipped library.
 """
-import json, sys, glob, os
+import json, sys, glob, os, time
 import duckdb
 import pyarrow.parquet as pq
 import pyarrow.types as pat
@@ -55,6 +59,58 @@ def spark_schema(res_glob):
     return {name: pa_type_class(sch.field(name).type) for name in sch.names}
 
 
+def check(con, oracles, name, res_glob):
+    """(status, oracle seconds) of one query's result: status is OK,
+    ROWS_ONLY ... or the first failure found."""
+    if not glob.glob(res_glob):
+        return "NO_RESULT", 0.0
+    # driver-parity: DECIMAL in the OUTPUT schema is an automatic fail
+    # (its hasher normalizes Decimal vs float differently per engine)
+    sch = spark_schema(res_glob)
+    dec_cols = [c for c, k in sch.items() if k == "decimal"]
+    if dec_cols:
+        return f"DECIMAL_OUTPUT cols={dec_cols} (driver hash-fails these)", 0.0
+    got = con.sql(f"SELECT * FROM '{res_glob}'").fetchdf()
+    if name not in oracles:
+        return f"ROWS_ONLY rows={len(got)}" + (" EMPTY!" if len(got)==0 else ""), 0.0
+    t0 = time.perf_counter()
+    try:
+        rel = con.sql(oracles[name])
+        exp_types = dict(zip(rel.columns, [duck_type_class(t) for t in rel.types]))
+        exp = rel.fetchdf()
+    except Exception as e:
+        return f"ORACLE_SQL_ERROR: {e}", time.perf_counter() - t0
+    oracle_s = time.perf_counter() - t0
+    got = got[sorted(got.columns)]
+    exp = exp[sorted(exp.columns)]
+    if list(got.columns) != list(exp.columns):
+        return f"SCHEMA_MISMATCH cols got={list(got.columns)} exp={list(exp.columns)}", oracle_s
+    # type-CLASS parity between the Spark parquet footer and the oracle
+    # (decimal-vs-double, int-vs-float etc. — the r10 q24 escape class).
+    # DuckDB SUM(int)->HUGEINT maps to "decimal" here; that's a real
+    # oracle bug too (CLAUDE.md: always CAST(... AS BIGINT)).
+    tmm = [(c, sch.get(c), exp_types.get(c)) for c in got.columns
+           if sch.get(c) != exp_types.get(c)]
+    if tmm:
+        return f"TYPE_CLASS_MISMATCH {tmm}", oracle_s
+    if len(got) != len(exp):
+        return f"ROWCOUNT got={len(got)} exp={len(exp)}", oracle_s
+    gs = got.sort_values(by=list(got.columns)).reset_index(drop=True)
+    es = exp.sort_values(by=list(exp.columns)).reset_index(drop=True)
+    # dtype normalization: compare values via string repr per cell
+    for c in got.columns:
+        gv, ev = gs[c], es[c]
+        try:
+            eq = (gv.astype(str) == ev.astype(str))
+        except Exception as e:
+            return f"VALUE_MISMATCH col {c}: compare error {e}", oracle_s
+        if not eq.all():
+            i = eq.idxmin()
+            return (f"VALUE_MISMATCH col {c} row {i}: got={gv[i]!r} ({gv.dtype}) "
+                    f"exp={ev[i]!r} ({ev.dtype}) ndiff={int((~eq).sum())}"), oracle_s
+    return "OK", oracle_s
+
+
 def main():
     out_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/graft_verify"
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
@@ -65,69 +121,22 @@ def main():
               "lineitem","events","documents","embeddings"]:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     results = {}
+    times = {}  # name -> (oracle seconds, compare seconds)
     for name in sorted(os.listdir(out_dir)):
         path = os.path.join(out_dir, name)
         if not os.path.isdir(path):
             continue
-        res_glob = f"{path}/*.parquet"
-        if not glob.glob(res_glob):
-            results[name] = "NO_RESULT"
-            continue
-        # driver-parity: DECIMAL in the OUTPUT schema is an automatic fail
-        # (its hasher normalizes Decimal vs float differently per engine)
-        sch = spark_schema(res_glob)
-        dec_cols = [c for c, k in sch.items() if k == "decimal"]
-        if dec_cols:
-            results[name] = f"DECIMAL_OUTPUT cols={dec_cols} (driver hash-fails these)"
-            continue
-        got = con.sql(f"SELECT * FROM '{res_glob}'").fetchdf()
-        if name not in oracles:
-            results[name] = f"ROWS_ONLY rows={len(got)}" + (" EMPTY!" if len(got)==0 else "")
-            continue
-        try:
-            rel = con.sql(oracles[name])
-            exp_types = dict(zip(rel.columns, [duck_type_class(t) for t in rel.types]))
-            exp = rel.fetchdf()
-        except Exception as e:
-            results[name] = f"ORACLE_SQL_ERROR: {e}"
-            continue
-        got = got[sorted(got.columns)]
-        exp = exp[sorted(exp.columns)]
-        if list(got.columns) != list(exp.columns):
-            results[name] = f"SCHEMA_MISMATCH cols got={list(got.columns)} exp={list(exp.columns)}"
-            continue
-        # type-CLASS parity between the Spark parquet footer and the oracle
-        # (decimal-vs-double, int-vs-float etc. — the r10 q24 escape class).
-        # DuckDB SUM(int)->HUGEINT maps to "decimal" here; that's a real
-        # oracle bug too (CLAUDE.md: always CAST(... AS BIGINT)).
-        tmm = [(c, sch.get(c), exp_types.get(c)) for c in got.columns
-               if sch.get(c) != exp_types.get(c)]
-        if tmm:
-            results[name] = f"TYPE_CLASS_MISMATCH {tmm}"
-            continue
-        if len(got) != len(exp):
-            results[name] = f"ROWCOUNT got={len(got)} exp={len(exp)}"
-            continue
-        gs = got.sort_values(by=list(got.columns)).reset_index(drop=True)
-        es = exp.sort_values(by=list(exp.columns)).reset_index(drop=True)
-        # dtype normalization: compare values via string repr per cell
-        mismatch = None
-        for c in got.columns:
-            gv, ev = gs[c], es[c]
-            try:
-                eq = (gv.astype(str) == ev.astype(str))
-            except Exception as e:
-                mismatch = f"col {c}: compare error {e}"; break
-            if not eq.all():
-                i = eq.idxmin()
-                mismatch = (f"col {c} row {i}: got={gv[i]!r} ({gv.dtype}) "
-                            f"exp={ev[i]!r} ({ev.dtype}) ndiff={int((~eq).sum())}")
-                break
-        results[name] = "OK" if mismatch is None else f"VALUE_MISMATCH {mismatch}"
+        t0 = time.perf_counter()
+        v, o = check(con, oracles, name, f"{path}/*.parquet")
+        c = time.perf_counter() - t0 - o
+        results[name], times[name] = v, (o, c)
+        print(f"{'PASS' if v=='OK' or (v.startswith('ROWS_ONLY') and 'EMPTY' not in v) else 'FAIL':4} {name}: {v} "
+              f"[oracle {o:.2f}s, compare {c:.2f}s]", flush=True)
     ok = sum(1 for v in results.values() if v == "OK" or v.startswith("ROWS_ONLY rows=") and "EMPTY" not in v)
-    for k, v in results.items():
-        print(f"{'PASS' if v=='OK' or (v.startswith('ROWS_ONLY') and 'EMPTY' not in v) else 'FAIL':4} {k}: {v}")
     print(f"\n{ok}/{len(results)} green")
+    print("\nslowest 10 (oracle + compare):")
+    for k, (o, c) in sorted(times.items(), key=lambda kv: -sum(kv[1]))[:10]:
+        print(f"  {o + c:7.2f}s  {k} (oracle {o:.2f}s, compare {c:.2f}s)")
 
 if __name__ == "__main__":
     main()
