@@ -281,32 +281,55 @@ object GraphOps {
     * table as a LocalRelation built from the driver-collected baskets
     * (r15): the pruned graph is tiny (7,146 und edges at sf0.1), so
     * consumers that stay RELATIONAL (q151 wedge join, q174 moments,
-    * q231) or collect internally (q126 LPA, q265 SCAN) keep their
-    * exact plans while the corpus-scale groupBy+explode+count build
-    * disappears. None past the collect gates ⇒ caller uses the
-    * unchanged [[prunedCoPurchaseEdges]].
+    * q231) keep their exact plans while the corpus-scale
+    * groupBy+explode+count build disappears. None past the collect
+    * gates ⇒ caller uses the unchanged [[prunedCoPurchaseEdges]].
     */
   private def prunedCoPurchaseEdgeDf(s: SparkSession, d: String,
       minCount: Int): Option[DataFrame] =
     collectBasketPairs(s, d, driverMaxEdges(s))
-      .map { bp0 =>
-        val bp = bp0.pruned(minCount)
-        val n = bp.us.length
-        val rows = new java.util.AbstractList[org.apache.spark.sql.Row] {
-          override def size(): Int = 2 * n
-          override def get(ix: Int): org.apache.spark.sql.Row =
-            if (ix < n)
-              org.apache.spark.sql.Row(bp.ids(bp.us(ix)), bp.ids(bp.vs(ix)))
-            else
-              org.apache.spark.sql.Row(bp.ids(bp.vs(ix - n)),
-                bp.ids(bp.us(ix - n)))
-        }
-        s.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("src",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("dst",
-            org.apache.spark.sql.types.LongType))))
-      }
+      .map(bp => symEdgeDf(s, bp.pruned(minCount)))
+
+  /** Both orientations of `bp`'s pairs as a `(src, dst)` LocalRelation. */
+  private def symEdgeDf(s: SparkSession, bp: BasketPairs): DataFrame = {
+    val n = bp.us.length
+    val rows = new java.util.AbstractList[org.apache.spark.sql.Row] {
+      override def size(): Int = 2 * n
+      override def get(ix: Int): org.apache.spark.sql.Row =
+        if (ix < n)
+          org.apache.spark.sql.Row(bp.ids(bp.us(ix)), bp.ids(bp.vs(ix)))
+        else
+          org.apache.spark.sql.Row(bp.ids(bp.vs(ix - n)),
+            bp.ids(bp.us(ix - n)))
+    }
+    s.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("src",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("dst",
+        org.apache.spark.sql.types.LongType))))
+  }
+
+  /** The pruned co-purchase graph for the consumers that run a driver
+    * kernel (q126 LPA, q167 modularity, q265 SCAN). Below the basket
+    * gate, and with the symmetric pruned edge count within
+    * [[driverMaxEdges]] (the gate their DataFrame entries apply), the
+    * collected pairs stay on the driver as a [[CollectedEdges]]: the
+    * kernels run on those arrays with no LocalRelation, checkpoint,
+    * count or re-collect in between (Right). Otherwise the edge table
+    * for the relational loops (Left): the collected pairs as a
+    * LocalRelation, or past the basket gate the unchanged
+    * [[prunedCoPurchaseEdges]].
+    */
+  private def prunedCoPurchase(s: SparkSession, d: String, minCount: Int)
+      : Either[DataFrame, CollectedEdges] = {
+    val max = driverMaxEdges(s)
+    collectBasketPairs(s, d, max).map(_.pruned(minCount)) match {
+      case Some(bp) if 2L * bp.us.length <= max =>
+        Right(CollectedEdges.fromSym(bp.ids, bp.us, bp.vs))
+      case Some(bp) => Left(symEdgeDf(s, bp))
+      case None => Left(prunedCoPurchaseEdges(s, d, minCount))
+    }
+  }
 
   /** Per-node EXACT triangle counts of collected undirected pairs —
     * the degree-oriented intersect (the q107 orientation) counted at
@@ -566,23 +589,45 @@ object GraphOps {
   private final class BasketPairs(val ids: Array[Long],
       val us: Array[Int], val vs: Array[Int], val counts: Array[Int]) {
     /** Pairs with count ≥ minCount, compacted (the
-      * [[prunedCoPurchaseEdges]] prune).
+      * [[prunedCoPurchaseEdges]] prune). The id table keeps only the
+      * nodes of a surviving pair, in their old order, so a kernel over
+      * the pruned pairs sees exactly the nodes of the pruned edge table.
       */
     def pruned(minCount: Int): BasketPairs = {
+      val newIx = new Array[Int](ids.length)
+      java.util.Arrays.fill(newIx, -1)
       var n = 0
       var i = 0
-      while (i < counts.length) { if (counts(i) >= minCount) n += 1; i += 1 }
+      while (i < counts.length) {
+        if (counts(i) >= minCount) {
+          n += 1; newIx(us(i)) = 0; newIx(vs(i)) = 0
+        }
+        i += 1
+      }
+      var nN = 0
+      i = 0
+      while (i < ids.length) {
+        if (newIx(i) == 0) { newIx(i) = nN; nN += 1 }
+        i += 1
+      }
+      val ids2 = new Array[Long](nN)
+      i = 0
+      while (i < ids.length) {
+        if (newIx(i) >= 0) ids2(newIx(i)) = ids(i)
+        i += 1
+      }
       val u2 = new Array[Int](n); val v2 = new Array[Int](n)
       val c2 = new Array[Int](n)
       var o = 0
       i = 0
       while (i < counts.length) {
         if (counts(i) >= minCount) {
-          u2(o) = us(i); v2(o) = vs(i); c2(o) = counts(i); o += 1
+          u2(o) = newIx(us(i)); v2(o) = newIx(vs(i)); c2(o) = counts(i)
+          o += 1
         }
         i += 1
       }
-      new BasketPairs(ids, u2, v2, c2)
+      new BasketPairs(ids2, u2, v2, c2)
     }
   }
 
@@ -1558,7 +1603,8 @@ object GraphOps {
     // function of the graph, spelled identically here and in
     // [[lpRound]]'s count+TopK form.
     driverEdgeCount(edges0, edges0) match {
-      case Some(nE) => return driverLpa(edges0, rounds, nE)
+      case Some(nE) => return driverLpa(symEdges.sparkSession,
+        new CollectedEdges(edges0, nE, weighted = false), rounds)
       case None =>
     }
     val labels0 = edges0.select(col("src").as("node")).distinct()
@@ -1577,15 +1623,22 @@ object GraphOps {
   }
 
   /** In-memory synchronous LPA over a collected symmetric edge list —
-    * the below-gate path of [[labelPropagation]]. CSR by dst; each
-    * round sorts every node's neighbor-label slice and scans for the
-    * (max count, min label) winner — O(E log d̄) per round.
+    * the below-gate path of [[labelPropagation]] and of q126's
+    * collected graph: `(node, lbl)` for every node of `g`.
     */
-  private def driverLpa(edges: DataFrame, rounds: Int,
-      n: Int): DataFrame = {
-    val spark = edges.sparkSession
-    val g = new CollectedEdges(edges, n, weighted = false)
+  private def driverLpa(spark: SparkSession, g: CollectedEdges,
+      rounds: Int): DataFrame =
+    longPairDf(spark, g.nN, "node", "lbl", Array.tabulate(g.nN)(g.id),
+      lpaLabels(g, rounds))
+
+  /** The LPA kernel: every dense node's label after `rounds`
+    * synchronous rounds. CSR by dst; each round sorts every node's
+    * neighbor-label slice and scans for the (max count, min label)
+    * winner — O(E log d̄) per round.
+    */
+  private def lpaLabels(g: CollectedEdges, rounds: Int): Array[Long] = {
     val ss = g.ss; val ds = g.ds
+    val n = ss.length
     val nN = g.nN
     // CSR by dst: each node's slice lists its neighbors (the srcs
     // whose labels it counts — mirrors lpRound's groupBy(dst, lbl))
@@ -1630,17 +1683,7 @@ object GraphOps {
       }
       lbl = nxt
     }
-    val lblF = lbl
-    val rows = new java.util.AbstractList[org.apache.spark.sql.Row] {
-      override def size(): Int = nN
-      override def get(ix: Int): org.apache.spark.sql.Row =
-        org.apache.spark.sql.Row(g.id(ix), lblF(ix))
-    }
-    spark.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("lbl",
-        org.apache.spark.sql.types.LongType))))
+    lbl
   }
 
   /** One synchronous LPA round over a `(node, lbl)` label table —
@@ -1659,12 +1702,10 @@ object GraphOps {
   }
 
   def q126LabelProp(s: SparkSession, d: String): DataFrame =
-    labelPropagation(
-        // r15: driver-collected pruned build below the gate
-        prunedCoPurchaseEdgeDf(s, d, minCount = 2)
-          .getOrElse(prunedCoPurchaseEdges(s, d, minCount = 2)),
-        rounds = 5)
-      .select(col("node").as("partkey"), col("lbl").as("community"))
+    (prunedCoPurchase(s, d, minCount = 2) match {
+      case Right(g) => driverLpa(s, g, rounds = 5)
+      case Left(edges) => labelPropagation(edges, rounds = 5)
+    }).select(col("node").as("partkey"), col("lbl").as("community"))
 
   /** 168. q151: common-neighbor link prediction (Liben-Nowell &
     * Kleinberg 2003) — for every NON-adjacent pair reachable in two
@@ -2052,17 +2093,96 @@ object GraphOps {
       .limit(topK)
   }
 
-  /** q167: modularity of the q126 label-propagation communities over
-    * the pruned co-purchase graph — top 25 communities by size. */
-  def q167Modularity(s: SparkSession, d: String): DataFrame = {
-    // r15: driver-collected pruned build below the gate
-    val edges = prunedCoPurchaseEdgeDf(s, d, minCount = 2)
-      .getOrElse(prunedCoPurchaseEdges(s, d, minCount = 2)
-        .localCheckpoint(false))
-    val labels = labelPropagation(edges, rounds = 5)
-      .select(col("node"), col("lbl").as("community"))
-    modularity(edges, labels, topK = 25)
+  /** In-memory [[modularity]] over a collected symmetric graph and a
+    * label per dense node of `g` — the below-gate path of q167. Every
+    * count is an exact long (m2, degrees, directed intra edges and
+    * n_nodes per community) and q_ppm is the same signed round-half-up
+    * rational in BigInteger, so the rows equal the relational ones,
+    * top-k order (n_nodes desc, community asc) included.
+    */
+  private def driverModularity(spark: SparkSession, g: CollectedEdges,
+      labels: Array[Long], topK: Int): DataFrame = {
+    val nN = g.nN; val nE = g.ss.length
+    val deg = new Array[Long](nN)
+    var i = 0
+    while (i < nE) { deg(g.ss(i)) += 1; i += 1 }
+    // dense community per node with edges (the label ⋈ degree join)
+    val comms = new LongIds
+    val cix = new Array[Int](nN)
+    i = 0
+    while (i < nN) {
+      cix(i) = if (deg(i) > 0) comms(labels(i)) else -1
+      i += 1
+    }
+    val nC = comms.size
+    val nNodes = new Array[Long](nC); val degSum = new Array[Long](nC)
+    val intra2 = new Array[Long](nC)
+    i = 0
+    while (i < nN) {
+      if (cix(i) >= 0) { nNodes(cix(i)) += 1; degSum(cix(i)) += deg(i) }
+      i += 1
+    }
+    i = 0
+    while (i < nE) {
+      val c = cix(g.ss(i))
+      if (c == cix(g.ds(i))) intra2(c) += 1
+      i += 1
+    }
+    val top = (0 until nC)
+      .sortBy(c => (-nNodes(c), comms.id(c))).take(topK)
+    val m2 = java.math.BigInteger.valueOf(nE.toLong)
+    val den = m2.multiply(m2)
+    val two = java.math.BigInteger.valueOf(2L)
+    val ppm = java.math.BigInteger.valueOf(1000000L)
+    // (2·|num|·10⁶ + den) DIV (2·den), the sign applied outside
+    def qPpm(c: Int): Long = {
+      val ds = java.math.BigInteger.valueOf(degSum(c))
+      val num = m2.multiply(java.math.BigInteger.valueOf(intra2(c)))
+        .subtract(ds.multiply(ds))
+      val q = two.multiply(num.abs).multiply(ppm).add(den)
+        .divide(two.multiply(den)).longValueExact
+      if (num.signum >= 0) q else -q
+    }
+    val rows = top.map { c =>
+      org.apache.spark.sql.Row(comms.id(c), nNodes(c), intra2(c) / 2,
+        degSum(c), qPpm(c))
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      org.apache.spark.sql.types.StructType(Seq("community", "n_nodes",
+        "intra_edges", "degree_sum", "q_ppm").map(
+        org.apache.spark.sql.types.StructField(_,
+          org.apache.spark.sql.types.LongType))))
   }
+
+  /** [[driverModularity]] over DataFrame inputs: collects `symEdges`
+    * (long ids) and a `(node, community)` label for each of its nodes.
+    * The suite runs the [[modularity]] cases through it.
+    */
+  private[graft] def driverModularity(symEdges: DataFrame,
+      labels: DataFrame, topK: Int): DataFrame = {
+    val edges = symEdges.select(col("src"), col("dst"))
+    val g = new CollectedEdges(edges, edges.count().toInt,
+      weighted = false)
+    val byNode = labels.select(col("node"), col("community")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    driverModularity(symEdges.sparkSession, g,
+      Array.tabulate(g.nN)(ix => byNode(g.id(ix))), topK)
+  }
+
+  /** q167: modularity of the q126 label-propagation communities over
+    * the pruned co-purchase graph — top 25 communities by size. Below
+    * the gates both kernels run on the one collected graph.
+    */
+  def q167Modularity(s: SparkSession, d: String): DataFrame =
+    prunedCoPurchase(s, d, minCount = 2) match {
+      case Right(g) =>
+        driverModularity(s, g, lpaLabels(g, rounds = 5), topK = 25)
+      case Left(edges0) =>
+        val edges = edges0.localCheckpoint(false)
+        val labels = labelPropagation(edges, rounds = 5)
+          .select(col("node"), col("lbl").as("community"))
+        modularity(edges, labels, topK = 25)
+    }
 
   /** Degree assortativity (Newman 2002): the Pearson correlation of
     * endpoint degrees over all directed edges — one calibrated −1..1
@@ -3149,9 +3269,10 @@ object GraphOps {
     * grain.
     */
   def q265Scan(s: SparkSession, d: String): DataFrame =
-    scanCluster( // r15: driver-collected pruned build below the gate
-      prunedCoPurchaseEdgeDf(s, d, minCount = 2)
-        .getOrElse(prunedCoPurchaseEdges(s, d, minCount = 2)))
+    prunedCoPurchase(s, d, minCount = 2) match {
+      case Right(g) => scanDriver(s, g)
+      case Left(edges) => scanCluster(edges)
+    }
 
   /** The SCAN kernel over ANY symmetric (src, dst) edge list — split
     * from [[q265Scan]] so the suite can differential-test it against a

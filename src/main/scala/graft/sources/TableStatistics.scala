@@ -3,6 +3,7 @@ package graft.sources
 import java.io.IOException
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -47,11 +48,17 @@ object TableStatistics {
     filesUnder(p)
   }
 
-  /** `read` applied to one file's footer, read in this JVM. */
+  /** `read` applied to one file's footer, read in this JVM. The read
+    * options are built over the session's Hadoop configuration, as
+    * Spark's own footer reader does: the one-argument `open` builds
+    * default options, which create a fresh `Configuration` and parse
+    * the Hadoop XML resources on every footer read.
+    */
   private[sources] def footer[T](spark: SparkSession, file: Path)
       (read: ParquetMetadata => T): T = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf, file).build())
     try read(reader.getFooter) finally reader.close()
   }
 

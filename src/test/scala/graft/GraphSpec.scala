@@ -420,6 +420,45 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     assert(q.nonEmpty && q.forall(r => math.abs(r.getLong(4)) <= 1000000L))
   }
 
+  test("driverModularity ≡ modularity row for row: the bridged " +
+      "triangles, one whole-graph community, a community with no intra " +
+      "edges, and a random graph whose equal-size communities pin the " +
+      "top-k tie-break") {
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[List[Long]] =
+      df.collect().toSeq.map(r => (0 until 5).map(r.getLong).toList)
+    def both(edges: org.apache.spark.sql.DataFrame,
+        labels: org.apache.spark.sql.DataFrame, topK: Int)
+        : Seq[List[Long]] = {
+      val rel = rows(GraphOps.modularity(edges, labels, topK))
+      val drv = rows(GraphOps.driverModularity(edges, labels, topK))
+      assert(drv == rel, s"driver=$drv relational=$rel")
+      drv
+    }
+    val edges = sym((1L, 2L), (2L, 3L), (1L, 3L),
+      (4L, 5L), (5L, 6L), (4L, 6L), (3L, 4L)).toDF("src", "dst")
+    assert(both(edges, Seq((1L, 1L), (2L, 1L), (3L, 1L),
+      (4L, 4L), (5L, 4L), (6L, 4L)).toDF("node", "community"), 10) ==
+      Seq(List(1L, 3L, 3L, 7L, 178571L), List(4L, 3L, 3L, 7L, 178571L)))
+    assert(both(edges, Seq(1L, 2L, 3L, 4L, 5L, 6L).map((_, 0L))
+      .toDF("node", "community"), 10) == Seq(List(0L, 6L, 7L, 14L, 0L)))
+    assert(both(edges, Seq((1L, 9L), (2L, 8L), (3L, 9L), (4L, 8L),
+      (5L, 9L), (6L, 8L)).toDF("node", "community"), 10)
+      .exists(_(4) < 0L))
+    // 12 communities of 5 nodes each (labels spread over both signs,
+    // not in node order): top 7 of 12 equal sizes is decided by the
+    // community-id tie-break alone
+    val rnd = new scala.util.Random(167)
+    val nodes = (1L to 60L).toSeq
+    val label = nodes.map(n => n -> ((n * 7) % 12 - 5) * 1000L).toMap
+    val und = (for (a <- nodes; b <- nodes if a < b &&
+      rnd.nextInt(100) < (if (label(a) == label(b)) 60 else 6))
+      yield (a, b)) ++ nodes.sliding(2).map(p => (p(0), p(1)))
+    val randEdges = sym(und.distinct)
+    val top = both(randEdges, label.toSeq.toDF("node", "community"), 7)
+    assert(top.map(_.head) == label.values.toSeq.distinct.sorted.take(7))
+    assert(top.forall(_(1) == 5L))
+  }
+
   test("assortativity: stars and paths are perfectly disassortative, " +
       "regular graphs are NULL, and a mixed graph matches a local " +
       "moment replay") {
@@ -905,6 +944,21 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
       val rel = rset(viaRelational)
       assert(rel == fast && fast.nonEmpty, s"kernel #$i: " +
         s"extra=${(rel -- fast).take(3)} missing=${(fast -- rel).take(3)}")
+    }
+  }
+
+  test("below the gates the collected pruned graph stays on the " +
+      "driver: q167 starts at most 2 jobs, q126 and q265 only the " +
+      "basket collect and the output write") {
+    Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame)](
+      "q126" -> GraphOps.q126LabelProp,
+      "q167" -> GraphOps.q167Modularity,
+      "q265" -> GraphOps.q265Scan
+    ).foreach { case (name, query) =>
+      val (_, _, jobs) = recording(query(spark, Sf)
+        .write.format("noop").mode("overwrite").save())
+      assert(jobs <= 2, s"$name started $jobs jobs")
     }
   }
 
