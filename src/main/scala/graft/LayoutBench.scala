@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.{BloomSkipIndex, TableLayout, TableStatistics}
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -41,11 +42,14 @@ object LayoutBench {
     var best = (0L, 0L, 0L, Double.MaxValue)
     for (_ <- 0 until 2) {
       val l = new InputMetricsListener
+      // listener events arrive asynchronously: drain so the listener
+      // sees only this run's task ends, and all of them
+      ListenerBusDrain(spark.sparkContext)
       spark.sparkContext.addSparkListener(l)
       val t0 = System.nanoTime()
       val n = body.count()
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // listener bus drains async
+      ListenerBusDrain(spark.sparkContext)
       spark.sparkContext.removeSparkListener(l)
       if (sec < best._4) best = (n, l.records.get, l.bytes.get, sec)
     }

@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 
@@ -33,9 +34,13 @@ object QProbe {
       once(name) // warm-up
       val warmCc = compiles - c0
       val reps = (1 to 3).map { _ =>
-        Thread.sleep(200); jobs = 0; stages = 0; tasks = 0
+        // listener events arrive asynchronously: drain before the reset
+        // and before the read, so each run counts exactly its own
+        ListenerBusDrain(spark.sparkContext)
+        jobs = 0; stages = 0; tasks = 0
         val c = compiles
         val t = once(name)
+        ListenerBusDrain(spark.sparkContext)
         (t, jobs, stages, tasks, compiles - c)
       }
       val best = reps.map(_._1).min

@@ -128,7 +128,7 @@ object Stress {
     val (bands, bits) = graft.operators.DedupOps.simhashBandPlan(nDocs)
     val ((pairsFound, plantedFound), tSh) = timed {
       val r = graft.operators.DedupOps
-        .simhashNearDup(spark, docs, maxHamming = 3, nRows = nDocs)
+        .simhashNearDup(docs, maxHamming = 3, nRows = nDocs)
         .localCheckpoint()
       (r.count(),
         r.filter(col("doc_b") === col("doc_a") + nDocs &&

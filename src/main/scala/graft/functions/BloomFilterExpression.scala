@@ -2,7 +2,7 @@ package graft.functions
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Predicate}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -80,7 +80,7 @@ case class BloomMightContain(left: Expression, right: Expression)
 }
 
 object BloomFilterExpression {
-  def mightContain(spark: SparkSession, key: Column,
+  def mightContain(key: Column,
       filter: BloomFilter): Column = {
     val bytes = {
       val out = new java.io.ByteArrayOutputStream()

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.unsafe.types.UTF8String
@@ -124,7 +124,7 @@ object BpeEncodeExpression {
       (p.substring(0, i), p.substring(i + 1))
     })
 
-  def bpeEncode(spark: SparkSession, words: Column,
+  def bpeEncode(words: Column,
       merges: Seq[(String, String)]): Column = {
     // a symbol containing a wire separator (or the rank-key NUL) would
     // silently garble the shipped table — fail loudly instead

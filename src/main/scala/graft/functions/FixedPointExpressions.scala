@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 
 /** Native forms of the [[FixedLn]]/[[FixedExp]] e9 fixed-point
@@ -25,10 +25,10 @@ import org.apache.spark.sql.functions.call_function
 object FixedPointExpressions {
 
   /** ln(p/q)·1e9 as a column. */
-  def lnE9(spark: SparkSession, p: Column, q: Column): Column =
+  def lnE9(p: Column, q: Column): Column =
     call_function("graft_ln_e9", p, q)
 
   /** exp(x/1e9)·1e9 as a column. */
-  def expE9(spark: SparkSession, x: Column): Column =
+  def expE9(x: Column): Column =
     call_function("graft_exp_e9", x)
 }

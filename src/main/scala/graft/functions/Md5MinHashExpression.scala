@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.unsafe.types.UTF8String
@@ -70,6 +70,6 @@ object Md5MinHashExpression {
     new GenericArrayData(mins.asInstanceOf[Array[Any]])
   }
 
-  def md5MinHash(spark: SparkSession, shingles: Column, k: Int): Column =
+  def md5MinHash(shingles: Column, k: Int): Column =
     call_function("graft_md5_minhash", shingles, lit(k))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
 
@@ -60,6 +60,6 @@ object Md5SimHashExpression {
     sig
   }
 
-  def md5SimHash(spark: SparkSession, tokens: Column): Column =
+  def md5SimHash(tokens: Column): Column =
     call_function("graft_md5_simhash", tokens)
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{call_function, lit}
@@ -45,9 +45,9 @@ object MinHashExpression {
     c
   }
 
-  def minhashSig(spark: SparkSession, baseHashes: Column, k: Int): Column =
+  def minhashSig(baseHashes: Column, k: Int): Column =
     call_function("graft_minhash", baseHashes, lit(k))
 
-  def sigAgreement(spark: SparkSession, a: Column, b: Column): Column =
+  def sigAgreement(a: Column, b: Column): Column =
     call_function("graft_sig_agree", a, b)
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.unsafe.types.UTF8String
@@ -38,7 +38,7 @@ object PairMergeExpression {
       if (m == n) out else java.util.Arrays.copyOf(out, m))
   }
 
-  def pairMerge(spark: SparkSession, syms: Column, left: String,
+  def pairMerge(syms: Column, left: String,
       right: String): Column =
     call_function("graft_pair_merge", syms, lit(left), lit(right))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.unsafe.types.UTF8String
@@ -75,6 +75,6 @@ object SeqPatterns {
     new GenericArrayData(out.toArray)
   }
 
-  def patterns(spark: SparkSession, arr: Column): Column =
+  def patterns(arr: Column): Column =
     call_function("graft_seq_patterns", arr)
 }

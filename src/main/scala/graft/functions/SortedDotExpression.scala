@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
 
@@ -43,6 +43,6 @@ object SortedPairDot {
     s
   }
 
-  def dot(spark: SparkSession, a: Column, b: Column): Column =
+  def dot(a: Column, b: Column): Column =
     call_function("graft_sorted_pair_dot", a, b)
 }

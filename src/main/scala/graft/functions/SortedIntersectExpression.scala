@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
@@ -59,7 +59,7 @@ object SortedIntersectAbove {
     lo
   }
 
-  def intersectAbove(spark: SparkSession, a: Column, b: Column,
+  def intersectAbove(a: Column, b: Column,
       threshold: Column): Column =
     call_function("graft_sorted_intersect_above", a, b, threshold)
 }

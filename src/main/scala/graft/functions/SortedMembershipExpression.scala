@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.unsafe.types.UTF8String
@@ -52,6 +52,6 @@ object CountInSorted {
     false
   }
 
-  def countIn(spark: SparkSession, arr: Column, sortedSet: Column): Column =
+  def countIn(arr: Column, sortedSet: Column): Column =
     call_function("graft_count_in_sorted", arr, sortedSet)
 }

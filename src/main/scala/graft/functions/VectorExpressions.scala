@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
 
@@ -88,12 +88,12 @@ object VectorExpressions {
     acc
   }
 
-  def cosine(spark: SparkSession, a: Column, b: Column): Column =
+  def cosine(a: Column, b: Column): Column =
     call_function("graft_cosine", a, b)
-  def dot(spark: SparkSession, a: Column, b: Column): Column =
+  def dot(a: Column, b: Column): Column =
     call_function("graft_dot", a, b)
-  def idot(spark: SparkSession, a: Column, b: Column): Column =
+  def idot(a: Column, b: Column): Column =
     call_function("graft_idot", a, b)
-  def norm(spark: SparkSession, a: Column): Column =
+  def norm(a: Column): Column =
     call_function("graft_norm", a)
 }

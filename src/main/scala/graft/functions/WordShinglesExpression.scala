@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.unsafe.types.UTF8String
@@ -64,6 +64,6 @@ object WordShingles {
   }
 
   /** Distinct k-word shingles of `text` as a column. */
-  def shingles(spark: SparkSession, text: Column, k: Int): Column =
+  def shingles(text: Column, k: Int): Column =
     call_function("graft_word_shingles", text, lit(k))
 }

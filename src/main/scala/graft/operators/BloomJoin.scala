@@ -37,7 +37,7 @@ object BloomJoin {
     val n = if (expectedItems > 0) expectedItems else small.count()
     val bf = small.stat.bloomFilter(smallKey, n, fpp)
     val prefiltered = big.filter(graft.functions.BloomFilterExpression
-      .mightContain(big.sparkSession, col(bigKey), bf))
+      .mightContain(col(bigKey), bf))
     // Schema contract: the build side's key survives under its own name
     // (it duplicates bigKey value-for-value on an inner equi-join, but
     // callers may select it); it is dropped ONLY when the two key names

@@ -42,7 +42,7 @@ object BpeTrain {
     if (maxLocal > 0 && w.count() <= maxLocal)
       trainLocal(w.collect().map(r =>
         (r.getString(0), r.getLong(1))).toSeq, rounds)
-    else trainDistributed(s, w, rounds)
+    else trainDistributed(w, rounds)
   }
 
   /** Exact local trainer over a collected (word, cnt) table —
@@ -144,7 +144,7 @@ object BpeTrain {
     * argmax Spark job per round. Exposed for the local/distributed
     * differential tests; `train` picks the path.
     */
-  private[graft] def trainDistributed(s: SparkSession, words: DataFrame,
+  private[graft] def trainDistributed(words: DataFrame,
       rounds: Int): Seq[(Int, String, String, Long)] = {
     var syms = words.select(col("cnt"),
       filter(split(col("word"), ""), x => x =!= "").as("syms"))
@@ -168,7 +168,7 @@ object BpeTrain {
           top(0).getAs[String]("r"), top(0).getAs[Long]("w"))
         merges += ((r, l, rr, w))
         syms = syms.select(col("cnt"),
-          PairMergeExpression.pairMerge(s, col("syms"), l, rr).as("syms"))
+          PairMergeExpression.pairMerge(col("syms"), l, rr).as("syms"))
           .localCheckpoint(false)
         r += 1
       }
@@ -211,7 +211,7 @@ object BpeTrain {
     val merges = train(s, wordCounts(s, d), rounds = 12)
       .map(m => (m._2, m._3))
     Tables.documents(s, d).filter(col("text").isNotNull)
-      .select(col("doc_id"), BpeEncodeExpression.bpeEncode(s,
+      .select(col("doc_id"), BpeEncodeExpression.bpeEncode(
         split(lower(trim(col("text"))), "\\s+"), merges).as("sub"))
       .select(col("doc_id"), size(col("sub")).cast("long").as("n_subtok"),
         array_join(col("sub"), " ").as("subtoks"))

@@ -61,9 +61,9 @@ object DedupOps {
     * (WordShinglesSpec pins it); ~3× faster on the corpus scan —
     * the HOF lambda ran interpreted per shingle window.
     */
-  private def nativeShingles(s: SparkSession, k: Int): Column =
+  private def nativeShingles(k: Int): Column =
     when(col("text").isNull, array(lit("")))
-      .otherwise(graft.functions.WordShingles.shingles(s, col("text"), k))
+      .otherwise(graft.functions.WordShingles.shingles(col("text"), k))
 
   /** MinHash signature. Each shingle STRING is hashed exactly once; the
     * 32-function family is derived inside the native `graft_minhash`
@@ -71,8 +71,8 @@ object DedupOps {
     * codegen'd k×L loop — the built-in HOF formulation ran interpreted
     * and dominated the benchmark). No shuffle, no UDF.
     */
-  private def signature(s: SparkSession, shingleCol: Column): Column =
-    graft.functions.MinHashExpression.minhashSig(s,
+  private def signature(shingleCol: Column): Column =
+    graft.functions.MinHashExpression.minhashSig(
       transform(shingleCol, x => xxhash64(x)), NumHashes)
 
   /** LSH band keys of the `sig` column: band b is its RowsPerBand
@@ -89,9 +89,9 @@ object DedupOps {
   /** Jaccard estimate of an xxhash64 signature pair (`sig_a`, `sig_b`):
     * the share of agreeing minima, rounded to 3 places.
     */
-  private def estJaccard(s: SparkSession): Column =
+  private def estJaccard: Column =
     round(graft.functions.MinHashExpression
-      .sigAgreement(s, col("sig_a"), col("sig_b"))
+      .sigAgreement(col("sig_a"), col("sig_b"))
       .cast("double") / NumHashes, 3)
 
   /** A corpus with planted near-duplicates: every document plus a copy
@@ -136,9 +136,9 @@ object DedupOps {
     // scale this is the signature table written to storage.
     val sig = docs
       .select(col("doc_id"),
-        nativeShingles(docs.sparkSession, ShingleSize).as("sh"))
+        nativeShingles(ShingleSize).as("sh"))
       .select(col("doc_id"),
-        signature(docs.sparkSession, col("sh")).as("sig"))
+        signature(col("sh")).as("sig"))
       .localCheckpoint(false)
 
     // Candidate generation carries IDS ONLY (doc_id + one band hash)
@@ -165,7 +165,7 @@ object DedupOps {
         "doc_a")
       .join(sig.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")),
         "doc_b")
-      .withColumn("est_jaccard", estJaccard(docs.sparkSession))
+      .withColumn("est_jaccard", estJaccard)
       .filter(col("est_jaccard") >= threshold)
       .select("doc_a", "doc_b", "est_jaccard")
   }
@@ -185,12 +185,11 @@ object DedupOps {
     * engines round the same true value.
     */
   def minhashCandidatesMd5(docs: DataFrame, minAgree: Int): DataFrame = {
-    val s = docs.sparkSession
     val sig = docs
-      .select(col("doc_id"), nativeShingles(s, ShingleSize).as("sh"))
+      .select(col("doc_id"), nativeShingles(ShingleSize).as("sh"))
       .select(col("doc_id"),
         graft.functions.Md5MinHashExpression
-          .md5MinHash(s, col("sh"), NumHashes).as("sig"))
+          .md5MinHash(col("sh"), NumHashes).as("sig"))
       .localCheckpoint(false)
     val banded = sig.select(col("doc_id"),
       posexplode(array(bandKeys: _*)).as(Seq("band_id", "band_key")))
@@ -227,8 +226,8 @@ object DedupOps {
     * ([[graft.functions.Md5SimHashExpression]]): bit b is the sign of
     * the ±1 vote sum over the tokens' md5 bits at position b.
     */
-  private def simhash(s: SparkSession): Column =
-    graft.functions.Md5SimHashExpression.md5SimHash(s, tokens(normText))
+  private def simhash: Column =
+    graft.functions.Md5SimHashExpression.md5SimHash(tokens(normText))
 
   /** [[simhash]]'s votes in DuckDB over `table(doc_id, text)`: `tkn`
     * (tokens), `hxs` (their md5), `nib` (16 hex nibbles) and
@@ -265,7 +264,7 @@ object DedupOps {
     * Σ_{b<63} s_b·2^b − s63·2^63, all BIGINT.
     */
   def q30Simhash(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).select(col("doc_id"), simhash(s).as("simhash"))
+    Tables.documents(s, d).select(col("doc_id"), simhash.as("simhash"))
 
   /** Band plan for a 64-bit simhash at corpus size `nRows`: disjoint
     * bands sized so the band keyspace 2^bits stays ≥ nRows/32 — i.e.
@@ -309,13 +308,13 @@ object DedupOps {
     * @param nRows corpus row count (from catalog/footer stats — sizes
     *   the bands without scanning).
     */
-  def simhashNearDup(s: SparkSession, docs: DataFrame, maxHamming: Int,
-      nRows: Long): DataFrame = {
+  def simhashNearDup(docs: DataFrame, maxHamming: Int, nRows: Long)
+      : DataFrame = {
     val (bands, bits) = simhashBandPlan(nRows)
     val mask = if (bits == 64) -1L else (1L << bits) - 1L
     val bandVals = (0 until bands).map(b =>
       shiftrightunsigned(col("simhash"), b * bits).bitwiseAND(mask))
-    val banded = docs.select(col("doc_id"), simhash(s).as("simhash"))
+    val banded = docs.select(col("doc_id"), simhash.as("simhash"))
       .select(col("doc_id"), col("simhash"),
         posexplode(array(bandVals: _*)).as(Seq("band_id", "band_val")))
     val a = banded.select(col("doc_id").as("doc_a"),
@@ -339,7 +338,7 @@ object DedupOps {
   def q51SimhashNearDup(s: SparkSession, d: String): DataFrame = {
     val nRows = 2 * graft.sources.TableStatistics
       .tableRowCount(s, d, "documents")
-    simhashNearDup(s, corpusWithPlantedDups(s, d), maxHamming = 12,
+    simhashNearDup(corpusWithPlantedDups(s, d), maxHamming = 12,
       nRows = nRows)
   }
 
@@ -373,8 +372,8 @@ object DedupOps {
     val base = docs
       .select(col("doc_id"),
         graft.functions.WordShingles
-          .shingles(docs.sparkSession, col("text"), 1).as("toks"),
-        nativeShingles(docs.sparkSession, ShingleSize).as("sh"))
+          .shingles(col("text"), 1).as("toks"),
+        nativeShingles(ShingleSize).as("sh"))
       .localCheckpoint(false)
 
     // 8 MinHash functions = min over md5(i + '|' + shingle) hex strings,
@@ -389,7 +388,7 @@ object DedupOps {
     val banded = base
       .select(col("doc_id"),
         graft.functions.Md5MinHashExpression
-          .md5MinHash(docs.sparkSession, col("sh"), nHashes).as("ms"))
+          .md5MinHash(col("sh"), nHashes).as("ms"))
       .select(col("doc_id"),
         posexplode(bandKeys).as(Seq("band_id", "band_key")))
     val aa = banded.select(col("doc_id").as("doc_a"), col("band_id"),
@@ -633,7 +632,7 @@ object DedupOps {
   def contamination(docs: DataFrame, benchmark: DataFrame): DataFrame = {
     def shingled(df: DataFrame) = df
       .select(col("doc_id"), explode(
-        nativeShingles(df.sparkSession, ShingleSize)).as("sh"))
+        nativeShingles(ShingleSize)).as("sh"))
     val bench = broadcast(shingled(benchmark).select("sh").distinct())
     shingled(docs)
       .join(bench, "sh")
@@ -666,8 +665,8 @@ object DedupOps {
     * to broadcast still works, and candidate volume is bounded by band
     * collisions, not |train| × |eval|.
     */
-  def nearDupContamination(s: SparkSession, train: DataFrame,
-      eval: DataFrame, minJaccardPpt: Long = 500L): DataFrame = {
+  def nearDupContamination(train: DataFrame, eval: DataFrame,
+      minJaccardPpt: Long = 500L): DataFrame = {
     val nHashes = VerifyBands * VerifyRowsPerBand
     // Null-text docs all share the minhash of the single empty shingle
     // (tokens() stays null but shingles() falls to its
@@ -681,9 +680,9 @@ object DedupOps {
     def base(df: DataFrame) = df
       .filter(col("text").isNotNull)
       .select(col("doc_id"),
-        graft.functions.WordShingles.shingles(s, col("text"), 1)
+        graft.functions.WordShingles.shingles(col("text"), 1)
           .as("toks"),
-        graft.functions.WordShingles.shingles(s, col("text"), ShingleSize)
+        graft.functions.WordShingles.shingles(col("text"), ShingleSize)
           .as("sh"))
       .localCheckpoint(false)
     val bandKeys = array((0 until VerifyBands).map { b =>
@@ -692,7 +691,7 @@ object DedupOps {
     }: _*)
     def banded(b: DataFrame) = b
       .select(col("doc_id"), graft.functions.Md5MinHashExpression
-        .md5MinHash(s, col("sh"), nHashes).as("ms"))
+        .md5MinHash(col("sh"), nHashes).as("ms"))
       .select(col("doc_id"),
         posexplode(bandKeys).as(Seq("band_id", "band_key")))
     val tb = base(train)
@@ -729,7 +728,7 @@ object DedupOps {
     val heldOut = docs.filter(col("doc_id") % 10 === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"),
         expr("substring(text, instr(text, ' ') + 1)").as("text"))
-    nearDupContamination(s, docs, heldOut)
+    nearDupContamination(docs, heldOut)
   }
 
   /** 93. Incremental near-dup admission: admit only the incoming docs
@@ -762,26 +761,26 @@ object DedupOps {
     * ['']-shingle signature rows of null-text docs — harmless, since
     * incoming null-text docs produce no bands to match them against.
     */
-  def signatureIndex(s: SparkSession, docs: DataFrame): DataFrame = docs
+  def signatureIndex(docs: DataFrame): DataFrame = docs
     .filter(col("text").isNotNull)
     .select(col("doc_id"), graft.functions.WordShingles
-      .shingles(s, col("text"), ShingleSize).as("sh"))
-    .select(col("doc_id"), signature(s, col("sh")).as("sig"))
+      .shingles(col("text"), ShingleSize).as("sh"))
+    .select(col("doc_id"), signature(col("sh")).as("sig"))
 
-  def incrementalDedup(s: SparkSession, existing: DataFrame,
+  def incrementalDedup(existing: DataFrame,
       incoming: DataFrame, threshold: Double = 0.5): DataFrame =
-    incrementalDedupWithIndex(s,
-      signatureIndex(s, existing).localCheckpoint(false), incoming, threshold)
+    incrementalDedupWithIndex(
+      signatureIndex(existing).localCheckpoint(false), incoming, threshold)
 
   /** [[incrementalDedup]] against a PRECOMPUTED signature index (the
     * persisted form — existing text never touched).
     */
-  def incrementalDedupWithIndex(s: SparkSession, existingSig: DataFrame,
+  def incrementalDedupWithIndex(existingSig: DataFrame,
       incoming: DataFrame, threshold: Double = 0.5): DataFrame = {
     def bandsOf(sig: DataFrame) = sig.select(col("doc_id"),
       posexplode(bandHashes).as(Seq("band_id", "band_hash")))
     val exSig = existingSig
-    val inSig = signatureIndex(s, incoming).localCheckpoint(false)
+    val inSig = signatureIndex(incoming).localCheckpoint(false)
     val left = bandsOf(inSig).select(col("doc_id").as("doc_b"),
       col("band_id"), col("band_hash"))
     val right = bandsOf(exSig)
@@ -799,7 +798,7 @@ object DedupOps {
         "doc_a")
       .join(inSig.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")),
         "doc_b")
-      .filter(estJaccard(s) >= threshold)
+      .filter(estJaccard >= threshold)
       .select(col("doc_b").as("doc_id")).distinct()
     incoming.join(rejected, Seq("doc_id"), "left_anti")
   }
@@ -982,7 +981,7 @@ object DedupOps {
     val docs = Tables.documents(s, d)
       .filter(col("text").isNotNull)
       .select(col("doc_id"), graft.functions.WordShingles
-        .shingles(s, col("text"), ShingleSize).as("sh"))
+        .shingles(col("text"), ShingleSize).as("sh"))
     setSimilarityJoin(docs, "doc_id", "sh", 1, 2)
   }
 
@@ -1069,7 +1068,7 @@ object DedupOps {
     // r15: native one-pass shingling — the q96 rationale
     val sets = corpus
       .select(col("doc_id"), graft.functions.WordShingles
-        .shingles(s, col("text"), ShingleSize).as("sh"))
+        .shingles(col("text"), ShingleSize).as("sh"))
     containmentJoin(sets, "doc_id", "sh", 9, 10)
   }
 

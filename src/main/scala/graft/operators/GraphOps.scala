@@ -1,8 +1,10 @@
 package graft.operators
 
 import graft.{Gates, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField,
+  StructType}
 
 /** Graph centrality over relational co-occurrence graphs — PageRank
   * (Page et al. 1999) in the Pregel message-passing shape: one
@@ -230,15 +232,9 @@ object GraphOps {
 
     /** The node-scale rank map as a LocalRelation `(node, r)`. */
     def toDf(ranks: java.util.HashMap[Any, java.lang.Long]): DataFrame = {
-      import scala.jdk.CollectionConverters._
-      val rows: java.util.List[org.apache.spark.sql.Row] =
-        ranks.entrySet().iterator().asScala
-          .map(e => org.apache.spark.sql.Row(e.getKey, e.getValue.longValue))
-          .toList.asJava
-      spark.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", nodeType),
-        org.apache.spark.sql.types.StructField("r",
-          org.apache.spark.sql.types.LongType))))
+      val nodes = ranks.keySet.toArray
+      rowsDf(spark, nodes.length, "node" -> nodeType, "r" -> LongType)(ix =>
+        Row(nodes(ix), ranks.get(nodes(ix)).longValue))
     }
 
     def unpersist(): Unit = { rdd.unpersist(false); () }
@@ -293,20 +289,10 @@ object GraphOps {
   /** Both orientations of `bp`'s pairs as a `(src, dst)` LocalRelation. */
   private def symEdgeDf(s: SparkSession, bp: BasketPairs): DataFrame = {
     val n = bp.us.length
-    val rows = new java.util.AbstractList[org.apache.spark.sql.Row] {
-      override def size(): Int = 2 * n
-      override def get(ix: Int): org.apache.spark.sql.Row =
-        if (ix < n)
-          org.apache.spark.sql.Row(bp.ids(bp.us(ix)), bp.ids(bp.vs(ix)))
-        else
-          org.apache.spark.sql.Row(bp.ids(bp.vs(ix - n)),
-            bp.ids(bp.us(ix - n)))
+    rowsDf(s, 2 * n, "src" -> LongType, "dst" -> LongType) { ix =>
+      if (ix < n) Row(bp.ids(bp.us(ix)), bp.ids(bp.vs(ix)))
+      else Row(bp.ids(bp.vs(ix - n)), bp.ids(bp.us(ix - n)))
     }
-    s.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("src",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("dst",
-        org.apache.spark.sql.types.LongType))))
   }
 
   /** The pruned co-purchase graph for the consumers that run a driver
@@ -332,86 +318,154 @@ object GraphOps {
   }
 
   /** Per-node EXACT triangle counts of collected undirected pairs —
-    * the degree-oriented intersect (the q107 orientation) counted at
-    * node grain, parallel across driver threads with private
-    * accumulators (order-free integer adds — bit-identical to the
+    * [[orientedTriangles]] at node grain (bit-identical to the
     * relational kernel, which the GraphSpec differential pins).
     * Returns (nodeTri, deg): triangles and distinct-neighbor degree
     * per dense node index.
     */
   private def driverTriangles(us: Array[Int], vs: Array[Int],
-      nN: Int): (Array[Long], Array[Long]) = {
-    val n = us.length
-    val off = new Array[Int](nN + 1)
+      nN: Int): (Array[Long], Array[Int]) = {
+    val deg = new Array[Int](nN)
     var i = 0
-    while (i < n) { off(us(i) + 1) += 1; off(vs(i) + 1) += 1; i += 1 }
-    i = 0
-    while (i < nN) { off(i + 1) += off(i); i += 1 }
-    val deg = new Array[Long](nN)
-    i = 0
-    while (i < nN) { deg(i) = (off(i + 1) - off(i)).toLong; i += 1 }
-    // orient every edge low-rank → high-rank, rank = (degree, id):
-    // each triangle found exactly once, at its two lowest-rank corners
+    while (i < us.length) { deg(us(i)) += 1; deg(vs(i)) += 1; i += 1 }
+    (orientedTriangles(us, vs, deg, perEdge = false), deg)
+  }
+
+  /** Exact triangle tally of the simple undirected graph with edges
+    * (us(e), vs(e)) over dense nodes of degree `deg`: every edge is
+    * oriented low-rank → high-rank, rank = (degree, index), so each
+    * triangle is found exactly once, intersecting the sorted
+    * out-slices of its two lowest-rank corners — O(αE), never
+    * hub-quadratic. Each triangle counts at its three nodes, or with
+    * `perEdge` at its three edges; the pass runs on
+    * [[parallelEdgeSums]].
+    */
+  private def orientedTriangles(us: Array[Int], vs: Array[Int],
+      deg: Array[Int], perEdge: Boolean): Array[Long] = {
+    val n = us.length
     def rankLt(x: Int, y: Int): Boolean =
       deg(x) < deg(y) || (deg(x) == deg(y) && x < y)
-    val off2 = new Array[Int](nN + 1)
-    i = 0
-    while (i < n) {
-      val s = if (rankLt(us(i), vs(i))) us(i) else vs(i)
-      off2(s + 1) += 1
-      i += 1
+    val lo = new Array[Int](n)
+    var i = 0
+    while (i < n) { lo(i) = if (rankLt(us(i), vs(i))) us(i) else vs(i); i += 1 }
+    val (off, out) = edgeSlices(deg.length, lo, Array.range(0, n), us, vs)
+    parallelEdgeSums(n, if (perEdge) n else deg.length) { (acc, from, until) =>
+      var e = from
+      while (e < until) {
+        val s = lo(e); val t = us(e) ^ vs(e) ^ s
+        var pa = off(s); var pb = off(t)
+        val ea = off(s + 1); val eb = off(t + 1)
+        while (pa < ea && pb < eb) {
+          val wa = (out(pa) >>> 32).toInt; val wb = (out(pb) >>> 32).toInt
+          if (wa < wb) pa += 1
+          else if (wb < wa) pb += 1
+          else {
+            if (perEdge) {
+              acc(e) += 1; acc(out(pa).toInt) += 1; acc(out(pb).toInt) += 1
+            } else { acc(s) += 1; acc(t) += 1; acc(wa) += 1 }
+            pa += 1; pb += 1
+          }
+        }
+        e += 1
+      }
     }
-    i = 0
-    while (i < nN) { off2(i + 1) += off2(i); i += 1 }
-    val pos2 = java.util.Arrays.copyOf(off2, nN)
-    val adj2 = new Array[Int](n)
-    i = 0
-    while (i < n) {
-      val (s, t) =
-        if (rankLt(us(i), vs(i))) (us(i), vs(i)) else (vs(i), us(i))
-      adj2(pos2(s)) = t
-      pos2(s) += 1
-      i += 1
-    }
-    var v0 = 0
-    while (v0 < nN) {
-      java.util.Arrays.sort(adj2, off2(v0), off2(v0 + 1)); v0 += 1
-    }
+  }
+
+  /** Order-free integer sums over the edge range `0 until n`, split
+    * across driver threads: each runs `pass(acc, from, until)` into a
+    * PRIVATE `long[width]` (no atomics, no races; `pass` only reads
+    * shared state), and the arrays merge by plain addition —
+    * bit-identical to one sequential pass whatever the split.
+    */
+  private def parallelEdgeSums(n: Int, width: Int)
+      (pass: (Array[Long], Int, Int) => Unit): Array[Long] = {
     val nThreads = math.min(8,
       math.max(1, Runtime.getRuntime.availableProcessors / 4))
-    val partials = Array.fill(nThreads)(new Array[Long](nN))
-    val threads = (0 until nThreads).map { th =>
-      val t0 = new Thread(() => {
-        val tri = partials(th)
-        val lo = (n.toLong * th / nThreads).toInt
-        val hi = (n.toLong * (th + 1) / nThreads).toInt
-        var e = lo
-        while (e < hi) {
-          val s = if (rankLt(us(e), vs(e))) us(e) else vs(e)
-          val t = if (rankLt(us(e), vs(e))) vs(e) else us(e)
-          var pa = off2(s); var pb = off2(t)
-          val ea = off2(s + 1); val eb = off2(t + 1)
-          while (pa < ea && pb < eb) {
-            val wa = adj2(pa); val wb = adj2(pb)
-            if (wa < wb) pa += 1
-            else if (wb < wa) pb += 1
-            else {
-              tri(s) += 1; tri(t) += 1; tri(wa) += 1
-              pa += 1; pb += 1
-            }
-          }
-          e += 1
-        }
-      })
-      t0.start(); t0
-    }
-    threads.foreach(_.join())
-    val nodeTri = new Array[Long](nN)
-    partials.foreach { p =>
+    val partials = Array.fill(nThreads)(new Array[Long](width))
+    (0 until nThreads).map { t =>
+      val th = new Thread(() => pass(partials(t),
+        (n.toLong * t / nThreads).toInt, (n.toLong * (t + 1) / nThreads).toInt))
+      th.start(); th
+    }.foreach(_.join())
+    val sum = partials(0)
+    partials.tail.foreach { p =>
       var j = 0
-      while (j < nN) { nodeTri(j) += p(j); j += 1 }
+      while (j < width) { sum(j) += p(j); j += 1 }
     }
-    (nodeTri, deg)
+    sum
+  }
+
+  /** Compressed sparse rows over dense nodes `0 until nN`: offsets by
+    * prefix sum, then entry e puts `to(e)` in node `from(e)`'s slice
+    * `adj(off(v) until off(v + 1))`, slices in entry order. Returns
+    * (off, adj).
+    */
+  private def csr(nN: Int, from: Array[Int], to: Array[Int])
+      : (Array[Int], Array[Int]) = {
+    val off = new Array[Int](nN + 1)
+    var i = 0
+    while (i < from.length) { off(from(i) + 1) += 1; i += 1 }
+    i = 0
+    while (i < nN) { off(i + 1) += off(i); i += 1 }
+    val pos = java.util.Arrays.copyOf(off, nN)
+    val adj = new Array[Int](from.length)
+    i = 0
+    while (i < from.length) {
+      adj(pos(from(i))) = to(i); pos(from(i)) += 1; i += 1
+    }
+    (off, adj)
+  }
+
+  /** [[csr]] of the edge ids `edge` keyed by `from`, each slice as
+    * packed `(neighbor << 32) | edge` longs sorted by neighbor — the
+    * merge-scan layout of the triangle kernels. Entry i is edge
+    * `edge(i)` of the simple undirected pairs (us, vs), seen from its
+    * endpoint `from(i)`.
+    */
+  private def edgeSlices(nN: Int, from: Array[Int], edge: Array[Int],
+      us: Array[Int], vs: Array[Int]): (Array[Int], Array[Long]) = {
+    val (off, es) = csr(nN, from, edge)
+    val packed = new Array[Long](es.length)
+    var v = 0
+    while (v < nN) {
+      var p = off(v)
+      while (p < off(v + 1)) {
+        val e = es(p)
+        packed(p) = ((us(e) ^ vs(e) ^ v).toLong << 32) | e
+        p += 1
+      }
+      java.util.Arrays.sort(packed, off(v), off(v + 1))
+      v += 1
+    }
+    (off, packed)
+  }
+
+  /** A LocalRelation of `n` rows with the (name, type) columns
+    * `fields` — the driver kernels' output shape. `row(ix)` builds row
+    * ix on demand, so Rows materialize one at a time during the
+    * LocalRelation conversion instead of as a strict boxed Seq.
+    */
+  private def rowsDf(spark: SparkSession, n: Int, fields: (String, DataType)*)
+      (row: Int => Row): DataFrame = {
+    val rows = new java.util.AbstractList[Row] {
+      override def size(): Int = n
+      override def get(ix: Int): Row = row(ix)
+    }
+    spark.createDataFrame(rows,
+      StructType(fields.map { case (name, t) => StructField(name, t) }))
+  }
+
+  /** `(node, <name>)` long rows of the dense nodes ix < nN with
+    * `keep(ix)`: id(ix) and values(ix).
+    */
+  private def nodeValuesDf(spark: SparkSession, nN: Int, id: Int => Long,
+      name: String, values: Array[Long])(keep: Int => Boolean): DataFrame = {
+    val kept = new Array[Int](nN)
+    var n = 0
+    var i = 0
+    while (i < nN) { if (keep(i)) { kept(n) = i; n += 1 }; i += 1 }
+    rowsDf(spark, n, "node" -> LongType, name -> LongType)(k =>
+      Row(id(kept(k)), values(kept(k))))
   }
 
   /** The 3 hub seeds (symmetric degree desc, id asc) of a relational
@@ -426,15 +480,12 @@ object GraphOps {
     * collected graph — the in-memory replica of [[hubSeeds]].
     */
   private def hubSeedIx(g: CollectedEdges, k: Int): Array[Int] = {
-    val deg = new Array[Long](g.nN)
-    var i = 0
-    while (i < g.ss.length) { deg(g.ss(i)) += 1; i += 1 }
+    val deg = g.srcDegrees()
     (0 until g.nN).sortBy(ix => (-deg(ix), g.id(ix))).take(k).toArray
   }
 
   private def allLongIds(df: DataFrame): Boolean =
-    df.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
+    df.schema.fields.forall(_.dataType == LongType)
 
   /** Dense 0-based indexes for long ids, in first-seen order. */
   private[operators] final class LongIds {
@@ -524,21 +575,12 @@ object GraphOps {
     }
     def nN: Int = nodes.size
     def id(ix: Int): Long = nodes.id(ix)
-    /** CSR by src: (off, adj). */
-    def csrBySrc(): (Array[Int], Array[Int]) = {
-      val n = nN
-      val off = new Array[Int](n + 1)
+    /** Out-degree (edge rows by src) per dense node. */
+    def srcDegrees(): Array[Long] = {
+      val deg = new Array[Long](nN)
       var i = 0
-      while (i < ss.length) { off(ss(i) + 1) += 1; i += 1 }
-      i = 0
-      while (i < n) { off(i + 1) += off(i); i += 1 }
-      val pos = java.util.Arrays.copyOf(off, n)
-      val adj = new Array[Int](ss.length)
-      i = 0
-      while (i < ss.length) {
-        adj(pos(ss(i))) = ds(i); pos(ss(i)) += 1; i += 1
-      }
-      (off, adj)
+      while (i < ss.length) { deg(ss(i)) += 1; i += 1 }
+      deg
     }
   }
 
@@ -546,37 +588,20 @@ object GraphOps {
     /** A CollectedEdges over ALREADY-COLLECTED undirected pairs (dense
       * indices + id table, the [[collectBasketPairs]] output): emits
       * both orientations so the kernels see exactly the symmetric
-      * deduped edge list [[coPurchaseEdges]] would have produced.
+      * deduped edge list [[coPurchaseEdges]] would have produced. A
+      * per-pair weight `w`, when given, rides on both orientations.
       */
-    def fromSym(ids: Array[Long], us: Array[Int],
-        vs: Array[Int]): CollectedEdges = {
+    def fromSym(ids: Array[Long], us: Array[Int], vs: Array[Int],
+        w: Array[Long] = null): CollectedEdges = {
       val nUnd = us.length
-      val g = new CollectedEdges(2 * nUnd, weighted = false)
+      val g = new CollectedEdges(2 * nUnd, weighted = w != null)
       var i = 0
       while (i < ids.length) { g.idOf(ids(i)); i += 1 }
       i = 0
       while (i < nUnd) {
         g.ss(i) = us(i); g.ds(i) = vs(i)
         g.ss(nUnd + i) = vs(i); g.ds(nUnd + i) = us(i)
-        i += 1
-      }
-      g
-    }
-
-    /** [[fromSym]] with a per-undirected-pair weight (both
-      * orientations carry it).
-      */
-    def fromSymWeighted(ids: Array[Long], us: Array[Int],
-        vs: Array[Int], w: Array[Long]): CollectedEdges = {
-      val nUnd = us.length
-      val g = new CollectedEdges(2 * nUnd, weighted = true)
-      var i = 0
-      while (i < ids.length) { g.idOf(ids(i)); i += 1 }
-      i = 0
-      while (i < nUnd) {
-        g.ss(i) = us(i); g.ds(i) = vs(i); g.ws(i) = w(i)
-        g.ss(nUnd + i) = vs(i); g.ds(nUnd + i) = us(i)
-        g.ws(nUnd + i) = w(i)
+        if (w != null) { g.ws(i) = w(i); g.ws(nUnd + i) = w(i) }
         i += 1
       }
       g
@@ -746,48 +771,38 @@ object GraphOps {
       }
       i += 1
     }
-    java.util.Arrays.sort(pairs, 0, o)
-    // dedup with counts (count = shared-order count per pair)
+    // count = shared-order count per pair
+    Some(distinctPairs(idOf.toArray, pairs, o))
+  }
+
+  /** The distinct pairs among packed dense-index `(a << 32) | b` longs
+    * `pairs(0 until m)` (sorted in place), each oriented by ORIGINAL id
+    * (the relational u < v contract) and counted.
+    */
+  private def distinctPairs(ids: Array[Long], pairs: Array[Long], m: Int)
+      : BasketPairs = {
+    java.util.Arrays.sort(pairs, 0, m)
     var nUnd = 0
-    i = 0
-    while (i < o) {
+    var i = 0
+    while (i < m) {
       if (i == 0 || pairs(i) != pairs(i - 1)) nUnd += 1
       i += 1
     }
-    val ids = idOf.toArray
     val us = new Array[Int](nUnd); val vs = new Array[Int](nUnd)
     val counts = new Array[Int](nUnd)
     var w = -1
     i = 0
-    while (i < o) {
+    while (i < m) {
       if (i == 0 || pairs(i) != pairs(i - 1)) {
         w += 1
         val x = (pairs(i) >>> 32).toInt; val y = pairs(i).toInt
-        // orient by ORIGINAL id (the relational u < v contract)
         if (ids(x) < ids(y)) { us(w) = x; vs(w) = y }
         else { us(w) = y; vs(w) = x }
       }
       counts(w) += 1
       i += 1
     }
-    Some(new BasketPairs(ids, us, vs, counts))
-  }
-
-  /** `(node, value)` long-pair LocalRelation over compacted arrays —
-    * the driver kernels' output shape.
-    */
-  private def longPairDf(spark: SparkSession, n: Int, aName: String,
-      bName: String, a: Array[Long], b: Array[Long]): DataFrame = {
-    val rows = new java.util.AbstractList[org.apache.spark.sql.Row] {
-      override def size(): Int = n
-      override def get(ix: Int): org.apache.spark.sql.Row =
-        org.apache.spark.sql.Row(a(ix), b(ix))
-    }
-    spark.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField(bName,
-        org.apache.spark.sql.types.LongType)))).withColumnRenamed("node", aName)
+    new BasketPairs(ids, us, vs, counts)
   }
 
   /** In-memory PageRank rounds — the below-gate path of [[pageRank]].
@@ -800,11 +815,9 @@ object GraphOps {
   private def pageRankDriver(spark: SparkSession, g: CollectedEdges,
       iters: Int, total: Long): DataFrame = {
     val nN = g.nN; val nE = g.ss.length
-    val od = new Array[Long](nN)
-    var i = 0
-    while (i < nE) { od(g.ss(i)) += 1; i += 1 }
+    val od = g.srcDegrees()
     var present = new Array[Boolean](nN)
-    i = 0
+    var i = 0
     while (i < nE) { present(g.ss(i)) = true; i += 1 }
     var nPresent = 0
     i = 0
@@ -834,14 +847,7 @@ object GraphOps {
       }
       r = nxt; present = touched
     }
-    var o = 0
-    val oa = new Array[Long](nN); val ob = new Array[Long](nN)
-    i = 0
-    while (i < nN) {
-      if (present(i)) { oa(o) = g.id(i); ob(o) = r(i); o += 1 }
-      i += 1
-    }
-    longPairDf(spark, o, "node", "r", oa, ob)
+    nodeValuesDf(spark, nN, g.id, "r", r)(present(_))
   }
 
   /** In-memory personalized-PageRank rounds — the below-gate path of
@@ -852,9 +858,8 @@ object GraphOps {
   private def pprDriver(spark: SparkSession, g: CollectedEdges,
       seedIx: Array[Int], iters: Int, total: Long): DataFrame = {
     val nN = g.nN; val nE = g.ss.length
-    val od = new Array[Long](nN)
+    val od = g.srcDegrees()
     var i = 0
-    while (i < nE) { od(g.ss(i)) += 1; i += 1 }
     val init = total / seedIx.length
     val sb = (15L * init) / 100L
     var present = new Array[Boolean](nN)
@@ -882,14 +887,7 @@ object GraphOps {
       seedIx.foreach { sIx => nxt(sIx) += sb; touched(sIx) = true }
       r = nxt; present = touched
     }
-    var o = 0
-    val oa = new Array[Long](nN); val ob = new Array[Long](nN)
-    i = 0
-    while (i < nN) {
-      if (present(i)) { oa(o) = g.id(i); ob(o) = r(i); o += 1 }
-      i += 1
-    }
-    longPairDf(spark, o, "node", "r", oa, ob)
+    nodeValuesDf(spark, nN, g.id, "r", r)(present(_))
   }
 
   /** In-memory synchronized k-core peel — the below-gate path of
@@ -903,9 +901,8 @@ object GraphOps {
     val nN = g.nN; val nE = g.ss.length
     val alive = new Array[Boolean](nE)
     java.util.Arrays.fill(alive, true)
-    val deg = new Array[Long](nN)
+    val deg = g.srcDegrees()
     var i = 0
-    while (i < nE) { deg(g.ss(i)) += 1; i += 1 }
     var prevNodes = -1L
     var round = 0
     var done = false
@@ -927,14 +924,7 @@ object GraphOps {
         round += 1
       }
     }
-    var o = 0
-    val oa = new Array[Long](nN); val ob = new Array[Long](nN)
-    i = 0
-    while (i < nN) {
-      if (deg(i) >= 1) { oa(o) = g.id(i); ob(o) = deg(i); o += 1 }
-      i += 1
-    }
-    longPairDf(spark, o, "node", "core_deg", oa, ob)
+    nodeValuesDf(spark, nN, g.id, "core_deg", deg)(deg(_) >= 1)
   }
 
   /** In-memory frontier BFS — the below-gate path of [[bfsHops]]: a
@@ -944,7 +934,7 @@ object GraphOps {
   private def bfsDriver(spark: SparkSession, g: CollectedEdges,
       seedIx: Array[Int], maxHops: Int): DataFrame = {
     val nN = g.nN
-    val (off, adj) = g.csrBySrc()
+    val (off, adj) = csr(nN, g.ss, g.ds)
     val hops = new Array[Long](nN)
     java.util.Arrays.fill(hops, -1L)
     var frontier = new Array[Int](seedIx.length)
@@ -970,14 +960,7 @@ object GraphOps {
       }
       frontier = next; fN = nN2
     }
-    var o = 0
-    val oa = new Array[Long](nN); val ob = new Array[Long](nN)
-    var i = 0
-    while (i < nN) {
-      if (hops(i) >= 0) { oa(o) = g.id(i); ob(o) = hops(i); o += 1 }
-      i += 1
-    }
-    longPairDf(spark, o, "node", "hops", oa, ob)
+    nodeValuesDf(spark, nN, g.id, "hops", hops)(hops(_) >= 0)
   }
 
   /** In-memory hop-bounded Bellman–Ford — the below-gate path of
@@ -1019,14 +1002,7 @@ object GraphOps {
       }
       frontier = nf
     }
-    var o = 0
-    val oa = new Array[Long](nN); val ob = new Array[Long](nN)
-    var i = 0
-    while (i < nN) {
-      if (has(i)) { oa(o) = g.id(i); ob(o) = dist(i); o += 1 }
-      i += 1
-    }
-    longPairDf(spark, o, "node", "dist", oa, ob)
+    nodeValuesDf(spark, nN, g.id, "dist", dist)(has(_))
   }
 
   /** One PageRank round over a `(src, dst, od)` edge table and a
@@ -1130,7 +1106,6 @@ object GraphOps {
     * Returns (node, n_tri) for nodes in ≥ 1 triangle.
     */
   private def triangleKernel(adj: DataFrame, useBc: Boolean): DataFrame = {
-    val spark = adj.sparkSession
     val MASK = (1L << 32) - 1
     val edges = adj
       .select(col("pku"), col("nbrs"), explode(col("nbrs")).as("pkv"))
@@ -1138,7 +1113,7 @@ object GraphOps {
     val vSide = adj.select(col("pku").as("pkv"), col("nbrs").as("nv"))
     val withV = edges.join(if (useBc) broadcast(vSide) else vSide, "pkv")
     val tris = withV.select(col("pku").as("pa"), col("pkv").as("pb"),
-        graft.functions.SortedIntersectAbove.intersectAbove(spark,
+        graft.functions.SortedIntersectAbove.intersectAbove(
           col("nbrs"), col("nv"), col("pkv")).as("ww"))
       .filter(size(col("ww")) > 0)
     tris.select(col("pa"), col("pb"), explode(col("ww")).as("pc"))
@@ -1165,12 +1140,10 @@ object GraphOps {
     collectBasketPairs(s, d, driverMaxEdges(s) / 2)
       .map { bp =>
         val (tri, _) = driverTriangles(bp.us, bp.vs, bp.ids.length)
-        val keep = (0 until bp.ids.length).filter(tri(_) > 0)
-        longPairDf(s, keep.length, "partkey", "n_tri",
-          keep.map(bp.ids(_)).toArray, keep.map(tri(_)).toArray)
+        nodeValuesDf(s, bp.ids.length, bp.ids(_), "n_tri", tri)(tri(_) > 0)
       }
-      .getOrElse(triangleCounts(coPurchaseRawPairs(s, d))
-        .select(col("node").as("partkey"), col("n_tri")))
+      .getOrElse(triangleCounts(coPurchaseRawPairs(s, d)))
+      .select(col("node").as("partkey"), col("n_tri"))
 
   /** k-core of a SYMMETRIC edge list by iterative peeling (Seidman
     * 1983): repeatedly drop nodes whose degree within the SURVIVING
@@ -1628,8 +1601,7 @@ object GraphOps {
     */
   private def driverLpa(spark: SparkSession, g: CollectedEdges,
       rounds: Int): DataFrame =
-    longPairDf(spark, g.nN, "node", "lbl", Array.tabulate(g.nN)(g.id),
-      lpaLabels(g, rounds))
+    nodeValuesDf(spark, g.nN, g.id, "lbl", lpaLabels(g, rounds))(_ => true)
 
   /** The LPA kernel: every dense node's label after `rounds`
     * synchronous rounds. CSR by dst; each round sorts every node's
@@ -1637,22 +1609,12 @@ object GraphOps {
     * winner — O(E log d̄) per round.
     */
   private def lpaLabels(g: CollectedEdges, rounds: Int): Array[Long] = {
-    val ss = g.ss; val ds = g.ds
-    val n = ss.length
     val nN = g.nN
     // CSR by dst: each node's slice lists its neighbors (the srcs
     // whose labels it counts — mirrors lpRound's groupBy(dst, lbl))
-    val off = new Array[Int](nN + 1)
-    var i = 0
-    while (i < n) { off(ds(i) + 1) += 1; i += 1 }
-    i = 0
-    while (i < nN) { off(i + 1) += off(i); i += 1 }
-    val pos = java.util.Arrays.copyOf(off, nN)
-    val nbr = new Array[Int](n)
-    i = 0
-    while (i < n) { nbr(pos(ds(i))) = ss(i); pos(ds(i)) += 1; i += 1 }
+    val (off, nbr) = csr(nN, g.ds, g.ss)
     var lbl = new Array[Long](nN)
-    i = 0
+    var i = 0
     while (i < nN) { lbl(i) = g.id(i); i += 1 }
     val scratch = new Array[Long](
       (0 until nN).map(v => off(v + 1) - off(v)).foldLeft(0)(math.max))
@@ -1810,11 +1772,8 @@ object GraphOps {
     // keeps its throw-on-cap semantics. Exactness does not depend on
     // the path: the output is the component-min labeling, a pure
     // function of the graph.
-    val spark0 = symEdges.sparkSession
-    val gate = Gates.driver(spark0, Gates.CcNodes)
-    val longIds = edges.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    if (longIds && gate > 0) {
+    val gate = Gates.driver(symEdges.sparkSession, Gates.CcNodes)
+    if (allLongIds(edges) && gate > 0) {
       // one scan, no shuffle; 5% rsd sketch with a 20% safety margin
       val approxNodes = edges
         .agg(approx_count_distinct(col("src")).as("n"))
@@ -1865,16 +1824,8 @@ object GraphOps {
       if (ids.id(i) < minOf(r)) minOf(r) = ids.id(i)
       i += 1
     }
-    val rows = new java.util.AbstractList[org.apache.spark.sql.Row] {
-      override def size(): Int = n
-      override def get(ix: Int): org.apache.spark.sql.Row =
-        org.apache.spark.sql.Row(ids.id(ix), minOf(uf.find(ix)))
-    }
-    spark.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("component",
-        org.apache.spark.sql.types.LongType))))
+    rowsDf(spark, n, "node" -> LongType, "component" -> LongType)(ix =>
+      Row(ids.id(ix), minOf(uf.find(ix))))
   }
 
   /** The relational SV-style hook+compress kernel — the >gate scale
@@ -2103,13 +2054,11 @@ object GraphOps {
   private def driverModularity(spark: SparkSession, g: CollectedEdges,
       labels: Array[Long], topK: Int): DataFrame = {
     val nN = g.nN; val nE = g.ss.length
-    val deg = new Array[Long](nN)
-    var i = 0
-    while (i < nE) { deg(g.ss(i)) += 1; i += 1 }
+    val deg = g.srcDegrees()
     // dense community per node with edges (the label ⋈ degree join)
     val comms = new LongIds
     val cix = new Array[Int](nN)
-    i = 0
+    var i = 0
     while (i < nN) {
       cix(i) = if (deg(i) > 0) comms(labels(i)) else -1
       i += 1
@@ -2143,15 +2092,11 @@ object GraphOps {
         .divide(two.multiply(den)).longValueExact
       if (num.signum >= 0) q else -q
     }
-    val rows = top.map { c =>
-      org.apache.spark.sql.Row(comms.id(c), nNodes(c), intra2(c) / 2,
-        degSum(c), qPpm(c))
+    rowsDf(spark, top.length, Seq("community", "n_nodes", "intra_edges",
+        "degree_sum", "q_ppm").map(_ -> LongType): _*) { ix =>
+      val c = top(ix)
+      Row(comms.id(c), nNodes(c), intra2(c) / 2, degSum(c), qPpm(c))
     }
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-      org.apache.spark.sql.types.StructType(Seq("community", "n_nodes",
-        "intra_edges", "degree_sum", "q_ppm").map(
-        org.apache.spark.sql.types.StructField(_,
-          org.apache.spark.sql.types.LongType))))
   }
 
   /** [[driverModularity]] over DataFrame inputs: collects `symEdges`
@@ -2342,7 +2287,7 @@ object GraphOps {
         while (i < w.length) {
           w(i) = (1000L + bp.counts(i) - 1) / bp.counts(i); i += 1
         }
-        val g = CollectedEdges.fromSymWeighted(bp.ids, bp.us, bp.vs, w)
+        val g = CollectedEdges.fromSym(bp.ids, bp.us, bp.vs, w)
         return ssspDriver(s, g, hubSeedIx(g, 3), 8)
           .select(col("node").as("partkey"), col("dist").as("cost"))
       case None =>
@@ -2423,9 +2368,7 @@ object GraphOps {
     val maxDriver = driverMaxEdges(s)
     val nE = e.count()
     require(nE > 0, "q214Hits needs a non-empty purchase graph")
-    val longIds = e.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    if (longIds && nE <= maxDriver) return q214HitsDriver(s, e, nE.toInt)
+    if (allLongIds(e) && nE <= maxDriver) return q214HitsDriver(s, e, nE.toInt)
     val nodes = e.select(col("p").as("node")).distinct()
       .localCheckpoint(false)
     val n = nodes.count()
@@ -2512,18 +2455,8 @@ object GraphOps {
     val buyers = new Array[Long](nP)
     i = 0
     while (i < n) { buyers(ps(i)) += 1; i += 1 }
-    val rows = new java.util.AbstractList[org.apache.spark.sql.Row] {
-      override def size(): Int = nP
-      override def get(ix: Int): org.apache.spark.sql.Row =
-        org.apache.spark.sql.Row(partIds(ix), buyers(ix), a(ix))
-    }
-    spark.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("partkey",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_buyers",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("auth_ppt",
-        org.apache.spark.sql.types.LongType))))
+    rowsDf(spark, nP, "partkey" -> LongType, "n_buyers" -> LongType,
+      "auth_ppt" -> LongType)(ix => Row(partIds(ix), buyers(ix), a(ix)))
   }
 
   /** q223: LOCAL clustering coefficient per node (Watts–Strogatz
@@ -2548,21 +2481,9 @@ object GraphOps {
     // relational kernel's size(nbrs)
     val base = collectBasketPairs(s, d, driverMaxEdges(s) / 2)
       .map { bp =>
-        val nN = bp.ids.length
-        val (tri, deg) = driverTriangles(bp.us, bp.vs, nN)
-        val rows = new java.util.AbstractList[org.apache.spark.sql.Row] {
-          override def size(): Int = nN
-          override def get(ix: Int): org.apache.spark.sql.Row =
-            org.apache.spark.sql.Row(bp.ids(ix), deg(ix), tri(ix))
-        }
-        s.createDataFrame(rows,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("degree",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("n_tri",
-              org.apache.spark.sql.types.LongType))))
+        val (tri, deg) = driverTriangles(bp.us, bp.vs, bp.ids.length)
+        rowsDf(s, bp.ids.length, "node" -> LongType, "degree" -> LongType,
+          "n_tri" -> LongType)(ix => Row(bp.ids(ix), deg(ix).toLong, tri(ix)))
       }
       .getOrElse(triangleCountsWithDegree(coPurchaseRawPairs(s, d)))
     // degree rides along free: it's size(nbrs) of the kernel's own
@@ -2659,28 +2580,8 @@ object GraphOps {
           }
           i += 1
         }
-        java.util.Arrays.sort(packed0, 0, m)
-        var nUnd = 0
-        i = 0
-        while (i < m) {
-          if (i == 0 || packed0(i) != packed0(i - 1)) {
-            packed0(nUnd) = packed0(i); nUnd += 1
-          }
-          i += 1
-        }
-        val us = new Array[Int](nUnd); val vs = new Array[Int](nUnd)
-        val ids = new Array[Long](g.nN)
-        i = 0
-        while (i < g.nN) { ids(i) = g.id(i); i += 1 }
-        i = 0
-        while (i < nUnd) {
-          val x = (packed0(i) >>> 32).toInt; val y = packed0(i).toInt
-          // orient by ORIGINAL id (the relational u < v contract)
-          if (ids(x) < ids(y)) { us(i) = x; vs(i) = y }
-          else { us(i) = y; vs(i) = x }
-          i += 1
-        }
-        return driverPeel(spark, ids, us, vs, k)
+        val bp = distinctPairs(Array.tabulate(g.nN)(g.id), packed0, m)
+        return driverPeel(spark, bp.ids, bp.us, bp.vs, k)
       }
     }
     val und = symEdges
@@ -2709,108 +2610,18 @@ object GraphOps {
   private[graft] def driverPeel(spark: SparkSession, ids: Array[Long],
       us: Array[Int], vs: Array[Int], k: Int): DataFrame = {
     val n = us.length
-    val sup = new Array[Long](n)
-    var i = 0
-    val nNodes = ids.length
-    // CSR adjacency, each node's slice sorted by neighbor (packed
+    // symmetric adjacency, each node's slice sorted by neighbor (packed
     // (nbr, edgeId) longs) — removed edges stay in the arrays and are
     // skipped via the alive flag, so a removal's triangle scan is one
     // primitive merge-scan of the two endpoint slices
-    val off = new Array[Int](nNodes + 1)
-    i = 0
-    while (i < n) { off(us(i) + 1) += 1; off(vs(i) + 1) += 1; i += 1 }
-    i = 0
-    while (i < nNodes) { off(i + 1) += off(i); i += 1 }
-    val pos = java.util.Arrays.copyOf(off, nNodes)
-    val packed = new Array[Long](2 * n)
-    i = 0
-    while (i < n) {
-      packed(pos(us(i))) = (vs(i).toLong << 32) | i.toLong
-      pos(us(i)) += 1
-      packed(pos(vs(i))) = (us(i).toLong << 32) | i.toLong
-      pos(vs(i)) += 1
-      i += 1
-    }
-    var v0 = 0
-    while (v0 < nNodes) {
-      java.util.Arrays.sort(packed, off(v0), off(v0 + 1)); v0 += 1
-    }
-    // initial supports via the DEGREE-ORIENTED intersect: orient every
-    // edge low-rank → high-rank (rank = (degree, id)); a triangle with
-    // ranks r1<r2<r3 is found exactly once, intersecting out(r1) ∩
-    // out(r2) while scanning edge (r1,r2) — Σ(dout+dout) ≤ O(αE)
-    val degF = new Array[Int](nNodes)
-    i = 0
-    while (i < nNodes) { degF(i) = off(i + 1) - off(i); i += 1 }
-    def rankLt(x: Int, y: Int): Boolean =
-      degF(x) < degF(y) || (degF(x) == degF(y) && x < y)
-    val off2 = new Array[Int](nNodes + 1)
-    i = 0
-    while (i < n) {
-      val s = if (rankLt(us(i), vs(i))) us(i) else vs(i)
-      off2(s + 1) += 1
-      i += 1
-    }
-    i = 0
-    while (i < nNodes) { off2(i + 1) += off2(i); i += 1 }
-    val pos2 = java.util.Arrays.copyOf(off2, nNodes)
-    val packed2 = new Array[Long](n)
-    i = 0
-    while (i < n) {
-      val (s, t) =
-        if (rankLt(us(i), vs(i))) (us(i), vs(i)) else (vs(i), us(i))
-      packed2(pos2(s)) = (t.toLong << 32) | i.toLong
-      pos2(s) += 1
-      i += 1
-    }
-    v0 = 0
-    while (v0 < nNodes) {
-      java.util.Arrays.sort(packed2, off2(v0), off2(v0 + 1)); v0 += 1
-    }
-    // r15: the initial support pass is order-free integer adds over
-    // READ-ONLY adjacency — embarrassingly parallel. Split the edge
-    // range across driver threads, each accumulating into a PRIVATE
-    // long[] (no atomics, no races), merged by plain addition —
-    // bit-identical to the sequential loop whatever the split
-    // (measured ~1 s of the q240 wall single-threaded at sf0.1).
-    locally {
-      val nThreads = math.min(8,
-        math.max(1, Runtime.getRuntime.availableProcessors / 4))
-      val partials = Array.fill(nThreads)(new Array[Long](n))
-      val threads = (0 until nThreads).map { t =>
-        val th = new Thread(() => {
-          val mySup = partials(t)
-          val lo = (n.toLong * t / nThreads).toInt
-          val hi = (n.toLong * (t + 1) / nThreads).toInt
-          var e = lo
-          while (e < hi) {
-            val s = if (rankLt(us(e), vs(e))) us(e) else vs(e)
-            val tt = if (rankLt(us(e), vs(e))) vs(e) else us(e)
-            var pa = off2(s); var pb = off2(tt)
-            val ea = off2(s + 1); val eb = off2(tt + 1)
-            while (pa < ea && pb < eb) {
-              val wa = (packed2(pa) >>> 32).toInt
-              val wb = (packed2(pb) >>> 32).toInt
-              if (wa < wb) pa += 1
-              else if (wb < wa) pb += 1
-              else {
-                mySup(e) += 1
-                mySup(packed2(pa).toInt) += 1
-                mySup(packed2(pb).toInt) += 1
-                pa += 1; pb += 1
-              }
-            }
-            e += 1
-          }
-        })
-        th.start(); th
-      }
-      threads.foreach(_.join())
-      partials.foreach { p =>
-        var j = 0
-        while (j < n) { sup(j) += p(j); j += 1 }
-      }
-    }
+    val edgeIx = Array.range(0, n)
+    val (off, packed) =
+      edgeSlices(ids.length, us ++ vs, edgeIx ++ edgeIx, us, vs)
+    // initial supports: the degree-oriented intersect over READ-ONLY
+    // adjacency, split across driver threads (r15: measured ~1 s of
+    // the q240 wall single-threaded at sf0.1)
+    val sup = orientedTriangles(us, vs,
+      Array.tabulate(ids.length)(v => off(v + 1) - off(v)), perEdge = true)
     val alive = Array.fill(n)(true)
     var stack = new Array[Int](math.max(16, n / 4)); var top = 0
     def push(e: Int): Unit = {
@@ -2818,7 +2629,7 @@ object GraphOps {
         stack = java.util.Arrays.copyOf(stack, stack.length * 2)
       stack(top) = e; top += 1
     }
-    i = 0
+    var i = 0
     while (i < n) { if (sup(i) < k - 2) push(i); i += 1 }
     while (top > 0) {
       top -= 1
@@ -2845,9 +2656,7 @@ object GraphOps {
         }
       }
     }
-    // survivors into compact primitive arrays, exposed to Spark as a
-    // lazily-mapped List — Rows materialize one at a time during the
-    // LocalRelation conversion instead of as a strict boxed Seq
+    // survivors into compact primitive arrays
     var nOut = 0
     i = 0
     while (i < n) { if (alive(i)) nOut += 1; i += 1 }
@@ -2995,7 +2804,6 @@ object GraphOps {
     * triangle credits its 3 id-normalized edges).
     */
   private def edgeSupport(und: DataFrame): DataFrame = {
-    val spark = und.sparkSession
     val MASK = (1L << 32) - 1
     val sym = und.select(col("u").as("src"), col("v").as("dst"))
       .unionByName(und.select(col("v").as("src"), col("u").as("dst")))
@@ -3009,7 +2817,7 @@ object GraphOps {
     val cc = col("pc").bitwiseAND(lit(MASK))
     edges.join(if (useBc) broadcast(vSide) else vSide, "pkv")
       .select(col("pku").as("pa"), col("pkv").as("pb"),
-        graft.functions.SortedIntersectAbove.intersectAbove(spark,
+        graft.functions.SortedIntersectAbove.intersectAbove(
           col("nbrs"), col("nv"), col("pkv")).as("ww"))
       .filter(size(col("ww")) > 0)
       .select(col("pa"), col("pb"), explode(col("ww")).as("pc"))
@@ -3094,7 +2902,7 @@ object GraphOps {
   private def scanDriver(spark: SparkSession, g: CollectedEdges)
       : DataFrame = {
     val nN = g.nN
-    val (off, adj) = g.csrBySrc()
+    val (off, adj) = csr(nN, g.ss, g.ds)
     // sort each adjacency slice for the merge-intersect
     var v0 = 0
     while (v0 < nN) {
@@ -3224,25 +3032,12 @@ object GraphOps {
       }
       i += 1
     }
-    val rows = new java.util.AbstractList[org.apache.spark.sql.Row] {
-      override def size(): Int = nN
-      override def get(ix: Int): org.apache.spark.sql.Row =
-        org.apache.spark.sql.Row(g.id(ix), deg(ix), nepsOf(ix), roles(ix),
-          if (cluster(ix) == NoCluster ||
-              (!isCore(ix) && !isBorder(ix))) null
-          else java.lang.Long.valueOf(cluster(ix)))
+    rowsDf(spark, nN, "node" -> LongType, "deg" -> LongType,
+        "n_eps" -> LongType, "role" -> StringType, "cluster" -> LongType) {
+      ix => Row(g.id(ix), deg(ix), nepsOf(ix), roles(ix),
+        if (cluster(ix) == NoCluster || (!isCore(ix) && !isBorder(ix))) null
+        else java.lang.Long.valueOf(cluster(ix)))
     }
-    spark.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("deg",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_eps",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("role",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("cluster",
-        org.apache.spark.sql.types.LongType))))
   }
 
   /** q265: SCAN structural graph clustering (Xu, Yuruk, Feng & Schweiger

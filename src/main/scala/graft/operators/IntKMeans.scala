@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorExpressions
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** EXACT integer-lattice k-means shared by the oracle-checked ANN
@@ -78,23 +78,8 @@ object IntKMeans {
     val dim = pts(0).length
     var cents: Array[(Int, Array[Long])] =
       pts.take(k).zipWithIndex.map { case (p, i) => (i, p.clone()) }
-    def d2(p: Array[Long], c: Array[Long]): Long = {
-      var s = 0L; var i = 0
-      while (i < dim) { val d = p(i) - c(i); s += d * d; i += 1 }
-      s
-    }
     for (_ <- 1 to rounds) {
-      // cents is cid-ascending and strict < keeps the first (smallest
-      // cid) winner — the ROW_NUMBER (d2, cid) tie rule
-      val asg = pts.map { p =>
-        var bi = cents(0)._1; var bd = d2(p, cents(0)._2); var j = 1
-        while (j < cents.length) {
-          val d = d2(p, cents(j)._2)
-          if (d < bd) { bd = d; bi = cents(j)._1 }
-          j += 1
-        }
-        bi
-      }
+      val asg = pts.map(p => cents(nearest(p, cents))._1)
       cents = asg.zip(pts).groupBy(_._1).toArray.sortBy(_._1).map {
         case (cid, rows) =>
           val n = rows.length.toLong
@@ -114,6 +99,26 @@ object IntKMeans {
     cents
   }
 
+  /** Index in the cid-ascending `cents` of the centroid nearest `p` by
+    * exact squared distance; strict < keeps the first (smallest cid)
+    * winner — the ROW_NUMBER (d2, cid) tie rule.
+    */
+  private[operators] def nearest(p: Array[Long],
+      cents: Array[(Int, Array[Long])]): Int = {
+    def d2(c: Array[Long]): Long = {
+      var s = 0L; var i = 0
+      while (i < p.length) { val d = p(i) - c(i); s += d * d; i += 1 }
+      s
+    }
+    var bi = 0; var bd = d2(cents(0)._2); var j = 1
+    while (j < cents.length) {
+      val d = d2(cents(j)._2)
+      if (d < bd) { bd = d; bi = j }
+      j += 1
+    }
+    bi
+  }
+
   /** Train on a fresh md5-capped sample of `df` — the composed
     * sample+Lloyd both ANN trainers call.
     */
@@ -126,14 +131,14 @@ object IntKMeans {
     * `p2` must be the precomputed idot(e6, e6) column (evaluating it
     * once instead of once per centroid).
     */
-  private def distStructs(s: SparkSession, e6Col: String, p2: Column,
+  private def distStructs(e6Col: String, p2: Column,
       cents: Array[(Int, Array[Long])]): Column =
     array(cents.map { case (cid, c) =>
       val cl = typedlit(c.map(_.toInt).toSeq)
       val c2 = c.map(v => v * v).sum
       struct(
         (p2 + lit(c2) -
-          lit(2L) * VectorExpressions.idot(s, col(e6Col), cl)).as("d2"),
+          lit(2L) * VectorExpressions.idot(col(e6Col), cl)).as("d2"),
         lit(cid).as("cid"))
     }: _*)
 
@@ -141,13 +146,13 @@ object IntKMeans {
     * over the corpus — no join, no shuffle (the q194 shape). Adds
     * `cellCol` (int).
     */
-  def assignCell(s: SparkSession, df: DataFrame, e6Col: String,
+  def assignCell(df: DataFrame, e6Col: String,
       cents: Array[(Int, Array[Long])], cellCol: String): DataFrame = {
     val withP2 = df.withColumn("_ikm_p2",
-      VectorExpressions.idot(s, col(e6Col), col(e6Col)))
+      VectorExpressions.idot(col(e6Col), col(e6Col)))
     withP2
       .withColumn(cellCol,
-        array_min(distStructs(s, e6Col, col("_ikm_p2"), cents))
+        array_min(distStructs(e6Col, col("_ikm_p2"), cents))
           .getField("cid"))
       .drop("_ikm_p2")
   }
@@ -156,14 +161,14 @@ object IntKMeans {
     * (input row, probed cell)): array_sort on (d2, cid) structs is the
     * exact ROW_NUMBER (d2, cid) order. Adds `cellCol`.
     */
-  def probeCells(s: SparkSession, df: DataFrame, e6Col: String,
+  def probeCells(df: DataFrame, e6Col: String,
       cents: Array[(Int, Array[Long])], nProbe: Int,
       cellCol: String): DataFrame = {
     val withP2 = df.withColumn("_ikm_p2",
-      VectorExpressions.idot(s, col(e6Col), col(e6Col)))
+      VectorExpressions.idot(col(e6Col), col(e6Col)))
     withP2
       .withColumn("_ikm_probe",
-        slice(array_sort(distStructs(s, e6Col, col("_ikm_p2"), cents)),
+        slice(array_sort(distStructs(e6Col, col("_ikm_p2"), cents)),
           1, nProbe))
       .drop("_ikm_p2")
       .withColumn(cellCol, explode(col("_ikm_probe").getField("cid")))

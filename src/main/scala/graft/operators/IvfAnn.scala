@@ -43,15 +43,14 @@ object IvfAnn {
     * candidate join broadcasts the |queries|·nProbe probe set against
     * the cell-partitioned corpus.
     */
-  def searchExactInt(s: SparkSession, emb: DataFrame, nCells: Int,
+  def searchExactInt(emb: DataFrame, nCells: Int,
       nProbe: Int, rounds: Int = 3, sampleCap: Int = 4096): DataFrame = {
     val base = emb.select(col("vec_id"), col("embedding"),
       IntKMeans.e6(col("embedding")).as("_e6"))
     val cents = IntKMeans.trainOnSample(base, "vec_id", "_e6",
       nCells, rounds, sampleCap)
-    val assigned = IntKMeans.assignCell(s, base, "_e6", cents, "cell")
-    val probed = IntKMeans.probeCells(s,
-      assigned.filter(col("vec_id") < 10)
+    val assigned = IntKMeans.assignCell(base, "_e6", cents, "cell")
+    val probed = IntKMeans.probeCells(assigned.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"),
           col("_e6")),
       "_e6", cents, nProbe, "cell")
@@ -62,7 +61,7 @@ object IvfAnn {
       .join(broadcast(probed), Seq("cell"))
       .filter(col("qid") =!= col("nid"))
       .withColumn("cos_sim",
-        round(VectorExpressions.cosine(s, col("qe"), col("ne")), 4))
+        round(VectorExpressions.cosine(col("qe"), col("ne")), 4))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("cos_sim").desc, col("nid"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
@@ -77,5 +76,5 @@ object IvfAnn {
     * sf0.001).
     */
   def q40AnnIvf(s: SparkSession, d: String): DataFrame =
-    searchExactInt(s, Tables.embeddings(s, d), nCells = 16, nProbe = 8)
+    searchExactInt(Tables.embeddings(s, d), nCells = 16, nProbe = 8)
 }

@@ -60,21 +60,10 @@ object IvfPq {
       IntKMeans.e6(col("embedding")).as("_e6"))
     val sample = IntKMeans.sampleE6(base, "vec_id", "_e6", sampleCap)
     val coarse = IntKMeans.localLloyd(sample, nCells, CoarseRounds)
-    def d2(p: Array[Long], c: Array[Long]): Long = {
-      var s = 0L; var i = 0
-      while (i < p.length) { val d = p(i) - c(i); s += d * d; i += 1 }
-      s
-    }
     // sample residuals under the same exact assignment rule the corpus
     // pass uses (argmin d², smallest-cid ties — coarse is cid-sorted)
     val residuals = sample.map { p =>
-      var bi = 0; var bd = d2(p, coarse(0)._2); var j = 1
-      while (j < coarse.length) {
-        val d = d2(p, coarse(j)._2)
-        if (d < bd) { bd = d; bi = j }
-        j += 1
-      }
-      val c = coarse(bi)._2
+      val c = coarse(IntKMeans.nearest(p, coarse))._2
       val r = new Array[Long](p.length)
       var t = 0
       while (t < p.length) { r(t) = p(t) - c(t); t += 1 }
@@ -105,21 +94,20 @@ object IvfPq {
     */
   def encode(emb: DataFrame, coarse: Array[(Int, Array[Long])],
       pq: Array[Array[(Int, Array[Long])]], dim: Int): DataFrame = {
-    val s = emb.sparkSession
     val subDim = dim / M
-    val withCell = IntKMeans.assignCell(s,
-      emb.withColumn("_e6", IntKMeans.e6(col("embedding"))),
-      "_e6", coarse, "cell")
+    val withCell = IntKMeans.assignCell(
+        emb.withColumn("_e6", IntKMeans.e6(col("embedding"))),
+        "_e6", coarse, "cell")
       .withColumn("_r", residual(col("_e6"), col("cell"), coarse))
     (0 until M).foldLeft(withCell) { (df, m) =>
       val sl = slice(col("_r"), m * subDim + 1, subDim)
-      val p2 = VectorExpressions.idot(s, sl, sl)
+      val p2 = VectorExpressions.idot(sl, sl)
       df.withColumn(s"code$m",
         array_min(array(pq(m).map { case (cid, c) =>
           val cl = typedlit(c.map(_.toInt).toSeq)
           val c2 = c.map(v => v * v).sum
           struct(
-            (p2 + lit(c2) - lit(2L) * VectorExpressions.idot(s, sl, cl))
+            (p2 + lit(c2) - lit(2L) * VectorExpressions.idot(sl, cl))
               .as("d2"),
             lit(cid).as("cid"))
         }: _*)).getField("cid"))
@@ -133,15 +121,15 @@ object IvfPq {
     * ([[graft.sources.AnnIndexStore]]) uses, so index-backed search is
     * provably the in-memory result.
     */
-  def search(spark: SparkSession, emb: DataFrame, nCells: Int,
-      nProbe: Int, shortlist: Int = 64): DataFrame = {
+  def search(emb: DataFrame, nCells: Int, nProbe: Int,
+      shortlist: Int = 64): DataFrame = {
     val dim = 64
     val (coarse, pq) = train(emb, dim, nCells)
     val coded = encode(emb, coarse, pq, dim).localCheckpoint(false)
     val codesOnly = coded.select(
       col("vec_id") +: col("cell") +:
         (0 until M).map(m => col(s"code$m")): _*)
-    searchEncoded(spark, codesOnly,
+    searchEncoded(codesOnly,
       coded.select(col("vec_id"), col("embedding")),
       coarse, pq, dim, nProbe, shortlist)
   }
@@ -153,7 +141,7 @@ object IvfPq {
     * Everything upstream (training, encoding) can come from a
     * persisted artifact; this path never trains.
     */
-  private[graft] def searchEncoded(spark: SparkSession, codes: DataFrame,
+  private[graft] def searchEncoded(codes: DataFrame,
       vecs: DataFrame, coarse: Array[(Int, Array[Long])],
       pq: Array[Array[(Int, Array[Long])]], dim: Int,
       nProbe: Int, shortlist: Int = 64): DataFrame = {
@@ -164,7 +152,7 @@ object IvfPq {
     val queries = vecs.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       .withColumn("_q6", IntKMeans.e6(col("qe")))
-    val probed = IntKMeans.probeCells(spark, queries, "_q6", coarse,
+    val probed = IntKMeans.probeCells(queries, "_q6", coarse,
       nProbe, "pcell")
 
     // per-(query, cell) ADC tables on the query residual — |queries|·
@@ -174,7 +162,7 @@ object IvfPq {
     // predicate is partition pruning, not a scan)
     val withRes = probed.withColumn("_qr",
       residual(col("_q6"), col("pcell"), coarse))
-    PqAnn.adcSearch(spark, withRes, col("_qr"), pq, subDim,
+    PqAnn.adcSearch(withRes, col("_qr"), pq, subDim,
       tables => codes.select(
           col("vec_id").as("nid") +: col("cell") +:
             (0 until M).map(m => col(s"code$m")): _*)
@@ -185,5 +173,5 @@ object IvfPq {
   }
 
   def q121IvfPq(s: SparkSession, d: String): DataFrame =
-    search(s, PqAnn.spreadEmbeddings(s, d), nCells = 16, nProbe = 8)
+    search(PqAnn.spreadEmbeddings(s, d), nCells = 16, nProbe = 8)
 }

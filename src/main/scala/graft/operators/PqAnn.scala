@@ -70,13 +70,13 @@ object PqAnn {
     * precomputed idot(sl, sl), evaluated once rather than per
     * centroid).
     */
-  private def subArgmin(s: SparkSession, sl: Column, p2: Column,
+  private def subArgmin(sl: Column, p2: Column,
       cb: Array[(Int, Array[Long])]): Column =
     array_min(array(cb.map { case (cid, c) =>
       val cl = typedlit(c.map(_.toInt).toSeq)
       val c2 = c.map(v => v * v).sum
       struct(
-        (p2 + lit(c2) - lit(2L) * VectorExpressions.idot(s, sl, cl))
+        (p2 + lit(c2) - lit(2L) * VectorExpressions.idot(sl, cl))
           .as("d2"),
         lit(cid).as("cid"))
     }: _*)).getField("cid")
@@ -87,13 +87,12 @@ object PqAnn {
     */
   def encode(emb: DataFrame, codebooks: Array[Array[(Int, Array[Long])]],
       dim: Int): DataFrame = {
-    val s = emb.sparkSession
     val subDim = dim / M
     (0 until M).foldLeft(
         emb.withColumn("_e6", IntKMeans.e6(col("embedding")))) { (df, m) =>
       val sl = slice(col("_e6"), m * subDim + 1, subDim)
       df.withColumn(s"code$m",
-        subArgmin(s, sl, VectorExpressions.idot(s, sl, sl), codebooks(m)))
+        subArgmin(sl, VectorExpressions.idot(sl, sl), codebooks(m)))
     }.drop("_e6")
   }
 
@@ -101,8 +100,7 @@ object PqAnn {
     * ADC shortlist over the code columns, exact cosine re-rank of the
     * survivors.
     */
-  def search(spark: SparkSession, emb: DataFrame,
-      shortlist: Int = 96): DataFrame = {
+  def search(emb: DataFrame, shortlist: Int = 96): DataFrame = {
     val dim = 64
     val subDim = dim / M
     val codebooks = trainCodebooks(emb, dim)
@@ -111,7 +109,7 @@ object PqAnn {
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       .withColumn("_q6", IntKMeans.e6(col("qe")))
     // the scan side carries ONLY ids + codes
-    adcSearch(spark, queries, col("_q6"), codebooks, subDim,
+    adcSearch(queries, col("_q6"), codebooks, subDim,
       tables => coded.select(
           col("vec_id").as("nid") +: (0 until M).map(m => col(s"code$m")): _*)
         .crossJoin(broadcast(tables.select(
@@ -129,20 +127,20 @@ object PqAnn {
     * re-ranked by exact cosine against `vecs(vec_id, embedding)` for
     * the `queries(qid, qe)`.
     */
-  private[operators] def adcSearch(spark: SparkSession, probes: DataFrame,
+  private[operators] def adcSearch(probes: DataFrame,
       q: Column, codebooks: Array[Array[(Int, Array[Long])]], subDim: Int,
       candidates: DataFrame => DataFrame, vecs: DataFrame,
       queries: DataFrame, shortlist: Int): DataFrame = {
     val tables = (0 until M).foldLeft(probes) { (df, m) =>
       val sl = slice(q, m * subDim + 1, subDim)
-      val p2 = VectorExpressions.idot(spark, sl, sl)
+      val p2 = VectorExpressions.idot(sl, sl)
       val cb = codebooks(m)
       df.withColumn(s"dt$m", map_from_arrays(
         typedlit(cb.map(_._1).toSeq),
         array(cb.map { case (_, c) =>
           val cl = typedlit(c.map(_.toInt).toSeq)
           val c2 = c.map(v => v * v).sum
-          p2 + lit(c2) - lit(2L) * VectorExpressions.idot(spark, sl, cl)
+          p2 + lit(c2) - lit(2L) * VectorExpressions.idot(sl, cl)
         }: _*)))
     }
     val adist = (0 until M).map(m =>
@@ -160,7 +158,7 @@ object PqAnn {
         "nid")
       .join(broadcast(queries.select(col("qid"), col("qe"))), "qid")
       .withColumn("cos_sim",
-        round(VectorExpressions.cosine(spark, col("qe"), col("ne")), 4))
+        round(VectorExpressions.cosine(col("qe"), col("ne")), 4))
     graft.plans.TopK.perKey(reranked, keys = Seq("qid"),
         order = Seq(("cos_sim", true), ("nid", false)), k = K)
       .select("qid", "nid", "cos_sim")
@@ -175,5 +173,5 @@ object PqAnn {
       graft.Gates.SpreadAnnRows)
 
   def q120PqAnn(s: SparkSession, d: String): DataFrame =
-    search(s, spreadEmbeddings(s, d))
+    search(spreadEmbeddings(s, d))
 }

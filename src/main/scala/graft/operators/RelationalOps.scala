@@ -3569,7 +3569,7 @@ object RelationalOps {
     // tower ran interpreted per element and dominated the query;
     // SeqPatternsSpec pins native ≡ HOF (multiset) on real sessions
     val contained = sess.select(graft.functions.SeqPatterns
-      .patterns(s, col("arr")).as("pats"))
+      .patterns(col("arr")).as("pats"))
     // contained is row-for-row sess (a projection) — count the cheap
     // side, never the HOF tower
     val tot = sess.agg(count(lit(1)).cast("long").as("_n"))
@@ -3773,7 +3773,7 @@ object RelationalOps {
         "LEAST((_mx - us) DIV 2592, 20000000000)"))
     // r15: native graft_exp_e9 — per-EVENT scan, the q272 shape
     val withExp = base.withColumn("_a",
-      graft.functions.FixedPointExpressions.expE9(s, col("_x")))
+      graft.functions.FixedPointExpressions.expE9(col("_x")))
     withExp
       // w = round-half-up(1e18 / a): a ≤ exp(20)·1e9 ≈ 4.9e17, so
       // 2e18 + a stays in long — no decimal in the per-row hot path
@@ -3837,13 +3837,13 @@ object RelationalOps {
       .withColumn("_q", col("_ppm"))
     // r15: native graft_ln_e9 / graft_exp_e9 (band-cell scale)
     val withLn = ppm.withColumn("_nl9",
-      graft.functions.FixedPointExpressions.lnE9(s, col("_p"), col("_q")))
+      graft.functions.FixedPointExpressions.lnE9(col("_p"), col("_q")))
     val ent = withLn.groupBy(col("nationkey"), col("mktsegment"))
       .agg(expr("""CAST((2 * sum(_ppm * _nl9) + 1000000)
                    DIV (2 * 1000000) AS BIGINT)""").as("entropy_e9"))
       .withColumn("_x", col("entropy_e9"))
     val withExp = ent.withColumn("_a",
-      graft.functions.FixedPointExpressions.expE9(s, col("_x")))
+      graft.functions.FixedPointExpressions.expE9(col("_x")))
     byClass.join(withExp.select(col("nationkey"), col("mktsegment"),
         col("entropy_e9"),
         expr("(2 * _a + 1000000) DIV (2 * 1000000)")
@@ -3938,7 +3938,7 @@ object RelationalOps {
         .otherwise(-1L))
     // r15: native graft_ln_e9
     val withLn = ret.withColumn("_l9",
-      graft.functions.FixedPointExpressions.lnE9(s, col("_p"), col("_q")))
+      graft.functions.FixedPointExpressions.lnE9(col("_p"), col("_q")))
       .select(col("cohort_week"), col("n_users"), col("off"),
         (col("_sgn") * col("_l9")).as("y"))
     withLn.groupBy(col("cohort_week"))
@@ -4010,12 +4010,12 @@ object RelationalOps {
     // r15: native graft_ln_e9 for both geometric draws
     val g1 = counts
       .withColumn("_l1", graft.functions.FixedPointExpressions
-        .lnE9(s, lit(1000000L), col("_u1")))
+        .lnE9(lit(1000000L), col("_u1")))
       .select(col("nationkey"), col("mktsegment"), col("_n"),
         col("_u2"), expr("_l1 DIV 1000000000").as("_g1"))
     val g2 = g1
       .withColumn("_l2", graft.functions.FixedPointExpressions
-        .lnE9(s, lit(1000000L), col("_u2")))
+        .lnE9(lit(1000000L), col("_u2")))
       .select(col("nationkey"), col("mktsegment"), col("_n"),
         col("_g1"), expr("_l2 DIV 1000000000").as("_g2"))
     g2.select(col("nationkey"), col("mktsegment"),

@@ -32,7 +32,7 @@ object SimilarityOps {
     val cand = emb.select(col("vec_id").as("nid"), col("embedding").as("ne"))
     val scored = cand.join(broadcast(queriesOf(emb)), col("nid") =!= col("qid"))
       .withColumn("cos_sim",
-        round(VectorExpressions.cosine(s, col("qe"), col("ne")), 4))
+        round(VectorExpressions.cosine(col("qe"), col("ne")), 4))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("cos_sim").desc, col("nid"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
@@ -104,7 +104,7 @@ object SimilarityOps {
 
     def sigCol(t: Int): Column =
       ps(t).zipWithIndex.map { case (p, i) =>
-        when(VectorExpressions.idot(s, col("_e6"), typedlit(p)) >= 0,
+        when(VectorExpressions.idot(col("_e6"), typedlit(p)) >= 0,
           lit(1L << i)).otherwise(lit(0L))
       }.reduce(_ + _)
 
@@ -134,7 +134,7 @@ object SimilarityOps {
         "nid")
       .join(broadcast(queriesOf(emb)), "qid")
       .withColumn("cos_sim",
-        round(VectorExpressions.cosine(s, col("qe"), col("ne")), 4))
+        round(VectorExpressions.cosine(col("qe"), col("ne")), 4))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("cos_sim").desc, col("nid"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
@@ -187,7 +187,7 @@ object SimilarityOps {
 
     def sigCol(t: Int): Column =
       ps(t).zipWithIndex.map { case (p, i) =>
-        when(VectorExpressions.dot(s, col("embedding"),
+        when(VectorExpressions.dot(col("embedding"),
           typedlit(p.map(_.toDouble).toSeq)) >= 0,
           lit(1L << i)).otherwise(lit(0L))
       }.reduce(_ + _)
@@ -228,7 +228,7 @@ object SimilarityOps {
       col("embedding").as("eb"))
     pairs.join(ea, "vec_a").join(eb, "vec_b")
       .withColumn("cos_sim",
-        round(VectorExpressions.cosine(s, col("ea"), col("eb")), 4))
+        round(VectorExpressions.cosine(col("ea"), col("eb")), 4))
       .filter(col("cos_sim") >= 0.9)
       .select("vec_a", "vec_b", "cos_sim")
   }
@@ -240,7 +240,7 @@ object SimilarityOps {
   def q49DocEmbedding(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select("doc_id", "lang", "n_chars")
     val vecs = Tables.embeddings(s, d).select(col("vec_id"), col("label"),
-      round(VectorExpressions.norm(s, col("embedding")), 4).as("l2_norm"))
+      round(VectorExpressions.norm(col("embedding")), 4).as("l2_norm"))
     docs.join(vecs, docs("doc_id") === vecs("vec_id"))
       .select("doc_id", "lang", "n_chars", "label", "l2_norm")
   }
@@ -325,7 +325,7 @@ object SimilarityOps {
       // persisted index of any dimension keeps the shift cancellation
       .select(col("qid"), col("nid"),
         (size(col("qcodes")).cast("long")
-          * VectorExpressions.idot(s, col("qcodes"), col("ncodes"))
+          * VectorExpressions.idot(col("qcodes"), col("ncodes"))
           - col("qsum") * col("nsum")).as("score"))
     val shortlist = graft.plans.TopK.perKey(coarse, Seq("qid"),
       Seq(("score", true), ("nid", false)), M)
@@ -335,7 +335,7 @@ object SimilarityOps {
         "nid")
       .join(broadcast(queriesOf(emb)), "qid")
       .withColumn("cos_sim",
-        round(VectorExpressions.cosine(s, col("qe"), col("ne")), 4))
+        round(VectorExpressions.cosine(col("qe"), col("ne")), 4))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("cos_sim").desc, col("nid"))
     rescored.withColumn("rank", row_number().over(w).cast("long"))
@@ -349,8 +349,8 @@ object SimilarityOps {
   def q34VectorOps(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d).select(
       col("vec_id"),
-      round(VectorExpressions.norm(s, col("embedding")), 4).as("l2_norm"),
-      round(VectorExpressions.dot(s, col("embedding"),
+      round(VectorExpressions.norm(col("embedding")), 4).as("l2_norm"),
+      round(VectorExpressions.dot(col("embedding"),
         reverse(col("embedding"))), 4).as("dot_rev"))
 
   /** 89. Semantic dedup (SemDeDup-style): cluster the embedding space
@@ -382,9 +382,9 @@ object SimilarityOps {
     val centMap = map_from_arrays(
       typedlit(cents.map(_._1).toSeq),
       array(cents.map(kc => typedlit(kc._2.map(_.toDouble).toSeq)): _*))
-    val scored = IntKMeans.assignCell(s, base, "_e6", cents, "cell")
+    val scored = IntKMeans.assignCell(base, "_e6", cents, "cell")
       .withColumn("cos_r",
-        round(VectorExpressions.cosine(s, col("embedding"),
+        round(VectorExpressions.cosine(col("embedding"),
           element_at(centMap, col("cell"))), 4))
       .select(col("vec_id"), col("cell"), col("cos_r"))
     graft.plans.TopK.perKey(scored, keys = Seq("cell"),
@@ -568,7 +568,7 @@ object SimilarityOps {
     val sem = emb.select(col("vec_id").as("did"), col("embedding").as("ne"))
       .join(broadcast(qv), col("did") =!= col("qid"))
       .select(col("qid"), col("did"),
-        round(VectorExpressions.cosine(s, col("qe"), col("ne")), 4)
+        round(VectorExpressions.cosine(col("qe"), col("ne")), 4)
           .as("cos_sim"))
     ranked(lex, "jac_ppm", "lex_rank")
       .join(ranked(sem, "cos_sim", "sem_rank"), Seq("qid", "did"),
@@ -719,14 +719,13 @@ object SimilarityOps {
       k: Int): DataFrame = {
     val sp = emb.sparkSession
     import sp.implicits._
-    val s = sp
     val e = emb.select(col("vec_id"), col("embedding"))
     val seeds = e.orderBy(col("vec_id")).limit(nQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val cand = e.select(col("vec_id").as("did"), col("embedding").as("ne"))
       .join(broadcast(seeds), col("did") =!= col("qid"))
       .select(col("qid"), col("did"), col("ne"),
-        round(VectorExpressions.cosine(s, col("qe"), col("ne")) * 10000, 0)
+        round(VectorExpressions.cosine(col("qe"), col("ne")) * 10000, 0)
           .cast("long").as("rel_e4"))
     val top = graft.plans.TopK.perKey(cand, keys = Seq("qid"),
         order = Seq(("rel_e4", true), ("did", false)), k = shortlist)
@@ -736,7 +735,7 @@ object SimilarityOps {
         Seq("qid"))
       .filter(col("a") < col("b"))
       .select(col("qid"), col("a"), col("b"),
-        round(VectorExpressions.cosine(s, col("ea"), col("eb")) * 10000, 0)
+        round(VectorExpressions.cosine(col("ea"), col("eb")) * 10000, 0)
           .cast("long").as("sim_e4"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) ->
         r.getLong(3)).toMap
@@ -786,7 +785,6 @@ object SimilarityOps {
     */
   def truncatedAnn(emb: DataFrame, prefixDims: Int, shortlist: Int,
       k: Int): DataFrame = {
-    val s = emb.sparkSession
     val pre = emb.select(col("vec_id"),
       slice(col("embedding"), 1, prefixDims).as("pe"))
     val q = pre.filter(col("vec_id") < 10)
@@ -794,7 +792,7 @@ object SimilarityOps {
     val cand = pre.select(col("vec_id").as("nid"), col("pe").as("np"))
       .join(broadcast(q), col("nid") =!= col("qid"))
       .select(col("qid"), col("nid"),
-        round(VectorExpressions.cosine(s, col("qp"), col("np")), 4)
+        round(VectorExpressions.cosine(col("qp"), col("np")), 4)
           .as("pre_cos"))
     val short = graft.plans.TopK.perKey(cand, keys = Seq("qid"),
       order = Seq(("pre_cos", true), ("nid", false)), k = shortlist)
@@ -804,7 +802,7 @@ object SimilarityOps {
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val rer = short.join(full, "nid").join(broadcast(qfull), Seq("qid"))
       .select(col("qid"), col("nid"),
-        round(VectorExpressions.cosine(s, col("qe"), col("ne")), 4)
+        round(VectorExpressions.cosine(col("qe"), col("ne")), 4)
           .as("cos_sim"))
     graft.plans.TopK.perKey(rer, keys = Seq("qid"),
       order = Seq(("cos_sim", true), ("nid", false)), k = k)
@@ -934,14 +932,13 @@ object SimilarityOps {
       .agg(sort_array(collect_list(struct(col("_tok"), col("_w2"))))
         .as("_vec"))
       .join(norms, "_id")
-    val s = docs.sparkSession
     cand
       .join(docVec.select(col("_id").as("id_a"), col("_vec").as("_va"),
         col("_n2").as("_n2a")), "id_a")
       .join(docVec.select(col("_id").as("id_b"), col("_vec").as("_vb"),
         col("_n2").as("_n2b")), "id_b")
       .withColumn("_dot",
-        graft.functions.SortedPairDot.dot(s, col("_va"), col("_vb"))
+        graft.functions.SortedPairDot.dot(col("_va"), col("_vb"))
           .cast("decimal(38,0)"))
       .filter(col("_dot") * col("_dot") * (tDen.toLong * tDen) >=
         col("_n2a") * col("_n2b") * (tNum.toLong * tNum))
@@ -968,7 +965,7 @@ object SimilarityOps {
     val docs = Tables.documents(s, d)
       .filter(col("text").isNotNull)
       .select(col("doc_id"), graft.functions.WordShingles
-        .shingles(s, col("text"), 3).as("tk"))
+        .shingles(col("text"), 3).as("tk"))
     cosineAllPairs(docs, "doc_id", "tk", 1, 2)
   }
 
@@ -1019,11 +1016,11 @@ object SimilarityOps {
       .select(col("vec_id"), col("label"), col("embedding"))
     val q = emb.select(col("vec_id").as("qid"), col("label").as("qlabel"),
       col("embedding").as("qe"),
-      VectorExpressions.norm(s, col("embedding")).as("_qn"))
+      VectorExpressions.norm(col("embedding")).as("_qn"))
     emb
       .select(col("vec_id").as("nid"), col("label").as("nlabel"),
         col("embedding").as("ne"),
-        VectorExpressions.norm(s, col("embedding")).as("_nn"))
+        VectorExpressions.norm(col("embedding")).as("_nn"))
       // r14 (guide §2.6-class idle-capacity fix): the streaming side of
       // the broadcast nested-loop is ONE parquet file → ≤4 scan tasks
       // carrying the whole n² pair scoring (q187 ran 5.8 s on 4 tasks).
@@ -1033,7 +1030,7 @@ object SimilarityOps {
       .repartition(s.sparkContext.defaultParallelism)
       .join(broadcast(q), col("nid") =!= col("qid"))
       .select(col("qid"), col("qlabel"), col("nid"), col("nlabel"),
-        round(VectorExpressions.dot(s, col("qe"), col("ne")) /
+        round(VectorExpressions.dot(col("qe"), col("ne")) /
           nullif(col("_qn") * col("_nn"), lit(0.0)), 4)
           .as("cos_sim"))
   }
@@ -1088,24 +1085,24 @@ object SimilarityOps {
     * most once: nid lives in exactly one cell. The cell join shuffles
     * BOTH sides on cell — co-partitioned, no broadcast of the corpus.
     */
-  private[graft] def ivfCandidateScores(s: SparkSession, emb: DataFrame,
+  private[graft] def ivfCandidateScores(emb: DataFrame,
       nCells: Int, nProbe: Int): DataFrame = {
     val base = emb.select(col("vec_id"), col("label"), col("embedding"),
       IntKMeans.e6(col("embedding")).as("_e6"))
     val cents = IntKMeans.trainOnSample(base, "vec_id", "_e6",
       k = nCells, rounds = 3, cap = 4096)
-    val q = IntKMeans.probeCells(s, base, "_e6", cents, nProbe, "cell")
+    val q = IntKMeans.probeCells(base, "_e6", cents, nProbe, "cell")
       .select(col("vec_id").as("qid"), col("label").as("qlabel"),
         col("embedding").as("qe"),
-        VectorExpressions.norm(s, col("embedding")).as("_qn"), col("cell"))
-    IntKMeans.assignCell(s, base, "_e6", cents, "cell")
+        VectorExpressions.norm(col("embedding")).as("_qn"), col("cell"))
+    IntKMeans.assignCell(base, "_e6", cents, "cell")
       .select(col("vec_id").as("nid"), col("label").as("nlabel"),
         col("embedding").as("ne"),
-        VectorExpressions.norm(s, col("embedding")).as("_nn"), col("cell"))
+        VectorExpressions.norm(col("embedding")).as("_nn"), col("cell"))
       .join(q, Seq("cell"))
       .filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("qlabel"), col("nid"), col("nlabel"),
-        round(VectorExpressions.dot(s, col("qe"), col("ne")) /
+        round(VectorExpressions.dot(col("qe"), col("ne")) /
           nullif(col("_qn") * col("_nn"), lit(0.0)), 4)
           .as("cos_sim"))
   }
@@ -1127,7 +1124,7 @@ object SimilarityOps {
       .tableRowCount(s, d, "embeddings")
     val maxExact = Gates.memory(s, Gates.AnnExactRows)
     if (nRows <= maxExact) knnPurityScored(s, d)
-    else ivfCandidateScores(s, Tables.embeddings(s, d), nCells = 16,
+    else ivfCandidateScores(Tables.embeddings(s, d), nCells = 16,
       nProbe = 10)
   }
 
@@ -1170,8 +1167,8 @@ object SimilarityOps {
     def d2(cid: Int, c: Array[Long]): Column = {
       val cl = typedlit(c.map(_.toInt).toSeq)
       val c2 = c.map(v => v * v).sum
-      VectorExpressions.idot(s, col("e6"), col("e6")) +
-        lit(c2) - lit(2L) * VectorExpressions.idot(s, col("e6"), cl)
+      VectorExpressions.idot(col("e6"), col("e6")) +
+        lit(c2) - lit(2L) * VectorExpressions.idot(col("e6"), cl)
     }
     def assigned: DataFrame = {
       val best = array_min(array(cents.map { case (cid, c) =>
@@ -1221,7 +1218,7 @@ object SimilarityOps {
         transform(col("embedding"),
           x => floor(x.cast("double") * 1000000).cast("int")).as("e6"))
       .withColumn("_p2",
-        VectorExpressions.idot(s, col("e6"), col("e6")))
+        VectorExpressions.idot(col("e6"), col("e6")))
       .localCheckpoint(false) // feeds dims, label norms, and the argmin
     val dims = pts.select(col("vec_id"), col("label"),
       posexplode(col("e6")).as(Seq("_i", "_e")))
@@ -1281,7 +1278,7 @@ object SimilarityOps {
         transform(col("embedding"),
           x => floor(x.cast("double") * 1000000).cast("int")).as("e6"))
       .withColumn("_p2",
-        VectorExpressions.idot(s, col("e6"), col("e6")))
+        VectorExpressions.idot(col("e6"), col("e6")))
       .localCheckpoint(false) // feeds the k argmax scans
     val seed = pts.orderBy(col("vec_id")).limit(1).collect()(0)
     def vecOf(r: org.apache.spark.sql.Row) =
@@ -1290,7 +1287,7 @@ object SimilarityOps {
     while (sel.size < k) {
       val mind = array_min(array(sel.map { case ((_, c, c2), _) =>
         col("_p2") + lit(c2) - lit(2L) *
-          VectorExpressions.idot(s, col("e6"), typedlit(c)) }: _*))
+          VectorExpressions.idot(col("e6"), typedlit(c)) }: _*))
       val far = pts.withColumn("_md", mind)
         .orderBy(col("_md").desc, col("vec_id")).limit(1).collect()(0)
       sel = sel :+ ((vecOf(far), Some(far.getLong(3))))

@@ -2250,7 +2250,7 @@ object StatsOps {
         when(col("pg_ppm") >= col("pb_ppm"), 1L).otherwise(-1L))
     // r15: native graft_ln_e9 replaces the interpreted step fold
     val withLn = ppm.withColumn("_ln9",
-      graft.functions.FixedPointExpressions.lnE9(s, col("_p"), col("_q")))
+      graft.functions.FixedPointExpressions.lnE9(col("_p"), col("_q")))
     withLn
       .select(col("bucket"), col("n_good"), col("n_bad"),
         col("pg_ppm"), col("pb_ppm"),
@@ -2534,7 +2534,7 @@ object StatsOps {
     // r15: native graft_ln_e9 replaces the interpreted step fold
     val withLn = top.join(broadcast(thr), "n_name")
       .withColumn("_l9", graft.functions.FixedPointExpressions
-        .lnE9(s, col("v_e3"), col("thr_e3")))
+        .lnE9(col("v_e3"), col("thr_e3")))
     withLn.groupBy(col("n_name"))
       .agg(max(col("n_top")).as("n_top"),
         max(col("thr_e3")).as("thr_e3"),
@@ -2770,7 +2770,7 @@ object StatsOps {
         when(col("_num") >= col("_den"), 1L).otherwise(-1L))
     // r15: native graft_ln_e9 replaces the interpreted step fold
     val withLn = ppm.withColumn("_l9",
-      graft.functions.FixedPointExpressions.lnE9(s, col("_p"), col("_q")))
+      graft.functions.FixedPointExpressions.lnE9(col("_p"), col("_q")))
     val mi = withLn.groupBy(col("pair"))
       .agg(max(col("n")).as("n_rows"),
         sum(col("pab") * col("_sgn") * col("_l9")).as("_mi"))
@@ -2787,7 +2787,7 @@ object StatsOps {
         .withColumn("_p", lit(1000000L)).withColumn("_q", col("_ppm"))
       // r15: native graft_ln_e9
       p.withColumn("_nl9", graft.functions.FixedPointExpressions
-          .lnE9(s, col("_p"), col("_q")))
+          .lnE9(col("_p"), col("_q")))
         .groupBy(col("pair"))
         .agg(expr("""CAST((2 * sum(_ppm * _nl9) + 1000000)
                      DIV (2 * 1000000) AS BIGINT)""").as(out))
@@ -2916,9 +2916,9 @@ object StatsOps {
     val withX = base
       .select(col("p_brand"),
         graft.functions.FixedPointExpressions
-          .lnE9(s, col("unit_e4"), lit(1L)).as("x"),
+          .lnE9(col("unit_e4"), lit(1L)).as("x"),
         graft.functions.FixedPointExpressions
-          .lnE9(s, col("qty"), lit(1L)).as("y"))
+          .lnE9(col("qty"), lit(1L)).as("y"))
     // per-row products in LONG via a hi/lo split: x = lnE9(unit_e4) ≤
     // ~2.1e10 and y = lnE9(qty ≤ 50) ≤ ~3.92e9, so x·y (≤ 8.2e19) and
     // x·x (≤ 4.4e20) overflow 2⁶³ directly — but with x = xh·10⁶ + xl

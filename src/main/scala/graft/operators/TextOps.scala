@@ -478,7 +478,7 @@ object TextOps {
         // codegen'd binary search per bigram — the HOF
         // size(filter(bg, x -> array_contains(hotbg, x))) runs
         // interpreted at O(|bg|·1000) comparisons per row
-        graft.functions.CountInSorted.countIn(s, col("bg"), col("hotbg"))
+        graft.functions.CountInSorted.countIn(col("bg"), col("hotbg"))
           .as("n_hot"))
       .withColumn("cov_ppt",
         when(col("n_bigrams") === 0, lit(0L))
@@ -862,7 +862,7 @@ object TextOps {
       .withColumn("_p", expr("2 * n_docs + 2"))
       .withColumn("_q", expr("2 * df + 1"))
       .withColumn("idf_e9", graft.functions.FixedPointExpressions
-        .lnE9(documents.sparkSession, col("_p"), col("_q")))
+        .lnE9(col("_p"), col("_q")))
     val contrib = withIdf
       .withColumn("_num", expr("88 * total_len * tf"))
       .withColumn("_den",
@@ -1376,8 +1376,7 @@ object TextOps {
     // r15: native graft_ln_e9 replaces the interpreted step fold (the
     // q272/q112 swap — same integer kernel, oracle unchanged)
     val withLn = pairRows.withColumn("_ln9",
-      graft.functions.FixedPointExpressions.lnE9(docs.sparkSession,
-        col("_p"), col("_q")))
+      graft.functions.FixedPointExpressions.lnE9(col("_p"), col("_q")))
     val shared = withLn.groupBy(col("src_a"), col("src_b"))
       .agg((count(lit(1)) / 2).cast("long").as("n_common"),
         sum(col("w") * col("_sgn") * col("_ln9")).as("_inner"),
@@ -1467,7 +1466,7 @@ object TextOps {
     // r15: native graft_exp_e9 replaces the interpreted step fold —
     // this is a per-ROW corpus scan, the q272 shape (VERDICT r14 #6)
     val withExp = f.withColumn("_a", graft.functions
-      .FixedPointExpressions.expE9(documents.sparkSession, col("_x")))
+      .FixedPointExpressions.expE9(col("_x")))
     withExp
       .withColumn("_pos", expr(
         """CAST((2 * 1000000000 * CAST(_a AS DECIMAL(38,0))
@@ -1510,7 +1509,7 @@ object TextOps {
         """LEAST(MAX(_z) OVER () - _z, 20000000000)"""))
     // r15: native graft_exp_e9 (bounded artifact — plan-size win)
     val withExp = z.withColumn("_a", graft.functions
-      .FixedPointExpressions.expE9(s, col("_x")))
+      .FixedPointExpressions.expE9(col("_x")))
     withExp
       // u = exp(−gap)·1e9 = round(1e18/a); a ≥ 1e9 so u ≤ 1e9
       .withColumn("_u", expr(
@@ -1536,7 +1535,7 @@ object TextOps {
     val ent = q246DocEntropy(s, d).withColumn("_x", col("xent_e9"))
     // r15: native graft_exp_e9 — per-DOC scan, the q272 shape
     val withExp = ent.withColumn("_a",
-      graft.functions.FixedPointExpressions.expE9(s, col("_x")))
+      graft.functions.FixedPointExpressions.expE9(col("_x")))
     withExp
       .withColumn("ppl_e3", expr(
         "CAST((2 * _a + 1000000) DIV (2 * 1000000) AS BIGINT)"))
@@ -1568,7 +1567,7 @@ object TextOps {
       .withColumn("_p", lit(1000000L))
     // r15: native graft_ln_e9 (vocab-scale — plan-size win)
     val lnTerm = termPpm.withColumn("_nl9",
-      graft.functions.FixedPointExpressions.lnE9(s, col("_p"), col("_q")))
+      graft.functions.FixedPointExpressions.lnE9(col("_p"), col("_q")))
       .select(col("term"), col("_nl9"))
     tf.join(broadcast(lnTerm), "term")
       .groupBy(col("doc_id"))
@@ -1618,7 +1617,7 @@ object TextOps {
     // vocab×class scale — the interpreted step folds tripled the plan)
     val priors = classes.crossJoin(broadcast(tot))
       .withColumn("_pl9", graft.functions.FixedPointExpressions
-        .lnE9(s, col("n_docs"), col("n_docs_c")))
+        .lnE9(col("n_docs"), col("n_docs_c")))
       .select(col("cls"), (-col("_pl9")).as("prior_e9"))
     val ct = train.groupBy(col("lang").as("cls"), col("term"))
       .agg(count(lit(1)).cast("long").as("tf_c"))
@@ -1630,11 +1629,11 @@ object TextOps {
     val lnp = ct.join(broadcast(nc), "cls")
       .crossJoin(broadcast(vocab))
       .withColumn("_l9", graft.functions.FixedPointExpressions
-        .lnE9(s, col("n_c") + col("v"), col("tf_c") + 1L))
+        .lnE9(col("n_c") + col("v"), col("tf_c") + 1L))
       .select(col("cls"), col("term"), (-col("_l9")).as("lnp_e9"))
     val unseen = nc.crossJoin(broadcast(vocab))
       .withColumn("_u9", graft.functions.FixedPointExpressions
-        .lnE9(s, col("n_c") + col("v"), lit(1L)))
+        .lnE9(col("n_c") + col("v"), lit(1L)))
       .select(col("cls"), (-col("_u9")).as("lnp0_e9"))
     val td = test.groupBy(col("doc_id"), col("lang").as("actual"),
         col("term"))
@@ -1737,9 +1736,9 @@ object TextOps {
     // win is the two collapsed step towers in the plan)
     val withY = top
       .withColumn("x", graft.functions.FixedPointExpressions
-        .lnE9(s, col("rank"), lit(1L)))
+        .lnE9(col("rank"), lit(1L)))
       .withColumn("y", graft.functions.FixedPointExpressions
-        .lnE9(s, col("freq"), lit(1L)))
+        .lnE9(col("freq"), lit(1L)))
       .select(col("source"), col("x"), col("y"))
     withY.groupBy(col("source"))
       .agg(count(lit(1)).cast("long").as("n_terms"),

@@ -166,7 +166,7 @@ object CorpusPipeline {
           .contamination(d.select("doc_id", "text"), b)
           .select("doc_id")
         val nearHits = DedupOps
-          .nearDupContamination(spark, d.select("doc_id", "text"), b,
+          .nearDupContamination(d.select("doc_id", "text"), b,
             cfg.contamJaccardPpt)
           .select(col("train_doc").as("doc_id"))
         d.join(exactHits.unionByName(nearHits).distinct(),

@@ -131,9 +131,9 @@ object AnnIndexStore {
     * partition-pruned to the probed cells; `corpus` supplies float
     * vectors for the query rows and the shortlist re-rank only.
     */
-  def search(spark: SparkSession, index: IvfPqIndex, corpus: DataFrame,
-      nProbe: Int, shortlist: Int = 64): DataFrame =
-    IvfPq.searchEncoded(spark, index.codes,
+  def search(index: IvfPqIndex, corpus: DataFrame, nProbe: Int,
+      shortlist: Int = 64): DataFrame =
+    IvfPq.searchEncoded(index.codes,
       corpus.select(col("vec_id"), col("embedding")),
       index.coarse, index.pq, index.dim, nProbe, shortlist)
 
@@ -152,6 +152,6 @@ object AnnIndexStore {
     val idx =
       if (exists(s, dir)) load(s, dir)
       else build(s, emb, dir)
-    search(s, idx, emb, nProbe = 8)
+    search(idx, emb, nProbe = 8)
   }
 }

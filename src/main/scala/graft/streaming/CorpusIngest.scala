@@ -38,7 +38,7 @@ object CorpusIngest {
           if (ParquetUpsertSink.exists(bs, tableDir))
             ParquetUpsertSink.read(bs, tableDir).select("doc_id", "text")
           else in.limit(0)
-        val admitted = DedupOps.incrementalDedup(bs, existing, in, threshold)
+        val admitted = DedupOps.incrementalDedup(existing, in, threshold)
         ParquetUpsertSink.insertNewOnly(bs, tableDir, admitted, Seq("doc_id"))
         ()
       }

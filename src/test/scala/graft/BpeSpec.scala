@@ -16,7 +16,7 @@ class BpeSpec extends AnyFunSuite with SparkTestBase {
       (4L, Seq("a", "b")),               // no match
       (5L, Seq.empty[String])).toDF("id", "syms")
     val got = df.select(col("id"),
-      PairMergeExpression.pairMerge(spark, col("syms"), "a", "a").as("m"))
+      PairMergeExpression.pairMerge(col("syms"), "a", "a").as("m"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(got(1L) == Seq("aa", "a"))
     assert(got(2L) == Seq("aa", "aa"))
@@ -72,7 +72,7 @@ class BpeSpec extends AnyFunSuite with SparkTestBase {
     val words = corpusWords()
     val wordMap = words.collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val got = BpeTrain.trainDistributed(spark, words, rounds = 8)
+    val got = BpeTrain.trainDistributed(words, rounds = 8)
     val want = localBpe(wordMap, rounds = 8)
     assert(got == want, s"\ngot:  $got\nwant: $want")
   }
@@ -98,7 +98,7 @@ class BpeSpec extends AnyFunSuite with SparkTestBase {
     val words = corpusWords()
     val local = BpeTrain.trainLocal(words.collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq, rounds = 12)
-    val dist = BpeTrain.trainDistributed(spark, words, rounds = 12)
+    val dist = BpeTrain.trainDistributed(words, rounds = 12)
     assert(local == dist, s"\nlocal: $local\ndist:  $dist")
   }
 
@@ -148,7 +148,7 @@ class BpeSpec extends AnyFunSuite with SparkTestBase {
     val merges = Seq(("ab", "c"), ("a", "b"))
     val got = Seq(Tuple1(Seq("abc"))).toDF("w")
       .select(graft.functions.BpeEncodeExpression
-        .bpeEncode(spark, col("w"), merges).as("e"))
+        .bpeEncode(col("w"), merges).as("e"))
       .first().getSeq[String](0)
     assert(got == Seq("abc"))
     assert(localEncode(merges, "abc") == List("abc"))
@@ -162,7 +162,7 @@ class BpeSpec extends AnyFunSuite with SparkTestBase {
       (4L, Seq("𝄞b", "aa"))) // U+1D11E is a surrogate pair in UTF-16
       .toDF("id", "w")
       .select(col("id"), graft.functions.BpeEncodeExpression
-        .bpeEncode(spark, col("w"), merges).as("e"))
+        .bpeEncode(col("w"), merges).as("e"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(got(1L) == Seq("aa", "aa"))
     assert(got(2L) == Seq("aa", "a"))

@@ -10,7 +10,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
 
   /** q30's md5 SimHash of a text column. */
   private def simhash(text: Column): Column =
-    graft.functions.Md5SimHashExpression.md5SimHash(spark,
+    graft.functions.Md5SimHashExpression.md5SimHash(
       split(lower(trim(text)), "\\s+"))
 
   test("exact dedup groups identical normalized text, keeps min doc_id") {
@@ -48,7 +48,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       "hex-nibble replay") {
     val corpus = DedupOps.corpusWithPlantedDups(spark, Sf)
     val nDocs = Tables.documents(spark, Sf).count()
-    val cands = DedupOps.simhashNearDup(spark, corpus,
+    val cands = DedupOps.simhashNearDup(corpus,
       maxHamming = 12, nRows = 2 * nDocs)
     val planted = cands.filter(col("doc_b") === col("doc_a") + 1000000L)
       .count()
@@ -59,7 +59,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     // corpus had 2^24 rows) — the pigeonhole guarantee (any pair
     // within Hamming bands-1 shares a band) must still hold, so every
     // ≤2-Hamming pair of the 4×16 run reappears
-    val wide = DedupOps.simhashNearDup(spark, corpus,
+    val wide = DedupOps.simhashNearDup(corpus,
       maxHamming = 12, nRows = 1L << 24)
     val widePairs = wide.select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -232,7 +232,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       (4000000L, "qq rr ss tt uu vv ww xx"),
       (4000001L, "qq rr ss tt uu vv ww xx")).toDF("doc_id", "text")
     val incoming = nearDups.unionByName(fresh).unionByName(dupPair)
-    val admitted = DedupOps.incrementalDedup(spark, existing, incoming)
+    val admitted = DedupOps.incrementalDedup(existing, incoming)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val freshIds = (0 until 20).map(i => 3000000L + i).toSet
     assert(admitted == freshIds + 4000000L,
@@ -249,7 +249,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     // persist the index — the artifact a production refresh reads
     // instead of ever re-reading corpus text
     ParquetUpsertSink.insertNewOnly(spark, idxDir,
-      DedupOps.signatureIndex(spark, existing), Seq("doc_id"))
+      DedupOps.signatureIndex(existing), Seq("doc_id"))
     val persisted = ParquetUpsertSink.read(spark, idxDir)
     // the persisted artifact's schema IS the cross-refresh contract —
     // compare names + SQL types (parquet widens the array element's
@@ -258,7 +258,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     def shape(df: org.apache.spark.sql.DataFrame) =
       df.schema.fields.map(f => (f.name, f.dataType.sql)).toSeq
     assert(shape(persisted) ==
-      shape(DedupOps.signatureIndex(spark, existing)),
+      shape(DedupOps.signatureIndex(existing)),
       s"schema drift through parquet: ${persisted.schema}")
 
     val nearDups = existing.filter(col("doc_id") % 10 === 0)
@@ -269,11 +269,11 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       .toDF("doc_id", "text")
     val incoming = nearDups.unionByName(fresh)
     val admitted =
-      DedupOps.incrementalDedupWithIndex(spark, persisted, incoming)
+      DedupOps.incrementalDedupWithIndex(persisted, incoming)
         .localCheckpoint(false)
     val admittedIds = admitted.select("doc_id")
       .collect().map(_.getLong(0)).toSet
-    val inMemIds = DedupOps.incrementalDedup(spark, existing, incoming)
+    val inMemIds = DedupOps.incrementalDedup(existing, incoming)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(admittedIds == inMemIds,
       s"persisted path diverged: ${admittedIds.diff(inMemIds)} / " +
@@ -282,14 +282,14 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
 
     // refresh contract: append the admitted docs' signature rows
     ParquetUpsertSink.insertNewOnly(spark, idxDir,
-      DedupOps.signatureIndex(spark, admitted), Seq("doc_id"))
+      DedupOps.signatureIndex(admitted), Seq("doc_id"))
 
     // second refresh: a copy of a batch-1 admission must now be
     // rejected by the updated index; a genuinely new doc is admitted
     val batch2 = Seq(
       (5000000L, "zz0 yy0 xx0 ww0 vv0 uu0 tt0 ss0"),
       (5000001L, "aa1 bb1 cc1 dd1 ee1 ff1 gg1 hh1")).toDF("doc_id", "text")
-    val admitted2 = DedupOps.incrementalDedupWithIndex(spark,
+    val admitted2 = DedupOps.incrementalDedupWithIndex(
         ParquetUpsertSink.read(spark, idxDir), batch2)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(admitted2 == Set(5000001L), s"got $admitted2")

@@ -203,7 +203,7 @@ class DifferentialSpec extends AnyFunSuite with SparkTestBase {
       val df = rows.toDF("id", "arr")
         .withColumn("hot", typedlit(hot))
       val native = graft.functions.CountInSorted
-        .countIn(spark, col("arr"), col("hot"))
+        .countIn(col("arr"), col("hot"))
       val hof = size(filter(col("arr"),
         x => array_contains(col("hot"), x))).cast("long")
       val diff = df.select(col("id"), native.as("a"), hof.as("b"))
@@ -392,7 +392,7 @@ class DifferentialSpec extends AnyFunSuite with SparkTestBase {
       }
       val df = rows.toDF("id", "a", "b", "t")
       val native = graft.functions.SortedIntersectAbove
-        .intersectAbove(spark, col("a"), col("b"), col("t"))
+        .intersectAbove(col("a"), col("b"), col("t"))
       val hof = filter(array_intersect(col("a"), col("b")),
         x => x > col("t"))
       val diff = df.select(col("id"), native.as("x"),

@@ -55,7 +55,7 @@ class FixedLnSpec extends AnyFunSuite with SparkTestBase {
       .map { case (a, b) => (math.max(a, b), math.min(a, b)) }
     val gotLn = grid.toDF("_p", "_q")
       .select(col("_p"), col("_q"), graft.functions.FixedPointExpressions
-        .lnE9(spark, col("_p"), col("_q")).as("out_e9"))
+        .lnE9(col("_p"), col("_q")).as("out_e9"))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
       .toMap
     grid.foreach { case (p, q) =>
@@ -65,7 +65,7 @@ class FixedLnSpec extends AnyFunSuite with SparkTestBase {
       .map(i => i * 41399999L % graft.functions.FixedExp.MaxX)
     val gotExp = xs.toDF("_x")
       .select(col("_x"), graft.functions.FixedPointExpressions
-        .expE9(spark, col("_x")).as("out_e9"))
+        .expE9(col("_x")).as("out_e9"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     xs.foreach { x =>
       assert(gotExp(x) == graft.functions.FixedExp.expE9(x),

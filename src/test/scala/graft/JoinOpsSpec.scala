@@ -114,8 +114,8 @@ class JoinOpsSpec extends AnyFunSuite with SparkTestBase {
       s"bloom predicate missing from plan:\n$plan")
     // the probe rows surviving the filter must be far fewer than the scan
     val kept = li.filter(graft.functions.BloomFilterExpression.mightContain(
-      spark, col("l_orderkey"),
-      sel.stat.bloomFilter("o_orderkey", 200, 0.01))).count()
+      col("l_orderkey"), sel.stat.bloomFilter("o_orderkey", 200, 0.01)))
+      .count()
     assert(kept < li.count() / 10, s"bloom kept $kept rows")
   }
 
@@ -137,7 +137,7 @@ class JoinOpsSpec extends AnyFunSuite with SparkTestBase {
   test("bloom predicate rejects a foldable NULL filter at analysis time") {
     // any mightContain call registers graft_bloom_might_contain for SQL use
     val bf = Seq(1L).toDF("x").stat.bloomFilter("x", 1, 0.01)
-    graft.functions.BloomFilterExpression.mightContain(spark, col("k"), bf)
+    graft.functions.BloomFilterExpression.mightContain(col("k"), bf)
     val ex = intercept[org.apache.spark.sql.AnalysisException] {
       Seq(1L).toDF("k").filter(org.apache.spark.sql.functions.expr(
         "graft_bloom_might_contain(k, CAST(NULL AS BINARY))")).collect()

@@ -359,7 +359,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     val merges = Seq(("a", "b"), ("ab", "c"))
     val df = Tables.documents(spark, Sf)
       .filter(org.apache.spark.sql.functions.col("text").isNotNull)
-      .select(graft.functions.BpeEncodeExpression.bpeEncode(spark,
+      .select(graft.functions.BpeEncodeExpression.bpeEncode(
         org.apache.spark.sql.functions.split(
           org.apache.spark.sql.functions.lower(
             org.apache.spark.sql.functions.col("text")), "\\s+"),

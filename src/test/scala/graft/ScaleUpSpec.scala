@@ -64,8 +64,8 @@ class ScaleUpSpec extends AnyFunSuite with SparkTestBase {
         col("embedding").as("e1"))
     val joined = n0.join(n1, "vec_id")
       .select(
-        graft.functions.VectorExpressions.cosine(spark,
-          col("embedding"), col("e1")).as("cs"))
+        graft.functions.VectorExpressions.cosine(col("embedding"), col("e1"))
+          .as("cs"))
       .agg(max(abs(col("cs")))).head().getDouble(0)
     assert(joined < 0.6, s"cross-copy |cos| max $joined")
   }

@@ -34,7 +34,7 @@ class SeqPatternsSpec extends AnyFunSuite with SparkTestBase {
   private def diff(arrs: org.apache.spark.sql.DataFrame): Long =
     arrs.select(col("arr"), array_distinct(col("arr")).as("d"))
       .select(
-        sort_array(graft.functions.SeqPatterns.patterns(spark, col("arr")))
+        sort_array(graft.functions.SeqPatterns.patterns(col("arr")))
           .as("native"),
         sort_array(hofPats(col("arr"), col("d"))).as("sql"))
       .filter(not(col("native") <=> col("sql")))

@@ -16,7 +16,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
       (2L, vec(1, 2), vec(2, 4)),
       (3L, vec(1, 0), vec(-1, 0))).toDF("id", "a", "b")
     val got = df.select(col("id"),
-      VectorExpressions.cosine(spark, col("a"), col("b")).as("c"))
+      VectorExpressions.cosine(col("a"), col("b")).as("c"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(math.abs(got(1L)) < 1e-12)
     assert(math.abs(got(2L) - 1.0) < 1e-12)
@@ -26,15 +26,15 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   test("native cosine: zero vector yields null") {
     val df = Seq((1L, vec(0, 0), vec(1, 1))).toDF("id", "a", "b")
     val r = df.select(
-      VectorExpressions.cosine(spark, col("a"), col("b")).as("c")).first()
+      VectorExpressions.cosine(col("a"), col("b")).as("c")).first()
     assert(r.isNullAt(0))
   }
 
   test("native norm and dot match manual math") {
     val df = Seq((1L, vec(3, 4))).toDF("id", "a")
     val r = df.select(
-      VectorExpressions.norm(spark, col("a")).as("n"),
-      VectorExpressions.dot(spark, col("a"), col("a")).as("d")).first()
+      VectorExpressions.norm(col("a")).as("n"),
+      VectorExpressions.dot(col("a"), col("a")).as("d")).first()
     assert(math.abs(r.getDouble(0) - 5.0) < 1e-12)
     assert(math.abs(r.getDouble(1) - 25.0) < 1e-12)
   }
@@ -142,7 +142,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     assert(AnnIndexStore.exists(spark, dir))
     // search-over-artifact ≡ the in-memory path (same kernel, same
     // deterministic training) — exact triple equality, not recall
-    val fromIdx = AnnIndexStore.search(spark, idx, emb, nProbe = 8)
+    val fromIdx = AnnIndexStore.search(idx, emb, nProbe = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val inMem = graft.operators.IvfPq.q121IvfPq(spark, Sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -179,7 +179,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   test("ANN-ladder swap: q186/q187 over IVF candidates reach the " +
       "promised ≥0.8 recall vs the exact brute-force path") {
     val emb = Tables.embeddings(spark, Sf)
-    val cand = SimilarityOps.ivfCandidateScores(spark, emb,
+    val cand = SimilarityOps.ivfCandidateScores(emb,
       nCells = 16, nProbe = 10)
     // q186: mutual-NN pair recall over the candidate stage
     val exactPairs = SimilarityOps.q186MutualNn(spark, Sf)
@@ -329,9 +329,9 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
       typedlit(cents.map(_._1).toSeq),
       array(cents.map(kc => typedlit(kc._2.map(_.toDouble).toSeq)): _*))
     val scored = graft.operators.IntKMeans
-      .assignCell(spark, base, "_e6", cents, "cell")
+      .assignCell(base, "_e6", cents, "cell")
       .withColumn("cos_r", round(
-        VectorExpressions.cosine(spark, col("embedding"),
+        VectorExpressions.cosine(col("embedding"),
           element_at(centMap, col("cell"))), 4))
       .select(col("cell"), col("vec_id"), col("cos_r"))
       .collect()

@@ -23,7 +23,7 @@ class WordShinglesSpec extends AnyFunSuite with SparkTestBase {
 
   private def diff(df: org.apache.spark.sql.DataFrame, k: Int): Long =
     df.select(
-        graft.functions.WordShingles.shingles(spark, col("text"), k)
+        graft.functions.WordShingles.shingles(col("text"), k)
           .as("native"),
         sqlShingles(k).as("sql"))
       .filter(not(col("native") <=> col("sql")))
