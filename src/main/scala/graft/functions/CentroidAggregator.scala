@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, TypedColumn}
+import org.apache.spark.sql.{Encoder, TypedColumn}
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Typed aggregator: element-wise mean of `array<float>` vectors — the

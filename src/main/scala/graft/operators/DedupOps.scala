@@ -46,14 +46,6 @@ object DedupOps {
   private val RowsPerBand = NumHashes / Bands
   private val ShingleSize = 3
 
-  /** Word-level shingles of `k` tokens, distinct, as strings. */
-  private def shingles(toks: Column, k: Int): Column =
-    array_distinct(
-      when(size(toks) >= k,
-        transform(sequence(lit(0), size(toks) - k),
-          i => concat_ws(" ", slice(toks, i + 1, lit(k)))))
-        .otherwise(array(concat_ws(" ", toks))))
-
   /** Native one-pass `shingles(tokens(normText), k)` with the SQL
     * spelling's NULL semantics: a null `text` yields the [""]
     * singleton (concat_ws skips the null token array), exactly like

@@ -121,12 +121,12 @@ object GraphOps {
     val edges = symEdges.localCheckpoint(false)
     // r14: below the driver edge gate the whole 15-round loop runs on
     // primitive arrays in memory (the q214/q126 rule) — one collect
-    // job instead of one job per round. Long node ids only (q139's
-    // word graph ranks strings and stays on the bc-mode rounds).
+    // job instead of one job per round (q139's word graph included:
+    // string ids are interned from the same collect).
     val slim = edges.select(col("src"), col("dst"))
     driverEdgeCount(edges, slim) match {
       case Some(nE) => return pageRankDriver(edges.sparkSession,
-        new CollectedEdges(slim, nE, weighted = false), iters, total)
+        CollectedEdges(slim, nE), iters, total)
       case None =>
     }
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
@@ -141,103 +141,15 @@ object GraphOps {
     // once instead, so each round's join still leaves the big side
     // exchange-free and only the rank vector shuffles.
     val bc = n <= maxBroadcastNodes(symEdges)
-    if (bc) {
-      // ONE single-stage Spark job per round (r12, the scheduling-
-      // floor fix): the rank vector is node-scale and crossed the
-      // driver every round anyway (that is what a broadcast IS), so
-      // the round state lives driver-side and each round is one
-      // mapPartitions pass over the persisted edge RDD
-      // ([[DriverStateRounds]]). Replaces ~2.5 jobs/round (AQE stage
-      // job + broadcast collect + checkpoint materialize) with exactly
-      // 1 job / 1 stage / |edge partitions| tasks, no shuffle, and
-      // CONSTANT lineage — measured q105 7.8 → 5.0 s steady at sf0.1,
-      // and the per-round job count is what driver-condition
-      // contention amplifies. Output is bit-identical: truncating long
-      // division per edge, order-free integer adds. The non-bc
-      // bucketed path past the gate is unchanged (prRound).
-      val dsr = new DriverStateRounds(edges.join(broadcast(deg), "src"))
-      var ranks = new java.util.HashMap[Any, java.lang.Long]()
-      deg.select(col("src")).collect()
-        .foreach(r => ranks.put(r.get(0), java.lang.Long.valueOf(init)))
-      for (_ <- 0 until iters) {
-        val cs = dsr.contributions(ranks)
-        val upd = new java.util.HashMap[Any, java.lang.Long]()
-        cs.forEach((node, c) =>
-          upd.put(node, java.lang.Long.valueOf(
-            base + (85L * c.longValue) / 100L)))
-        ranks = upd
-      }
-      val out = dsr.toDf(ranks)
-      dsr.unpersist()
-      out
-    } else withBucketedEdges(edges.join(deg, "src")) { withDeg =>
+    def loop(withDeg: DataFrame): DataFrame = {
       var ranks = deg.select(col("src").as("node"), lit(init).as("r"))
       for (_ <- 0 until iters)
-        ranks = prRound(withDeg, ranks, base, bc = false)
-          .localCheckpoint(false)
+        ranks = prRound(withDeg, ranks, base, bc).localCheckpoint(false)
       ranks
     }
-  }
-
-  /** Driver-state iterative machinery shared by the bc-mode
-    * pageRank / personalizedPageRank rounds (r12, the scheduling-floor
-    * fix): persists the `(src, dst, od)` edge RDD once; per round, ONE
-    * single-stage job computes per-partition contribution sums
-    * `rank(src) div od → dst` against a broadcast rank map (genuine
-    * per-partition imperative logic — the documented RDD exception),
-    * and the node-scale partials merge on the driver (the same memory
-    * class as the broadcast itself; this path only runs under the
-    * maxBroadcastNodes gate). Node keys keep their ORIGINAL type (the
-    * q139 word graph ranks strings). Rows whose src is absent from the
-    * map contribute nothing — the PPR sparse-vector contract;
-    * full-vector callers cover every src. Integer adds are order-free,
-    * so results are bit-identical to the relational spelling.
-    */
-  private final class DriverStateRounds(edgesWithDeg: DataFrame) {
-    private val spark = edgesWithDeg.sparkSession
-    private val nodeType = edgesWithDeg.schema("src").dataType
-    private val rdd = edgesWithDeg
-      .select(col("src"), col("dst"), col("od")).rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    /** Merged contribution sums for one round. */
-    def contributions(ranks: java.util.HashMap[Any, java.lang.Long])
-        : java.util.HashMap[Any, java.lang.Long] = {
-      val bcv = spark.sparkContext.broadcast(ranks)
-      val partials = rdd.mapPartitions { it =>
-        val m = new java.util.HashMap[Any, java.lang.Long]()
-        val rv = bcv.value
-        it.foreach { row =>
-          val r = rv.get(row.get(0))
-          if (r ne null) {
-            val c = r.longValue / row.getLong(2)
-            val prev = m.get(row.get(1))
-            m.put(row.get(1), java.lang.Long.valueOf(
-              if (prev eq null) c else prev.longValue + c))
-          }
-        }
-        import scala.jdk.CollectionConverters._
-        m.entrySet().iterator().asScala
-          .map(e => (e.getKey, e.getValue.longValue))
-      }.collect()
-      bcv.unpersist(false)
-      val merged = new java.util.HashMap[Any, java.lang.Long]()
-      partials.foreach { case (k, v) =>
-        val prev = merged.get(k)
-        merged.put(k, java.lang.Long.valueOf(
-          if (prev eq null) v else prev.longValue + v))
-      }
-      merged
-    }
-
-    /** The node-scale rank map as a LocalRelation `(node, r)`. */
-    def toDf(ranks: java.util.HashMap[Any, java.lang.Long]): DataFrame = {
-      val nodes = ranks.keySet.toArray
-      rowsDf(spark, nodes.length, "node" -> nodeType, "r" -> LongType)(ix =>
-        Row(nodes(ix), ranks.get(nodes(ix)).longValue))
-    }
-
-    def unpersist(): Unit = { rdd.unpersist(false); () }
+    val withDeg = edges.join(nodeSide(deg, bc), "src")
+    if (bc) loop(withDeg.localCheckpoint(false))
+    else withBucketedEdges(withDeg)(loop)
   }
 
   /** Edge gate for the in-memory driver kernels (the q214/q126/q61
@@ -250,14 +162,18 @@ object GraphOps {
   private def driverMaxEdges(s: SparkSession): Long =
     Gates.driver(s, Gates.DriverEdges)
 
-  /** `edges`' row count when the driver edge gate passes: every frame in
-    * `ids` has long ids and the count is within [[driverMaxEdges]]. No
-    * count job runs while the gate is closed.
+  /** `edges`' row count when the driver edge gate passes: every column
+    * of every frame in `ids` is long, or every one is a string (which
+    * [[CollectedEdges.apply]] interns: JVM equality is SQL equality),
+    * and the count is within [[driverMaxEdges]]. No count job runs
+    * while the gate is closed.
     */
   private def driverEdgeCount(edges: DataFrame, ids: DataFrame*)
       : Option[Int] = {
     val max = driverMaxEdges(edges.sparkSession)
-    if (max <= 0 || !ids.forall(allLongIds)) None
+    val types = ids.flatMap(_.schema.fields.map(_.dataType)).distinct
+    if (max <= 0 || (types != Seq(LongType) && types != Seq(StringType)))
+      None
     else Some(edges.count()).filter(_ <= max).map(_.toInt)
   }
 
@@ -455,16 +371,17 @@ object GraphOps {
       StructType(fields.map { case (name, t) => StructField(name, t) }))
   }
 
-  /** `(node, <name>)` long rows of the dense nodes ix < nN with
-    * `keep(ix)`: id(ix) and values(ix).
+  /** `(node, <name>)` rows of the dense nodes ix < nN with `keep(ix)`:
+    * id(ix), of type `idType`, and the long values(ix).
     */
-  private def nodeValuesDf(spark: SparkSession, nN: Int, id: Int => Long,
-      name: String, values: Array[Long])(keep: Int => Boolean): DataFrame = {
+  private def nodeValuesDf(spark: SparkSession, nN: Int, id: Int => Any,
+      idType: DataType, name: String, values: Array[Long])
+      (keep: Int => Boolean): DataFrame = {
     val kept = new Array[Int](nN)
     var n = 0
     var i = 0
     while (i < nN) { if (keep(i)) { kept(n) = i; n += 1 }; i += 1 }
-    rowsDf(spark, n, "node" -> LongType, name -> LongType)(k =>
+    rowsDf(spark, n, "node" -> idType, name -> LongType)(k =>
       Row(id(kept(k)), values(kept(k))))
   }
 
@@ -547,17 +464,25 @@ object GraphOps {
       Iterator.single(java.util.Arrays.copyOf(buf, o))
     }.collect()
 
-  /** Collected slim long-id edge list for the driver kernels: dense
-    * node index + parallel primitive edge arrays, filled by
-    * [[packedLongs]]. `weighted` additionally captures a long weight
-    * column at row position 2. Seeds may be interned AFTER the fill (a
-    * seed without edges still indexes); size per-node arrays by [[nN]]
-    * only after all interning is done.
+  /** Collected slim edge list for the driver kernels: dense node index
+    * + parallel primitive edge arrays, filled by [[packedLongs]] for
+    * long ids. `weighted` additionally captures a long weight column
+    * at row position 2. Seeds may be interned AFTER the fill (a seed
+    * without edges still indexes); size per-node arrays by [[nN]] only
+    * after all interning is done. `nodeType` is the edge table's node
+    * type; string ids (see [[CollectedEdges.apply]]) are interned
+    * by [[ixOf]], and [[id]]/[[idOf]] are for long ids only.
     */
-  private final class CollectedEdges private (nE: Int, weighted: Boolean) {
+  private final class CollectedEdges private (nE: Int, weighted: Boolean,
+      val nodeType: DataType = LongType) {
     private val nodes = new LongIds
     val ss = new Array[Int](nE); val ds = new Array[Int](nE)
     val ws: Array[Long] = if (weighted) new Array[Long](nE) else null
+    /** String node keys by dense index, and the index of each. */
+    private val keys =
+      if (nodeType == LongType) null else new java.util.ArrayList[Any]()
+    private val keyIx =
+      if (keys eq null) null else new java.util.HashMap[Any, Integer]()
     def idOf(x: Long): Int = nodes(x)
     def this(edges: DataFrame, nE: Int, weighted: Boolean) = {
       this(nE, weighted)
@@ -573,8 +498,18 @@ object GraphOps {
       }
       require(i == nE, s"CollectedEdges: edge count drifted ($i vs $nE)")
     }
-    def nN: Int = nodes.size
+    def nN: Int = if (keys eq null) nodes.size else keys.size
     def id(ix: Int): Long = nodes.id(ix)
+    /** Node ix's id as the edge table holds it. */
+    def key(ix: Int): Any = if (keys eq null) id(ix) else keys.get(ix)
+    /** The dense index of id `k` (interned if new), any node type. */
+    def ixOf(k: Any): Int =
+      if (keys eq null) idOf(k.asInstanceOf[Long])
+      else {
+        val got = keyIx.get(k)
+        if (got != null) got.intValue
+        else { keyIx.put(k, keys.size); keys.add(k); keys.size - 1 }
+      }
     /** Out-degree (edge rows by src) per dense node. */
     def srcDegrees(): Array[Long] = {
       val deg = new Array[Long](nN)
@@ -585,6 +520,26 @@ object GraphOps {
   }
 
   private object CollectedEdges {
+    /** `edges` (src, dst) collected: long ids by the [[packedLongs]]
+      * fill, string ids (q139's words) by ONE collect of the rows, each
+      * id interned in first-seen order.
+      */
+    def apply(edges: DataFrame, nE: Int): CollectedEdges =
+      if (allLongIds(edges)) new CollectedEdges(edges, nE, weighted = false)
+      else {
+        val g = new CollectedEdges(nE, weighted = false,
+          edges.schema("src").dataType)
+        val rows = edges.collect()
+        require(rows.length == nE,
+          s"CollectedEdges: edge count drifted (${rows.length} vs $nE)")
+        var i = 0
+        while (i < nE) {
+          g.ss(i) = g.ixOf(rows(i).get(0)); g.ds(i) = g.ixOf(rows(i).get(1))
+          i += 1
+        }
+        g
+      }
+
     /** A CollectedEdges over ALREADY-COLLECTED undirected pairs (dense
       * indices + id table, the [[collectBasketPairs]] output): emits
       * both orientations so the kernels see exactly the symmetric
@@ -806,11 +761,11 @@ object GraphOps {
   }
 
   /** In-memory PageRank rounds — the below-gate path of [[pageRank]].
-    * Bit-identical to the bc-mode [[DriverStateRounds]] spelling: the
-    * same truncating long division per edge, order-free integer adds,
-    * and the same presence semantics (round k's rank keys are exactly
-    * the dsts reachable from round k−1's keys — on the documented
-    * symmetric input that is every node from round 0 on).
+    * Bit-identical to the relational [[prRound]] loop past the gate:
+    * the same truncating long division per edge, order-free integer
+    * adds, and the same presence semantics (round k's rank keys are
+    * exactly the dsts reachable from round k−1's keys — on the
+    * documented symmetric input that is every node from round 0 on).
     */
   private def pageRankDriver(spark: SparkSession, g: CollectedEdges,
       iters: Int, total: Long): DataFrame = {
@@ -847,12 +802,12 @@ object GraphOps {
       }
       r = nxt; present = touched
     }
-    nodeValuesDf(spark, nN, g.id, "r", r)(present(_))
+    nodeValuesDf(spark, nN, g.key, g.nodeType, "r", r)(present(_))
   }
 
   /** In-memory personalized-PageRank rounds — the below-gate path of
-    * [[personalizedPageRank]]; same presence semantics as the bc-mode
-    * HashMap spelling (teleport unioned AFTER the contribution pass,
+    * [[personalizedPageRank]]; same presence semantics as its
+    * relational loop (teleport unioned AFTER the contribution pass,
     * so every seed is present every round).
     */
   private def pprDriver(spark: SparkSession, g: CollectedEdges,
@@ -887,7 +842,7 @@ object GraphOps {
       seedIx.foreach { sIx => nxt(sIx) += sb; touched(sIx) = true }
       r = nxt; present = touched
     }
-    nodeValuesDf(spark, nN, g.id, "r", r)(present(_))
+    nodeValuesDf(spark, nN, g.key, g.nodeType, "r", r)(present(_))
   }
 
   /** In-memory synchronized k-core peel — the below-gate path of
@@ -924,7 +879,7 @@ object GraphOps {
         round += 1
       }
     }
-    nodeValuesDf(spark, nN, g.id, "core_deg", deg)(deg(_) >= 1)
+    nodeValuesDf(spark, nN, g.key, g.nodeType, "core_deg", deg)(deg(_) >= 1)
   }
 
   /** In-memory frontier BFS — the below-gate path of [[bfsHops]]: a
@@ -960,7 +915,7 @@ object GraphOps {
       }
       frontier = next; fN = nN2
     }
-    nodeValuesDf(spark, nN, g.id, "hops", hops)(hops(_) >= 0)
+    nodeValuesDf(spark, nN, g.key, g.nodeType, "hops", hops)(hops(_) >= 0)
   }
 
   /** In-memory hop-bounded Bellman–Ford — the below-gate path of
@@ -1002,16 +957,18 @@ object GraphOps {
       }
       frontier = nf
     }
-    nodeValuesDf(spark, nN, g.id, "dist", dist)(has(_))
+    nodeValuesDf(spark, nN, g.key, g.nodeType, "dist", dist)(has(_))
   }
 
   /** One PageRank round over a `(src, dst, od)` edge table and a
     * `(node, r)` rank vector — split out so plan audits can pin both
     * gate modes (broadcast vs bucketed) without the checkpoint hiding
     * the join shape. The only full-width exchange per round is the
-    * map-side-combined contribution sum (≤ |nodes| rows). Bucketed-
-    * fallback rounds run this; bc-mode rounds use [[DriverStateRounds]]
-    * (bit-identical — the suite's gate test pins the equivalence).
+    * map-side-combined contribution sum (≤ |nodes| rows). Every
+    * pageRank round past the driver edge gate is this one, and every
+    * personalizedPageRank round is this one with `base` 0 plus the
+    * seed teleport (bit-identical to the driver kernels — the suite's
+    * gate test pins the equivalence in all three gate modes).
     */
   private[graft] def prRound(withDeg: DataFrame, ranks: DataFrame,
       base: Long, bc: Boolean): DataFrame =
@@ -1140,7 +1097,8 @@ object GraphOps {
     collectBasketPairs(s, d, driverMaxEdges(s) / 2)
       .map { bp =>
         val (tri, _) = driverTriangles(bp.us, bp.vs, bp.ids.length)
-        nodeValuesDf(s, bp.ids.length, bp.ids(_), "n_tri", tri)(tri(_) > 0)
+        nodeValuesDf(s, bp.ids.length, bp.ids(_), LongType, "n_tri", tri)(
+          tri(_) > 0)
       }
       .getOrElse(triangleCounts(coPurchaseRawPairs(s, d)))
       .select(col("node").as("partkey"), col("n_tri"))
@@ -1174,7 +1132,7 @@ object GraphOps {
     val slim = cur.select(col("src"), col("dst"))
     driverEdgeCount(cur, slim) match {
       case Some(nE) => return kCoreDriver(cur.sparkSession,
-        new CollectedEdges(slim, nE, weighted = false), k, peels)
+        CollectedEdges(slim, nE), k, peels)
       case None =>
     }
     var prevNodes = -1L
@@ -1241,8 +1199,8 @@ object GraphOps {
     val seedTab = seeds.select(col("node")).distinct()
     driverEdgeCount(edges, slim, seedTab) match {
       case Some(nE) =>
-        val g = new CollectedEdges(slim, nE, weighted = false)
-        val seedIx = seedTab.collect().map(r => g.idOf(r.getLong(0)))
+        val g = CollectedEdges(slim, nE)
+        val seedIx = seedTab.collect().map(r => g.ixOf(r.get(0)))
         return bfsDriver(spark, g, seedIx, maxHops)
       case None =>
     }
@@ -1336,8 +1294,9 @@ object GraphOps {
     * teleport even in a round where nothing flows back to it — the
     * oracle replays the identical union.
     *
-    * Per round: edge table ⋈ node-scale rank vector (edges never
-    * shuffle — the q105 rule), one map-side-combined sum, lineage cut.
+    * Per round: [[prRound]] with no uniform teleport (edge table ⋈
+    * node-scale rank vector, edges never shuffle — the q105 rule), the
+    * seed teleport unioned in, one node-scale sum, lineage cut.
     * 100-TB: same shape and same `maxBroadcastNodes` gate as q105 —
     * past it the edge table pre-partitions on src once and the rank
     * vector shuffles to meet it.
@@ -1355,61 +1314,32 @@ object GraphOps {
     val sb = (15L * init) / 100L
     // r14: same driver-kernel gate as [[pageRank]] (bit-identical —
     // order-free integer adds, the teleport union applied after the
-    // contribution pass exactly as the HashMap spelling does)
+    // contribution pass exactly as the relational loop does)
     val slim = edges.select(col("src"), col("dst"))
     driverEdgeCount(edges, slim, seedTab.select(col("node"))) match {
       case Some(nE) =>
-        val g = new CollectedEdges(slim, nE, weighted = false)
-        val seedIx = seedTab.collect().map(r => g.idOf(r.getLong(0)))
+        val g = CollectedEdges(slim, nE)
+        val seedIx = seedTab.collect().map(r => g.ixOf(r.get(0)))
         return pprDriver(edges.sparkSession, g, seedIx, iters, total)
       case None =>
     }
-    val seedBase = seedTab.select(col("node"), lit(sb).as("v"))
+    // teleport union: a seed keeps its teleport even when nothing
+    // flows back to it this round (the oracle replays this union)
+    val seedBase = seedTab.select(col("node"), lit(sb).as("r"))
     // the rank vector grows toward the reached-set scale, bounded by
     // |nodes| — gate on the graph's node count like pageRank
     val bc = deg.count() <= maxBroadcastNodes(symEdges)
-    if (bc) {
-      // driver-state rounds (the q105 r12 scheduling-floor fix): one
-      // single-stage job per round over the persisted edge RDD
-      // ([[DriverStateRounds]] — absent srcs contribute nothing, the
-      // sparse-vector contract), teleport added driver-side —
-      // bit-identical to the relational spelling (order-free integer
-      // adds, same truncating divisions).
-      val dsr = new DriverStateRounds(edges.join(broadcast(deg), "src"))
-      val seedIds: Array[Any] = seedTab.collect().map(_.get(0))
-      var ranks = new java.util.HashMap[Any, java.lang.Long]()
-      seedIds.foreach(sd => ranks.put(sd, java.lang.Long.valueOf(init)))
-      for (_ <- 0 until iters) {
-        val cs = dsr.contributions(ranks)
-        val upd = new java.util.HashMap[Any, java.lang.Long]()
-        cs.forEach((node, c) =>
-          upd.put(node, java.lang.Long.valueOf((85L * c.longValue) / 100L)))
-        // teleport union: a seed keeps its teleport even when nothing
-        // flows back to it this round (the oracle replays this union)
-        seedIds.foreach { sd =>
-          val prev = upd.get(sd)
-          upd.put(sd, java.lang.Long.valueOf(
-            if (prev eq null) sb else prev.longValue + sb))
-        }
-        ranks = upd
-      }
-      val out = dsr.toDf(ranks)
-      dsr.unpersist()
-      out
-    } else withBucketedEdges(edges.join(deg, "src")) { withDeg =>
+    def loop(withDeg: DataFrame): DataFrame = {
       var ranks = seedTab.select(col("node"), lit(init).as("r"))
-      for (_ <- 0 until iters) {
-        val contrib = withDeg
-          .join(nodeSide(ranks, bc = false), col("src") === col("node"))
-          .select(col("dst"), expr("r div od").as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("cs"))
-          .select(col("dst").as("node"), expr("(85 * cs) div 100").as("v"))
-        ranks = contrib.unionByName(seedBase)
-          .groupBy(col("node")).agg(sum(col("v")).as("r"))
+      for (_ <- 0 until iters)
+        ranks = prRound(withDeg, ranks, 0L, bc).unionByName(seedBase)
+          .groupBy(col("node")).agg(sum(col("r")).as("r"))
           .localCheckpoint(false)
-      }
       ranks
     }
+    val withDeg = edges.join(nodeSide(deg, bc), "src")
+    if (bc) loop(withDeg.localCheckpoint(false))
+    else withBucketedEdges(withDeg)(loop)
   }
 
   /** 131. Seeded relevance over the co-purchase graph: personalized
@@ -1574,8 +1504,9 @@ object GraphOps {
     // neighbor label, smallest label on ties, computed from the
     // PREVIOUS round's labels for every node at once) is a pure
     // function of the graph, spelled identically here and in
-    // [[lpRound]]'s count+TopK form.
-    driverEdgeCount(edges0, edges0) match {
+    // [[lpRound]]'s count+TopK form. Labels are the ids themselves,
+    // compared by value, so the kernel takes long ids only.
+    if (allLongIds(edges0)) driverEdgeCount(edges0, edges0) match {
       case Some(nE) => return driverLpa(symEdges.sparkSession,
         new CollectedEdges(edges0, nE, weighted = false), rounds)
       case None =>
@@ -1601,7 +1532,8 @@ object GraphOps {
     */
   private def driverLpa(spark: SparkSession, g: CollectedEdges,
       rounds: Int): DataFrame =
-    nodeValuesDf(spark, g.nN, g.id, "lbl", lpaLabels(g, rounds))(_ => true)
+    nodeValuesDf(spark, g.nN, g.id, LongType, "lbl", lpaLabels(g, rounds))(
+      _ => true)
 
   /** The LPA kernel: every dense node's label after `rounds`
     * synchronous rounds. CSR by dst; each round sorts every node's
@@ -2212,7 +2144,8 @@ object GraphOps {
     // addExact fails loud exactly like the relational ANSI add).
     val slim = edges.select(col("src"), col("dst"), col("w"))
     val seedTab = seeds.select(col("node")).distinct()
-    driverEdgeCount(edges, slim, seedTab) match {
+    // (the weight rides in the packed long fill: long ids only)
+    if (allLongIds(slim)) driverEdgeCount(edges, slim, seedTab) match {
       case Some(nE) =>
         val g = new CollectedEdges(slim, nE, weighted = true)
         val seedIx = seedTab.collect().map(r => g.idOf(r.getLong(0)))
@@ -2541,8 +2474,8 @@ object GraphOps {
   def kTruss(symEdges: DataFrame, k: Int, rounds: Int = 64): DataFrame = {
     // The peel cascade's state is edge-scale and already crosses the
     // driver inside every per-round broadcast — so below the driver
-    // gate the WHOLE decomposition runs driver-side (the q266/q105
-    // DriverStateRounds rule): one collected slim edge list, oriented
+    // gate the WHOLE decomposition runs driver-side (the q105/q266
+    // driver-kernel rule): one collected slim edge list, oriented
     // O(αE) triangle counting and the exact queue-driven peel on
     // primitive CSR arrays (r13: the relational loop paid a ~1.5–3 s
     // scheduling floor per cascade round for drops of 268, 9 and 1
@@ -3085,9 +3018,10 @@ object GraphOps {
     // checkpoint/aggregate floor on a pruned graph that is node-scale
     // by construction. Bit-identical: every step is exact integer and
     // deterministic (min-label components, min border cluster); the
-    // conf-gated suite differential pins driver ≡ relational.
+    // conf-gated suite differential pins driver ≡ relational. Cluster
+    // ids are min node ids, so the kernel takes long ids only.
     val slim = e.select(col("src"), col("dst"))
-    driverEdgeCount(e, slim) match {
+    if (allLongIds(slim)) driverEdgeCount(e, slim) match {
       case Some(nE) => return scanDriver(e.sparkSession,
         new CollectedEdges(slim, nE, weighted = false))
       case None =>

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Tables
 import graft.functions.VectorExpressions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._

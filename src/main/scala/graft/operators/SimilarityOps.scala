@@ -1164,7 +1164,7 @@ object SimilarityOps {
       .limit(k).collect()
       .map(_.getSeq[Int](1).map(_.toLong).toArray).zipWithIndex
       .map { case (c, i) => (i, c) }
-    def d2(cid: Int, c: Array[Long]): Column = {
+    def d2(c: Array[Long]): Column = {
       val cl = typedlit(c.map(_.toInt).toSeq)
       val c2 = c.map(v => v * v).sum
       VectorExpressions.idot(col("e6"), col("e6")) +
@@ -1172,7 +1172,7 @@ object SimilarityOps {
     }
     def assigned: DataFrame = {
       val best = array_min(array(cents.map { case (cid, c) =>
-        struct(d2(cid, c).as("d2"), lit(cid).as("cid")) }: _*))
+        struct(d2(c).as("d2"), lit(cid).as("cid")) }: _*))
       pts.select(col("vec_id"), col("e6"),
         best.getField("cid").as("cid"), best.getField("d2").as("d2"))
     }
@@ -1591,36 +1591,10 @@ object SimilarityOps {
         "merged_size")
   }
 
-  /** q266: RANK-1 ALS latent-factor model over the (customer, brand)
-    * spend matrix (alternating least squares — Koren, Bell & Volinsky
-    * IEEE Computer 2009; rank 1 is the dominant-singular-vector core
-    * of every recommender embedding): 8 alternating rounds of
-    * u_c = Σ r·v / Σ v², v_b = Σ r·u / Σ u² over OBSERVED cells only,
-    * reported as the bounded brand-factor table — "which brands load
-    * on the main taste axis" (the model-based complement of q125's
-    * co-purchase similarity and q71/q248's mixing weights).
-    *
-    * ENGINE-EXACT: the alternation is a fixed integer recursion —
-    * ratings in exact e2 cents, factors in e6 fixed point, every
-    * update one round-half-up division of DECIMAL(38,0) sums
-    * (1e12-rescaled numerators keep the e6 scale), factors clamped at
-    * 1e15 (documented; never binds on this data). The oracle unrolls
-    * the 8 rounds as MATERIALIZED CTE pairs (the q263 rule).
-    *
-    * Scale shape: the corpus scan happens ONCE (cell aggregate,
-    * checkpointed, then persisted as the half-round RDD); each
-    * half-round is ONE single-stage job of per-partition BigInt
-    * partial sums against the other side's broadcast factor map
-    * (r12 driver-state rounds, the q105 scheduling-floor fix —
-    * 16 jobs total, no shuffles, constant lineage; steady 4.4 → 3.5 s
-    * at sf0.1). Factor maps are brand-scale (v) and customer-scale (u
-    * — the same scale the former relational spelling's AQE-broadcast u
-    * join shipped to every executor).
-    */
   /** The 8 ALS alternations over in-memory cells — shared by the
     * collected-cells path and the r15 driver-join fast path (factored
     * so the two can never diverge). Bit-identical order-free BigInt
-    * sums; see the caller's scaladoc.
+    * sums; see [[q266AlsRank1]].
     */
   private def alsRank1Loop(bs: Array[Int], cs: Array[Long],
       rs: Array[Long], nB: Int, E12: BigInt, Cap: BigInt): Array[Long] = {
@@ -1790,6 +1764,32 @@ object SimilarityOps {
       .select(col("brand"), col("n_raters"), col("v_e6"),
         col("brand_rank"))
 
+  /** q266: RANK-1 ALS latent-factor model over the (customer, brand)
+    * spend matrix (alternating least squares — Koren, Bell & Volinsky
+    * IEEE Computer 2009; rank 1 is the dominant-singular-vector core
+    * of every recommender embedding): 8 alternating rounds of
+    * u_c = Σ r·v / Σ v², v_b = Σ r·u / Σ u² over OBSERVED cells only,
+    * reported as the bounded brand-factor table — "which brands load
+    * on the main taste axis" (the model-based complement of q125's
+    * co-purchase similarity and q71/q248's mixing weights).
+    *
+    * ENGINE-EXACT: the alternation is a fixed integer recursion —
+    * ratings in exact e2 cents, factors in e6 fixed point, every
+    * update one round-half-up division of DECIMAL(38,0) sums
+    * (1e12-rescaled numerators keep the e6 scale), factors clamped at
+    * 1e15 (documented; never binds on this data). The oracle unrolls
+    * the 8 rounds as MATERIALIZED CTE pairs (the q263 rule).
+    *
+    * Scale shape: two paths. Below [[Gates.AlsCells]] the cells are
+    * collected once and all 8 alternations run in memory
+    * ([[alsRank1Loop]]). Past it the corpus scan still happens ONCE
+    * (cell aggregate, checkpointed), and each half-round is one
+    * map-combined groupBy of the cells joined with the OTHER side's
+    * factor table — brands broadcast, customers joined unhinted (user
+    * factors outgrow a broadcast at corpus scale, brand factors never
+    * do) — checkpointed per half-round. No per-partition partial map
+    * ever crosses the driver.
+    */
   def q266AlsRank1(s: SparkSession, d: String): DataFrame = {
     // r15: driver-join fast path (see [[alsCellsDriver]]) — the
     // distributed orders⋈lineitem⋈part + groupBy + checkpoint +
@@ -1806,73 +1806,29 @@ object SimilarityOps {
     // driver gate ALL 8 alternations run over ONE collected cell array
     // (BigInt sums are order-free, so per-partition partials merged on
     // the driver and a flat in-memory sum are the same integers),
-    // killing the 16 half-round jobs + 16 broadcasts. The rdd
-    // half-round path below stays as the >gate scale shape.
+    // killing the per-half-round jobs. The relational alternation
+    // below is the >gate scale shape.
     val maxCells = Gates.driver(s, Gates.AlsCells)
     if (maxCells > 0 && cells.count() <= maxCells)
       return alsRank1Collected(s, cells)
-    // driver-state half-rounds (r12, the q105 scheduling-floor fix):
-    // the factor vectors are brand-scale (v, ~25 entries) and
-    // customer-scale (u — the same scale the relational spelling's
-    // AQE-broadcast u join shipped), so both live driver-side and each
-    // half-round is ONE single-stage job of per-partition BigInt
-    // partial sums over the persisted (cust, brand, r) cells RDD — 16
-    // jobs for 8 alternations instead of ~2.5 jobs per HALF-round, no
-    // shuffles, constant lineage. Arithmetic is the identical
-    // round-half-up/LEAST-clamp BigInt tree the DECIMAL(38,0)
-    // aggregates computed (order-free integer adds) — the oracle is
-    // unchanged and stays green.
-    import s.implicits._
-    val E12 = BigInt(1000000000000L)
-    val Cap = BigInt(1000000000000000L)
-    val cellsRdd = cells.as[(Long, String, Long)].rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def half[K](partials: Array[(K, (BigInt, BigInt))])
-        : scala.collection.mutable.HashMap[K, Long] = {
-      val acc = scala.collection.mutable.HashMap
-        .empty[K, (BigInt, BigInt)]
-      partials.foreach { case (k, (a, b)) =>
-        val (pa, pb) = acc.getOrElse(k, (BigInt(0), BigInt(0)))
-        acc.update(k, (pa + a, pb + b))
-      }
-      acc.map { case (k, (srv, sv2)) =>
-        k -> ((2 * E12 * srv + sv2) / (2 * sv2)).min(Cap).toLong }
-    }
-    var v = scala.collection.mutable.HashMap.empty[String, Long]
-    cells.select(col("brand")).distinct().collect()
-      .foreach(r => v.update(r.getString(0), 1000000L))
-    var u = scala.collection.mutable.HashMap.empty[Long, Long]
-    for (_ <- 1 to 8) {
-      val bv = s.sparkContext.broadcast(v)
-      u = half(cellsRdd.mapPartitions { it =>
-        val m = scala.collection.mutable.HashMap
-          .empty[Long, (BigInt, BigInt)]
-        val vv = bv.value
-        it.foreach { case (cust, brand, r) =>
-          val ve = BigInt(vv(brand))
-          val (a, b) = m.getOrElse(cust, (BigInt(0), BigInt(0)))
-          m.update(cust, (a + BigInt(r) * ve, b + ve * ve))
-        }
-        m.iterator
-      }.collect())
-      bv.unpersist(false)
-      val bu = s.sparkContext.broadcast(u)
-      v = half(cellsRdd.mapPartitions { it =>
-        val m = scala.collection.mutable.HashMap
-          .empty[String, (BigInt, BigInt)]
-        val uu = bu.value
-        it.foreach { case (cust, brand, r) =>
-          val ue = BigInt(uu(cust))
-          val (a, b) = m.getOrElse(brand, (BigInt(0), BigInt(0)))
-          m.update(brand, (a + BigInt(r) * ue, b + ue * ue))
-        }
-        m.iterator
-      }.collect())
-      bu.unpersist(false)
-    }
-    cellsRdd.unpersist(false)
+    // past the cell gate: the 8 alternations run relationally, exactly
+    // as the oracle spells them — brand factors (v) broadcast, customer
+    // factors (u) join unhinted (they outgrow a broadcast at corpus
+    // scale), every half-round checkpointed
+    def half(factors: DataFrame, on: String, by: String): DataFrame =
+      cells.join(factors, on).groupBy(col(by))
+        .agg(expr("""CAST(LEAST((2 * 1000000000000 *
+                       sum(CAST(r AS DECIMAL(38,0)) * f)
+                       + sum(CAST(f AS DECIMAL(38,0)) * f))
+                      DIV (2 * sum(CAST(f AS DECIMAL(38,0)) * f)),
+                      1000000000000000) AS BIGINT)""").as("f"))
+        .localCheckpoint(false)
+    var v = cells.select(col("brand")).distinct()
+      .withColumn("f", lit(1000000L))
+    for (_ <- 1 to 8)
+      v = half(half(broadcast(v), "brand", "cust"), "cust", "brand")
     val n = cells.groupBy(col("brand"))
       .agg(count(lit(1)).cast("long").as("n_raters"))
-    alsRanked(v.toSeq.toDF("brand", "v_e6").join(n, "brand"))
+    alsRanked(v.withColumnRenamed("f", "v_e6").join(n, "brand"))
   }
 }

@@ -991,11 +991,14 @@ object TextOps {
     * bridges many contexts outranks a frequent-but-isolated one.
     *
     * Shapes: the pair build is one zip of two array slices per doc
-    * (O(len), no self-join); the iteration inherits q105's machinery —
-    * node-scale rank vector broadcast per round, edges never
-    * re-shuffled, integer ppt fixed-point so 10 rounds are
-    * order-independent and engine-exact; top-20 is a TakeOrdered heap
-    * with (rank desc, word asc) ties.
+    * (O(len), no self-join); the iteration is [[GraphOps.pageRank]]'s —
+    * below the driver edge gate its in-memory kernel (the words are
+    * interned from one collect of the edge list and come back as
+    * strings), past it the relational rounds (node-scale rank vector
+    * broadcast per round, edges never re-shuffled); integer ppt
+    * fixed-point either way, so 10 rounds are order-independent and
+    * engine-exact; top-20 is a TakeOrdered heap with (rank desc, word
+    * asc) ties.
     */
   def q139TextRank(s: SparkSession, d: String): DataFrame = {
     val toks = Tables.documents(s, d).filter(col("text").isNotNull)

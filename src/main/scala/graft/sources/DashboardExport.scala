@@ -1,6 +1,5 @@
 package graft.sources
 
-import graft.Tables
 import graft.operators.RelationalOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 

@@ -174,7 +174,6 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
 
   test("bfsHops: path distances from an endpoint, star radius 1, " +
       "cap truncates, disconnected nodes stay absent") {
-    import org.apache.spark.sql.DataFrame
     def run(edges: Seq[(Long, Long)], seeds: Seq[Long],
         cap: Int = 8): Map[Long, Long] =
       GraphOps.bfsHops(edges.toDF("src", "dst"),
@@ -508,9 +507,16 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
       GraphOps.bfsHops(edges, seeds, maxHops = 4)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     val bcMode = all()
+    // relational: the driver kernels off, so pageRank/PPR run their
+    // broadcast relational rounds — and no bucketed table is written
+    val (relational, relWrites) =
+      bucketedWrites(Gates.withMode(spark, Gates.Relational)(all()))
+    assert(relational == bcMode)
+    assert(relWrites == 0, s"$relWrites bucketed edge tables written")
     val (fallback, writes) =
       bucketedWrites(Gates.withMode(spark, Gates.Scale)(all()))
     assert(fallback == bcMode)
+    assert(fallback == relational)
     assert(bcMode._1.nonEmpty && bcMode._3.nonEmpty && bcMode._4.size > 1)
     // each of the four loops ran on its own src-bucketed edge table
     assert(writes == 4, s"$writes bucketed edge tables written")
@@ -858,13 +864,12 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     // borders: small 5-cliques with a 2-edge satellite — ε-similar to
     // both attachment points (4·(1+2)² = 36 ≥ 3·6) but only 3
     // ε-neighbors incl. self, below the μ=4 core bar
-    val smallCliques = (1 to 40).map { _ =>
+    (1 to 40).foreach { _ =>
       val ids = (0 until 5).map { _ => next += 1; next }
       for (i <- ids.indices; j <- i + 1 until ids.size)
         add(ids(i), ids(j))
       next += 1
       add(next, ids(0)); add(next, ids(1))
-      ids
     }
     val pairs = und.toSeq
     val sym = pairs ++ pairs.map(p => (p._2, p._1))
@@ -950,7 +955,8 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
   test("below the gates the collected pruned graph stays on the " +
       "driver: q167 starts at most 2 jobs, q126 and q265 only the " +
       "basket collect and the output write") {
-    // q107/q214/q223/q240: the other driver kernels, each pinned at the
+    // q107/q214/q223/q240: the other driver kernels, and q139's
+    // string-id word graph on the pageRank kernel, each pinned at the
     // job count it starts at sf0.001
     Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame, Int)](
@@ -960,7 +966,8 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
       ("q107", GraphOps.q107Triangles, 2),
       ("q214", GraphOps.q214Hits, 6),
       ("q223", GraphOps.q223ClusteringCoef, 2),
-      ("q240", GraphOps.q240KTruss, 2)
+      ("q240", GraphOps.q240KTruss, 2),
+      ("q139", graft.operators.TextOps.q139TextRank, 5)
     ).foreach { case (name, query, maxJobs) =>
       val (_, _, jobs) = recording(query(spark, Sf)
         .write.format("noop").mode("overwrite").save())

@@ -797,7 +797,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     // r15 gate differential: the driver-join fast path (default, what
     // `got` ran) ≡ the relational cells + collected driver alternation
     // (lineitem past the basket gate, cells under theirs) ≡ the
-    // relational cells + rdd half-round scale path
+    // relational cells + relational half-round scale path
     def byBrand(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2),
         r.getLong(3)))).toMap
@@ -806,7 +806,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     assert(collected == got, "collected-cells path diverged")
     val rel = Gates.withMode(spark, Gates.Relational)(
       byBrand(SimilarityOps.q266AlsRank1(spark, Sf)))
-    assert(rel == got, "relational cells + rdd half-round path diverged")
+    assert(rel == got, "relational cells + half-round path diverged")
   }
 
   test("q275 single linkage: equals a local profile+Kruskal replay; " +

@@ -497,6 +497,11 @@ class TextSpec extends AnyFunSuite with SparkTestBase {
     }
     val expected = r.toSeq.sortBy { case (w, rr) => (-rr, w) }.take(20)
     assert(got.toSeq == expected)
+    // the relational rounds past the driver gate give the same top 20
+    val rel = Gates.withMode(spark, Gates.Relational)(
+      TextOps.q139TextRank(spark, Sf).collect()
+        .map(r => (r.getString(0), r.getLong(1))))
+    assert(rel.toSeq == expected)
   }
 
   test("stratifiedExactSample: global count is exactly round(N/f), " +
