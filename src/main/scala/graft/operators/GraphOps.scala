@@ -121,12 +121,12 @@ object GraphOps {
     val edges = symEdges.localCheckpoint(false)
     // r14: below the driver edge gate the whole 15-round loop runs on
     // primitive arrays in memory (the q214/q126 rule) — one collect
-    // job instead of one job per round (q139's word graph included:
-    // string ids are interned from the same collect).
+    // job instead of one job per round. Long node ids only (q139
+    // interns its word graph to long ids before it calls this).
     val slim = edges.select(col("src"), col("dst"))
     driverEdgeCount(edges, slim) match {
       case Some(nE) => return pageRankDriver(edges.sparkSession,
-        CollectedEdges(slim, nE), iters, total)
+        new CollectedEdges(slim, nE, weighted = false), iters, total)
       case None =>
     }
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
@@ -162,18 +162,14 @@ object GraphOps {
   private def driverMaxEdges(s: SparkSession): Long =
     Gates.driver(s, Gates.DriverEdges)
 
-  /** `edges`' row count when the driver edge gate passes: every column
-    * of every frame in `ids` is long, or every one is a string (which
-    * [[CollectedEdges.apply]] interns: JVM equality is SQL equality),
-    * and the count is within [[driverMaxEdges]]. No count job runs
-    * while the gate is closed.
+  /** `edges`' row count when the driver edge gate passes: every frame in
+    * `ids` has long ids and the count is within [[driverMaxEdges]]. No
+    * count job runs while the gate is closed.
     */
   private def driverEdgeCount(edges: DataFrame, ids: DataFrame*)
       : Option[Int] = {
     val max = driverMaxEdges(edges.sparkSession)
-    val types = ids.flatMap(_.schema.fields.map(_.dataType)).distinct
-    if (max <= 0 || (types != Seq(LongType) && types != Seq(StringType)))
-      None
+    if (max <= 0 || !ids.forall(allLongIds)) None
     else Some(edges.count()).filter(_ <= max).map(_.toInt)
   }
 
@@ -371,17 +367,16 @@ object GraphOps {
       StructType(fields.map { case (name, t) => StructField(name, t) }))
   }
 
-  /** `(node, <name>)` rows of the dense nodes ix < nN with `keep(ix)`:
-    * id(ix), of type `idType`, and the long values(ix).
+  /** `(node, <name>)` long rows of the dense nodes ix < nN with
+    * `keep(ix)`: id(ix) and values(ix).
     */
-  private def nodeValuesDf(spark: SparkSession, nN: Int, id: Int => Any,
-      idType: DataType, name: String, values: Array[Long])
-      (keep: Int => Boolean): DataFrame = {
+  private def nodeValuesDf(spark: SparkSession, nN: Int, id: Int => Long,
+      name: String, values: Array[Long])(keep: Int => Boolean): DataFrame = {
     val kept = new Array[Int](nN)
     var n = 0
     var i = 0
     while (i < nN) { if (keep(i)) { kept(n) = i; n += 1 }; i += 1 }
-    rowsDf(spark, n, "node" -> idType, name -> LongType)(k =>
+    rowsDf(spark, n, "node" -> LongType, name -> LongType)(k =>
       Row(id(kept(k)), values(kept(k))))
   }
 
@@ -464,25 +459,17 @@ object GraphOps {
       Iterator.single(java.util.Arrays.copyOf(buf, o))
     }.collect()
 
-  /** Collected slim edge list for the driver kernels: dense node index
-    * + parallel primitive edge arrays, filled by [[packedLongs]] for
-    * long ids. `weighted` additionally captures a long weight column
-    * at row position 2. Seeds may be interned AFTER the fill (a seed
-    * without edges still indexes); size per-node arrays by [[nN]] only
-    * after all interning is done. `nodeType` is the edge table's node
-    * type; string ids (see [[CollectedEdges.apply]]) are interned
-    * by [[ixOf]], and [[id]]/[[idOf]] are for long ids only.
+  /** Collected slim long-id edge list for the driver kernels: dense
+    * node index + parallel primitive edge arrays, filled by
+    * [[packedLongs]]. `weighted` additionally captures a long weight
+    * column at row position 2. Seeds may be interned AFTER the fill (a
+    * seed without edges still indexes); size per-node arrays by [[nN]]
+    * only after all interning is done.
     */
-  private final class CollectedEdges private (nE: Int, weighted: Boolean,
-      val nodeType: DataType = LongType) {
+  private final class CollectedEdges private (nE: Int, weighted: Boolean) {
     private val nodes = new LongIds
     val ss = new Array[Int](nE); val ds = new Array[Int](nE)
     val ws: Array[Long] = if (weighted) new Array[Long](nE) else null
-    /** String node keys by dense index, and the index of each. */
-    private val keys =
-      if (nodeType == LongType) null else new java.util.ArrayList[Any]()
-    private val keyIx =
-      if (keys eq null) null else new java.util.HashMap[Any, Integer]()
     def idOf(x: Long): Int = nodes(x)
     def this(edges: DataFrame, nE: Int, weighted: Boolean) = {
       this(nE, weighted)
@@ -498,18 +485,8 @@ object GraphOps {
       }
       require(i == nE, s"CollectedEdges: edge count drifted ($i vs $nE)")
     }
-    def nN: Int = if (keys eq null) nodes.size else keys.size
+    def nN: Int = nodes.size
     def id(ix: Int): Long = nodes.id(ix)
-    /** Node ix's id as the edge table holds it. */
-    def key(ix: Int): Any = if (keys eq null) id(ix) else keys.get(ix)
-    /** The dense index of id `k` (interned if new), any node type. */
-    def ixOf(k: Any): Int =
-      if (keys eq null) idOf(k.asInstanceOf[Long])
-      else {
-        val got = keyIx.get(k)
-        if (got != null) got.intValue
-        else { keyIx.put(k, keys.size); keys.add(k); keys.size - 1 }
-      }
     /** Out-degree (edge rows by src) per dense node. */
     def srcDegrees(): Array[Long] = {
       val deg = new Array[Long](nN)
@@ -520,26 +497,6 @@ object GraphOps {
   }
 
   private object CollectedEdges {
-    /** `edges` (src, dst) collected: long ids by the [[packedLongs]]
-      * fill, string ids (q139's words) by ONE collect of the rows, each
-      * id interned in first-seen order.
-      */
-    def apply(edges: DataFrame, nE: Int): CollectedEdges =
-      if (allLongIds(edges)) new CollectedEdges(edges, nE, weighted = false)
-      else {
-        val g = new CollectedEdges(nE, weighted = false,
-          edges.schema("src").dataType)
-        val rows = edges.collect()
-        require(rows.length == nE,
-          s"CollectedEdges: edge count drifted (${rows.length} vs $nE)")
-        var i = 0
-        while (i < nE) {
-          g.ss(i) = g.ixOf(rows(i).get(0)); g.ds(i) = g.ixOf(rows(i).get(1))
-          i += 1
-        }
-        g
-      }
-
     /** A CollectedEdges over ALREADY-COLLECTED undirected pairs (dense
       * indices + id table, the [[collectBasketPairs]] output): emits
       * both orientations so the kernels see exactly the symmetric
@@ -802,7 +759,7 @@ object GraphOps {
       }
       r = nxt; present = touched
     }
-    nodeValuesDf(spark, nN, g.key, g.nodeType, "r", r)(present(_))
+    nodeValuesDf(spark, nN, g.id, "r", r)(present(_))
   }
 
   /** In-memory personalized-PageRank rounds — the below-gate path of
@@ -842,7 +799,7 @@ object GraphOps {
       seedIx.foreach { sIx => nxt(sIx) += sb; touched(sIx) = true }
       r = nxt; present = touched
     }
-    nodeValuesDf(spark, nN, g.key, g.nodeType, "r", r)(present(_))
+    nodeValuesDf(spark, nN, g.id, "r", r)(present(_))
   }
 
   /** In-memory synchronized k-core peel — the below-gate path of
@@ -879,7 +836,7 @@ object GraphOps {
         round += 1
       }
     }
-    nodeValuesDf(spark, nN, g.key, g.nodeType, "core_deg", deg)(deg(_) >= 1)
+    nodeValuesDf(spark, nN, g.id, "core_deg", deg)(deg(_) >= 1)
   }
 
   /** In-memory frontier BFS — the below-gate path of [[bfsHops]]: a
@@ -915,7 +872,7 @@ object GraphOps {
       }
       frontier = next; fN = nN2
     }
-    nodeValuesDf(spark, nN, g.key, g.nodeType, "hops", hops)(hops(_) >= 0)
+    nodeValuesDf(spark, nN, g.id, "hops", hops)(hops(_) >= 0)
   }
 
   /** In-memory hop-bounded Bellman–Ford — the below-gate path of
@@ -957,7 +914,7 @@ object GraphOps {
       }
       frontier = nf
     }
-    nodeValuesDf(spark, nN, g.key, g.nodeType, "dist", dist)(has(_))
+    nodeValuesDf(spark, nN, g.id, "dist", dist)(has(_))
   }
 
   /** One PageRank round over a `(src, dst, od)` edge table and a
@@ -1097,8 +1054,7 @@ object GraphOps {
     collectBasketPairs(s, d, driverMaxEdges(s) / 2)
       .map { bp =>
         val (tri, _) = driverTriangles(bp.us, bp.vs, bp.ids.length)
-        nodeValuesDf(s, bp.ids.length, bp.ids(_), LongType, "n_tri", tri)(
-          tri(_) > 0)
+        nodeValuesDf(s, bp.ids.length, bp.ids(_), "n_tri", tri)(tri(_) > 0)
       }
       .getOrElse(triangleCounts(coPurchaseRawPairs(s, d)))
       .select(col("node").as("partkey"), col("n_tri"))
@@ -1132,7 +1088,7 @@ object GraphOps {
     val slim = cur.select(col("src"), col("dst"))
     driverEdgeCount(cur, slim) match {
       case Some(nE) => return kCoreDriver(cur.sparkSession,
-        CollectedEdges(slim, nE), k, peels)
+        new CollectedEdges(slim, nE, weighted = false), k, peels)
       case None =>
     }
     var prevNodes = -1L
@@ -1199,8 +1155,8 @@ object GraphOps {
     val seedTab = seeds.select(col("node")).distinct()
     driverEdgeCount(edges, slim, seedTab) match {
       case Some(nE) =>
-        val g = CollectedEdges(slim, nE)
-        val seedIx = seedTab.collect().map(r => g.ixOf(r.get(0)))
+        val g = new CollectedEdges(slim, nE, weighted = false)
+        val seedIx = seedTab.collect().map(r => g.idOf(r.getLong(0)))
         return bfsDriver(spark, g, seedIx, maxHops)
       case None =>
     }
@@ -1318,8 +1274,8 @@ object GraphOps {
     val slim = edges.select(col("src"), col("dst"))
     driverEdgeCount(edges, slim, seedTab.select(col("node"))) match {
       case Some(nE) =>
-        val g = CollectedEdges(slim, nE)
-        val seedIx = seedTab.collect().map(r => g.ixOf(r.get(0)))
+        val g = new CollectedEdges(slim, nE, weighted = false)
+        val seedIx = seedTab.collect().map(r => g.idOf(r.getLong(0)))
         return pprDriver(edges.sparkSession, g, seedIx, iters, total)
       case None =>
     }
@@ -1504,9 +1460,8 @@ object GraphOps {
     // neighbor label, smallest label on ties, computed from the
     // PREVIOUS round's labels for every node at once) is a pure
     // function of the graph, spelled identically here and in
-    // [[lpRound]]'s count+TopK form. Labels are the ids themselves,
-    // compared by value, so the kernel takes long ids only.
-    if (allLongIds(edges0)) driverEdgeCount(edges0, edges0) match {
+    // [[lpRound]]'s count+TopK form.
+    driverEdgeCount(edges0, edges0) match {
       case Some(nE) => return driverLpa(symEdges.sparkSession,
         new CollectedEdges(edges0, nE, weighted = false), rounds)
       case None =>
@@ -1532,8 +1487,7 @@ object GraphOps {
     */
   private def driverLpa(spark: SparkSession, g: CollectedEdges,
       rounds: Int): DataFrame =
-    nodeValuesDf(spark, g.nN, g.id, LongType, "lbl", lpaLabels(g, rounds))(
-      _ => true)
+    nodeValuesDf(spark, g.nN, g.id, "lbl", lpaLabels(g, rounds))(_ => true)
 
   /** The LPA kernel: every dense node's label after `rounds`
     * synchronous rounds. CSR by dst; each round sorts every node's
@@ -2144,8 +2098,7 @@ object GraphOps {
     // addExact fails loud exactly like the relational ANSI add).
     val slim = edges.select(col("src"), col("dst"), col("w"))
     val seedTab = seeds.select(col("node")).distinct()
-    // (the weight rides in the packed long fill: long ids only)
-    if (allLongIds(slim)) driverEdgeCount(edges, slim, seedTab) match {
+    driverEdgeCount(edges, slim, seedTab) match {
       case Some(nE) =>
         val g = new CollectedEdges(slim, nE, weighted = true)
         val seedIx = seedTab.collect().map(r => g.idOf(r.getLong(0)))
@@ -3018,10 +2971,9 @@ object GraphOps {
     // checkpoint/aggregate floor on a pruned graph that is node-scale
     // by construction. Bit-identical: every step is exact integer and
     // deterministic (min-label components, min border cluster); the
-    // conf-gated suite differential pins driver ≡ relational. Cluster
-    // ids are min node ids, so the kernel takes long ids only.
+    // conf-gated suite differential pins driver ≡ relational.
     val slim = e.select(col("src"), col("dst"))
-    if (allLongIds(slim)) driverEdgeCount(e, slim) match {
+    driverEdgeCount(e, slim) match {
       case Some(nE) => return scanDriver(e.sparkSession,
         new CollectedEdges(slim, nE, weighted = false))
       case None =>

@@ -2,8 +2,9 @@ package graft.operators
 
 import graft.{Gates, Tables}
 import graft.functions.VectorExpressions
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders,
+  SparkSession}
+import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over the `embeddings` table (vec_id, embedding
@@ -1756,6 +1757,38 @@ object SimilarityOps {
       .toDF("brand", "n_raters", "v_e6"))
   }
 
+  /** One ALS half-round's factor per key from its cells' (r, f):
+    * `LEAST((2·1e12·Σ r·f + Σ f²) DIV (2·Σ f²), 1e15)` — the oracle's
+    * round-half-up DECIMAL(38,0) division and [[alsRank1Loop]]'s
+    * `factor` — over BigInteger sums, map-side combined like any sum.
+    * DECIMAL(38,0) would overflow: the numerator grows with the cells
+    * per key and passes 1e38 around sf3, just past [[Gates.AlsCells]].
+    */
+  private object AlsFactor
+      extends Aggregator[(Long, Long), Array[java.math.BigInteger], Long] {
+    import java.math.BigInteger
+    private val E12x2 = BigInteger.valueOf(2000000000000L)
+    private val Cap = BigInteger.valueOf(1000000000000000L)
+    def zero: Array[BigInteger] = Array(BigInteger.ZERO, BigInteger.ZERO)
+    def reduce(b: Array[BigInteger], rf: (Long, Long))
+        : Array[BigInteger] = {
+      val f = BigInteger.valueOf(rf._2)
+      b(0) = b(0).add(BigInteger.valueOf(rf._1).multiply(f))
+      b(1) = b(1).add(f.multiply(f))
+      b
+    }
+    def merge(a: Array[BigInteger], b: Array[BigInteger])
+        : Array[BigInteger] = {
+      a(0) = a(0).add(b(0)); a(1) = a(1).add(b(1)); a
+    }
+    def finish(b: Array[BigInteger]): Long =
+      E12x2.multiply(b(0)).add(b(1)).divide(b(1).shiftLeft(1))
+        .min(Cap).longValue
+    def bufferEncoder: Encoder[Array[BigInteger]] =
+      Encoders.kryo[Array[BigInteger]]
+    def outputEncoder: Encoder[Long] = Encoders.scalaLong
+  }
+
   /** (brand, n_raters, v_e6) → q266's output, ranked by factor. */
   private def alsRanked(f: DataFrame): DataFrame =
     f.withColumn("brand_rank", expr(
@@ -1775,20 +1808,22 @@ object SimilarityOps {
     *
     * ENGINE-EXACT: the alternation is a fixed integer recursion —
     * ratings in exact e2 cents, factors in e6 fixed point, every
-    * update one round-half-up division of DECIMAL(38,0) sums
+    * update one round-half-up division of exact integer sums
     * (1e12-rescaled numerators keep the e6 scale), factors clamped at
     * 1e15 (documented; never binds on this data). The oracle unrolls
-    * the 8 rounds as MATERIALIZED CTE pairs (the q263 rule).
+    * the 8 rounds as MATERIALIZED CTE pairs (the q263 rule) in
+    * DECIMAL(38,0); the engine sums in unbounded integers, because the
+    * 1e12-rescaled numerator passes 1e38 a little past the cell gate.
     *
-    * Scale shape: two paths. Below [[Gates.AlsCells]] the cells are
-    * collected once and all 8 alternations run in memory
+    * Scale shape: two paths ([[alsRank1]]). Below [[Gates.AlsCells]]
+    * the cells are collected once and all 8 alternations run in memory
     * ([[alsRank1Loop]]). Past it the corpus scan still happens ONCE
     * (cell aggregate, checkpointed), and each half-round is one
-    * map-combined groupBy of the cells joined with the OTHER side's
-    * factor table — brands broadcast, customers joined unhinted (user
-    * factors outgrow a broadcast at corpus scale, brand factors never
-    * do) — checkpointed per half-round. No per-partition partial map
-    * ever crosses the driver.
+    * map-combined [[AlsFactor]] groupBy of the cells joined with the
+    * OTHER side's factor table — brands broadcast, customers joined
+    * unhinted (user factors outgrow a broadcast at corpus scale, brand
+    * factors never do) — checkpointed per half-round. No
+    * per-partition partial map ever crosses the driver.
     */
   def q266AlsRank1(s: SparkSession, d: String): DataFrame = {
     // r15: driver-join fast path (see [[alsCellsDriver]]) — the
@@ -1801,7 +1836,14 @@ object SimilarityOps {
         return alsRank1Out(s, bs, cs, rs, brandIds)
       case None =>
     }
-    val cells = alsCells(s, d)
+    alsRank1(s, alsCells(s, d))
+  }
+
+  /** q266 over a `(cust, brand, r)` cell table: the in-memory
+    * alternation below [[Gates.AlsCells]], the relational one past it.
+    */
+  private[graft] def alsRank1(s: SparkSession, cells: DataFrame)
+      : DataFrame = {
     // r14: the cell table is (customer × brand)-bounded — below the
     // driver gate ALL 8 alternations run over ONE collected cell array
     // (BigInt sums are order-free, so per-partition partials merged on
@@ -1811,17 +1853,15 @@ object SimilarityOps {
     val maxCells = Gates.driver(s, Gates.AlsCells)
     if (maxCells > 0 && cells.count() <= maxCells)
       return alsRank1Collected(s, cells)
-    // past the cell gate: the 8 alternations run relationally, exactly
-    // as the oracle spells them — brand factors (v) broadcast, customer
+    // past the cell gate: the 8 alternations run relationally, as the
+    // oracle spells them — brand factors (v) broadcast, customer
     // factors (u) join unhinted (they outgrow a broadcast at corpus
     // scale), every half-round checkpointed
+    val factor = udaf(AlsFactor,
+      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
     def half(factors: DataFrame, on: String, by: String): DataFrame =
       cells.join(factors, on).groupBy(col(by))
-        .agg(expr("""CAST(LEAST((2 * 1000000000000 *
-                       sum(CAST(r AS DECIMAL(38,0)) * f)
-                       + sum(CAST(f AS DECIMAL(38,0)) * f))
-                      DIV (2 * sum(CAST(f AS DECIMAL(38,0)) * f)),
-                      1000000000000000) AS BIGINT)""").as("f"))
+        .agg(factor(col("r"), col("f")).as("f"))
         .localCheckpoint(false)
     var v = cells.select(col("brand")).distinct()
       .withColumn("f", lit(1000000L))

@@ -991,14 +991,15 @@ object TextOps {
     * bridges many contexts outranks a frequent-but-isolated one.
     *
     * Shapes: the pair build is one zip of two array slices per doc
-    * (O(len), no self-join); the iteration is [[GraphOps.pageRank]]'s —
-    * below the driver edge gate its in-memory kernel (the words are
-    * interned from one collect of the edge list and come back as
-    * strings), past it the relational rounds (node-scale rank vector
-    * broadcast per round, edges never re-shuffled); integer ppt
-    * fixed-point either way, so 10 rounds are order-independent and
-    * engine-exact; top-20 is a TakeOrdered heap with (rank desc, word
-    * asc) ties.
+    * (O(len), no self-join); each distinct word gets a long id on the
+    * executors (one map-combined distinct, materialized once — nothing
+    * collected), so the iteration is [[GraphOps.pageRank]]'s long-id
+    * one: below the driver edge gate its in-memory kernel, past it the
+    * relational rounds (node-scale rank vector broadcast per round,
+    * edges never re-shuffled); integer ppt fixed-point either way, so
+    * 10 rounds are order-independent and engine-exact; the ranks join
+    * back to their words, and top-20 is a TakeOrdered heap with (rank
+    * desc, word asc) ties.
     */
   def q139TextRank(s: SparkSession, d: String): DataFrame = {
     val toks = Tables.documents(s, d).filter(col("text").isNotNull)
@@ -1012,12 +1013,22 @@ object TextOps {
                     (x, y) -> struct(x AS w1, y AS w2))""")).as("p"))
       .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
       .filter(col("w1") =!= col("w2")) // pageRank forbids self-loops
-    val edges = pairs.select(col("w1").as("src"), col("w2").as("dst"))
-      .unionAll(pairs.select(col("w2").as("src"), col("w1").as("dst")))
-    GraphOps.pageRank(edges, 10)
-      .orderBy(col("r").desc, col("node").asc)
+    // the ids only key this query's joins (never output), so they need
+    // not be dense or reproducible — only fixed once drawn: the
+    // checkpoint materializes them for all three joins below
+    val words = pairs.select(col("w1").as("word"))
+      .unionAll(pairs.select(col("w2").as("word"))).distinct()
+      .withColumn("id", monotonically_increasing_id())
+      .localCheckpoint(false)
+    val ids = pairs
+      .join(words.select(col("word").as("w1"), col("id").as("i1")), "w1")
+      .join(words.select(col("word").as("w2"), col("id").as("i2")), "w2")
+    val edges = ids.select(col("i1").as("src"), col("i2").as("dst"))
+      .unionAll(ids.select(col("i2").as("src"), col("i1").as("dst")))
+    GraphOps.pageRank(edges, 10).join(words, col("node") === col("id"))
+      .orderBy(col("r").desc, col("word").asc)
       .limit(20)
-      .select(col("node").as("word"), col("r").as("rank_ppt"))
+      .select(col("word"), col("r").as("rank_ppt"))
   }
 
   /** 169. q152: exact-count stratified sampling — a num/den fraction of

@@ -809,6 +809,36 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     assert(rel == got, "relational cells + half-round path diverged")
   }
 
+  test("q266 relational half-rounds stay exact where DECIMAL(38,0) " +
+      "overflows: synthetic cells whose rescaled r·u sums pass 1e38") {
+    import spark.implicits._
+    // 600 customers, each rating two of three brands with $5M-$9M
+    val cells = (1L to 600L).flatMap { c =>
+      Seq(c % 3, (c + 1) % 3).map(b =>
+        (c, s"b$b", 500000000L + (c * 7919L * (b + 1)) % 400000000L))
+    }
+    // the first v half-round's numerator 2·1e12·Σ r·u per brand, with
+    // u from the initial v = 1e6: past DECIMAL(38,0)'s 1e38 - 1
+    val e12 = BigInt(1000000000000L)
+    val u = cells.groupBy(_._1).map { case (c, xs) =>
+      val den = BigInt(xs.size) * BigInt(1000000L).pow(2)
+      c -> (2 * e12 * xs.map(x => BigInt(x._3) * 1000000L).sum + den) /
+        (2 * den)
+    }
+    val num = cells.groupBy(_._2).values
+      .map(xs => 2 * e12 * xs.map(x => BigInt(x._3) * u(x._1)).sum).max
+    assert(num > BigInt(10).pow(38), s"numerator $num")
+    def byBrand(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2),
+        r.getLong(3)))).toMap
+    val df = cells.toDF("cust", "brand", "r")
+    val inMemory = byBrand(SimilarityOps.alsRank1Collected(spark, df))
+    val rel = Gates.withMode(spark, Gates.Relational)(
+      byBrand(SimilarityOps.alsRank1(spark, df)))
+    assert(inMemory.size == 3)
+    assert(rel == inMemory, "relational half-rounds diverged")
+  }
+
   test("q275 single linkage: equals a local profile+Kruskal replay; " +
       "dendrogram heights are non-decreasing and end in one cluster") {
     val got = SimilarityOps.q275SingleLinkage(spark, Sf).collect()
