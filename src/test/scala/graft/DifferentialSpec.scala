@@ -110,7 +110,58 @@ class DifferentialSpec extends AnyFunSuite with SparkTestBase {
         }
       }.toMap
       assert(got == expected, s"trial $trial (n=$n)")
+      // several sums per call share one slice pass: both must equal the
+      // window prefix sums of their own column
+      val w = org.apache.spark.sql.expressions.Window.partitionBy("g")
+        .orderBy("k").rowsBetween(Long.MinValue, -1)
+      val two = df.withColumn("v2", col("v") * col("k") - 7L)
+      val gotTwo = graft.operators.DistributedRank
+        .withRunningSums(two, Seq("g"), Seq("k"),
+          Seq("v" -> "cum", "v2" -> "cum2"))
+        .select("g", "k", "cum", "cum2")
+      val expectedTwo = two.select(col("g"), col("k"),
+        coalesce(sum("v").over(w), lit(0L)).as("cum"),
+        coalesce(sum("v2").over(w), lit(0L)).as("cum2"))
+      assert(gotTwo.exceptAll(expectedTwo).isEmpty &&
+        expectedTwo.exceptAll(gotTwo).isEmpty, s"trial $trial two sums")
     }
+  }
+
+  test("DistributedRank keeps NULL group keys as one group, as the window " +
+      "formulation does") {
+    val rows = Seq[(String, Long, java.lang.Long)](("a", 1L, 1L),
+      (null, 2L, 2L), ("a", 3L, 3L), (null, 4L, 4L), ("b", 5L, null),
+      ("a", 6L, 6L), (null, 7L, null))
+    val df = rows.toDF("g", "k", "v").repartition(3)
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("g")
+      .orderBy("k")
+    val gotRank = graft.operators.DistributedRank
+      .withRank(df, Seq("g"), Seq("k"), "rn").select("g", "k", "rn")
+    val expectedRank = df.select(col("g"), col("k"),
+      row_number().over(w).cast("long").as("rn"))
+    assert(gotRank.count() == rows.size)
+    assert(gotRank.exceptAll(expectedRank).isEmpty &&
+      expectedRank.exceptAll(gotRank).isEmpty)
+    val gotSum = graft.operators.DistributedRank
+      .withRunningSums(df, Seq("g"), Seq("k"), Seq("v" -> "cum"))
+      .select("g", "k", "cum")
+    val expectedSum = df.select(col("g"), col("k"),
+      coalesce(sum("v").over(w.rowsBetween(Long.MinValue, -1)), lit(0L))
+        .as("cum"))
+    assert(gotSum.count() == rows.size)
+    assert(gotSum.exceptAll(expectedSum).isEmpty &&
+      expectedSum.exceptAll(gotSum).isEmpty)
+  }
+
+  test("withRunningSum fails with ARITHMETIC_OVERFLOW, never wraps") {
+    val df = Seq((1L, Long.MaxValue), (2L, 5L), (3L, 1L)).toDF("k", "v")
+    // SparkArithmeticException is private[spark]: match it by name
+    val e = intercept[ArithmeticException](graft.operators.DistributedRank
+      .withRunningSum(df, Nil, Seq("k"), "v", "cum").collect())
+    assert(e.getClass.getName == "org.apache.spark.SparkArithmeticException",
+      e.toString)
+    assert(e.asInstanceOf[org.apache.spark.SparkThrowable].getCondition ==
+      "ARITHMETIC_OVERFLOW", e.toString)
   }
 
   test("DistributedRank: per group, ranks are 1..n and values ascend") {

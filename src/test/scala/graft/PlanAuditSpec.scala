@@ -103,13 +103,13 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
 
   test("q45 percentile ranking is range-partitioned, not per-group windowed") {
     // a PARTITION BY l_returnflag window would put a third of the table
-    // through each of 3 reducers; the distributed-rank plan partitions
-    // by (_part, group) after a range exchange
+    // through each of 3 reducers; the distributed-rank plan aggregates
+    // (_part, group) totals after a range exchange
     val df = RelationalOps.q45Percentiles(spark, Sf)
     val p = plan(df)
-    // DistributedRank's `_off + _lrn` invariant: both plan branches
-    // must see IDENTICAL spark_partition_id() values. The ranged frame
-    // is localCheckpoint'd inside withRank (the r9 stress run caught
+    // DistributedRank's offset + in-slice sum invariant: both plan
+    // branches must see IDENTICAL spark_partition_id() values. The
+    // sorted slices are localCheckpoint'd (the r9 stress run caught
     // ReuseExchange failing on a self-join and the twice-executed
     // range exchange sampling DIFFERENT boundaries), so consumer plans
     // read the one materialized artifact — a Scan ExistingRDD — and
@@ -123,6 +123,22 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
       Tables.lineitem(spark, Sf), Seq(col("l_returnflag")),
       Seq(col("l_extendedprice"))))
     assert(sliced.contains("rangepartitioning"), sliced.take(2000))
+    // the slice pass runs over the checkpoint itself: no window keyed by
+    // the slice id and no second full-row shuffle — the only hash
+    // exchanges are the totals aggregate's and the offsets window's
+    val grouped = spark.range(0, 20000, 1, 4)
+      .withColumn("g", col("id") % 3)
+    val ranked = graft.operators.DistributedRank
+      .withRank(grouped, Seq("g"), Seq("id"), "rn")
+    val rp = plan(ranked)
+    assert(!"windowspecdefinition\\(_part#\\d+,".r.findFirstIn(rp).isDefined,
+      rp.take(3000))
+    assert("Exchange hashpartitioning".r.findAllIn(rp).length == 2,
+      rp.take(3000))
+    assert(rp.contains("BroadcastExchange"), rp.take(3000))
+    val (_, _, jobs) = recording(
+      ranked.write.format("noop").mode("overwrite").save())
+    assert(jobs <= 6, s"$jobs jobs")
   }
 
   test("q62 contamination broadcasts the benchmark shingles — the corpus " +
