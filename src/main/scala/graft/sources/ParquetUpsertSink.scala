@@ -5,7 +5,8 @@ import java.util.UUID
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.{JobExecutionStatus, ListenerBusDrain}
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Observation,
+  SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -18,11 +19,18 @@ import scala.util.Try
   *
   * Everything is a join or a window over the key — existing keys are
   * NEVER collected to the driver (the reference's `get_existing_data` →
-  * Python set at etl_pipeline_script.py:43 dies at 100 TB). Writes go to
-  * a fresh snapshot directory and flip atomically via rename, so readers
-  * never see a half-written table. At cluster scale the same code runs
-  * against an object store; a table format (e.g. log-structured commits)
-  * would replace the rename, not the plan.
+  * Python set at etl_pipeline_script.py:43 dies at 100 TB). Every
+  * mutation writes to a `tmp-*` dir under the table first. `upsert`,
+  * `purge` and `compact` then flip the whole snapshot: `data/` is renamed
+  * aside and the temp dir renamed into its place. `insertNewOnly` on an
+  * existing table publishes only its new files, moving each into `data/`
+  * with one rename. After each call returns or throws, the table reads
+  * back whole: a failed write or commit leaves the snapshot it found.
+  * Concurrent readers are not isolated: a flip has a moment with no
+  * `data/` and deletes files that a planned read may still open, and a
+  * listing during a publish sees part of an insert. At cluster scale the
+  * same code runs against an object store; a table format (e.g.
+  * log-structured commits) would replace the renames, not the plan.
   */
 object ParquetUpsertSink {
 
@@ -41,22 +49,33 @@ object ParquetUpsertSink {
   def exists(spark: SparkSession, tableDir: String): Boolean =
     fs(spark, dataPath(tableDir)).exists(dataPath(tableDir))
 
-  /** The current snapshot. Its schema comes from one data file's footer,
-    * read in this JVM: every snapshot is written by one Spark write, so
-    * all its files share that schema, and no schema-inference job runs.
+  private def dataFiles(spark: SparkSession, dir: Path): Seq[Path] =
+    fs(spark, dir).listStatus(dir).toSeq.map(_.getPath)
+      .filter(_.getName.endsWith(".parquet"))
+
+  /** The Spark schema in one data file's footer, read in this JVM: a
+    * snapshot is written by one Spark write and an insert appends files
+    * written with the same footer schema, so all its files share it.
     */
-  def read(spark: SparkSession, tableDir: String): DataFrame = {
-    val data = dataPath(tableDir)
-    val file = fs(spark, data).listStatus(data).map(_.getPath)
-      .find(_.getName.endsWith(".parquet"))
+  private def fileSchema(spark: SparkSession, data: Path): StructType = {
+    val file = dataFiles(spark, data).headOption
       .getOrElse(throw new IOException(s"no parquet data file under $data"))
     val json = TableStatistics.footer(spark, file)(
       _.getFileMetaData.getKeyValueMetaData.get(TableStatistics.SparkSchemaKey))
     if (json == null) throw new IOException(
       s"$file has no ${TableStatistics.SparkSchemaKey} footer key")
-    spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType])
-      .parquet(data.toString)
+    DataType.fromJson(json).asInstanceOf[StructType]
   }
+
+  /** The current snapshot, with its schema from a footer: no
+    * schema-inference job runs.
+    */
+  def read(spark: SparkSession, tableDir: String): DataFrame =
+    snapshot(spark, tableDir, fileSchema(spark, dataPath(tableDir)))
+
+  private def snapshot(spark: SparkSession, tableDir: String,
+      schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(dataPath(tableDir).toString)
 
   /** Upper bound on waiting for a failed write's tasks to end: a task
     * that never ends must not hang the caller, who then gets the write's
@@ -93,18 +112,25 @@ object ParquetUpsertSink {
     } finally sc.removeJobTag(tag)
   }
 
-  /** Atomically replace the table's data dir with `df`'s rows. A failed
-    * write deletes its temp dir once all its tasks have ended; a failed
-    * commit restores the old snapshot, so the table always reads back
-    * whole.
+  /** Writes `df` to a new `tmp-*` dir under the table and returns it. A
+    * failed write deletes the dir once all its tasks have ended.
+    */
+  private def writeTmp(spark: SparkSession, tableDir: String, df: DataFrame)
+      : Path = {
+    val tmp = new Path(tableDir, s"tmp-${UUID.randomUUID()}")
+    try settled(spark)(df.write.mode("overwrite").parquet(tmp.toString))
+    catch { case e: Throwable => fs(spark, tmp).delete(tmp, true); throw e }
+    tmp
+  }
+
+  /** Replace the table's data dir with `df`'s rows. A failed commit
+    * restores the old snapshot, so the table reads back whole.
     */
   private def replace(spark: SparkSession, tableDir: String, df: DataFrame)
       : Unit = {
     val data = dataPath(tableDir)
     val f = fs(spark, data)
-    val tmp = new Path(tableDir, s"tmp-${UUID.randomUUID()}")
-    try settled(spark)(df.write.mode("overwrite").parquet(tmp.toString))
-    catch { case e: Throwable => f.delete(tmp, true); throw e }
+    val tmp = writeTmp(spark, tableDir, df)
     val old = new Path(tableDir, s"old-${UUID.randomUUID()}")
     val staged = f.exists(data)
     if (staged && !f.rename(data, old)) {
@@ -117,6 +143,31 @@ object ParquetUpsertSink {
       throw new IOException(s"cannot commit $tmp -> $data")
     }
     if (staged) f.delete(old, true)
+  }
+
+  /** Add `df`'s rows to the table as new data files: written to a temp
+    * dir, then each file holding rows (footer count; Spark writes an empty
+    * file for an empty first partition) moved into `data/` with one
+    * rename. An empty `df` moves nothing. A failed rename deletes the
+    * files already moved, so the table reads back as it was.
+    */
+  private def append(spark: SparkSession, tableDir: String, df: DataFrame)
+      : Unit = {
+    val data = dataPath(tableDir)
+    val f = fs(spark, data)
+    val tmp = writeTmp(spark, tableDir, df)
+    val parts = dataFiles(spark, tmp)
+      .filter(p => TableStatistics.parquetRowCount(spark, p.toString) > 0)
+    parts.foldLeft(List.empty[Path]) { (moved, part) =>
+      val dst = new Path(data, part.getName)
+      if (f.rename(part, dst)) dst :: moved
+      else {
+        moved.foreach(f.delete(_, false))
+        f.delete(tmp, true)
+        throw new IOException(s"cannot commit $part -> $data")
+      }
+    }
+    f.delete(tmp, true)
   }
 
   // exact: every observed node sits in the write's result stage, whose
@@ -198,10 +249,13 @@ object ParquetUpsertSink {
 
   /** Compact the table's data files into `numFiles` (small-file cleanup
     * after many incremental upserts — at scale, file count drives both
-    * listing time and task overhead).
+    * listing time and task overhead). A table of at most `numFiles` files
+    * is left as it is: `coalesce` cannot make fewer, so a rewrite would
+    * only change the row-group layout.
     */
   def compact(spark: SparkSession, tableDir: String, numFiles: Int): Unit =
-    replace(spark, tableDir, read(spark, tableDir).coalesce(numFiles))
+    if (dataFiles(spark, dataPath(tableDir)).size > numFiles)
+      replace(spark, tableDir, read(spark, tableDir).coalesce(numFiles))
 
   /** Insert-new-only (append rows whose key is absent — the reference's
     * incremental season/match load, etl_pipeline_script.py:128-137).
@@ -209,6 +263,15 @@ object ParquetUpsertSink {
     * the anti-join's other side holds at most the batch's size instead of
     * every existing key. `inserted` is observed on the new rows inside
     * the one write.
+    *
+    * On an existing table only the new rows are written, in the
+    * snapshot's schema, and appended as new files; the existing files are
+    * not touched. A batch whose new rows cannot be written with the
+    * files' footer schema (the union widens a column's type, e.g. an int
+    * column fed longs, or makes a non-nullable column nullable) rewrites
+    * the table in the union's schema instead. A replay after a partial
+    * commit (a process killed between two renames) inserts only the keys
+    * still missing.
     */
   def insertNewOnly(spark: SparkSession, tableDir: String, rows: DataFrame,
       keys: Seq[String]): SinkStats = {
@@ -216,12 +279,21 @@ object ParquetUpsertSink {
     def added(df: DataFrame) = df.observe(obs, count(lit(1)).as("n"))
     if (!exists(spark, tableDir)) replace(spark, tableDir, added(rows))
     else {
-      val existing = read(spark, tableDir)
+      val files = fileSchema(spark, dataPath(tableDir))
+      val existing = snapshot(spark, tableDir, files)
       val keyCols = keys.map(col)
       val present = existing.select(keyCols: _*)
         .join(rows.select(keyCols: _*), keys, "left_semi")
-      replace(spark, tableDir, existing.unionByName(
-        added(rows.join(present, keys, "left_anti"))))
+      val fresh = rows.join(present, keys, "left_anti")
+      // the new rows as the union types them, in the table's column order
+      // (the optimizer drops the empty side: no scan). The optimizer also
+      // drops the union's nullability, which nullableAs restores. Decided
+      // on the optimized plan, before any job runs
+      val asTable = GraftSqlBridge.nullableAs(
+        existing.limit(0).unionByName(fresh), files)
+      if (asTable.queryExecution.optimizedPlan.schema == files)
+        append(spark, tableDir, added(asTable))
+      else replace(spark, tableDir, existing.unionByName(added(fresh)))
     }
     SinkStats(inserted = observed(obs, "n"), updated = 0L, deleted = 0L)
   }

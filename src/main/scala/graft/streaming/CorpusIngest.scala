@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * arrive continuously, each micro-batch is deduped against the
   * PERSISTED corpus (and within itself) via
   * [[DedupOps.incrementalDedup]], and only admitted docs append
-  * (insert-new-only, atomic snapshot swap).
+  * (insert-new-only: their files are added to the snapshot).
   *
   * Scale shape: per batch, the bucket join is bounded by the BATCH
   * size, not the corpus; the corpus contributes only its banded
@@ -18,9 +18,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * batch (testdata scale); a production deployment persists the
   * signature index alongside the corpus table and appends to it on
   * admission — the join shape is identical, the recompute disappears.
-  * Exactly-once: foreachBatch + the sink's atomic swap make batch
-  * replays idempotent (a replayed batch's docs are near-dups of their
-  * already-admitted selves and are rejected).
+  * Exactly-once: foreachBatch + insert-new-only make batch replays
+  * idempotent (a replayed batch's docs are near-dups of their
+  * already-admitted selves and are rejected, and a replay after a
+  * partial commit inserts only the doc_ids still missing).
   */
 object CorpusIngest {
 

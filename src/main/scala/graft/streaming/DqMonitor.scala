@@ -15,12 +15,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * log (etl_pipeline_script.py:25-29, `logs/etl_logs/`).
   *
   * Exactly-once: report rows are keyed (batch_id, check_name) and
-  * appended insert-new-only through the atomic sink, so a replayed
-  * micro-batch rewrites nothing. Empty batches produce no report rows
-  * (nothing to measure — and the ppm floor division would divide by
-  * zero). Note the per-batch scope: `Uniqueness` here asserts
-  * within-batch uniqueness; cross-corpus key checks belong to the
-  * sink's insert-new-only contract (q08 / SinkSpec).
+  * appended insert-new-only, so a replayed micro-batch adds only the
+  * report rows still missing (none after a full commit). Empty batches
+  * produce no report rows (nothing to measure — and the ppm floor
+  * division would divide by zero). Note the per-batch scope:
+  * `Uniqueness` here asserts within-batch uniqueness; cross-corpus key
+  * checks belong to the sink's insert-new-only contract (q08 /
+  * SinkSpec).
   */
 object DqMonitor {
 

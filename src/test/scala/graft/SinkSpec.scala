@@ -258,6 +258,119 @@ class SinkSpec extends AnyFunSuite with SparkTestBase {
     assert(new java.io.File(local).list().toSeq == Seq("data"))
   }
 
+  /** name -> length of every file under the table's `data/`. */
+  private def dataListing(local: String): Map[String, Long] =
+    new java.io.File(local, "data").listFiles.toSeq
+      .map(f => f.getName -> f.length).toMap
+
+  /** The Spark schema footer of every parquet file under `data/`. */
+  private def schemaFooters(dir: String): Seq[String] =
+    new java.io.File(dir, "data").listFiles.toSeq
+      .filter(_.getName.endsWith(".parquet")).map { f =>
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toURI),
+          spark.sparkContext.hadoopConfiguration)
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try r.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata")
+        finally r.close()
+      }
+
+  test("insertNewOnly on an existing table adds only new-row files, in " +
+      "the snapshot's schema; every old file stays as it was") {
+    val dir = tmpTable()
+    ParquetUpsertSink.insertNewOnly(spark, dir,
+      (1L to 20L).map(i => (i, s"v$i", 1L)).toDF("id", "val", "ver")
+        .repartition(2), Seq("id"))
+    // a rewrite through upsert: the snapshot's schema is the read-back
+    // one, while the batches below come from non-nullable local columns
+    ParquetUpsertSink.upsert(spark, dir,
+      Seq((3L, "v3b", 2L)).toDF("id", "val", "ver"), Seq("id"), "ver")
+    val before = dataListing(dir)
+    val rowsBefore = rows(dir)
+    // columns in another order than the table's
+    val batch = Seq(("dup", 1L, 5L), ("n21", 2L, 21L), ("n22", 3L, 22L))
+      .toDF("val", "ver", "id")
+    assert(ParquetUpsertSink.insertNewOnly(spark, dir, batch, Seq("id")) ==
+      SinkStats(2, 0, 0))
+    val after = dataListing(dir)
+    assert(before.forall { case (name, len) => after.get(name).contains(len) })
+    // checksum files (`.*.crc`) move with their data files
+    val added = (after.keySet -- before.keySet).toSeq.filterNot(_.startsWith("."))
+    assert(added.nonEmpty && added.forall(_.endsWith(".parquet")))
+    assert(added.forall(n => spark.read.parquet(s"$dir/data/$n").count() > 0))
+    assert(spark.read.parquet(added.map(n => s"$dir/data/$n"): _*)
+      .select("id", "val", "ver").collect().toSeq.sortBy(_.toString) ==
+      Seq(Row(21L, "n21", 2L), Row(22L, "n22", 3L)))
+    assert(rows(dir) == (rowsBefore ++ Seq(Row(21L, "n21", 2L),
+      Row(22L, "n22", 3L))).sortBy(_.toString))
+    // every key present: the listing does not change
+    assert(ParquetUpsertSink.insertNewOnly(spark, dir, batch, Seq("id")) ==
+      SinkStats(0, 0, 0))
+    assert(dataListing(dir) == after)
+    assert(schemaFooters(dir).distinct.size == 1)
+    assert(ParquetUpsertSink.read(spark, dir).schema ==
+      spark.read.parquet(s"$dir/data").schema)
+
+    // an int column fed longs widens through a rewrite, as before
+    val narrow = tmpTable()
+    ParquetUpsertSink.insertNewOnly(spark, narrow,
+      Seq((1, "a"), (2, "b")).toDF("id", "val"), Seq("id"))
+    val narrowFiles = dataListing(narrow).keySet
+    assert(ParquetUpsertSink.insertNewOnly(spark, narrow,
+      Seq((2L, "b2"), (3L, "c")).toDF("id", "val"), Seq("id")) ==
+      SinkStats(1, 0, 0))
+    assert(dataListing(narrow).keySet.intersect(narrowFiles)
+      .forall(!_.endsWith(".parquet")))
+    assert(ParquetUpsertSink.read(spark, narrow).schema("id").dataType ==
+      org.apache.spark.sql.types.LongType)
+    assert(rows(narrow) == Seq(Row(1L, "a"), Row(2L, "b"), Row(3L, "c")))
+    assert(schemaFooters(narrow).distinct.size == 1)
+  }
+
+  test("a failed append commit deletes the files it moved: the table " +
+      "reads back as before, with only data/ left") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.failappend.impl", classOf[FailingAppendFs].getName)
+    conf.setBoolean("fs.failappend.impl.disable.cache", true)
+    val local = tmpTable()
+    val dir = s"failappend://$local"
+    ParquetUpsertSink.insertNewOnly(spark, dir,
+      Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("id", "val", "ver"), Seq("id"))
+    val before = rows(dir)
+    val files = dataListing(local)
+    // two partitions, one new row each: two part files to publish
+    val batch = spark.range(3, 5, 1, 2)
+      .select(col("id"), col("id").cast("string").as("val"), col("id").as("ver"))
+    FailingAppendFs.arm()
+    try {
+      val e = intercept[java.io.IOException](
+        ParquetUpsertSink.insertNewOnly(spark, dir, batch, Seq("id")))
+      assert(e.getMessage.contains("cannot commit"))
+      assert(FailingAppendFs.published.get == 2)
+    } finally FailingAppendFs.failing = false
+    assert(rows(dir) == before)
+    assert(dataListing(local) == files)
+    assert(new java.io.File(local).list().toSeq == Seq("data"))
+  }
+
+  test("compact leaves a table of at most numFiles files as it is, with " +
+      "no SQL execution") {
+    val dir = tmpTable()
+    ParquetUpsertSink.insertNewOnly(spark, dir,
+      spark.range(0, 40, 1, 2).select(col("id"), lit("v").as("val")),
+      Seq("id"))
+    val files = dataListing(dir)
+    val n = files.keys.count(_.endsWith(".parquet"))
+    assert(n >= 1)
+    for (numFiles <- Seq(n, n + 1)) {
+      val (_, execs, jobs) =
+        recording(ParquetUpsertSink.compact(spark, dir, numFiles))
+      assert(execs.isEmpty && jobs == 0)
+      assert(dataListing(dir) == files)
+    }
+  }
+
   test("sort-merge plan (no broadcast) gives the same stats and table; " +
       "every observed node sits in the write's result stage") {
     def script(dir: String): Seq[SinkStats] = Seq(
@@ -299,9 +412,12 @@ class SinkSpec extends AnyFunSuite with SparkTestBase {
     assert(execs(ParquetUpsertSink.upsert(spark, dir,
       Seq((1L, "u", 2L), (11L, "n", 1L)).toDF("id", "val", "ver"),
       Seq("id"), "ver")) == 1)
+    // the append: one execution, and the files it found are all kept
+    val beforeInsert = dataListing(dir).keySet
     assert(execs(ParquetUpsertSink.insertNewOnly(spark, dir,
       Seq((2L, "x", 1L), (12L, "n", 1L)).toDF("id", "val", "ver"),
       Seq("id"))) == 1)
+    assert(beforeInsert.subsetOf(dataListing(dir).keySet))
     assert(execs(ParquetUpsertSink.purge(spark, dir,
       Seq(3L).toDF("id"), "id")) == 1)
     val (read, readExecs, readJobs) =
@@ -450,4 +566,22 @@ class FailingCommitFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 
 object FailingCommitFs {
   @volatile var failing = false
+}
+
+/** Local file system that, once armed, fails the second rename of a file
+  * out of a `tmp-*` dir: an append's commit of its second part file.
+  */
+class FailingAppendFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("failappend:///")
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean =
+    if (FailingAppendFs.failing && src.getParent.getName.startsWith("tmp-") &&
+        FailingAppendFs.published.incrementAndGet() == 2) false
+    else super.rename(src, dst)
+}
+
+object FailingAppendFs {
+  @volatile var failing = false
+  val published = new java.util.concurrent.atomic.AtomicInteger(0)
+  def arm(): Unit = { published.set(0); failing = true }
 }
